@@ -259,6 +259,31 @@ EXTRA = [
 ]
 
 
+_COMPACT = {"separators": (",", ":")}
+
+
+def _chunk_lines(tag: str, field: str, d: dict, max_len: int = 600) -> list[str]:
+    """``d`` split into compact JSON lines ``{"metric": "<tag> (i/n)",
+    field: {...}}`` of at most ``max_len`` chars each (an entry too long
+    on its own still gets a line).  Chunks are sized with the real tag
+    at the widest index the split can reach (n ≤ len(d)), so the
+    numbering never pushes a line past the limit."""
+    w = "9" * len(str(max(len(d), 1)))
+    probe_tag = f"{tag} ({w}/{w})"
+    chunks: list[dict] = [{}]
+    for k in d:  # insertion order — stable across runs
+        chunks[-1][k] = d[k]
+        probe = json.dumps({"metric": probe_tag, field: chunks[-1]}, **_COMPACT)
+        if len(probe) > max_len and len(chunks[-1]) > 1:
+            chunks[-1].pop(k)
+            chunks.append({k: d[k]})
+    n = len(chunks)
+    return [
+        json.dumps({"metric": f"{tag} ({i + 1}/{n})", field: c}, **_COMPACT)
+        for i, c in enumerate(chunks)
+    ]
+
+
 def main() -> None:
     spark = get_spark("pyspark-caffe-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -450,24 +475,6 @@ def main() -> None:
     # fits.  Pure output-format addition: timings, methodology, and
     # the two existing lines (detail above, summary below) are
     # unchanged.
-    _compact = {"separators": (",", ":")}
-
-    def _chunk_lines(tag: str, field: str, d: dict, max_len: int = 600):
-        chunks: list[dict] = [{}]
-        for k in d:  # insertion order — stable across runs
-            chunks[-1][k] = d[k]
-            probe = json.dumps({"metric": "x (x 9/9)", field: chunks[-1]}, **_compact)
-            if len(probe) > max_len and len(chunks[-1]) > 1:
-                chunks[-1].pop(k)
-                chunks.append({k: d[k]})
-        n = len(chunks)
-        return [
-            json.dumps(
-                {"metric": f"{tag} ({i + 1}/{n})", field: c}, **_compact
-            )
-            for i, c in enumerate(chunks)
-        ]
-
     for line in _chunk_lines("bench extras per-query", "queries_extra", extra_timings):
         print(line)
     print(
@@ -479,7 +486,7 @@ def main() -> None:
                 "sf": sf,
                 "queries": timings,
             },
-            **_compact,
+            **_COMPACT,
         )
     )
     # Compact summary line LAST: the full line above outgrew the

@@ -66,6 +66,17 @@ _ARTIFACT_ERROR_SHAPES = (
 )
 
 
+def _ann_query_slice() -> Column:
+    """The ANN query batch: the hash-exact ``vec_id % 20 = 3`` slice of
+    the embeddings, the same one the ``sim_knn_ivf_*`` oracles name.
+    The ``vec_id < 2000`` cap is a no-op at every fixture SF (ids stop
+    below 2000) but pins |Q| at scale — a query set defined as a fixed
+    fraction of the corpus would make a serving pass O(|Q|·N) =
+    quadratic (round-8 100× sweep lesson).  Its negation is the served
+    corpus."""
+    return (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
+
+
 def _is_artifact_read_failure(ex: BaseException) -> bool:
     """True when ``ex`` is the kind of failure a reuse gate OWNS —
     the persisted artifact is absent, unreadable, or torn — as opposed
@@ -544,11 +555,7 @@ def sim_knn_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    # bounded query slice: `vec_id < 2000` is a no-op at every fixture
-    # SF (ids stop below 2000) but pins |Q| at scale — a query set
-    # defined as a fixed fraction of the corpus would make the serving
-    # pass O(|Q|·N) = quadratic (round-8 100× sweep lesson)
-    qpred = (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
+    qpred = _ann_query_slice()
     queries_df = emb.filter(qpred)
     corpus = emb.filter(~qpred)
 
@@ -2673,9 +2680,7 @@ def sim_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical probe sets are exactly what the before/after comparison
     # requires — so the second collect job was a byte-identical rerun
     qids, qmat, _ = vecops._collect_matrix(
-        emb.filter(
-            (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
-        ),
+        emb.filter(_ann_query_slice()),
         "vec_id",
         "emb",
     )
@@ -2995,15 +3000,17 @@ def _ann_compact_postings(
         # count is known WITHOUT a scan: every vector carries exactly
         # meta["m"] postings (the coverage invariant the build/append
         # writers enforce and sink_ann_index audits), so expected =
-        # (gen_n + Σ segment_n) · m.  On mismatch, fall back to a
-        # dedicated snapshot scan of the old live layout — still
-        # intact, GC runs only after the commit below — instead of
-        # recording a poisoned before-identity.  On this single-node
-        # target the branch never fires; it exists so the proof stays
-        # sound under task re-execution at cluster scale.
-        expected_n = (gen_n + sum(s[1] for s in segs)) * int(
-            _ann_read_meta(os.path.join(root, "meta"))["m"]
-        )
+        # effective corpus n · m, the n of _ann_effective_stamp (the
+        # build's corpus_n plus every folded and live delta).  On
+        # mismatch, fall back to a dedicated snapshot scan of the old
+        # live layout — still intact, GC runs only after the commit
+        # below — instead of recording a poisoned before-identity.  On
+        # this single-node target the branch never fires; it exists so
+        # the proof stays sound under task re-execution at cluster
+        # scale.
+        meta = _ann_read_meta(os.path.join(root, "meta"))
+        eff_n = _ann_effective_stamp(root, meta, manifest)[0]
+        expected_n = eff_n * int(meta["m"])
         if n_seen != expected_n:
             snap = (
                 _ann_read_postings(spark, live)
@@ -3098,7 +3105,7 @@ def _ann_compact_and_prove(
     # (r18 advisory): content_identical therefore proves WRITE
     # FIDELITY — a short/stale read of the live layout is what the
     # manifest cross-check inside _ann_compact_postings guards
-    # (observed count vs (gen_n + Σ seg_n)·m, with a dedicated
+    # (observed count vs the effective stamp n · m, with a dedicated
     # snapshot-scan fallback on mismatch); a genuinely lost VECTOR is
     # still caught by stamp_still_valid below (countDistinct vs the
     # derived stamp).
@@ -3325,9 +3332,7 @@ def _serve_from_ann_index(
         # threaded snapshot: the guard's derived stamp describes the
         # same layout the union below serves
         _ann_validate_corpus(sf_dir, mpath, meta, emb, manifest)
-    # bounded query slice (same contract as sim_knn_ivf_batch: a fixed
-    # hash-exact slice, capped so the serving pass is O(N), not O(N²))
-    qpred = (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
+    qpred = _ann_query_slice()
     queries_df = emb.filter(qpred)
     if queries is None:
         # one collect job per serve; a caller serving the SAME batch
@@ -3354,7 +3359,7 @@ def _serve_from_ann_index(
         .filter(F.col("cell").isin(probed_cells))
         # the query slice is not part of the served corpus (mirror of
         # sim_knn_ivf_batch's corpus = emb \ queries)
-        .filter(~((F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)))
+        .filter(~qpred)
     )
     bc = spark.sparkContext.broadcast((qids, qmat, probe_mask))
 

@@ -36,7 +36,12 @@ from pyspark.sql.types import (
 from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
 from pyspark_caffe_spark.queries.relational import _scratch
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import (
+    ensure_session_confs,
+    load_table,
+    normalize_events_ts,
+    parquet_schema,
+)
 
 # Physical schema used for the self-generated replay fixtures (the
 # replay writers serialize ts as INT64 nanos explicitly, so their
@@ -55,15 +60,17 @@ EVENTS_RAW_SCHEMA = StructType(
 
 
 def _read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """readStream over parquet with the nanos→timestamp conversion.
+    """readStream over parquet with load_table's ts normalisation.
 
     The file stream source requires a directory basePath; when handed a
-    single parquet file, pass its parent as basePath. Integer div for
-    nanos→micros (float division loses microseconds at 1.7e18).
+    single parquet file, pass its parent as basePath.
     """
-    from pyspark_caffe_spark.tables import ensure_session_confs
-
     ensure_session_confs(spark)
+    # The fixture's ts column has shipped as either INT64 nanos or
+    # parquet timestamp[us]: read the stream with the cached batch
+    # schema so it always matches the files on disk, then normalise
+    # exactly as load_table does.
+    schema = parquet_schema(spark, path)
     if path.endswith(".parquet"):
         # file source needs a directory: expose the single file through
         # a scratch dir via symlink (zero-copy). lexists + readlink
@@ -77,18 +84,7 @@ def _read_events_stream(spark: SparkSession, path: str) -> DataFrame:
         if not os.path.lexists(link):
             os.symlink(path, link)
         path = d
-    # The fixture's ts column has shipped as either INT64 nanos or
-    # parquet timestamp[us]; steal the batch reader's inferred schema
-    # (cheap footer-only read) so the stream schema always matches the
-    # files on disk, then normalise exactly as tables.load_table does.
-    raw_schema = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(raw_schema).parquet(path)
-    ts_type = raw_schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_events_ts(spark.readStream.schema(schema).parquet(path), schema)
 
 
 def _drain(df: DataFrame, name: str, output_mode: str, partitions: int = 8) -> DataFrame:
@@ -336,11 +332,11 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     time.sleep(0.15)
     _raw(ev.filter(F.col("ts") < jan2)).coalesce(1).write.mode("append").parquet(replay)
 
-    stream = (
+    stream = normalize_events_ts(
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(replay)
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        .parquet(replay),
+        EVENTS_RAW_SCHEMA,
     )
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -629,12 +625,10 @@ def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = F.col("event_id") % 2 == 0
 
     def run_once() -> None:
-        stream = (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .parquet(src)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            .select("event_id", "user_id", "event_type", "value")
-        )
+        stream = normalize_events_ts(
+            spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(src),
+            EVENTS_RAW_SCHEMA,
+        ).select("event_id", "user_id", "event_type", "value")
         q = (
             stream.writeStream.format("parquet")
             .option("path", sink)

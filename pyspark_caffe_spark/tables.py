@@ -3,25 +3,33 @@
 All ten fixture tables (TESTDATA.md / FIXTURES.md) are loaded through
 here so that every query sees identical, oracle-compatible types:
 
-  * ``events.ts`` arrives as INT64 nanoseconds (read via
-    ``nanosAsLong``) and is converted to a microsecond TimestampType
-    matching DuckDB's native read of the same parquet.
+  * ``events.ts`` is normalised to a microsecond TimestampType matching
+    DuckDB's native read of the same parquet, whichever physical
+    layout is on disk (:func:`normalize_events_ts`).
   * ``embeddings.embedding`` stays ``array<float>`` on disk; use
     :func:`emb_double` when a query needs higher-order aggregation
     (Spark's ``aggregate`` with a double accumulator rejects float
     element types).
 
-Scale note: these are plain ``spark.read.parquet`` scans — column
-pruning and predicate pushdown happen per-query via Catalyst, so
-loading "the whole table" here costs nothing until an action runs.
+Cost note: ``spark.read.parquet`` without a schema launches a one-task
+Spark job (named ``parquet``) that reads the file footer to infer the
+schema — on every call.  :func:`parquet_schema` infers each file's
+schema once and caches the ``StructType``, so every later load reads
+with an explicit schema and builds its plan with no Spark job.  Only
+the schema is cached, never the DataFrame: each load returns a fresh
+relation with fresh attribute ids, so two loads of one table can be
+self-joined.  Column pruning and predicate pushdown still happen
+per-query via Catalyst.
 """
 
 from __future__ import annotations
 
+import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -68,25 +76,69 @@ def ensure_session_confs(spark: SparkSession) -> None:
     _CONFIGURED_SESSIONS.add(spark)
 
 
+# (path, st_mtime_ns, st_size) → the StructType inferred from that
+# file version.  The schema depends only on the file, since inference
+# runs after ensure_session_confs has forced nanosAsLong: no session key.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of the parquet at ``path``, inferred once per file
+    version.
+
+    Inference is a footer-reading Spark job; the result is cached under
+    the file's ``os.stat`` identity (path, mtime, size), so a rewritten
+    or regenerated file is inferred again.  Paths ``os.stat`` cannot
+    see (object-store URIs) are inferred on every call, as an uncached
+    ``spark.read.parquet`` would.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        ensure_session_confs(spark)
+        return spark.read.parquet(path).schema
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        if len(_SCHEMAS) >= 256:  # bounded: keys of rewritten files dangle
+            _SCHEMAS.clear()
+        ensure_session_confs(spark)
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
+def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:
+    """Turn the events ``ts`` column into a session-UTC TimestampType at
+    microsecond precision, given the schema ``df`` was read with.
+
+    The fixture generator has shipped events.ts as either INT64
+    nanoseconds (read as LongType via nanosAsLong=true) or as a parquet
+    timestamp[us] (read as TIMESTAMP_NTZ).  The DuckDB oracle sees
+    TIMESTAMP either way; a TimestampType column is left as it is.
+    """
+    ts_type = schema["ts"].dataType.typeName()
+    if ts_type in ("long", "bigint"):
+        # INTEGER division — `/ 1000` goes through double and loses
+        # micros at 1.7e18 nanos.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # NTZ wall-clock == UTC instant under session timeZone=UTC.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table with oracle-compatible column types."""
+    """Load one fixture table with oracle-compatible column types.
+
+    Reads with the cached schema (:func:`parquet_schema`): after the
+    first load of a file, a load runs no Spark job.
+    """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        # The fixture generator has shipped events.ts as either INT64
-        # nanoseconds (read as LongType via nanosAsLong=true) or as a
-        # parquet timestamp[us] (read as TIMESTAMP_NTZ).  Adapt to
-        # whichever layout is on disk so every query — and the DuckDB
-        # oracle, which sees TIMESTAMP either way — gets a session-UTC
-        # TimestampType at microsecond precision.
-        ts_type = df.schema["ts"].dataType.typeName()
-        if ts_type in ("long", "bigint"):
-            # INTEGER division — `/ 1000` goes through double and
-            # loses micros at 1.7e18 nanos.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # NTZ wall-clock == UTC instant under session timeZone=UTC.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df, schema)
     return df
 
 

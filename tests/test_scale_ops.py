@@ -1326,6 +1326,53 @@ def test_ann_segment_serve_prunes_every_leg(spark, sf_dir):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def test_ann_compact_cross_check_takes_no_snapshot_fallback(
+    spark, sf_dir, monkeypatch
+):
+    """build → append → compact: the compaction's before-identity
+    comes from the observe on the rewrite's own read, and the manifest
+    cross-check (effective stamp n · m postings) must agree with it, so
+    the dedicated snapshot scan of the old layout never runs — the
+    postings are read exactly once.  The cross-check once omitted the
+    build's corpus_n and fell back to that full scan on every
+    compaction."""
+    import os
+    import shutil
+
+    import pyspark_caffe_spark.queries.scale_ops as so
+    from pyspark_caffe_spark.tables import load_table
+
+    suffix = "_xcheck"
+    delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
+    so._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    so._ann_append(spark, sf_dir, suffix, emb.filter(delta_pred))
+    _, ppath, mpath = so._ann_index_paths(sf_dir, suffix)
+    root = os.path.dirname(mpath)
+
+    reads: list = []
+    real_read = so._ann_read_postings
+
+    def spy(spark_, paths):
+        reads.append(list(paths))
+        return real_read(spark_, paths)
+
+    monkeypatch.setattr(so, "_ann_read_postings", spy)
+    identity: dict = {}
+    try:
+        so._ann_compact_postings(spark, ppath, identity_out=identity)
+        assert len(reads) == 1, (
+            f"compaction read the postings {len(reads)} times — the "
+            "snapshot-scan fallback ran"
+        )
+        m = int(so._ann_read_meta(mpath)["m"])
+        assert identity["n"] == emb.count() * m
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_ann_manifest_roundtrip_property(tmp_path):
     """Property test: any (gen, segments) manifest with legal dir
     names and arbitrary int deltas (including negative fingerprint
