@@ -17,7 +17,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import (
@@ -77,6 +77,14 @@ def _ann_query_slice() -> Column:
     return (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
 
 
+def _ann_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``embeddings`` table as the ``(vec_id, emb array<double>)``
+    rows every IVF build, append and serve reads."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+
+
 def _is_artifact_read_failure(ex: BaseException) -> bool:
     """True when ``ex`` is the kind of failure a reuse gate OWNS —
     the persisted artifact is absent, unreadable, or torn — as opposed
@@ -118,6 +126,26 @@ def _is_artifact_read_failure(ex: BaseException) -> bool:
         if not line.lstrip().startswith("at ")
     )
     return any(shape in hay for shape in _ARTIFACT_ERROR_SHAPES)
+
+
+def _ann_reuse_or_rebuild(reuse, rebuild):
+    """THE reuse gate of the persisted ANN index: return ``reuse()``,
+    or ``rebuild()`` when reuse failed because the index artifact is
+    absent, stale, drifted or torn.  FileNotFoundError and ValueError
+    are the gates' own refusals (and the driver-local artifact reads'
+    error contract); a Spark read error routes only when
+    :func:`_is_artifact_read_failure` says it is artifact-shaped — a
+    transient JVM error (executor OOM, disk-full) must propagate, not
+    trigger a silent rebuild that masks it.  ``rebuild()`` runs
+    outside the handler, so its own failures propagate."""
+    try:
+        return reuse()
+    except (FileNotFoundError, ValueError) + _SPARK_READ_ERRORS as ex:
+        if not isinstance(
+            ex, (FileNotFoundError, ValueError)
+        ) and not _is_artifact_read_failure(ex):
+            raise
+    return rebuild()
 
 
 @query(
@@ -398,6 +426,127 @@ def _lloyd_spherical(sample: np.ndarray, nlist: int, iters: int = 10) -> np.ndar
     return cents
 
 
+def _ivf_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[tuple[pd.DataFrame, np.ndarray]]:
+    """The non-empty Arrow batches of a ``(vec_id, emb, …)`` mapInPandas
+    input, each with its ``[rows × dim]`` float64 embedding matrix."""
+    for pdf in batches:
+        if len(pdf):
+            yield pdf, np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+
+
+def _ivf_train_centroids(emb: DataFrame, nlist: int) -> tuple[np.ndarray, int]:
+    """IVF centroid training, the FAISS recipe: driver-side Lloyd on a
+    deterministic ~50% hash sample of the corpus (hash-gated, not
+    ``.sample()`` — partitioning-independent), capped at 4096 rows.
+    A corpus with fewer training rows than ``nlist`` shrinks ``nlist``
+    rather than training short centroids; returns (centroids, nlist)
+    and the caller clamps nprobe/m to the returned nlist."""
+    train = (
+        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
+        .orderBy("vec_id").limit(4096).collect()
+    )
+    sample = np.stack([np.array(r["emb"]) for r in train])
+    nlist = min(nlist, max(1, len(sample)))
+    return _lloyd_spherical(sample, nlist, iters=10), nlist
+
+
+def _ivf_probe_mask(qmat: np.ndarray, centroids: np.ndarray, nprobe: int) -> np.ndarray:
+    """Per-query probe sets as a boolean ``[nq × nlist]`` matrix: each
+    query probes its ``nprobe`` closest cells by dot product."""
+    probe_rank = np.argsort(-(qmat @ centroids.T), axis=1)[:, :nprobe]
+    mask = np.zeros((len(qmat), len(centroids)), dtype=bool)
+    np.put_along_axis(mask, probe_rank, True, axis=1)
+    return mask
+
+
+def _ivf_collapse(
+    ids: np.ndarray, scores: np.ndarray, cand: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One row per ``vec_id`` for :func:`_ivf_local_topk`, whose ids
+    must be unique: a multi-assigned vector reaches a serve batch once
+    per probed cell.  A collapsed row is a candidate of every query
+    that probed any of its copies, scored from those probed copies
+    (the max; copies of one vector score identically)."""
+    uids, inv = np.unique(ids, return_inverse=True)
+    u_cand = np.zeros((len(uids), cand.shape[1]), dtype=bool)
+    np.logical_or.at(u_cand, inv, cand)
+    u_scores = np.full(u_cand.shape, -np.inf)
+    np.maximum.at(u_scores, inv, np.where(cand, scores, -np.inf))
+    return uids, u_scores, u_cand
+
+
+def _ivf_local_topk(
+    q_ids: np.ndarray,
+    ids: np.ndarray,
+    scores: np.ndarray,
+    k: int,
+    cand: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """Per-query local top-k of one Arrow batch — the map side of every
+    IVF search (REPOSE's per-partition top-k + global merge): the union
+    of the batches' local top-k lists holds the global top-k, so the
+    shuffle into :func:`_ivf_global_topk` stays bounded by
+    batches·k·|Q| whatever the corpus size.
+
+    ``scores[i, q]`` scores row ``i`` (vec_id ``ids[i]``, unique within
+    the batch) against query ``q_ids[q]``; ``cand`` (same shape)
+    restricts each query to its candidate rows, ``None`` = every row.
+    Rows are ranked by (−cos, vec_id), the global merge's order.
+    Returns (qid, vec_id, cos) rows grouped by query in ``q_ids``
+    order, at most ``k`` per query."""
+    if cand is None:
+        cand = np.ones(scores.shape, dtype=bool)
+    if 0 < k < len(ids):
+        # pre-cut at each query's k-th best candidate score, keeping
+        # its ties, so the sort below sees ~k rows per query
+        masked = np.where(cand, scores, -np.inf)
+        cand = cand & (masked >= -np.partition(-masked, k - 1, axis=0)[k - 1])
+    rows, qs = np.nonzero(cand)
+    cos = scores[rows, qs]
+    order = np.lexsort((ids[rows], -cos, qs))
+    rows, qs, cos = rows[order], qs[order], cos[order]
+    keep = np.arange(len(qs)) - np.searchsorted(qs, qs) < k
+    return pd.DataFrame(
+        {
+            "qid": np.asarray(q_ids)[qs[keep]],
+            "vec_id": ids[rows[keep]],
+            "cos": cos[keep],
+        }
+    )
+
+
+def _ivf_global_topk(cand: DataFrame, k: int, *by: str) -> DataFrame:
+    """The reduce side of the IVF search: the global top-k per ``by``
+    group of the per-batch local top-k rows, ranked by (−cos, vec_id)."""
+    w = Window.partitionBy(*by).orderBy(F.desc("cos"), F.asc("vec_id"))
+    return cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+
+
+def _ivf_recall_flags(
+    queries_df: DataFrame, ivf_top: DataFrame, exact_top: DataFrame, k: int
+) -> DataFrame:
+    """One ``(qid, k, recall_ok)`` row per query: the IVF top-k must
+    overlap the query's EXACT top-k on ≥ 90% of slots.  The left join
+    onto the query ids keeps a query with no IVF hit at all as a
+    ``false`` row instead of dropping it."""
+    hits = (
+        ivf_top.join(exact_top, ["qid", "vec_id"], "inner")
+        .groupBy("qid")
+        .agg(F.count("*").alias("_hits"))
+    )
+    return (
+        queries_df.select(F.col("vec_id").alias("qid"))
+        .join(F.broadcast(hits), "qid", "left")
+        .select(
+            "qid",
+            F.lit(k).alias("k"),
+            (F.coalesce(F.col("_hits"), F.lit(0)) >= int(0.9 * k)).alias("recall_ok"),
+        )
+    )
+
+
 @query(
     "sim_knn_ivf",
     oracle="""
@@ -441,42 +590,23 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
     )
-    # deterministic ~50% training sample (hash-gated, not .sample() —
-    # partitioning-independent); cap the driver-side matrix at 4096 rows
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        # degenerate corpus: fewer training rows than requested lists —
-        # shrink nlist (and nprobe with it) rather than silently
-        # training short centroids
-        nlist = max(1, len(sample))
-        nprobe = min(nprobe, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
+    centroids, nlist = _ivf_train_centroids(emb, nlist)
+    nprobe = min(nprobe, nlist)
     qrow = emb.filter(F.col("vec_id") == 0).collect()  # query = vec_id 0
     if not qrow:
         raise ValueError("sim_knn_ivf: query vector vec_id=0 not present in corpus")
     qvec = np.array(qrow[0]["emb"])
-    probe = set(np.argsort(-(centroids @ qvec))[:nprobe].tolist())
+    probe = _ivf_probe_mask(qvec[None, :], centroids, nprobe)[0]
     bc = spark.sparkContext.broadcast((centroids, qvec, probe))
 
     def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cents, q, probed = bc.value
-        probed_arr = np.array(sorted(probed))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+        for pdf, x in _ivf_batches(batches):
             # top-2 multi-assignment: a vector is a candidate if EITHER
             # of its two closest cells is probed (the boundary-straddle
             # guard that makes the recall flag robust)
-            sims = x @ cents.T
-            top2 = np.argsort(-sims, axis=1)[:, :2]
-            in_probe = np.isin(top2, probed_arr).any(axis=1) & (
-                pdf["vec_id"].to_numpy() != 0
-            )
+            top2 = np.argsort(-(x @ cents.T), axis=1)[:, :2]
+            in_probe = probed[top2].any(axis=1) & (pdf["vec_id"].to_numpy() != 0)
             if not in_probe.any():
                 continue
             sel = x[in_probe]
@@ -552,91 +682,40 @@ def sim_knn_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     A single dropped or duplicated query row, or one query whose
     recall collapses, breaks the hash."""
     nlist, nprobe, k, m_assign = 16, 10, 10, 3
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     qpred = _ann_query_slice()
     queries_df = emb.filter(qpred)
     corpus = emb.filter(~qpred)
-
-    # centroid training: deterministic hash sample, driver-side Lloyd
-    # on ≤4096 rows (the FAISS recipe — train on a sample, broadcast
-    # the tiny centroid table)
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        nlist = max(1, len(sample))
-        nprobe = min(nprobe, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
+    centroids, nlist = _ivf_train_centroids(emb, nlist)
+    nprobe = min(nprobe, nlist)
 
     from pyspark_caffe_spark import vecops
 
     qids, qmat, _ = vecops._collect_matrix(queries_df, "vec_id", "emb")
-    # per-query probe sets as a boolean [nq × nlist] matrix
-    probe_rank = np.argsort(-(qmat @ centroids.T), axis=1)[:, :nprobe]
-    probe_mask = np.zeros((len(qids), nlist), dtype=bool)
-    np.put_along_axis(probe_mask, probe_rank, True, axis=1)
+    probe_mask = _ivf_probe_mask(qmat, centroids, nprobe)
     bc = spark.sparkContext.broadcast((centroids, qids, qmat, probe_mask))
 
     def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cents, q_ids, q_mat, p_mask = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+        for pdf, x in _ivf_batches(batches):
             ids = pdf["vec_id"].to_numpy()
             top_m = np.argsort(-(x @ cents.T), axis=1)[:, :m_assign]
             # cand[i, q]: corpus row i is in one of query q's probed
             # cells under EITHER of its m assigned cells
             cand = p_mask[:, top_m].any(axis=2).T  # [rows × nq]
             scores = np.round(x @ q_mat.T, 6)      # [rows × nq]
-            out_q, out_id, out_cos, out_stream = [], [], [], []
-            for qi in range(len(q_ids)):
-                col = scores[:, qi]
-                order = np.lexsort((ids, -col))[: min(k, len(col))]
-                out_q.extend([q_ids[qi]] * len(order))
-                out_id.extend(ids[order])
-                out_cos.extend(col[order])
-                out_stream.extend(["exact"] * len(order))
-                cidx = np.nonzero(cand[:, qi])[0]
-                if len(cidx):
-                    sub = col[cidx]
-                    sel = np.lexsort((ids[cidx], -sub))[: min(k, len(cidx))]
-                    out_q.extend([q_ids[qi]] * len(sel))
-                    out_id.extend(ids[cidx][sel])
-                    out_cos.extend(sub[sel])
-                    out_stream.extend(["ivf"] * len(sel))
-            if out_q:
-                yield pd.DataFrame(
-                    {"qid": out_q, "vec_id": out_id, "cos": out_cos,
-                     "stream": out_stream}
-                )
-
-    from pyspark.sql import Window
+            yield pd.concat([
+                _ivf_local_topk(q_ids, ids, scores, k).assign(stream="exact"),
+                _ivf_local_topk(q_ids, ids, scores, k, cand).assign(stream="ivf"),
+            ])
 
     cand = corpus.mapInPandas(
         search, schema="qid long, vec_id long, cos double, stream string"
     )
-    w = Window.partitionBy("qid", "stream").orderBy(F.desc("cos"), F.asc("vec_id"))
-    top = cand.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
+    top = _ivf_global_topk(cand, k, "qid", "stream")
     ivf_top = top.filter(F.col("stream") == "ivf").select("qid", "vec_id")
     exact_top = top.filter(F.col("stream") == "exact").select("qid", "vec_id")
-    hits = (
-        ivf_top.join(exact_top, ["qid", "vec_id"], "inner")
-        .groupBy("qid").agg(F.count("*").alias("_hits"))
-    )
-    return (
-        queries_df.select(F.col("vec_id").alias("qid"))
-        .join(F.broadcast(hits), "qid", "left")
-        .select(
-            "qid",
-            F.lit(k).alias("k"),
-            (F.coalesce(F.col("_hits"), F.lit(0)) >= int(0.9 * k)).alias("recall_ok"),
-        )
-    )
+    return _ivf_recall_flags(queries_df, ivf_top, exact_top, k)
 
 
 @query(
@@ -1330,9 +1409,7 @@ def sim_auto_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     architecture applied to embeddings."""
     from pyspark_caffe_spark import vecops
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     exact = (
         vecops.auto_threshold_pairs(emb, tau=0.4)
         .select("id_a", "id_b")
@@ -1845,24 +1922,13 @@ def _ann_manifest_commit(
 def _ann_base_path(root: str, manifest: tuple) -> str:
     """The base-generation dir a parsed ``manifest`` names, with the
     vanished-dir→``postings`` fallback the pointer always had — ONE
-    definition shared by the pointer-era resolver, the live-layout
-    walk, and the serve path's existence gate, so every consumer of a
-    given manifest SNAPSHOT derives the same base dir from it."""
+    definition shared by ``_ann_index_paths``, the live-layout walk,
+    and ``_ann_open``'s existence gate, so every consumer of a given
+    manifest SNAPSHOT derives the same base dir from it."""
     cand = os.path.join(root, manifest[0])
     if os.path.isdir(cand):
         return cand
     return os.path.join(root, "postings")
-
-
-def _ann_postings_current(root: str) -> str:
-    """Resolve the live BASE postings generation under ``root``: the
-    dir named by the manifest's first line if present on disk, else
-    the base ``postings`` dir.  A manifest naming a vanished dir
-    (manual deletion) falls back to base, where the serve path's
-    existence check fails loud with the rebuild route.  Segments are
-    resolved separately by ``_ann_live_paths`` — this keeps the
-    pre-segment callers (path plumbing, isdir gates) unchanged."""
-    return _ann_base_path(root, _ann_manifest_read(root))
 
 
 def _ann_live_paths(
@@ -1886,17 +1952,14 @@ def _ann_live_paths(
     snapshot rather than re-reading mutable state per helper."""
     manifest = manifest or _ann_manifest_read(root)
     name, _n, _fp, segs = manifest
-    base = os.path.join(root, name)
-    if not os.path.isdir(base):
-        if require_base:
-            raise FileNotFoundError(
-                f"ANN base generation {name!r} named by the manifest is "
-                "missing on disk — compacting the stale 'postings' fallback "
-                "would commit a stamp the rewritten content does not match; "
-                "rebuild via sink_ann_index/_build_ann_index"
-            )
-        base = os.path.join(root, "postings")
-    paths = [base]
+    if require_base and not os.path.isdir(os.path.join(root, name)):
+        raise FileNotFoundError(
+            f"ANN base generation {name!r} named by the manifest is "
+            "missing on disk — compacting the stale 'postings' fallback "
+            "would commit a stamp the rewritten content does not match; "
+            "rebuild via sink_ann_index/_build_ann_index"
+        )
+    paths = [_ann_base_path(root, manifest)]
     for seg_name, _sn, _sfp in segs:
         seg = os.path.join(root, seg_name)
         if not os.path.isdir(seg):
@@ -1909,18 +1972,19 @@ def _ann_live_paths(
     return paths
 
 
+def _ann_dir_num(name: str, prefix: str) -> int:
+    """N of a ``<prefix><N>`` dir name; 0 for any other name."""
+    num = name[len(prefix):]
+    return int(num) if name.startswith(prefix) and num.isdigit() else 0
+
+
 def _ann_max_dir_num(root: str, prefix: str) -> int:
     """Highest ``<prefix><N>`` directory number present under ``root``
     (0 when none) — the on-disk half of the orphan-collision rule
     shared by the compaction swap (``postings_gen``) and the segment
     append (``postings_seg``): new dirs number past everything on
     disk, so a crash orphan can never collide with the next write."""
-    nums = [
-        int(n[len(prefix):])
-        for n in os.listdir(root)
-        if n.startswith(prefix) and n[len(prefix):].isdigit()
-    ]
-    return max(nums, default=0)
+    return max((_ann_dir_num(n, prefix) for n in os.listdir(root)), default=0)
 
 
 def _ann_claim_dir(root: str, prefix: str, start_num: int) -> tuple[str, str]:
@@ -2031,15 +2095,6 @@ def _fsync_tree(path: str) -> None:
     _sync(os.path.dirname(os.path.abspath(path)))
 
 
-def _ann_flip_pointer(root: str, name: str) -> None:
-    """Compaction's commit: a manifest naming ONLY ``name`` — the new
-    generation, zero segments, zero folded delta (callers that folded
-    segment deltas in commit via ``_ann_manifest_commit`` directly).
-    Kept as the crash-walk tests' entry point: the manifest IS the old
-    pointer, grown list fields."""
-    _ann_manifest_commit(root, (name, 0, 0), ())
-
-
 def _ann_reset_generations(root: str) -> None:
     """A fresh build supersedes every compaction generation and append
     segment: drop the manifest (FIRST — a crash mid-cleanup then
@@ -2084,8 +2139,7 @@ def _ann_root(sf_dir: str, suffix: str = "") -> str:
     """Scratch root of the persisted index for this (sf tag, suffix) —
     the static half of ``_ann_index_paths``, split out so callers that
     need ONE manifest snapshot (the serve path) can resolve the root
-    without triggering the manifest read ``_ann_postings_current``
-    does."""
+    without triggering the manifest read ``_ann_index_paths`` does."""
     from pyspark_caffe_spark.queries.relational import _scratch
 
     tag = (os.path.basename(sf_dir.rstrip("/")) or "sf") + suffix
@@ -2093,10 +2147,15 @@ def _ann_root(sf_dir: str, suffix: str = "") -> str:
 
 
 def _ann_index_paths(sf_dir: str, suffix: str = "") -> tuple[str, str, str]:
+    """(centroids, live BASE postings generation, meta) paths of the
+    index.  A manifest naming a vanished generation resolves to the
+    base ``postings`` dir, where the serve path's existence check
+    fails loud with the rebuild route; segments are resolved by
+    ``_ann_live_paths``."""
     root = _ann_root(sf_dir, suffix)
     return (
         os.path.join(root, "centroids"),
-        _ann_postings_current(root),
+        _ann_base_path(root, _ann_manifest_read(root)),
         os.path.join(root, "meta"),
     )
 
@@ -2114,6 +2173,22 @@ def _ann_fp_exprs() -> tuple[Column, Column]:
             F.sum(F.xxhash64("vec_id").cast("decimal(38,0)")),
             F.lit(0).cast("decimal(38,0)"),
         ).alias("fp"),
+    )
+
+
+def _ann_posting_identity_exprs() -> tuple[Column, Column]:
+    """The postings-content identity aggregate pair of the compaction
+    proof — (row count, decimal sum of xxhash64(cell, vec_id, emb)).
+    ONE definition shared by the before-snapshot (observe on the
+    rewrite's own read, or its snapshot-scan fallback) and the
+    after-audit aggregate, so the two sides of ``content_identical``
+    can never diverge."""
+    return (
+        F.count("*").alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64("cell", "vec_id", "emb").cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("h"),
     )
 
 
@@ -2209,10 +2284,7 @@ def _ann_assign(df: DataFrame, centroids: "np.ndarray", m: int) -> DataFrame:
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cents, m_a = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+        for pdf, x in _ivf_batches(batches):
             ids = pdf["vec_id"].to_numpy()
             top_m = np.argsort(-(x @ cents.T), axis=1)[:, :m_a]
             reps = np.repeat(np.arange(len(pdf)), m_a)
@@ -2262,7 +2334,6 @@ def _ann_write_small_table(path: str, table) -> None:
 
 
 def _ann_write_meta(
-    spark: SparkSession,
     mpath: str,
     writer_version: int,
     nlist: int,
@@ -2383,21 +2454,11 @@ def _build_ann_index(
     index without the delta slice); ``suffix`` namespaces the on-disk
     index so variant indexes never shadow the default one.  Returns
     ``(nlist, m, centroids_path, postings_path)``."""
-    nlist, m = _ANN_NLIST, _ANN_M
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     if corpus_filter is not None:
         emb = emb.filter(corpus_filter)
-    train = (
-        emb.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(2)) == 0)
-        .orderBy("vec_id").limit(4096).collect()
-    )
-    sample = np.stack([np.array(r["emb"]) for r in train])
-    if len(sample) < nlist:
-        nlist = max(1, len(sample))
-    m = min(m, nlist)
-    centroids = _lloyd_spherical(sample, nlist, iters=10)
+    centroids, nlist = _ivf_train_centroids(emb, _ANN_NLIST)
+    m = min(_ANN_M, nlist)
     cpath, _resolved, mpath = _ann_index_paths(sf_dir, suffix)
     # a build starts a new index: retire every compaction generation
     # and write the base layout (resolution after the reset is always
@@ -2445,7 +2506,6 @@ def _build_ann_index(
     vals = obs.get
     corpus_n, corpus_fp = int(vals["n"]), str(vals["fp"])
     _ann_write_meta(
-        spark,
         mpath,
         _ANN_WRITER_VERSION,
         nlist,
@@ -2595,31 +2655,20 @@ def sim_knn_ivf_serve_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates at fixture scale, so a short list means the serve path
     dropped candidates (bad pruning, broken dedup) and breaks the
     hash."""
-    try:
+    def serve() -> DataFrame:
         # THE reuse path, so corpus validation is on: a persisted index
         # whose geometry still validates but whose DATASET was
         # regenerated under the same tag must rebuild, not serve
         # phantom vec_ids (round-10 review finding)
-        served = _serve_from_ann_index(
+        return _serve_from_ann_index(
             spark, sf_dir, with_recall=False, validate_corpus=True
         )
-    except (FileNotFoundError, ValueError) + _SPARK_READ_ERRORS as ex:
-        # _SPARK_READ_ERRORS: a TORN meta/centroids parquet (crash
-        # mid-write) raises AnalysisException/Py4JJavaError from the
-        # serve path's reads — same rebuild route as absent/stale/
-        # drifted (the round-12 advisory finding on compact_only's
-        # gate applies to this one identically).  Artifact-shaped
-        # failures only: a transient JVM error inside the serve jobs
-        # must propagate, not silently turn this PURE-SERVE product
-        # metric into serve+build.
-        if not isinstance(
-            ex, (FileNotFoundError, ValueError)
-        ) and not _is_artifact_read_failure(ex):
-            raise
+
+    def rebuild() -> DataFrame:
         _build_ann_index(spark, sf_dir)
-        served = _serve_from_ann_index(
-            spark, sf_dir, with_recall=False, validate_corpus=True
-        )
+        return serve()
+
+    served = _ann_reuse_or_rebuild(serve, rebuild)
     return served.groupBy("qid").agg(F.count("*").alias("n_results"))
 
 
@@ -2672,9 +2721,7 @@ def sim_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
     suffix = "_refresh"
     _build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     # ONE query-matrix collect for both serves (round 19, guide §1.2):
     # the batch is the same deterministic hash slice in both, and
     # identical probe sets are exactly what the before/after comparison
@@ -2745,11 +2792,11 @@ def _ann_append(spark: SparkSession, sf_dir: str, suffix: str, delta: DataFrame)
     compact/build, and skipped by the numbering above."""
     import shutil
 
-    cpath, _ppath, mpath = _ann_index_paths(sf_dir, suffix)
-    root = os.path.dirname(mpath)
-    meta = _ann_read_meta(mpath)
-    centroids = _ann_read_centroids(cpath)
-    manifest = _ann_manifest_read(root)
+    root = _ann_root(sf_dir, suffix)
+    # the same gate as a serve: the delta must be assigned under
+    # centroids that match the stamp, or its postings land in cells
+    # the probe math won't look in
+    meta, centroids, manifest = _ann_open(root)
     gen_name, gen_n, gen_fp, segs = manifest
     # next segment number = past everything on disk (crash orphans)
     # AND everything the manifest names (a committed segment whose dir
@@ -2757,13 +2804,10 @@ def _ann_append(spark: SparkSession, sf_dir: str, suffix: str, delta: DataFrame)
     # manifest line, double-counting its stale delta; round-14
     # self-review finding).  The deleted segment itself stays the
     # fail-loud _ann_live_paths case.
-    named = [
-        int(s[0][len("postings_seg"):])
-        for s in segs
-        if s[0].startswith("postings_seg")
-        and s[0][len("postings_seg"):].isdigit()
-    ]
-    next_num = max([_ann_max_dir_num(root, "postings_seg"), *named]) + 1
+    next_num = max(
+        [_ann_max_dir_num(root, "postings_seg")]
+        + [_ann_dir_num(s[0], "postings_seg") for s in segs]
+    ) + 1
     # round-16: CLAIM the segment dir atomically (os.mkdir) before the
     # Spark write.  Two concurrent appends both compute next_num from
     # the same disk scan; without the claim they would write the SAME
@@ -2840,13 +2884,14 @@ def _count_part_files(path: str) -> int:
 
 
 def _ann_check_geometry(cpath: str, meta) -> "np.ndarray":
-    """Centroids-vs-stamp consistency check, shared by the serve path
-    and the maintenance verbs' reuse gates: read the (nlist tiny rows)
-    centroid table — driver-local, see :func:`_ann_read_small_table` —
-    and raise ValueError — with the rebuild route — if it does not
-    match the meta stamp (a crash remnant where the build overwrote
-    centroids but not yet postings/meta, or any other mixed-version
-    dir).  Returns the validated centroid matrix."""
+    """Centroids-vs-stamp consistency check of :func:`_ann_open`, so
+    every serve, append and compaction gate runs it: read the (nlist
+    tiny rows) centroid table — driver-local, see
+    :func:`_ann_read_small_table` — and raise ValueError — with the
+    rebuild route — if it does not match the meta stamp (a crash
+    remnant where the build overwrote centroids but not yet
+    postings/meta, or any other mixed-version dir).  Returns the
+    validated centroid matrix."""
     centroids = _ann_read_centroids(cpath)
     if (
         len(centroids) != meta["nlist"]
@@ -2861,6 +2906,41 @@ def _ann_check_geometry(cpath: str, meta) -> "np.ndarray":
             "rebuild via sink_ann_index/_build_ann_index"
         )
     return centroids
+
+
+def _ann_open(root: str, require_base: bool = False) -> tuple[dict, np.ndarray, tuple]:
+    """Open the persisted index under ``root`` for serving, appending
+    or compacting: take ONE manifest snapshot, require the centroids,
+    live base generation and meta dirs, and refuse a meta stamped by
+    another writer version or centroids that do not match the stamp
+    (:func:`_ann_check_geometry`).  Every refusal raises
+    FileNotFoundError or ValueError with the rebuild route.
+    ``require_base`` (the compaction gate) also resolves the live
+    layout with :func:`_ann_live_paths`, so a manifest naming a
+    vanished base generation or segment fails here, inside the gate.
+    Returns (meta, centroids, manifest); callers derive every later
+    layout fact from that manifest snapshot."""
+    cpath = os.path.join(root, "centroids")
+    mpath = os.path.join(root, "meta")
+    manifest = _ann_manifest_read(root)
+    base = _ann_base_path(root, manifest)
+    if not (os.path.isdir(cpath) and os.path.isdir(base) and os.path.isdir(mpath)):
+        raise FileNotFoundError(
+            "ANN index not built (or missing its version-stamp meta table) "
+            "— run sink_ann_index/_build_ann_index first"
+        )
+    meta = _ann_read_meta(mpath)
+    if meta["writer_version"] != _ANN_WRITER_VERSION:
+        raise ValueError(
+            f"ANN index was written by writer_version={meta['writer_version']} "
+            f"but this code serves version={_ANN_WRITER_VERSION}: a scratch "
+            "dir survived a code upgrade — rebuild via sink_ann_index/"
+            "_build_ann_index"
+        )
+    centroids = _ann_check_geometry(cpath, meta)
+    if require_base:
+        _ann_live_paths(root, manifest, require_base=True)
+    return meta, centroids, manifest
 
 
 def _ann_validate_corpus(
@@ -2919,14 +2999,6 @@ def _ann_validate_corpus(
             _ANN_VALIDATED[cache_key] = True
 
 
-def _ann_posting_row_hash() -> Column:
-    """The per-posting content-hash term of the compaction identity
-    proof — ONE definition shared by the before-snapshot (observe on
-    the rewrite's own read, round 18) and the after-audit aggregate,
-    so the two sides of ``content_identical`` can never diverge."""
-    return F.xxhash64("cell", "vec_id", "emb").cast("decimal(38,0)")
-
-
 def _ann_compact_postings(
     spark: SparkSession, ppath: str, identity_out: dict | None = None
 ) -> str:
@@ -2972,13 +3044,7 @@ def _ann_compact_postings(
     obs: Observation | None = None
     if identity_out is not None:
         obs = Observation()
-        src = src.observe(
-            obs,
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(_ann_posting_row_hash()), F.lit(0).cast("decimal(38,0)")
-            ).alias("h"),
-        )
+        src = src.observe(obs, *_ann_posting_identity_exprs())
     (
         src
         .repartition("cell")
@@ -3014,13 +3080,7 @@ def _ann_compact_postings(
         if n_seen != expected_n:
             snap = (
                 _ann_read_postings(spark, live)
-                .agg(
-                    F.count("*").alias("n"),
-                    F.coalesce(
-                        F.sum(_ann_posting_row_hash()),
-                        F.lit(0).cast("decimal(38,0)"),
-                    ).alias("h"),
-                )
+                .agg(*_ann_posting_identity_exprs())
                 .collect()[0]
             )
             n_seen, h_seen = int(snap["n"]), int(snap["h"])
@@ -3072,9 +3132,7 @@ def _ann_lay_ingest_history(spark: SparkSession, sf_dir: str, suffix: str) -> No
     d1 = F.pmod(F.col("vec_id"), F.lit(10)) == 3
     d2 = F.pmod(F.col("vec_id"), F.lit(10)) == 7
     _build_ann_index(spark, sf_dir, corpus_filter=~(d1 | d2), suffix=suffix)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     _ann_append(spark, sf_dir, suffix, emb.filter(d1))
     _ann_append(spark, sf_dir, suffix, emb.filter(d2))
 
@@ -3113,7 +3171,7 @@ def _ann_compact_and_prove(
     ppath = _ann_compact_postings(spark, ppath, identity_out=before)
     files_after = _count_part_files(ppath)
 
-    row_hash = _ann_posting_row_hash()
+    n_after, h_after = _ann_posting_identity_exprs()
     meta = _ann_read_meta(mpath)
     eff_n, _eff_fp, _manifest = _ann_effective_stamp(root, meta)
     compacted = spark.read.parquet(ppath)
@@ -3121,11 +3179,8 @@ def _ann_compact_and_prove(
         F.countDistinct("vec_id").alias("n_vectors"),
         F.count("*").alias("n_postings"),
         (
-            (F.count("*") == F.lit(int(before["n"])))
-            & (
-                F.coalesce(F.sum(row_hash), F.lit(0).cast("decimal(38,0)"))
-                == F.lit(str(before["h"])).cast("decimal(38,0)")
-            )
+            (n_after == F.lit(int(before["n"])))
+            & (h_after == F.lit(str(before["h"])).cast("decimal(38,0)"))
         ).alias("content_identical"),
     ]
     if with_files_collapsed:
@@ -3235,43 +3290,23 @@ def sink_ann_index_compact_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exactly one data file per cell — is pinned by tests either
     way)."""
     suffix = "_compact"
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    cpath, ppath, mpath = _ann_index_paths(sf_dir, suffix)
-    try:
-        if not (
-            os.path.isdir(cpath) and os.path.isdir(ppath) and os.path.isdir(mpath)
-        ):
-            raise FileNotFoundError("ANN _compact index not built")
-        meta = _ann_read_meta(mpath)
-        if meta["writer_version"] != _ANN_WRITER_VERSION:
-            raise ValueError("stale writer version")
-        _ann_check_geometry(cpath, meta)
-        # a manifest naming a vanished append segment — or, under
-        # require_base (round-15), a vanished base GENERATION — raises
-        # FileNotFoundError here, INSIDE the gate: rebuild route,
-        # never a hard key failure from the proof block's read
-        _ann_live_paths(os.path.dirname(mpath), require_base=True)
-        _ann_validate_corpus(sf_dir, mpath, meta, emb)
-    except (FileNotFoundError, ValueError) + _SPARK_READ_ERRORS as ex:
-        # _SPARK_READ_ERRORS: a TORN meta/centroids parquet (crash
-        # mid-write, no commit marker, corrupt footer) surfaces from
-        # spark.read.parquet as AnalysisException / Py4JJavaError, not
-        # ValueError — the gate's contract is "rebuild when ANY
-        # validation fails", torn files included (round-12 advisory
-        # finding).  But ONLY artifact-shaped failures route here: a
-        # transient JVM error (executor OOM, disk-full) also raises
-        # Py4JJavaError and must propagate, not trigger a silent
-        # rebuild that masks it.  Failures of the rebuild itself still
-        # propagate: only the gate body is inside this try.
-        if not isinstance(
-            ex, (FileNotFoundError, ValueError)
-        ) and not _is_artifact_read_failure(ex):
-            raise
-        _ann_lay_ingest_history(spark, sf_dir, suffix)
-        _, ppath, mpath = _ann_index_paths(sf_dir, suffix)
+    emb = _ann_emb(spark, sf_dir)
+    root = _ann_root(sf_dir, suffix)
 
+    def validate() -> None:
+        # require_base: a manifest naming a vanished append segment or
+        # base GENERATION raises FileNotFoundError here, INSIDE the
+        # gate — rebuild route, never a hard key failure from the
+        # proof block's read
+        meta, _centroids, manifest = _ann_open(root, require_base=True)
+        _ann_validate_corpus(
+            sf_dir, os.path.join(root, "meta"), meta, emb, manifest
+        )
+
+    _ann_reuse_or_rebuild(
+        validate, lambda: _ann_lay_ingest_history(spark, sf_dir, suffix)
+    )
+    _, ppath, mpath = _ann_index_paths(sf_dir, suffix)
     return _ann_compact_and_prove(spark, ppath, mpath, with_files_collapsed=False)
 
 
@@ -3293,45 +3328,27 @@ def _serve_from_ann_index(
     driver key keeps it for the correctness gate while the
     amortization measurement (PERF.md round 9) times the product
     path."""
-    nprobe, k = _ANN_NPROBE, _ANN_K
+    k = _ANN_K
     root = _ann_root(sf_dir, suffix)
-    cpath = os.path.join(root, "centroids")
-    mpath = os.path.join(root, "meta")
     # ONE manifest parse per serve — the single observation point of
-    # the (mutable) layout state: the existence gate below, the corpus
+    # the (mutable) layout state: the existence gate, the corpus
     # guard's derived stamp, AND the live-path resolution all derive
     # from THIS snapshot (round-15, closing the round-14 advisory:
     # resolving ppath through _ann_index_paths re-read the manifest
     # independently, so a commit landing between the two reads let the
     # gate and the served layout observe different layouts)
-    manifest = _ann_manifest_read(root)
-    ppath = _ann_base_path(root, manifest)
-    if not (os.path.isdir(cpath) and os.path.isdir(ppath) and os.path.isdir(mpath)):
-        raise FileNotFoundError(
-            "ANN index not built (or missing its version-stamp meta table) "
-            "— run sink_ann_index/_build_ann_index first"
-        )
+    meta, centroids, manifest = _ann_open(root)
+    nprobe = min(_ANN_NPROBE, len(centroids))  # degenerate tiny-corpus index
 
     from pyspark_caffe_spark import vecops
 
-    meta = _ann_read_meta(mpath)
-    if meta["writer_version"] != _ANN_WRITER_VERSION:
-        raise ValueError(
-            f"ANN index was written by writer_version={meta['writer_version']} "
-            f"but this code serves version={_ANN_WRITER_VERSION}: a scratch "
-            "dir survived a code upgrade — rebuild via sink_ann_index/"
-            "_build_ann_index before serving"
-        )
-    centroids = _ann_check_geometry(cpath, meta)
-    nprobe = min(nprobe, len(centroids))  # degenerate tiny-corpus index
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    emb = _ann_emb(spark, sf_dir)
     if validate_corpus:
         # threaded snapshot: the guard's derived stamp describes the
         # same layout the union below serves
-        _ann_validate_corpus(sf_dir, mpath, meta, emb, manifest)
+        _ann_validate_corpus(
+            sf_dir, os.path.join(root, "meta"), meta, emb, manifest
+        )
     qpred = _ann_query_slice()
     queries_df = emb.filter(qpred)
     if queries is None:
@@ -3344,10 +3361,8 @@ def _serve_from_ann_index(
     else:
         qids, qmat = queries
 
-    probe_rank = np.argsort(-(qmat @ centroids.T), axis=1)[:, :nprobe]
-    probe_mask = np.zeros((len(qids), len(centroids)), dtype=bool)
-    np.put_along_axis(probe_mask, probe_rank, True, axis=1)
-    probed_cells = sorted({int(c) for c in probe_rank.reshape(-1)})
+    probe_mask = _ivf_probe_mask(qmat, centroids, nprobe)
+    probed_cells = np.flatnonzero(probe_mask.any(axis=0)).tolist()
 
     # live layout = base generation + append segments (manifest order),
     # one flat union with the cell filter pruning unprobed partition
@@ -3365,45 +3380,25 @@ def _serve_from_ann_index(
 
     def serve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_mat, p_mask = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
+        for pdf, x in _ivf_batches(batches):
             cells = pdf["cell"].to_numpy().astype(np.int64)
-            cand = p_mask[:, cells]            # [nq × rows]
-            scores = np.round(x @ q_mat.T, 6)  # [rows × nq]
-            out_q, out_id, out_cos = [], [], []
-            for qi in range(len(q_ids)):
-                cidx = np.nonzero(cand[qi])[0]
-                if not len(cidx):
-                    continue
-                # within-batch dedup (a vector can arrive from two
-                # probed cells) so duplicates can't crowd the local
-                # top-k; scores for a duplicate are identical
-                uniq_ids, first = np.unique(ids[cidx], return_index=True)
-                sub = scores[cidx, qi][first]
-                sel = np.lexsort((uniq_ids, -sub))[: min(k, len(uniq_ids))]
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_id.extend(uniq_ids[sel])
-                out_cos.extend(sub[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {"qid": out_q, "vec_id": out_id, "cos": out_cos}
-                )
-
-    from pyspark.sql import Window
+            # within-batch dedup (a vector can arrive from two probed
+            # cells) so duplicates can't crowd the local top-k
+            ids, scores, cand = _ivf_collapse(
+                pdf["vec_id"].to_numpy(),
+                np.round(x @ q_mat.T, 6),  # [rows × nq]
+                p_mask[:, cells].T,        # [rows × nq]
+            )
+            top = _ivf_local_topk(q_ids, ids, scores, k, cand)
+            if len(top):
+                yield top
 
     cand = post.mapInPandas(serve, schema="qid long, vec_id long, cos double")
     # global dedup across batches/cells, then the bounded top-k merge
     best = cand.groupBy("qid", "vec_id").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    ivf_ranked = best.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    )
+    ivf_ranked = _ivf_global_topk(best, k, "qid")
     if not with_recall:
         return ivf_ranked.select("qid", "vec_id", "cos")
-    ivf_top = ivf_ranked.select("qid", "vec_id")
 
     # exact baseline: one corpus pass, per-batch local top-k per query,
     # global window merge (provably contains the true top-k)
@@ -3412,43 +3407,15 @@ def _serve_from_ann_index(
 
     def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_ids, q_mat = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            scores = np.round(x @ q_mat.T, 6)
-            out_q, out_id, out_cos = [], [], []
-            for qi in range(len(q_ids)):
-                col = scores[:, qi]
-                sel = np.lexsort((ids, -col))[: min(k, len(col))]
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_id.extend(ids[sel])
-                out_cos.extend(col[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {"qid": out_q, "vec_id": out_id, "cos": out_cos}
-                )
+        for pdf, x in _ivf_batches(batches):
+            yield _ivf_local_topk(
+                q_ids, pdf["vec_id"].to_numpy(), np.round(x @ q_mat.T, 6), k
+            )
 
     ex = corpus.mapInPandas(exact, schema="qid long, vec_id long, cos double")
-    exact_top = (
-        ex.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("qid", "vec_id")
-    )
-    hits = (
-        ivf_top.join(exact_top, ["qid", "vec_id"], "inner")
-        .groupBy("qid")
-        .agg(F.count("*").alias("_hits"))
-    )
-    return (
-        queries_df.select(F.col("vec_id").alias("qid"))
-        .join(F.broadcast(hits), "qid", "left")
-        .select(
-            "qid",
-            F.lit(k).alias("k"),
-            (F.coalesce(F.col("_hits"), F.lit(0)) >= int(0.9 * k)).alias("recall_ok"),
-        )
+    exact_top = _ivf_global_topk(ex, k, "qid").select("qid", "vec_id")
+    return _ivf_recall_flags(
+        queries_df, ivf_ranked.select("qid", "vec_id"), exact_top, k
     )
 
 

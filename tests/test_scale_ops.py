@@ -648,7 +648,7 @@ def test_ann_index_compact_one_file_per_cell(spark, sf_dir):
 def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     """Round-11 verdict ask #3: the compact swap must have NO window
     with an unreadable index.  The commit point is the atomic pointer-
-    file flip (_ann_flip_pointer); this test walks the swap manually
+    file flip (_ann_manifest_commit); this test walks the swap manually
     and verifies a simulated crash at EVERY boundary leaves a serve
     that answers:
 
@@ -694,7 +694,7 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
     ), "crash between write-aside and flip broke the serve path"
 
     # --- crash 2: pointer flipped, superseded dirs NOT deleted ---
-    so._ann_flip_pointer(root, "postings_gen1")
+    so._ann_manifest_commit(root, ("postings_gen1", 0, 0), ())
     _, resolved, _ = so._ann_index_paths(sf_dir, suffix)
     assert resolved == orphan, "flip must re-route resolution atomically"
     assert os.path.isdir(ppath), "test premise: old dir still on disk"
@@ -743,7 +743,7 @@ def test_ann_compact_crash_windows_leave_servable_index(spark, sf_dir):
 
 def test_ann_pointer_fallback_chain(spark, sf_dir):
     """Round-12 verdict ask #4: the crash-walk covers the FLIP; this
-    pins the MANUAL-DELETION fallback chain _ann_postings_current's
+    pins the MANUAL-DELETION fallback chain _ann_index_paths's
     docstring argues:
 
       (a) pointer naming a VANISHED generation while the base postings
@@ -932,6 +932,48 @@ def test_ann_compact_only_refuses_geometry_crash_remnant(spark, sf_dir):
         "compact_only reused a geometry-inconsistent crash remnant "
         "instead of rebuilding"
     )
+
+
+def test_ann_append_refuses_mixed_geometry_index(spark, sf_dir):
+    """An append runs the same centroids-vs-stamp gate as a serve: on
+    a crash remnant whose centroids no longer match the meta stamp,
+    the delta would be assigned under the wrong centroids and its
+    postings would sit in cells the probe math never looks in.  The
+    append must raise ValueError before it claims a segment dir, and
+    leave the manifest unchanged."""
+    import os
+    import shutil
+
+    import pytest
+
+    import pyspark_caffe_spark.queries.scale_ops as so
+    from pyspark_caffe_spark.tables import load_table
+
+    suffix = "_geoappend"
+    delta_pred = F.pmod(F.col("vec_id"), F.lit(10)) == 7
+    so._build_ann_index(spark, sf_dir, corpus_filter=~delta_pred, suffix=suffix)
+    cpath, _, mpath = so._ann_index_paths(sf_dir, suffix)
+    root = os.path.dirname(mpath)
+
+    # the crash remnant: different-geometry centroids under the same
+    # path, meta/postings untouched
+    cents = spark.read.parquet(cpath).collect()
+    broken = [(int(r["cell"]), [v + 1.0 for v in r["centroid"]]) for r in cents]
+    spark.createDataFrame(broken, "cell int, centroid array<double>").write.mode(
+        "overwrite"
+    ).parquet(cpath)
+    manifest_before = so._ann_manifest_read(root)
+
+    delta = load_table(spark, sf_dir, "embeddings").filter(delta_pred).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+    with pytest.raises(ValueError, match="geometry drift"):
+        so._ann_append(spark, sf_dir, suffix, delta)
+    assert so._ann_manifest_read(root) == manifest_before
+    assert not any(n.startswith("postings_seg") for n in os.listdir(root)), (
+        "a refused append must not claim a segment dir"
+    )
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_ann_compact_only_rebuilds_on_torn_meta(spark, sf_dir):
@@ -1371,6 +1413,53 @@ def test_ann_compact_cross_check_takes_no_snapshot_fallback(
         assert identity["n"] == emb.count() * m
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_ivf_local_topk_matches_brute_force():
+    """The shared per-batch top-k kernel of every IVF search against a
+    per-query brute force: ranked by (-cos, vec_id), at most k rows per
+    query, only candidate rows.  Planted ties make vec_id decide."""
+    import numpy as np
+
+    import pyspark_caffe_spark.queries.scale_ops as so
+
+    rng = np.random.default_rng(11)
+    n, nq = 40, 5
+    ids = rng.permutation(1000)[:n].astype(np.int64)
+    scores = np.round(rng.uniform(-1, 1, (n, nq)), 1)  # coarse: many ties
+    scores[:8] = 0.5  # planted tie block across every query
+    q_ids = np.arange(100, 100 + nq, dtype=np.int64)
+    cand = rng.random((n, nq)) < 0.4
+    cand[:, 2] = False  # a query with an empty candidate set
+
+    def brute(k, c):
+        out = []
+        for qi, q in enumerate(q_ids):
+            ranked = sorted(
+                (-scores[i, qi], ids[i]) for i in range(n) if c is None or c[i, qi]
+            )
+            out += [(q, vid, -neg) for neg, vid in ranked[:k]]
+        return out
+
+    for k, c in [(3, None), (3, cand), (n + 5, None), (n + 5, cand)]:
+        got = so._ivf_local_topk(q_ids, ids, scores, k, c)
+        assert list(got.itertuples(index=False, name=None)) == brute(k, c), (k, c)
+    assert 102 not in set(so._ivf_local_topk(q_ids, ids, scores, 3, cand).qid)
+
+    # serve-side collapse: vec_id 7 arrives from two cells; query 0
+    # probed only the first copy, query 1 only the second.  Each query
+    # gets 7 once, scored from the copy it probed (the copies score
+    # differently here only so the test can tell them apart).
+    ids = np.array([7, 3, 7, 9], dtype=np.int64)
+    scores = np.array([[0.1, 0.8], [0.5, 0.6], [0.9, 0.2], [0.2, 0.4]])
+    cand = np.array([[True, False], [True, True], [False, True], [True, True]])
+    u_ids, u_scores, u_cand = so._ivf_collapse(ids, scores, cand)
+    assert list(u_ids) == [3, 7, 9]
+    top = so._ivf_local_topk(np.array([0, 1]), u_ids, u_scores, 10, u_cand)
+    assert list(top.itertuples(index=False, name=None)) == [
+        (0, 3, 0.5), (0, 9, 0.2), (0, 7, 0.1),
+        (1, 3, 0.6), (1, 9, 0.4), (1, 7, 0.2),
+    ]
 
 
 def test_ann_manifest_roundtrip_property(tmp_path):

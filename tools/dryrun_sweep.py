@@ -1,19 +1,25 @@
 #!/usr/bin/env python
-"""Dry-run the driver's budget-limited correctness sweep locally.
+"""Dry-run the driver's correctness check locally, for the sweep
+prefix or for named keys.
 
 Replays EXACTLY what the grading driver does each round, before the
-driver does it: import ``__spark_entry__``, take the first N keys of
-``queries()`` (the sweep-ordered registry — code-changed keys first,
-then stalest evidence), run each against its ``oracle_sql()`` DuckDB
-oracle at sf0.01 through the same normalize/compare path the local
-suite uses (``tests.parity.assert_parity``), and print one summary
-line for PERF.md: ``DRYRUN: G/N green in Xs``.
+driver does it: import ``__spark_entry__``, take the keys to check,
+run each against its ``oracle_sql()`` DuckDB oracle through the same
+normalize/compare path the local suite uses
+(``tests.parity.assert_parity``), and print one line per key plus a
+summary line for PERF.md: ``DRYRUN: G/N green in Xs``.
+
+An integer N checks the first N keys of ``queries()`` (the
+sweep-ordered registry — code-changed keys first, then stalest
+evidence); key names check exactly those keys (the per-change
+verification loop of an optimization round).
 
 Usage::
 
     python tools/dryrun_sweep.py            # first 50 keys (the budget)
     python tools/dryrun_sweep.py 60         # widen past the budget
-    python tools/dryrun_sweep.py 10 /root/testdata/sf0.01
+    python tools/dryrun_sweep.py sim_knn_ivf sink_ann_index
+    python tools/dryrun_sweep.py --sf /root/testdata/sf0.1 key1 key2
 
 Every failing key prints its position, name, and the first 200 chars
 of the mismatch, so a red row is actionable before the driver records
@@ -35,8 +41,13 @@ _TABLES = [
 
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.01"
+    if args[:1] == ["--sf"] and len(args) > 1:
+        sf_dir, args = args[1], args[2:]
+    if args[:1] == ["--sf"] or (len(args) > 1 and args[0].isdigit()):
+        print("usage: dryrun_sweep.py [--sf DIR] [N | KEY ...]")
+        return 2
 
     sys.path.insert(0, _REPO)
     spec = importlib.util.spec_from_file_location(
@@ -59,15 +70,20 @@ def main() -> int:
         )
 
     qs, osql = mod.queries(), mod.oracle_sql()
-    keys = list(qs)[:n]
+    if not args or args[0].isdigit():
+        keys = list(qs)[: int(args[0]) if args else 50]
+    else:
+        keys = args
     t0 = time.time()
     green = 0
     for i, key in enumerate(keys):
+        tk = time.time()
         try:
             assert_parity(qs[key](spark, sf_dir), con, osql[key], key)
             green += 1
+            print(f"[{i}] {key} OK ({time.time() - tk:.1f}s)", flush=True)
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
-            print(f"[{i}] {key} FAIL {str(ex)[:200]}", flush=True)
+            print(f"[{i}] {key} FAIL {type(ex).__name__}: {str(ex)[:200]}", flush=True)
     print(f"DRYRUN: {green}/{len(keys)} green in {time.time() - t0:.0f}s")
     return 0 if green == len(keys) else 1
 

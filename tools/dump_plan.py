@@ -1,5 +1,16 @@
 #!/usr/bin/env python
-"""Dump explain("formatted") for NAMED keys to plans/<dir>/<key>_<tag>.txt.
+"""Dump the plans of NAMED keys to plans/<dir>/<key>_<tag>.txt: the
+static explain("formatted") plan, then the FINAL adaptive plan.
+
+Some claims (AQE exchange reuse in text_tfidf) exist only in the final
+adaptive plan: the static dump shows ``isFinalPlan=false`` and no
+ReusedExchange, because AQE stage reuse is decided at runtime when the
+second branch's shuffle canonicalizes to an already-materialized
+stage.  So after writing the static plan, the tool executes the
+DataFrame's own QueryExecution via ``collect()`` (a write command would
+finalize a DIFFERENT QueryExecution) and appends the executedPlan
+string under a labeled separator, so runtime-plan claims can be checked
+against the committed file.
 
 Usage::
 
@@ -42,10 +53,17 @@ def main() -> int:
                 "formatted"
             )
         )
+        df.collect()  # finalizes THIS QueryExecution's adaptive plan
+        final = df._jdf.queryExecution().executedPlan().toString()
         path = os.path.join(out_dir, f"{key}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        print(f"wrote {path} ({len(plan.splitlines())} lines)")
+            f.write(
+                "\n\n== FINAL ADAPTIVE PLAN (executedPlan after "
+                "collect(); includes the Initial Plan section) ==\n"
+            )
+            f.write(final)
+        print(f"wrote {path} (plan + final plan)")
     return 0
 
 
