@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from pyspark_caffe_spark.nputil import round_half_away
+from pyspark_caffe_spark.vecops import _dot
 
 
 @dataclass(frozen=True)
@@ -164,11 +165,7 @@ def train_parameter_averaging(
 
     def eval_mse(w: np.ndarray) -> float:
         wl = [float(v) for v in w]
-        pred = F.aggregate(
-            F.zip_with("x", F.array(*[F.lit(v) for v in wl[:dim]]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ) + F.lit(wl[dim])
+        pred = _dot("x", F.array(*[F.lit(v) for v in wl[:dim]])) + F.lit(wl[dim])
         return float(
             data.select(F.avg(F.pow(pred - F.col("y"), 2)).alias("m")).collect()[0]["m"]
         )

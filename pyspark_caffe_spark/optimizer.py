@@ -119,15 +119,12 @@ def _cosine_template(joined: DataFrame, va: str, vb: str, ndigits: int):
     """The analyzed JVM expression of our canonical rounded cosine over
     two array columns of ``joined`` — the template the user's filter
     expression must ``semanticEquals``."""
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    ref = joined.select(F.round(dot, ndigits).alias("_t"))
+    ref = joined.select(F.round(vecops._dot(va, vb), ndigits).alias("_t"))
     return ref._jdf.queryExecution().analyzed().expressions().head().child()
 
 
 #: id column types the routed tiers actually support: every tier
-#: normalizes the pair identity to long (_bipartite_broadcast declares
+#: normalizes the pair identity to long (_pairs_broadcast declares
 #: ``id_a long`` Arrow schemas, _bipartite_blocked does .cast("long")),
 #: so only integral ids round-trip losslessly.  A string/date id would
 #: fail at runtime instead of declining, and a fractional double id

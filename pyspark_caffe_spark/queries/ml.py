@@ -32,6 +32,7 @@ from pyspark_caffe_spark.model import (
 )
 from pyspark_caffe_spark.registry import query
 from pyspark_caffe_spark.tables import emb_double, load_table
+from pyspark_caffe_spark.vecops import _dot
 
 DIM = 64
 N_CLASSES = 10
@@ -445,7 +446,7 @@ def ml_embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a vector."""
     emb = _emb(spark, sf_dir)
     d = F.col("embedding").cast("array<double>")
-    l2 = F.sqrt(F.aggregate(F.zip_with(d, d, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x))
+    l2 = F.sqrt(_dot(d, d))
     return (
         emb.select("label", l2.alias("l2"))
         .groupBy("label")
@@ -518,9 +519,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").cast("array<double>").alias("ce"),
         F.col("label").alias("nlabel"),
     ).join(F.broadcast(q), F.col("qid") != F.col("cid"))
-    dot = F.aggregate(
-        F.zip_with("qe", "ce", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-    )
+    dot = _dot("qe", "ce")
     w_rank = Window.partitionBy("qid").orderBy(
         F.round(dot, 6).desc(), F.col("cid").asc()
     )
@@ -759,9 +758,7 @@ def ml_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("q_emb"),
         F.col("label").alias("q_label"),
     )
-    dot = F.aggregate(
-        F.zip_with("emb", "q_emb", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
+    dot = _dot("emb", "q_emb")
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     ranked = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))

@@ -373,9 +373,7 @@ def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    dot = F.aggregate(
-        F.zip_with("emb", "q_emb", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
+    dot = vecops._dot("emb", "q_emb")
     scored = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", F.round(dot, 6).alias("cos"))
@@ -426,9 +424,7 @@ def sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    dot = F.aggregate(
-        F.zip_with("emb", "q_emb", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
+    dot = vecops._dot("emb", "q_emb")
     w1 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     cand = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
@@ -536,9 +532,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
-    dot_q = F.aggregate(
-        F.zip_with("emb", "q_emb", lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
+    dot_q = vecops._dot("emb", "q_emb")
     w1 = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
     cand = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
@@ -549,9 +543,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cand.select("query_id", F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"))
     b = cand.select("query_id", F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"))
-    dot_p = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+    dot_p = vecops._dot("emb_a", "emb_b")
     pair = (
         a.join(b, "query_id")
         .filter(F.col("id_a") != F.col("id_b"))

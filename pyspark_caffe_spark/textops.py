@@ -111,6 +111,45 @@ def minhash_signatures(
     )
 
 
+def _band_rows(df: DataFrame, id_col: str, sigs: list[Column], out_id: str) -> DataFrame:
+    """One (out_id, band, sig) row per band signature of each row — the
+    banding explode of the minhash and the sign-LSH tiers."""
+    structs = F.array(*[F.struct(F.lit(b).alias("band"), s.alias("sig")) for b, s in enumerate(sigs)])
+    return df.select(F.col(id_col).alias(out_id), F.explode(structs).alias("bs")).select(
+        out_id, "bs.band", "bs.sig"
+    )
+
+
+def _bucket_pairs(banded: DataFrame, id_col: str, max_bucket: int | None) -> DataFrame:
+    """Distinct candidate (id_a < id_b) pairs of rows sharing a
+    (band, sig) bucket: one groupBy shuffle, then each sorted bucket
+    explodes to its pairs — never O(n²) over the corpus.  Buckets over
+    ``max_bucket`` (None: no cap) are dropped, the skew guard against a
+    degenerate bucket going quadratic."""
+    keep = F.size("ids") > 1
+    if max_bucket is not None:
+        keep = keep & (F.size("ids") <= max_bucket)
+    buckets = (
+        banded.groupBy("band", "sig")
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .filter(keep)
+    )
+    pairs = buckets.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    "ids",
+                    lambda x, i: F.transform(
+                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
+                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                    ),
+                )
+            )
+        ).alias("pair")
+    )
+    return pairs.select("pair.id_a", "pair.id_b").distinct()
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
@@ -134,41 +173,11 @@ def lsh_candidate_pairs(
             "leftover minhash slots would be silently dropped"
         )
     rows_per_band = num_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(
-                    *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = signatures.select(F.col(id_col), F.explode(band_structs).alias("band")).select(
-        id_col, "band.band_idx", "band.band_hash"
-    )
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    if max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ids",
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("pair")
-    )
-    return pairs.select("pair.id_a", "pair.id_b").distinct()
+    sigs = [
+        F.xxhash64(*[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)])
+        for b in range(bands)
+    ]
+    return _bucket_pairs(_band_rows(signatures, id_col, sigs, id_col), id_col, max_bucket)
 
 
 def minhash_dedup_pairs(
@@ -185,25 +194,12 @@ def minhash_dedup_pairs(
     return lsh_candidate_pairs(sigs, id_col, num_hashes, bands, max_bucket)
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 4,
-    threshold: float = 0.5,
-    max_df: int | None = 1024,
-) -> DataFrame:
-    """Exact shingle-set Jaccard via inverted index self-join.
-
-    ``max_df`` is the skew guard (standard document-frequency cutoff):
-    a shingle appearing in M docs contributes M(M-1)/2 rows to the
-    self-join, so one ubiquitous boilerplate shingle goes quadratic at
-    corpus scale. Shingles over the cap are removed from the shingle
-    space BEFORE sizes and intersections (both sides see the same
-    space, so the Jaccard stays internally consistent); the hot list
-    is tiny by construction and anti-joined via broadcast — no extra
-    shuffle on the big side. Fixture max df is 6, so the default cap
-    never fires there (oracle parity unchanged)."""
+def _shingle_pairs(df, text_col, id_col, shingle_k, max_df, threshold, name, ratio) -> DataFrame:
+    """(id_a < id_b, ``name``) pairs whose shingle-set overlap ratio
+    ``ratio(n_common, n_a, n_b)`` is ≥ threshold, via an inverted-index
+    self-join: one explode, one join keyed on the shingle, one
+    (id_a, id_b) aggregate — O(candidates), never O(n²).  ``max_df`` is
+    the document-frequency skew guard :func:`jaccard_pairs` describes."""
     # array_distinct already de-dupes within a doc and id_col is unique
     # per doc for every caller — no .distinct() (a full extra shuffle of
     # the largest intermediate in the job)
@@ -226,12 +222,37 @@ def jaccard_pairs(
         .agg(F.count("*").alias("n_common"))
     )
     sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac = F.col("n_common").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("n_common"))
+    r = ratio(F.col("n_common"), F.col("sa.n"), F.col("sb.n"))
     return (
         inter.join(sa, F.col(f"sa.{id_col}") == F.col("id_a"))
         .join(sb, F.col(f"sb.{id_col}") == F.col("id_b"))
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        .filter(r >= threshold)
+        .select("id_a", "id_b", F.round(r, 6).alias(name))
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 4,
+    threshold: float = 0.5,
+    max_df: int | None = 1024,
+) -> DataFrame:
+    """Exact shingle-set Jaccard via inverted index self-join.
+
+    ``max_df`` is the skew guard (standard document-frequency cutoff):
+    a shingle appearing in M docs contributes M(M-1)/2 rows to the
+    self-join, so one ubiquitous boilerplate shingle goes quadratic at
+    corpus scale. Shingles over the cap are removed from the shingle
+    space BEFORE sizes and intersections (both sides see the same
+    space, so the Jaccard stays internally consistent); the hot list
+    is tiny by construction and anti-joined via broadcast — no extra
+    shuffle on the big side. Fixture max df is 6, so the default cap
+    never fires there (oracle parity unchanged)."""
+    return _shingle_pairs(
+        df, text_col, id_col, shingle_k, max_df, threshold, "jaccard",
+        lambda common, na, nb: common.cast("double") / (na + nb - common),
     )
 
 
@@ -258,31 +279,9 @@ def containment_pairs(
     are dropped from the shingle space on BOTH sides so the ratio
     stays internally consistent.
     """
-    sh = df.select(
-        F.col(id_col), F.explode(F.array_distinct(shingles_of(text_col, shingle_k))).alias("sh")
-    )
-    if max_df is not None:
-        hot = (
-            sh.groupBy("sh")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("sh")
-        )
-        sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    cont = F.col("n_common").cast("double") / F.least(F.col("sa.n"), F.col("sb.n"))
-    return (
-        inter.join(sa, F.col(f"sa.{id_col}") == F.col("id_a"))
-        .join(sb, F.col(f"sb.{id_col}") == F.col("id_b"))
-        .filter(cont >= threshold)
-        .select("id_a", "id_b", F.round(cont, 6).alias("containment"))
+    return _shingle_pairs(
+        df, text_col, id_col, shingle_k, max_df, threshold, "containment",
+        lambda common, na, nb: common.cast("double") / F.least(na, nb),
     )
 
 

@@ -491,22 +491,46 @@ def test_vecops_bipartite_grid_tier_matches_numpy(spark, emb_df):
     assert set(got) == want
 
 
-def test_vecops_lsh_bipartite_sound_and_recalls(spark, emb_df):
-    """Cross-corpus banded LSH: every emitted pair must be exactly
-    correct (cosine ≥ tau — soundness), and recall vs the exact
-    bipartite edge set ≥ 0.8 at this similarity level."""
+@pytest.mark.parametrize("shape", ["bipartite", "self"])
+def test_vecops_lsh_bipartite_sound_and_recalls(spark, emb_df, shape):
+    """Banded LSH, cross-corpus and self-join tiers: every emitted pair
+    must be exactly correct (cosine ≥ tau — soundness), and recall vs
+    the exact edge set ≥ 0.8 at this similarity level."""
     df, mat = emb_df
-    left = df.filter(F.col("vec_id") < 15)
-    right = df.filter(F.col("vec_id") >= 15)
     tau = 0.3
-    want = _bipartite_want(mat, np.arange(15), np.arange(15, 40), tau)
-    rows = vecops.lsh_bipartite_threshold_pairs(
-        left, right, tau, dim=8, planes_per_band=4, bands=16
-    ).collect()
+    if shape == "self":
+        scores = np.round(mat @ mat.T, 6)
+        want = {(int(a), int(b)) for a, b in zip(*np.triu_indices(40, k=1)) if scores[a, b] >= tau}
+        rows = vecops.lsh_threshold_pairs(df, tau, dim=8, planes_per_band=4, bands=16).collect()
+    else:
+        left = df.filter(F.col("vec_id") < 15)
+        right = df.filter(F.col("vec_id") >= 15)
+        want = _bipartite_want(mat, np.arange(15), np.arange(15, 40), tau)
+        rows = vecops.lsh_bipartite_threshold_pairs(
+            left, right, tau, dim=8, planes_per_band=4, bands=16
+        ).collect()
     got = {(r["id_a"], r["id_b"]) for r in rows}
     assert got <= want, f"unsound pairs emitted: {got - want}"
     assert want, "degenerate fixture: no exact pairs to recall"
     assert len(got) / len(want) >= 0.8, (len(got), len(want))
+
+
+def test_vecops_lsh_rejects_dim_mismatch(spark, emb_df):
+    """An LSH signature over vectors whose length is not the plane
+    width must raise.  zip_with null-pads the shorter array, so every
+    sign bit would be 0: all vectors share one bucket, the bucket cap
+    drops it, and the tier would return nothing without an error."""
+    df, _ = emb_df  # 8-dim vectors; every call below uses 64-wide planes
+    left = df.filter(F.col("vec_id") < 15)
+    right = df.filter(F.col("vec_id") >= 15)
+    runs = [
+        lambda: vecops.lsh_bucket(df, np.ones((4, 64))),
+        lambda: vecops.lsh_threshold_pairs(df, 0.9, planes_per_band=4, bands=16, max_bucket=10),
+        lambda: vecops.lsh_bipartite_threshold_pairs(left, right, 0.3, planes_per_band=4, bands=16),
+    ]
+    for run in runs:
+        with pytest.raises(Exception, match="plane width 64"):
+            run().collect()
 
 
 def test_vecops_auto_bipartite_routes(spark, emb_df):

@@ -9,6 +9,13 @@ normalize/compare path the local suite uses
 (``tests.parity.assert_parity``), and print one line per key plus a
 summary line for PERF.md: ``DRYRUN: G/N green in Xs``.
 
+Each key's driver-thread Spark jobs (plan build plus the parity
+collect) run under the job group ``key``; its OK/FAIL line ends with
+``jobs=N`` read back from the status tracker, so "per-key jobs
+unchanged" is one run of this tool on each side of a change.  Jobs
+Spark starts on its own threads (broadcast exchanges) carry their own
+group and are not in the count.
+
 An integer N checks the first N keys of ``queries()`` (the
 sweep-ordered registry — code-changed keys first, then stalest
 evidence); key names check exactly those keys (the per-change
@@ -76,14 +83,18 @@ def main() -> int:
         keys = args
     t0 = time.time()
     green = 0
+    sc = spark.sparkContext
     for i, key in enumerate(keys):
         tk = time.time()
+        sc.setJobGroup(key, f"dryrun {key}")
         try:
             assert_parity(qs[key](spark, sf_dir), con, osql[key], key)
             green += 1
-            print(f"[{i}] {key} OK ({time.time() - tk:.1f}s)", flush=True)
+            status = "OK"
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
-            print(f"[{i}] {key} FAIL {type(ex).__name__}: {str(ex)[:200]}", flush=True)
+            status = f"FAIL {type(ex).__name__}: {str(ex)[:200]}"
+        jobs = len(sc.statusTracker().getJobIdsForGroup(key))
+        print(f"[{i}] {key} {status} ({time.time() - tk:.1f}s) jobs={jobs}", flush=True)
     print(f"DRYRUN: {green}/{len(keys)} green in {time.time() - t0:.0f}s")
     return 0 if green == len(keys) else 1
 
