@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import load_table, row_count
 
 
 @query(
@@ -1313,12 +1313,12 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = orders.select(digit.alias("digit")).groupBy("digit").agg(
         F.count("*").alias("n_obs")
     )
-    t = orders.agg(F.count("*").alias("n"))
+    n = row_count(spark, sf_dir, "orders")
     exp = F.lit(None).cast("double")
     for d, p in reversed(list(enumerate(_BENFORD_P, start=1))):
         exp = F.when(F.col("digit") == d, F.lit(float(p))).otherwise(exp)
-    obs_frac = F.col("n_obs").cast("double") / F.col("n")
-    return h.crossJoin(F.broadcast(t)).select(
+    obs_frac = F.col("n_obs").cast("double") / F.lit(n)
+    return h.select(
         "digit",
         "n_obs",
         obs_frac.alias("obs_frac"),

@@ -15,11 +15,12 @@ Cost note: ``spark.read.parquet`` without a schema launches a one-task
 Spark job (named ``parquet``) that reads the file footer to infer the
 schema — on every call.  :func:`parquet_schema` infers each file's
 schema once and caches the ``StructType``, so every later load reads
-with an explicit schema and builds its plan with no Spark job.  Only
-the schema is cached, never the DataFrame: each load returns a fresh
-relation with fresh attribute ids, so two loads of one table can be
-self-joined.  Column pruning and predicate pushdown still happen
-per-query via Catalyst.
+with an explicit schema and builds its plan with no Spark job;
+:func:`row_count` reads a table's row count from the same footers
+with ``pyarrow`` and caches it the same way.  The DataFrame is never
+cached: each load returns a fresh relation with fresh attribute ids,
+so two loads of one table can be self-joined.  Column pruning and
+predicate pushdown still happen per-query via Catalyst.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from __future__ import annotations
 import os
 import weakref
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -76,35 +78,63 @@ def ensure_session_confs(spark: SparkSession) -> None:
     _CONFIGURED_SESSIONS.add(spark)
 
 
-# (path, st_mtime_ns, st_size) → the StructType inferred from that
-# file version.  The schema depends only on the file, since inference
-# runs after ensure_session_confs has forced nanosAsLong: no session key.
+def _per_file_version(cache: dict, path: str, compute, uncached):
+    """``compute()`` once per version of the file at ``path``, cached in
+    ``cache`` under its ``os.stat`` identity (path, mtime, size), so a
+    rewritten or regenerated file is computed again.  Paths ``os.stat``
+    cannot see (object-store URIs) get ``uncached()`` on every call."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return uncached()
+    key = (path, st.st_mtime_ns, st.st_size)
+    value = cache.get(key)
+    if value is None:
+        if len(cache) >= 256:  # bounded: keys of rewritten files dangle
+            cache.clear()
+        value = cache[key] = compute()
+    return value
+
+
+# File version → the StructType inferred from it.  The schema depends
+# only on the file, since inference runs after ensure_session_confs has
+# forced nanosAsLong: no session key.
 _SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+# File version → its row count.
+_ROW_COUNTS: dict[tuple[str, int, int], int] = {}
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema of the parquet at ``path``, inferred once per file
     version.
 
-    Inference is a footer-reading Spark job; the result is cached under
-    the file's ``os.stat`` identity (path, mtime, size), so a rewritten
-    or regenerated file is inferred again.  Paths ``os.stat`` cannot
-    see (object-store URIs) are inferred on every call, as an uncached
+    Inference is a footer-reading Spark job; a path ``os.stat`` cannot
+    see is inferred on every call, as an uncached
     ``spark.read.parquet`` would.
     """
-    try:
-        st = os.stat(path)
-    except OSError:
+
+    def infer() -> StructType:
         ensure_session_confs(spark)
         return spark.read.parquet(path).schema
-    key = (path, st.st_mtime_ns, st.st_size)
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        if len(_SCHEMAS) >= 256:  # bounded: keys of rewritten files dangle
-            _SCHEMAS.clear()
-        ensure_session_confs(spark)
-        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
-    return schema
+
+    return _per_file_version(_SCHEMAS, path, infer, infer)
+
+
+def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """The row count of one fixture table, once per file version.
+
+    Sums ``num_rows`` over the parquet footers with ``pyarrow`` on the
+    driver, so it runs no Spark job.  A path ``os.stat`` cannot see is
+    counted with Spark on every call.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+
+    def from_footers() -> int:
+        return sum(f.metadata.num_rows for f in pq.ParquetDataset(path).fragments)
+
+    return _per_file_version(
+        _ROW_COUNTS, path, from_footers, lambda: load_table(spark, sf_dir, name).count()
+    )
 
 
 def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:

@@ -180,14 +180,24 @@ def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
+def test_get_spark_compresses_io_with_zstd(spark):
+    """Shuffle, broadcast and spill blocks of a ``get_spark`` session
+    are zstd-compressed (Spark's default is lz4)."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.io.compression.codec") == "zstd"
+
+
 def test_load_table_cached_schema_runs_no_job(spark, sf_dir):
     """Inferring a parquet schema is a footer-reading Spark job; once a
-    file's schema is cached, a load builds its plan with none."""
+    file's schema is cached, a load builds its plan with none.  The
+    footer row count runs no Spark job at all."""
     tables.load_table(spark, sf_dir, "orders")
     before = _next_job_id(spark)
     df = tables.load_table(spark, sf_dir, "orders")
+    n = tables.row_count(spark, sf_dir, "orders")
     assert _next_job_id(spark) == before, "a cached-schema load ran a Spark job"
     assert "o_orderkey" in df.columns
+    assert n == df.count()
 
 
 def test_load_table_self_join_of_two_loads(spark, sf_dir):
@@ -208,8 +218,9 @@ def test_load_table_self_join_of_two_loads(spark, sf_dir):
 
 
 def test_load_table_reinfers_rewritten_file(spark, sf_dir, tmp_path):
-    """The cache is keyed on the file's (path, mtime, size): rewriting
-    a table makes the next load infer its schema again."""
+    """The caches are keyed on the file's (path, mtime, size): rewriting
+    a table makes the next load infer its schema again and the next
+    row count read the new footer."""
     import shutil
 
     import pyarrow as pa
@@ -218,18 +229,20 @@ def test_load_table_reinfers_rewritten_file(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/region.parquet", tmp_path / "region.parquet")
     d = str(tmp_path)
     assert "r_extra" not in tables.load_table(spark, d, "region").columns
+    n = tables.row_count(spark, d, "region")
     before = _next_job_id(spark)
     tables.load_table(spark, d, "region")
     assert _next_job_id(spark) == before
 
     t = pq.read_table(tmp_path / "region.parquet")
     t = t.append_column("r_extra", pa.array(range(t.num_rows), pa.int64()))
+    t = pa.concat_tables([t, t])
     pq.write_table(t, tmp_path / "region.parquet")
     before = _next_job_id(spark)
     df = tables.load_table(spark, d, "region")
     assert _next_job_id(spark) > before, "rewritten file was not re-inferred"
     assert "r_extra" in df.columns
-    assert df.count() == t.num_rows
+    assert df.count() == t.num_rows == tables.row_count(spark, d, "region") == 2 * n
 
 
 def test_load_table_events_ts_is_timestamp(spark, sf_dir):

@@ -423,6 +423,9 @@ def test_aqe_shj_demotion_declines_on_skewed_build_side(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "256KB",
         "spark.sql.adaptive.skewJoin.enabled": "false",
+        # the uniform build side fits the bound only when spread over
+        # enough partitions; the session's count follows SPARK_GRAFT_CPUS
+        "spark.sql.shuffle.partitions": "32",
     }
     saved = {k: spark.conf.get(k, None) for k in confs}
     try:

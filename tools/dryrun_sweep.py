@@ -13,8 +13,11 @@ Each key's driver-thread Spark jobs (plan build plus the parity
 collect) run under the job group ``key``; its OK/FAIL line ends with
 ``jobs=N`` read back from the status tracker, so "per-key jobs
 unchanged" is one run of this tool on each side of a change.  Jobs
-Spark starts on its own threads (broadcast exchanges) carry their own
-group and are not in the count.
+Spark starts on its own threads for the key (broadcast exchanges)
+inherit the group and are in the count.  ``shuffle=B`` next to it is
+the shuffle bytes written by every stage submitted while the key ran,
+summed from the driver's status store, so "per-key shuffle bytes
+down, rows unchanged" is one run too.
 
 An integer N checks the first N keys of ``queries()`` (the
 sweep-ordered registry — code-changed keys first, then stalest
@@ -45,6 +48,23 @@ _TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def _shuffle_bytes(sc, stage0: int, stage1: int) -> int:
+    """Shuffle bytes written by the stages with ids in [stage0, stage1)."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # status store sees every finished task
+    store, total = jsc.statusStore(), 0
+    for sid in range(stage0, stage1):
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # never submitted (AQE re-planned it away)
+            continue
+        if sd.status().toString() != "SKIPPED":
+            total += sd.shuffleWriteBytes()
+    return total
 
 
 def main() -> int:
@@ -84,8 +104,10 @@ def main() -> int:
     t0 = time.time()
     green = 0
     sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
     for i, key in enumerate(keys):
         tk = time.time()
+        stage0 = dag.nextStageId()
         sc.setJobGroup(key, f"dryrun {key}")
         try:
             assert_parity(qs[key](spark, sf_dir), con, osql[key], key)
@@ -94,7 +116,11 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
             status = f"FAIL {type(ex).__name__}: {str(ex)[:200]}"
         jobs = len(sc.statusTracker().getJobIdsForGroup(key))
-        print(f"[{i}] {key} {status} ({time.time() - tk:.1f}s) jobs={jobs}", flush=True)
+        shuffle = _shuffle_bytes(sc, stage0, dag.nextStageId())
+        print(
+            f"[{i}] {key} {status} ({time.time() - tk:.1f}s) jobs={jobs} shuffle={shuffle}",
+            flush=True,
+        )
     print(f"DRYRUN: {green}/{len(keys)} green in {time.time() - t0:.0f}s")
     return 0 if green == len(keys) else 1
 
