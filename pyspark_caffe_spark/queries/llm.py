@@ -221,17 +221,17 @@ def text_ngram_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twin of textops.normalized() applied to the `text` column —
-# defined here (above its first decorator use); the {col}-templated
-# variant _NORM_SQL below derives from the same expression.
-_NORM_FWD_SQL = "LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g')))"
+# DuckDB twin of textops.normalized(): lower + trim + collapse
+# whitespace runs (the Spark side normalizes runs, so the oracle must
+# too — LOWER(TRIM(...)) alone diverges on multi-space texts).
+_NORM_SQL = "LOWER(TRIM(REGEXP_REPLACE({col}, '\\s+', ' ', 'g')))"
 
 
 @query(
     "text_fingerprint",
     oracle=f"""
     SELECT doc_id,
-           CAST(LENGTH({_NORM_FWD_SQL}) AS BIGINT) AS norm_len,
+           CAST(LENGTH({_NORM_SQL.format(col="text")}) AS BIGINT) AS norm_len,
            true AS fp_injective
     FROM documents
     """,
@@ -283,12 +283,6 @@ def _augmented_docs(docs: DataFrame, n_dups: int = 50) -> DataFrame:
     )
     return docs.select("doc_id", "text").unionByName(dups)
 
-
-# DuckDB twin of textops.normalized(): lower + trim + collapse
-# whitespace runs (the Spark side normalizes runs, so the oracle must
-# too — LOWER(TRIM(...)) alone diverges on multi-space texts).
-# Same expression as _NORM_FWD_SQL above, column-templated.
-_NORM_SQL = "LOWER(TRIM(REGEXP_REPLACE({col}, '\\s+', ' ', 'g')))"
 
 _AUG_SQL = """
       SELECT doc_id, text FROM documents
@@ -1312,12 +1306,12 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), deduped AS (
       SELECT MIN(doc_id) AS doc_id, MIN(lang) AS lang, MIN(n_words) AS n_words
       FROM quality
-      GROUP BY {{norm}}
+      GROUP BY {_NORM_SQL.format(col="text")}
     )
     SELECT doc_id, lang, n_words
     FROM deduped
     WHERE ((doc_id * 1103515245 + 12345) % 2147483647) % 2 = 0
-    """.format(norm="LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g')))"),
+    """,
 )
 def pipeline_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training-data snapshot pipeline in ONE declarative plan:
@@ -1490,17 +1484,17 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_decontaminate",
-    oracle="""
+    oracle=f"""
     WITH bench AS (
-      SELECT LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g'))) AS norm
+      SELECT {_NORM_SQL.format(col="text")} AS norm
       FROM documents WHERE doc_id < 50
     ), train AS (
       SELECT doc_id, lang,
-             LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g'))) AS norm
+             {_NORM_SQL.format(col="text")} AS norm
       FROM documents WHERE doc_id >= 50
       UNION ALL
       SELECT doc_id + 1000000 AS doc_id, lang,
-             LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g'))) AS norm
+             {_NORM_SQL.format(col="text")} AS norm
       FROM documents WHERE doc_id < 25
     )
     SELECT t.doc_id, t.lang FROM train t
@@ -1710,7 +1704,7 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_source_priority",
-    oracle="""
+    oracle=f"""
     WITH aug AS (
       SELECT doc_id, text, source FROM documents
       UNION ALL
@@ -1719,7 +1713,7 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     ranked AS (
       SELECT doc_id, source,
-             LOWER(TRIM(REGEXP_REPLACE(text, '\\s+', ' ', 'g'))) AS norm,
+             {_NORM_SQL.format(col="text")} AS norm,
              CAST(SUBSTR(source, 4) AS INTEGER) AS prio
       FROM aug
     )

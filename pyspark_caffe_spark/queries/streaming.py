@@ -258,7 +258,7 @@ def stream_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stream_session documents that shape).  Round 9 also ran this
     exact drain at 100× density (2M-event slice, 1.9M sessions) with
     an exact-digest match against DuckDB
-    (PARITY100_STREAMING_r09.json)."""
+    (PARITY100_STREAMING_r19.json)."""
     ev = _read_events_stream(spark, f"{sf_dir}/events.parquet")
     sess = (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes"))

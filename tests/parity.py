@@ -124,3 +124,60 @@ def assert_parity(df, con, sql: str, key: str = "?"):
             f"[{key}] value mismatch ({len(sn)} rows)\n"
             f"  spark-only (≤5): {diff_s}\n  duck-only (≤5): {diff_d}"
         )
+
+
+def digest_exprs(schema) -> tuple[list[str], list[str]]:
+    """Order-insensitive exact digest expressions (Spark, DuckDB) for a
+    result schema: the row count plus, per column, the non-null count
+    and, where an exact cross-engine sum exists, a DECIMAL(38,0) sum of
+    the value, its fractional units, its length, its epoch micros or
+    its epoch days.  Integer decimal sums are exact in both engines, so
+    a mismatch is always a real divergence; float columns contribute
+    only their null layout."""
+    s_exprs, d_exprs = ["COUNT(*)"], ["COUNT(*)"]
+    for f in schema.fields:
+        c, t = f.name, f.dataType.simpleString()
+        s_exprs.append(f"COUNT(`{c}`)")
+        d_exprs.append(f'COUNT("{c}")')
+        if t in ("tinyint", "smallint", "int", "bigint"):
+            s, d = f"`{c}`", f'"{c}"'
+        elif t.startswith("decimal"):
+            # scaled to integer units so the fractional digits count
+            mult = 10 ** f.dataType.scale
+            s, d = f"`{c}` * {mult}", f'"{c}" * {mult}'
+        elif t == "boolean":
+            s, d = f"CAST(`{c}` AS INT)", f'CAST("{c}" AS INT)'
+        elif t == "string":
+            s, d = f"LENGTH(`{c}`)", f'LENGTH("{c}")'
+        elif t.startswith("timestamp"):
+            # NTZ → TIMESTAMP is the identity in a UTC session, and
+            # UNIX_MICROS takes only the LTZ type
+            s, d = f"UNIX_MICROS(CAST(`{c}` AS TIMESTAMP))", f'EPOCH_US("{c}")'
+        elif t == "date":
+            s = f"DATEDIFF(`{c}`, DATE '1970-01-01')"
+            d = f"(\"{c}\" - DATE '1970-01-01')"
+        else:
+            continue
+        s_exprs.append(f"SUM(CAST({s} AS DECIMAL(38,0)))")
+        d_exprs.append(f"SUM(CAST({d} AS DECIMAL(38,0)))")
+    return s_exprs, d_exprs
+
+
+def assert_digest_parity(df, con, sql: str, key: str = "?") -> int:
+    """The tier for results too large to hash row by row: the same
+    column-set and dtype checks as ``assert_parity``, then the
+    ``digest_exprs`` digest of both sides.  Returns the number of
+    digest terms compared."""
+    rel = con.sql(f"SELECT * FROM ({sql}) LIMIT 0")
+    assert sorted(df.columns) == sorted(rel.columns), (
+        f"[{key}] column mismatch: spark={sorted(df.columns)} duck={sorted(rel.columns)}"
+    )
+    assert_type_parity(df, con, sql, key)
+    s_exprs, d_exprs = digest_exprs(df.schema)
+    s_digest = [None if v is None else int(v) for v in df.selectExpr(*s_exprs).first()]
+    d_row = con.execute(f"SELECT {', '.join(d_exprs)} FROM ({sql})").fetchone()
+    d_digest = [None if v is None else int(v) for v in d_row]
+    assert s_digest == d_digest, (
+        f"[{key}] digest mismatch: spark={s_digest} duck={d_digest}"
+    )
+    return len(s_digest)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 from unittest import mock
 
 
@@ -357,219 +358,6 @@ def test_sweep_order_rechecks_code_changed_keys(monkeypatch):
     )
 
 
-def test_bench_drift_detector_pure_functions(tmp_path, monkeypatch):
-    """bench.py's per-key steal detector (round-11 verdict ask #1):
-    history medians exclude contended runs, the drift check counts only
-    the SLOW direction, and the history file round-trips with its cap.
-    Pure functions — no Spark session involved."""
-    import bench
-
-    runs = [
-        {"queries": {"a": 1.0, "b": 2.0}, "contended": False},
-        {"queries": {"a": 1.2, "b": 2.2}, "contended": False},
-        # contended run must NOT ratchet the reference upward
-        {"queries": {"a": 9.0, "b": 9.0}, "contended": True},
-    ]
-    ref = bench._history_medians(runs)
-    assert ref == {"a": 1.1, "b": 2.1}
-    # all-contended history still yields a reference (fallback to all)
-    assert bench._history_medians([runs[2]]) == {"a": 9.0, "b": 9.0}
-
-    # slow direction only: a 30%-slower key drifts, a faster key never
-    drifted = bench._drifting_keys({"a": 1.1 * 1.3, "b": 0.5}, ref)
-    assert drifted == ["a"]
-    # at exactly the threshold (25%) it does NOT drift (strict >)
-    assert bench._drifting_keys({"a": 1.1 * 1.25}, ref) == []
-    # keys with no history are skipped, not flagged
-    assert bench._drifting_keys({"zzz": 99.0}, ref) == []
-
-    # history file round-trip + cap
-    path = tmp_path / "BENCH_MEDIANS.json"
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(path))
-    assert bench._load_history() == []
-    acc: list = []
-    for i in range(bench.HISTORY_CAP + 3):
-        bench._save_history(acc, {"queries": {"a": float(i)}, "contended": False})
-        acc = bench._load_history()
-    assert len(acc) == bench.HISTORY_CAP
-    assert acc[-1]["queries"]["a"] == float(bench.HISTORY_CAP + 2)
-
-
-def test_bench_chunk_lines_respect_max_len():
-    """Every chunked per-query line, real tag and index included, fits
-    in ``max_len``, and the chunks together carry the whole dict."""
-    import bench
-
-    tag = "bench extras per-query"
-    for n_keys in (1, 9, 40, 120):
-        d = {f"sink_some_long_query_name_{i:03d}": 12.345 + i for i in range(n_keys)}
-        lines = bench._chunk_lines(tag, "queries_extra", d, max_len=200)
-        assert all(len(line) <= 200 for line in lines), max(map(len, lines))
-        merged: dict = {}
-        for i, line in enumerate(lines):
-            rec = json.loads(line)
-            assert rec["metric"] == f"{tag} ({i + 1}/{len(lines)})"
-            merged.update(rec["queries_extra"])
-        assert merged == d
-
-
-def test_bench_drift_detector_extra_tier_and_rerun_pool():
-    """Round-12 verdict #1 + advice: the EXTRA tier drifts against its
-    OWN history field, and rerun-sourced records are excluded from the
-    reference pool once ≥2 pristine clean records exist (pass-2 medians
-    of a drift-triggered rerun can carry residual steal)."""
-    import bench
-
-    runs = [
-        {
-            "queries": {"a": 1.0},
-            "queries_extra": {"x": 0.5, "y": 1.0},
-            "contended": False,
-        },
-        {
-            "queries": {"a": 1.2},
-            "queries_extra": {"x": 0.7, "y": 1.2},
-            "contended": False,
-        },
-        # legacy record with no extras field contributes nothing to the
-        # extras reference (and must not crash the median builder)
-        {"queries": {"a": 1.1}, "contended": False},
-    ]
-    ref_extra = bench._history_medians(runs, field="queries_extra")
-    assert ref_extra == {"x": 0.6, "y": 1.1}
-    # headline medians unaffected by the extras field
-    assert bench._history_medians(runs) == {"a": 1.1}
-    # the same drift check applies per tier
-    assert bench._drifting_keys({"x": 0.6 * 1.3, "y": 1.0}, ref_extra) == ["x"]
-
-    # rerun exclusion: with two pristine clean records, a clean-but-
-    # rerun-sourced record (residual steal risk) is left out of the
-    # reference for ITS tier only
-    runs_rerun = [
-        {"queries": {"a": 1.0}, "queries_extra": {"x": 1.0}, "contended": False},
-        {"queries": {"a": 1.0}, "queries_extra": {"x": 1.0}, "contended": False},
-        {
-            "queries": {"a": 5.0},
-            "queries_extra": {"x": 5.0},
-            "contended": False,
-            "rerun": True,
-        },
-    ]
-    assert bench._history_medians(runs_rerun) == {"a": 1.0}
-    # the third record is rerun-tagged only for the HEADLINE tier, so
-    # the extras pool (pristine by its own rerun_extra flag) keeps it
-    assert bench._history_medians(runs_rerun, field="queries_extra") == {"x": 1.0}
-    runs_rerun[2]["rerun_extra"] = True
-    assert bench._history_medians(runs_rerun, field="queries_extra") == {"x": 1.0}
-
-    # with only ONE pristine record, fall back to the full clean pool
-    # (a single run must not become THE reference)
-    runs_thin = [
-        {"queries": {"a": 1.0}, "contended": False},
-        {"queries": {"a": 3.0}, "contended": False, "rerun": True},
-    ]
-    assert bench._history_medians(runs_thin) == {"a": 2.0}
-
-    # round-13 review finding: legacy records WITHOUT the tier's field
-    # are vacuously pristine and must not be counted toward the ≥2
-    # threshold — here the only extras DATA lives in rerun_extra-tagged
-    # records, and selecting the fieldless "pristine" pool would return
-    # {} and silently disable extras drift detection
-    runs_legacy = [
-        {"queries": {"a": 1.0}, "contended": False},
-        {"queries": {"a": 1.0}, "contended": False},
-        {
-            "queries": {"a": 1.0},
-            "queries_extra": {"x": 2.0},
-            "contended": False,
-            "rerun_extra": True,
-        },
-    ]
-    assert bench._history_medians(runs_legacy, field="queries_extra") == {
-        "x": 2.0
-    }, "fieldless records must not crowd real extras data out of the pool"
-
-
-def test_bench_history_cap_is_per_scale_factor(tmp_path, monkeypatch):
-    """Round-13 review finding: a global HISTORY_CAP would let a dozen
-    smoke runs at another sf evict every sf0.1 reference record and
-    silently disable the sf0.1 drift detector — the cap is per sf
-    (records predating the sf field default to 0.1, same as the
-    reference-pool filter)."""
-    import bench
-
-    path = tmp_path / "BENCH_MEDIANS.json"
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(path))
-    acc: list = []
-    # two sf0.1 reference records (one legacy without the sf field)
-    bench._save_history(acc, {"queries": {"a": 1.0}, "contended": False})
-    acc = bench._load_history()
-    bench._save_history(acc, {"sf": 0.1, "queries": {"a": 1.1}, "contended": False})
-    acc = bench._load_history()
-    # a full cap's worth of sf0.001 smoke runs
-    for i in range(bench.HISTORY_CAP + 2):
-        bench._save_history(
-            acc, {"sf": 0.001, "queries": {"a": 0.01}, "contended": False}
-        )
-        acc = bench._load_history()
-    kept_01 = [r for r in acc if r.get("sf", 0.1) == 0.1]
-    kept_0001 = [r for r in acc if r.get("sf") == 0.001]
-    assert len(kept_01) == 2, "other-sf runs must not evict the sf0.1 references"
-    assert len(kept_0001) == bench.HISTORY_CAP
-    # order within the file stays chronological
-    assert acc[0].get("sf", 0.1) == 0.1 and acc[-1]["sf"] == 0.001
-
-
-def test_bench_drift_gate_rerun_semantics():
-    """_drift_gate (shared by both tiers): no rerun when ≤DRIFT_KEYS_MAX
-    keys drift; on a board-wide drift it reruns exactly once, reports
-    the per-key MIN as the timings, and hands the SECOND pass's plain
-    medians to the history record (never the biased-low min-merge)."""
-    import bench
-
-    keys = [f"k{i}" for i in range(10)]
-    ref = {k: 1.0 for k in keys}
-
-    # pass 1: everything 2x slow (steal burst); pass 2: clean
-    passes = [
-        ({k: 2.0 for k in keys}, {k: 1.9 for k in keys}),
-        ({k: 1.05 for k in keys}, {k: 1.0 for k in keys}),
-    ]
-    calls = []
-
-    def run_set(names):
-        calls.append(list(names))
-        return passes[len(calls) - 1]
-
-    timings, best, drifted, rerun, hist = bench._drift_gate(run_set, keys, ref)
-    assert len(calls) == 2 and calls[0] == keys == calls[1]
-    assert rerun is True
-    assert timings == {k: 1.05 for k in keys}, "min of the two medians"
-    assert best == {k: 1.0 for k in keys}
-    assert drifted == [], "post-merge drift re-evaluated"
-    assert hist == {k: 1.05 for k in keys}, (
-        "history must record pass-2 plain medians, not the min-merge"
-    )
-
-    # clean first pass: exactly one run_set call, no rerun flag
-    calls.clear()
-    passes[:] = [({k: 1.1 for k in keys}, {k: 1.0 for k in keys})]
-    timings, best, drifted, rerun, hist = bench._drift_gate(run_set, keys, ref)
-    assert len(calls) == 1 and rerun is False and drifted == []
-    assert hist == timings
-
-    # both passes contended: drifted stays over threshold → the caller
-    # reports contended=true
-    calls.clear()
-    passes[:] = [
-        ({k: 2.0 for k in keys}, {k: 2.0 for k in keys}),
-        ({k: 2.0 for k in keys}, {k: 2.0 for k in keys}),
-    ]
-    timings, _, drifted, rerun, hist = bench._drift_gate(run_set, keys, ref)
-    assert rerun is True and len(drifted) > bench.DRIFT_KEYS_MAX
-    assert hist == {k: 2.0 for k in keys}
-
-
 def test_rotation_quota_covers_whole_oldest_expensive_tier(monkeypatch):
     """The rotation quota must promote EVERY expensive green key in the
     oldest evidence tier, not a fixed 5 — the round-12 regression: six
@@ -629,57 +417,6 @@ def test_rotation_quota_covers_whole_oldest_expensive_tier(monkeypatch):
     assert sum(1 for p in positions if p < 50) == 8, positions
 
 
-def test_bench_history_loader_degrades_on_garbage(tmp_path, monkeypatch):
-    """Round-14 self-review: a BENCH_MEDIANS.json whose top level is
-    not a {"runs": [...]} object (hand edit, partial write, legacy
-    format) must degrade to an EMPTY history — never crash the bench
-    run with AttributeError before any output is produced."""
-    import bench
-
-    path = tmp_path / "BENCH_MEDIANS.json"
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(path))
-    for garbage in ("[]", "null", '"a string"', '{"runs": 7}',
-                    '{"runs": [1, 2, "x"]}', "{not json"):
-        path.write_text(garbage)
-        assert bench._load_history() == [], repr(garbage)
-    # a healthy file still loads
-    path.write_text('{"version": 1, "runs": [{"queries": {"a": 1.0}}]}')
-    assert bench._load_history() == [{"queries": {"a": 1.0}}]
-
-
-def test_bench_history_loader_never_raises_fuzz(tmp_path, monkeypatch):
-    """Round-17 (verdict #3): extend the r16 parser-fuzz pattern to
-    the bench-history loader — ANY byte content in BENCH_MEDIANS.json
-    (binary garbage, torn multi-byte sequences, valid-JSON-wrong-shape)
-    must degrade to a list of dicts, never crash the bench before it
-    produces output.  UnicodeDecodeError is a ValueError subclass, so
-    the existing (OSError, ValueError) guard already covers text-mode
-    decode failures — this property PINS that, so a future narrowing
-    of the except clause fails a test instead of shipping the same
-    crash class the ANN-manifest fuzz found in round 16."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    import bench
-
-    path = tmp_path / "BENCH_MEDIANS.json"
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(path))
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.binary(max_size=512))
-    def check(blob: bytes) -> None:
-        path.write_bytes(blob)
-        runs = bench._load_history()
-        assert isinstance(runs, list)
-        assert all(isinstance(r, dict) for r in runs)
-
-    check()
-    # round-trip on top: what _save_history-shaped content stores,
-    # the loader returns verbatim
-    path.write_text('{"version": 1, "runs": [{"queries": {"a": 1.0}}]}')
-    assert bench._load_history() == [{"queries": {"a": 1.0}}]
-
-
 def test_driver_rows_never_raises_fuzz(tmp_path, monkeypatch):
     """Round-17: property-pin the graded surface's own evidence
     loader — ``_driver_rows`` feeds the sweep ORDER, so a crash on a
@@ -709,3 +446,111 @@ def test_driver_rows_never_raises_fuzz(tmp_path, monkeypatch):
     )
     rows = entry._driver_rows()
     assert rows == {"a": {"hash_match": True, "_round": 3}}
+
+
+_DIGEST_COLS = {
+    "b": "CAST(7 AS BIGINT)",
+    "d": "CAST(12.34 AS DECIMAL(12,2))",
+    "s": "'abc'",
+    "ts": "TIMESTAMP '2024-01-01 00:00:00'",
+    "dt": "DATE '2024-01-02'",
+    "x": "CAST(0.5 AS DOUBLE)",
+}
+
+
+def _digest_sql(**over: str) -> str:
+    """Two rows, valid in Spark SQL and DuckDB: the literals (with
+    ``over`` replacing some) and a copy with three columns NULL."""
+    row = ", ".join(f"{v} AS {k}" for k, v in {**_DIGEST_COLS, **over}.items())
+    return (
+        f"WITH r AS (SELECT {row}) SELECT * FROM r "
+        "UNION ALL SELECT b, NULL AS d, s, NULL AS ts, dt, NULL AS x FROM r"
+    )
+
+
+def test_assert_digest_parity_catches_one_unit_changes(spark, monkeypatch):
+    """The digest tier passes equal frames and fails on a one-unit
+    change in each exactly-summed type, on an extra column and on a
+    dtype drift."""
+    import duckdb
+    import pytest
+
+    from tests import parity
+
+    # No oracle returns a decimal, so the dtype map has no DECIMAL
+    # entry; register one so the decimal digest term is what is tested.
+    monkeypatch.setitem(parity._TYPE_COMPAT, "DECIMAL(12,2)", {"decimal(12,2)"})
+    df = spark.sql(_digest_sql())
+    con = duckdb.connect()
+    # COUNT(*), six non-null counts, five sums (the double has none)
+    assert parity.assert_digest_parity(df, con, _digest_sql(), "equal") == 12
+    planted = {
+        "bigint": (_digest_sql(b="CAST(8 AS BIGINT)"), "digest mismatch"),
+        "decimal": (_digest_sql(d="CAST(12.35 AS DECIMAL(12,2))"), "digest mismatch"),
+        "string": (_digest_sql(s="'abcd'"), "digest mismatch"),
+        "timestamp": (
+            _digest_sql(ts="TIMESTAMP '2024-01-01 00:00:00.000001'"),
+            "digest mismatch",
+        ),
+        "date": (_digest_sql(dt="DATE '2024-01-03'"), "digest mismatch"),
+        "extra column": (f"SELECT *, 1 AS extra FROM ({_digest_sql()})", "column mismatch"),
+        "dtype drift": (_digest_sql(b="CAST(7 AS INTEGER)"), "dtype mismatch"),
+    }
+    for name, (sql, why) in planted.items():
+        with pytest.raises(AssertionError, match=why):
+            parity.assert_digest_parity(df, con, sql, name)
+    con.close()
+
+
+def test_bench_named_key_prints_one_line(spark, sf_dir, monkeypatch, capsys):
+    """``bench.py KEY`` times exactly that key and prints one JSON line
+    whose ``value`` is the sum of the per-key medians."""
+    import pytest
+
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    assert bench.main(["--sf", sf_dir, "agg_q6_selective"]) == 0
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 1, lines
+    rec = json.loads(lines[0])
+    assert list(rec["queries"]) == ["agg_q6_selective"] == list(rec["queries_min"])
+    assert rec["value"] == pytest.approx(sum(rec["queries"].values()))
+    assert set(rec) == {"metric", "value", "unit", "sf", "queries", "queries_min"}
+
+
+def test_parity_super100_resume_carries_digest_pairs(tmp_path):
+    """A resumed 100x sweep carries a digest parent and its ``__slice``
+    companion together or not at all, drops the greens of a slice
+    rebuilt since, and starts fresh from a torn artifact."""
+    spec = importlib.util.spec_from_file_location(
+        "parity_super100",
+        os.path.join(os.path.dirname(entry.__file__), "tools", "parity_super100.py"),
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    prior = {
+        "stream_dedup": {"status": "digest_pass"},
+        "stream_dedup__slice": {"status": "slice_FAIL"},
+        "stream_session_drain": {"status": "digest_pass"},  # companion missing
+        "stream_recovery": {"status": "digest_pass"},
+        "stream_recovery__slice": {"status": "excluded"},
+        "stream_dedup_watermark": {"status": "digest_pass"},
+        "stream_dedup_watermark__slice": {"status": "slice_pass"},
+        "agg_hash_groupby": {"status": "pass"},
+        "join_multiway": {"status": "FAIL"},
+        "sim_knn_exact": {"status": "slice_pass"},
+    }
+    out = tmp_path / "out.json"
+    out.write_text(json.dumps({"results": prior}))
+    data = str(tmp_path)  # holds no parquet, so the dataset guard is idle
+    got = tool.load_prior(str(out), data, {"emb8k": 0.0})
+    assert set(got) == {
+        "stream_recovery", "stream_recovery__slice",
+        "stream_dedup_watermark", "stream_dedup_watermark__slice",
+        "agg_hash_groupby", "sim_knn_exact",
+    }
+    rebuilt = tool.load_prior(str(out), data, {"emb8k": out.stat().st_mtime + 1})
+    assert "sim_knn_exact" not in rebuilt and "agg_hash_groupby" in rebuilt
+    out.write_text("[]")
+    assert tool.load_prior(str(out), data, {}) == {}

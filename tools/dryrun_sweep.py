@@ -44,10 +44,6 @@ import sys
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def _shuffle_bytes(sc, stage0: int, stage1: int) -> int:
@@ -84,13 +80,14 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from pyspark_caffe_spark import get_spark
+    from pyspark_caffe_spark.tables import TABLE_NAMES
     from tests.parity import assert_parity
 
     import duckdb
 
     spark = get_spark("dryrun-sweep")
     con = duckdb.connect()
-    for t in _TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"

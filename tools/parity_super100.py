@@ -1,35 +1,35 @@
 #!/usr/bin/env python
-"""Broad value-parity sweep AT 100× scale (round 8): re-run the full
-DuckDB value-exact comparison for every swept key on the
-100×-replicated sf0.1 dataset, not the sf0.01 the driver uses.
+"""Registry-wide DuckDB value-parity sweep on K×-replicated data
+(``tools/make_superscale.py``; 100× by default), not the sf0.01 of
+the test suite.
 
-Why: the round-8 100× spot-check caught a real scale-only bug
-(agg_hash_groupby's double sums diverging in the 4th decimal at
-~3e11 magnitudes — invisible at sf0.01).  This sweep hunts for more
-of that class: rounding on big-magnitude float aggregates, window
-frames over 100× partitions, join results crossing broadcast/SMJ
-strategy changes, overflow in hash gates.
+Scale-only bugs hide from sf0.01: rounding on big-magnitude float
+aggregates, window frames over 100× partitions, join results crossing
+broadcast/SMJ strategy changes, overflow in hash gates.  Every key
+with an oracle runs, and each result is checked by one of three tiers:
 
-Scope (round 10): EVERY registered key runs EVERY sweep — zero
-exclusions.  The quadratic-ORACLE class (exact all-pairs similarity /
-embedding dedup: the 200k-vector DuckDB oracle is 2e10 dot products)
-and text_common_spans (500k-doc span self-join) run inline on BOUNDED
-SLICES of the 100× data that still exceed the sf0.1 fixture
-severalfold (8192 vectors = 4× the corpus / 16× the pairs; 20k docs =
-4×), with the slice bound recorded per key — the separate
-parity100_rotation.py quota tool is retired (round-9 verdict #3).
-Round 9 graduated the ENTIRE streaming family and the text-format
-roundtrips into the direct sweep — measured affordable (2.6-113 s/key
-at 10M events).  Oversized results compare via the exact-digest tier
-(digest_exprs).  A supplemental win_ewma entry re-checks the full
-value hash (including the float ewma column the digest tier skips)
-on whole-user-history slices.
+* ``pass`` — ``tests.parity.assert_parity``, the full value hash, for
+  results of at most ``ROW_CAP`` rows;
+* ``digest_pass`` — ``tests.parity.assert_digest_parity``, an exact
+  order-insensitive digest, for larger results.  Keys whose output is
+  one row per event also get a ``<key>__slice`` companion: the value
+  hash of an LCG-gated slice of the output (the same cross-engine mix
+  as the CC keys), with the gate modulus (at least 16) chosen from the
+  row count so the slice fits under the cap.  A slice still over the
+  cap is recorded ``excluded``;
+* ``slice_pass`` — the value hash on a bounded slice of the input,
+  for keys whose DuckDB oracle is quadratic (``BOUNDED_SLICE``), and
+  for the ``SUPPLEMENTAL`` float check.
+
+Results are written after every key, and a rerun resumes: greens
+carry over unless the dataset or a slice changed since.
 
 Usage: python tools/parity_super100.py [super_dir] [out_json]
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -37,30 +37,21 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "tests"))
 
-from pyspark_caffe_spark import get_spark  # noqa: E402
+from pyspark_caffe_spark import get_spark, recycle_session  # noqa: E402
 from pyspark_caffe_spark.queries import ORACLES, QUERIES  # noqa: E402
+from pyspark_caffe_spark.queries.scale_ops import _CC_LCG_SQL  # noqa: E402
+from pyspark_caffe_spark.tables import TABLE_NAMES  # noqa: E402
+from tests.parity import assert_digest_parity, assert_parity  # noqa: E402
 
 ROW_CAP = 200_000
+GREEN = ("pass", "digest_pass", "slice_pass")
 
-# Former exclusions, now run INLINE on bounded slices every sweep
-# (round-9 verdict #3: "excluded: 0").  Each entry: slice kind + the
-# recorded bound note.  The slice still exceeds the sf0.1 fixture
-# severalfold, so this is over-fixture-scale evidence, refreshed every
-# sweep instead of via the retired parity100_rotation.py quota.
-#
-# History: streaming replay keys were excluded through r8; round 9
-# graduated the cheap half into the direct sweep (tumbling/sliding/
-# session/union/join_static/foreachbatch on the 10M-event table) and
-# covers the stateful rest at 100× DENSITY on a 2M-event contiguous
-# slice in parity_super100_streaming.py.  scan_csv/json/xml_roundtrip
-# also run direct since r9 (their write is a few-k-row slice; only
-# the scan is 60M rows).
+# Keys run on a bounded slice of the input.  The bound prices the
+# quadratic DuckDB ORACLE (200k vectors → 2e10 pairs), not the
+# operator; each slice still exceeds the sf0.1 fixture severalfold.
 _EMB_SLICE = "8192-vector bounded slice (4x the sf0.1 corpus, 16x the pairs)"
 BOUNDED_SLICE = {
-    # quadratic-in-corpus by design (200k vectors → 2e10 pairs): the
-    # bound prices the quadratic DuckDB ORACLE, not the operator
     "sim_knn_exact": ("emb8k", _EMB_SLICE),
     "sim_threshold_join": ("emb8k", _EMB_SLICE),
     "sim_optimizer_rewrite": ("emb8k", _EMB_SLICE),
@@ -75,15 +66,9 @@ BOUNDED_SLICE = {
     ),
 }
 
-#: all fixture tables, for slice-dir symlinking and view registration
-_TABLES = ["region", "nation", "customer", "supplier", "part",
-           "orders", "lineitem", "events", "documents", "embeddings"]
-
-#: supplemental entries run after the registry loop: (result key,
-#: registry key, slice kind, note).  Module scope so the resume
-#: guard's result-key→slice-kind map derives from the SAME list the
-#: sweep runs — a new supplemental entry can never silently escape
-#: the slice-staleness check (round-15 self-review).
+#: entries run after the registry loop: (result key, registry key,
+#: slice kind, note).  Module scope so the resume guard's slice-kind
+#: map derives from the same list the sweep runs.
 SUPPLEMENTAL = [
     (
         "win_ewma__float_slice",
@@ -95,38 +80,39 @@ SUPPLEMENTAL = [
     ),
 ]
 
+#: per-event-output keys (output > ROW_CAP → digest tier) and the id
+#: column their ``__slice`` companion's LCG gate hashes
+SLICE_GATES = {
+    "stream_dedup": "event_id",
+    "stream_dedup_watermark": "event_id",
+    "stream_recovery": "event_id",
+    "stream_session_drain": "user_id",
+}
+
 
 def build_slice_dirs(super_dir: str) -> tuple[dict[str, str], dict[str, float]]:
-    """Materialize the bounded-slice datasets next to the 100× data
+    """Materialize the bounded-slice datasets next to the data
     (idempotent — reuses existing slices).  Non-sliced tables symlink
-    the FULL 100× versions: keys like dedup_embed_cosine join
+    the FULL versions: keys like dedup_embed_cosine join
     embeddings→documents, and only the quadratic side needs bounding.
 
-    Returns ``(dirs, slice_mtimes)``: the per-kind slice dir AND the
-    mtime of each kind's sliced parquet as it stands after any rebuild
-    — the resume guard compares these against the results file so a
-    slice REBUILT here (spec edit or source regeneration) invalidates
-    the prior slice-backed greens computed from the old slice
-    (round-14 advisory: the source-mtime guard alone cannot see a
-    spec-only edit).
+    Returns ``(dirs, slice_mtimes)``: the per-kind slice dir and the
+    mtime of each kind's sliced parquet after any rebuild, so the
+    resume guard can drop greens computed from a superseded slice.
 
-    * emb8k  — first 8192 embeddings by vec_id, spanning 4+ replicas
-               (4× sf0.1 corpus, 16× the pair count; quadratic oracle
-               ~4e9 flops);
-    * docs20k — first 20k documents by doc_id (4× sf0.1 corpus);
+    * emb8k  — first 8192 embeddings by vec_id, spanning 4+ replicas;
+    * docs20k — first 20k documents by doc_id;
     * ev2pct — whole per-user event histories (user_id % 50 = 0, ~2%
                of rows) for the supplemental win_ewma float check.
     """
     import duckdb
 
     specs = {
+        # ORDER BY + LIMIT, not a WHERE bound: the replicator offsets
+        # vec_id by 10M per replica, so `vec_id < 8192` would match
+        # only replica 0's vectors
         "emb8k": (
             "embeddings",
-            # ORDER BY + LIMIT, not a WHERE bound: the replicator
-            # offsets vec_id by 10M per replica, so `vec_id < 8192`
-            # matched ONLY replica 0's 2000 vectors — exactly the
-            # sf0.1 fixture, not the claimed 4x corpus (round-14
-            # self-review finding; the docs20k spec had it right)
             f"SELECT * FROM read_parquet('{super_dir}/embeddings.parquet') "
             "ORDER BY vec_id LIMIT 8192",
         ),
@@ -141,8 +127,6 @@ def build_slice_dirs(super_dir: str) -> tuple[dict[str, str], dict[str, float]]:
             "WHERE user_id % 50 = 0 ORDER BY event_id",
         ),
     }
-    import hashlib
-
     dirs: dict[str, str] = {}
     slice_mtimes: dict[str, float] = {}
     for kind, (sliced_table, sql) in specs.items():
@@ -150,23 +134,16 @@ def build_slice_dirs(super_dir: str) -> tuple[dict[str, str], dict[str, float]]:
         os.makedirs(d, exist_ok=True)
         pq = os.path.join(d, f"{sliced_table}.parquet")
         src = os.path.join(super_dir, f"{sliced_table}.parquet")
-        # a slice surviving a dataset REGENERATION would mix
-        # generations (stale sliced table joined against freshly
-        # symlinked full tables) — rebuild whenever the source is
-        # newer than the slice, not just when the slice is absent.
-        # A SPEC edit must self-invalidate too (mtime can't see it):
-        # the spec SQL's hash is recorded next to the slice and any
-        # mismatch forces a rebuild (round-14 self-review finding —
-        # without this, fixing a wrong bound silently reuses the old
-        # slice parquet forever).
+        # Rebuild when the source is newer than the slice (a slice
+        # surviving a dataset regeneration would mix generations) or
+        # when the spec SQL changed: its hash is recorded next to the
+        # slice, written only after a successful COPY.
         spec_file = os.path.join(d, f"_SLICE_SPEC_{sliced_table}")
         spec_hash = hashlib.sha256(sql.encode()).hexdigest()
         try:
             spec_stale = open(spec_file).read().strip() != spec_hash
         except (OSError, UnicodeDecodeError):
-            # round-17: a torn spec write can leave partial multi-byte
-            # sequences; degrade to stale (rebuild) like any unreadable
-            # spec, never crash the staleness gate
+            # a torn or unreadable spec degrades to stale (rebuild)
             spec_stale = True
         stale = os.path.exists(pq) and (
             spec_stale
@@ -183,7 +160,7 @@ def build_slice_dirs(super_dir: str) -> tuple[dict[str, str], dict[str, float]]:
             con.close()
             with open(spec_file, "w") as f:
                 f.write(spec_hash + "\n")
-        for t in _TABLES:
+        for t in TABLE_NAMES:
             if t == sliced_table:
                 continue
             srcp = os.path.join(super_dir, f"{t}.parquet")
@@ -197,63 +174,65 @@ def build_slice_dirs(super_dir: str) -> tuple[dict[str, str], dict[str, float]]:
     return dirs, slice_mtimes
 
 
-def digest_exprs(schema) -> tuple[list[str], list[str]]:
-    """Order-insensitive EXACT digest expression lists (Spark, DuckDB)
-    for a result schema: row count plus, per column, the non-null
-    count and — where an exact cross-engine sum exists — a
-    DECIMAL(38,0) sum of the value / its length / its epoch-micros.
-    Integer decimal sums are exact in both engines, so a digest
-    mismatch is always a real divergence; float columns contribute
-    only their null layout.  Shared by the oversized-result tier of
-    the batch sweep and the round-9 streaming parity harness."""
-    s_exprs, d_exprs = ["COUNT(*)"], ["COUNT(*)"]
-    for f in schema.fields:
-        c = f.name
-        t = f.dataType.simpleString()
-        s_exprs.append(f"COUNT(`{c}`)")
-        d_exprs.append(f'COUNT("{c}")')
-        if t in ("tinyint", "smallint", "int", "bigint"):
-            s_exprs.append(f"SUM(CAST(`{c}` AS DECIMAL(38,0)))")
-            d_exprs.append(f'SUM(CAST("{c}" AS DECIMAL(38,0)))')
-        elif t.startswith("decimal"):
-            # decimal sums are exact cross-engine too; scale to
-            # integer units so the digest keeps the fractional part
-            # (int() truncation of a fractional sum would mask
-            # divergence below one whole unit — round-14 self-review)
-            import re as _re
+def load_prior(out_json: str, super_dir: str, slice_mtimes: dict) -> dict:
+    """Green results of an earlier (killed or crashed) run of the same
+    sweep, to be carried over; FAIL/ERROR/missing keys rerun.
 
-            m = _re.fullmatch(r"decimal\((\d+),(\d+)\)", t)
-            scale = int(m.group(2)) if m else 0
-            mult = 10 ** scale
-            s_exprs.append(
-                f"SUM(CAST(`{c}` * {mult} AS DECIMAL(38,0)))"
-            )
-            d_exprs.append(
-                f'SUM(CAST("{c}" * {mult} AS DECIMAL(38,0)))'
-            )
-        elif t == "boolean":
-            s_exprs.append(f"SUM(CAST(`{c}` AS INT))")
-            d_exprs.append(f'SUM(CAST("{c}" AS INT))')
-        elif t == "string":
-            s_exprs.append(f"SUM(CAST(LENGTH(`{c}`) AS DECIMAL(38,0)))")
-            d_exprs.append(f'SUM(CAST(LENGTH("{c}") AS DECIMAL(38,0)))')
-        elif t.startswith("timestamp"):
-            # NTZ → TIMESTAMP cast is identity in this UTC-pinned
-            # session; unix_micros only takes LTZ
-            s_exprs.append(
-                f"SUM(CAST(UNIX_MICROS(CAST(`{c}` AS TIMESTAMP)) "
-                "AS DECIMAL(38,0)))"
-            )
-            d_exprs.append(f'SUM(CAST(EPOCH_US("{c}") AS DECIMAL(38,0)))')
-        elif t == "date":
-            s_exprs.append(
-                f"SUM(CAST(DATEDIFF(`{c}`, DATE '1970-01-01') "
-                "AS DECIMAL(38,0)))"
-            )
-            d_exprs.append(
-                f'SUM(CAST(("{c}" - DATE \'1970-01-01\') AS DECIMAL(38,0)))'
-            )
-    return s_exprs, d_exprs
+    Nothing carries when any source parquet is newer than the results
+    file (the dataset was regenerated).  A slice-backed green drops
+    when its slice parquet is newer than the results file (rebuilt
+    since, which the source check cannot see for a spec-only edit).
+    A digest parent and its ``__slice`` companion carry together or
+    not at all: an ``excluded`` companion carries with its parent, and
+    any other non-green companion drops both, so the rerun regenerates
+    the pair."""
+    if not os.path.exists(out_json):
+        return {}
+    out_mtime = os.path.getmtime(out_json)
+    src_mtimes = [
+        os.path.getmtime(p)
+        for t in TABLE_NAMES
+        for p in [os.path.join(super_dir, f"{t}.parquet")]
+        if os.path.exists(p)
+    ]
+    if src_mtimes and out_mtime < max(src_mtimes):
+        print("resume: results file predates the dataset — discarding "
+              "prior results (regenerated data)", file=sys.stderr)
+        return {}
+    slice_kind_of = {k: kind for k, (kind, _note) in BOUNDED_SLICE.items()}
+    slice_kind_of.update({rk: kind for rk, _key, kind, _note in SUPPLEMENTAL})
+    try:
+        with open(out_json) as f:
+            prior = json.load(f).get("results", {})
+        green = {k: v for k, v in prior.items() if v.get("status") in GREEN}
+        results = {
+            k: v for k, v in green.items()
+            if slice_mtimes.get(slice_kind_of.get(k), 0) <= out_mtime
+        }
+        for key in SLICE_GATES:
+            if results.get(key, {}).get("status") != "digest_pass":
+                continue
+            comp = prior.get(key + "__slice") or {}
+            if comp.get("status") == "excluded":
+                results[key + "__slice"] = comp
+            elif comp.get("status") != "slice_pass":
+                results.pop(key + "__slice", None)
+                del results[key]
+    except (OSError, ValueError, AttributeError, TypeError):
+        # a torn artifact (or valid JSON of the wrong shape) degrades
+        # to a fresh sweep, never a crashed resume
+        return {}
+    dropped = sum(1 for k in green if k not in results)
+    print(f"resume: {len(results)} green keys carried over"
+          + (f", {dropped} dropped (slice rebuilt since, or an unpaired "
+             "digest companion)" if dropped else ""), file=sys.stderr)
+    return results
+
+
+def _failure(exc: Exception, tier: str) -> dict:
+    if isinstance(exc, AssertionError):
+        return {"status": tier + "FAIL", "detail": str(exc)[:400]}
+    return {"status": "ERROR", "detail": f"{type(exc).__name__}: {str(exc)[:300]}"}
 
 
 def main() -> None:
@@ -263,32 +242,25 @@ def main() -> None:
     )
     import duckdb
 
-    from parity import assert_parity, assert_type_parity
-
     spark = get_spark("parity-super100")
     spark.sparkContext.setLogLevel("ERROR")
     slice_dirs, slice_mtimes = build_slice_dirs(super_dir)
-    con = duckdb.connect()
-    for t in _TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{super_dir}/{t}.parquet')"
-        )
 
-    def slice_con(kind: str) -> "duckdb.DuckDBPyConnection":
+    def duck_con(data_dir: str) -> "duckdb.DuckDBPyConnection":
         c = duckdb.connect()
-        for t in _TABLES:
-            p = os.path.join(slice_dirs[kind], f"{t}.parquet")
+        for t in TABLE_NAMES:
+            p = os.path.join(data_dir, f"{t}.parquet")
             if os.path.exists(p):
                 c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
         return c
 
-    def flush(results: dict, complete: bool = False) -> dict:
-        # incremental write after EVERY key: a killed sweep keeps all
-        # completed evidence (a 30-min quadratic-oracle surprise cost a
-        # full run's results before this).  ONE definition of the
-        # artifact payload — the final write is flush(complete=True),
-        # so the finished and killed shapes can never diverge
-        # (round-14 self-review).
+    con = duck_con(super_dir)
+    results = load_prior(out_json, super_dir, slice_mtimes)
+
+    def flush(complete: bool = False) -> dict:
+        # written after EVERY key, so a killed sweep keeps its
+        # evidence; the final write is flush(complete=True), one
+        # payload for both shapes
         counts: dict[str, int] = {}
         for r in results.values():
             counts[r["status"]] = counts.get(r["status"], 0) + 1
@@ -304,167 +276,99 @@ def main() -> None:
             }, indent=1) + "\n")
         return counts
 
-    # resume: keep green results from an earlier (possibly killed or
-    # session-crashed) run; re-run only FAIL/ERROR/missing keys.
-    # Staleness guard (round-14 self-review): prior results describe
-    # the DATA they ran against — if any source parquet is newer than
-    # the results file (dataset regenerated since), carrying greens
-    # over would stamp `complete: true` on old-generation evidence, so
-    # the whole prior set is discarded instead (mirrors the slice-dir
-    # rebuild rule above).
-    results: dict[str, dict] = {}
-    if os.path.exists(out_json):
-        src_mtimes = [
-            os.path.getmtime(p)
-            for t in _TABLES
-            for p in [os.path.join(super_dir, f"{t}.parquet")]
-            if os.path.exists(p)
-        ]
-        if src_mtimes and os.path.getmtime(out_json) < max(src_mtimes):
-            print(
-                "resume: results file predates the dataset — discarding "
-                "prior results (regenerated data)",
-                file=sys.stderr,
-            )
-        else:
-            # slice-backed results additionally describe the SLICE
-            # they ran against: build_slice_dirs just rebuilt any
-            # slice whose spec or source changed, so a slice parquet
-            # newer than the results file means those greens were
-            # computed from a superseded slice — drop exactly those
-            # keys instead of carrying them to a complete:true stamp
-            # (round-14 advisory: the source-mtime guard above cannot
-            # see a spec-only edit).
-            out_mtime = os.path.getmtime(out_json)
-            slice_kind_of = {
-                k: kind for k, (kind, _note) in BOUNDED_SLICE.items()
-            }
-            slice_kind_of.update(
-                {rk: kind for rk, _key, kind, _note in SUPPLEMENTAL}
-            )
-
-            def slice_fresh(key: str) -> bool:
-                kind = slice_kind_of.get(key)
-                return (
-                    kind is None
-                    or slice_mtimes.get(kind, float("inf")) <= out_mtime
-                )
-
-            try:
-                with open(out_json) as f:
-                    prior = json.load(f).get("results", {})
-                results = {
-                    k: v for k, v in prior.items()
-                    if v.get("status") in ("pass", "digest_pass", "slice_pass")
-                    and slice_fresh(k)
-                }
-                dropped = sum(
-                    1 for k, v in prior.items()
-                    if v.get("status") in ("pass", "digest_pass", "slice_pass")
-                    and not slice_fresh(k)
-                )
-                print(
-                    f"resume: {len(results)} green keys carried over"
-                    + (f", {dropped} slice-backed greens dropped "
-                       "(slice rebuilt since)" if dropped else ""),
-                    file=sys.stderr,
-                )
-            except (OSError, ValueError, AttributeError, TypeError):
-                # round-17: json.load succeeding on `[]`/`null`/string
-                # tops (or results rows that aren't dicts) raised
-                # AttributeError past the old guard — same class the
-                # r14 bench-history loader fixed.  A torn artifact
-                # degrades to a fresh sweep, never a crashed resume.
-                pass
-
-    def fresh_session() -> None:
-        """Hard JVM recycle — the dead-gateway/OOM-revival recipe this
-        tool pioneered in round 10 now lives in the library as
-        ``pyspark_caffe_spark.recycle_session`` (round-10 verdict #6:
-        registry consumers running hundreds of keys in one process
-        need it as API, not tool-internal code); this wrapper just
-        threads the tool's local ``spark`` handle through."""
-        nonlocal spark
-        from pyspark_caffe_spark import recycle_session
-
-        spark = recycle_session("parity-super100-fresh", also_stop=(spark,))
-        spark.sparkContext.setLogLevel("ERROR")
-
     # Proactive JVM recycling: one long session accumulates cached
-    # frames, checkpointed RDD blocks, and — the big one — streaming
-    # state-store provider maps from the drain keys; observed this
-    # round, ~220 keys (or a few 10M-row streaming drains) into a
-    # session the NEXT hash build OOMs the heap.  A fresh JVM every
-    # RECYCLE_EVERY keys costs ~15 s each (~2 min across the sweep)
-    # and keeps every key's memory baseline flat.  Keys must be
-    # self-contained anyway (the grading driver runs them in its own
-    # sessions), so a restart is semantics-free.
+    # frames, checkpointed blocks and streaming state-store provider
+    # maps; ~220 keys (or a few 10M-row drains) in, the next hash
+    # build OOMs the heap.  A fresh JVM every RECYCLE_EVERY keys costs
+    # ~15 s and keeps each key's memory baseline flat.  The heaviest
+    # drains each get a fresh JVM of their own: three back-to-back
+    # OOM'd one at 100×.
     RECYCLE_EVERY = 40
-    keys_since_recycle = 0
-
-    # The 10-20M-row streaming drains leave state-store provider maps
-    # pinned after the query stops; three of them back-to-back OOM'd a
-    # fresh JVM this round (stream_session_drain 9.5M complete-mode +
-    # stream_dedup 10M keys + stream_dedup_watermark 20M replay).
-    # Each gets a flat-heap JVM of its own.
     HEAVY_FRESH = {
         "stream_session_drain", "stream_dedup", "stream_dedup_watermark",
         "stream_stateful", "stream_recovery", "stream_join_stream",
         "stream_python_datasource", "stream_python_sink",
     }
+    keys_since_recycle = 0
 
-    def ensure_alive(key: str | None = None):
-        nonlocal keys_since_recycle
+    def ensure_alive(key: str) -> None:
+        nonlocal spark, keys_since_recycle
         if key in HEAVY_FRESH and keys_since_recycle > 0:
-            print(f"fresh JVM for heavy streaming key {key}", file=sys.stderr)
-            fresh_session()
-            keys_since_recycle = 0
-            return
-        if keys_since_recycle >= RECYCLE_EVERY:
-            print(f"recycling JVM after {keys_since_recycle} keys",
-                  file=sys.stderr)
-            fresh_session()
-            keys_since_recycle = 0
-            return
-        try:
-            spark.range(1).count()
-        except Exception:
-            # a prior key OOM'd the JVM: rebuild so one bad key cannot
-            # void the rest of the sweep
-            print("SparkContext dead — rebuilding session", file=sys.stderr)
-            fresh_session()
-            keys_since_recycle = 0
+            reason = f"fresh JVM for heavy streaming key {key}"
+        elif keys_since_recycle >= RECYCLE_EVERY:
+            reason = f"recycling JVM after {keys_since_recycle} keys"
+        else:
+            try:
+                spark.range(1).count()
+                return
+            except Exception:
+                # a prior key killed the JVM: rebuild so one bad key
+                # cannot void the rest of the sweep
+                reason = "SparkContext dead — rebuilding session"
+        print(reason, file=sys.stderr)
+        spark = recycle_session("parity-super100-fresh", also_stop=(spark,))
+        spark.sparkContext.setLogLevel("ERROR")
+        keys_since_recycle = 0
 
-    def run_sliced(result_key: str, key: str, kind: str, note: str) -> None:
-        nonlocal keys_since_recycle
-        keys_since_recycle += 1
-        data_dir = slice_dirs[kind]
-        scon = slice_con(kind)
-        t0 = time.perf_counter()
+    def log(result_key: str) -> None:
+        r = results[result_key]
+        print(f"{result_key}: {r['status']} ({r.get('rows', '?')} rows, "
+              f"{r.get('sec')} s)", file=sys.stderr)
+
+    def gated_slice(key: str, df, n: int) -> None:
+        """The ``__slice`` companion of a digest-tier per-event key."""
+        # the expected slice is at most ROW_CAP / 2, so the gate's
+        # spread around it rarely pushes a slice over the cap
+        mod = max(16, 2 * n // ROW_CAP)
+        gate = f"{_CC_LCG_SQL.format(col=SLICE_GATES[key])} % {mod} = 3"
+        skey, t0 = key + "__slice", time.perf_counter()
         try:
-            df = QUERIES[key](spark, data_dir)
-            n = df.count()
-            assert_parity(df, scon, ORACLES[key], key)
-            results[result_key] = {
-                "status": "slice_pass", "rows": n, "slice": note,
-                "sec": round(time.perf_counter() - t0, 1),
-            }
-        except AssertionError as exc:
-            results[result_key] = {
-                "status": "slice_FAIL", "detail": str(exc)[:400], "slice": note,
-                "sec": round(time.perf_counter() - t0, 1),
-            }
+            sdf = df.filter(gate)
+            n2 = sdf.count()
+            if n2 > ROW_CAP:
+                rec = {"status": "excluded", "reason": f"slice still {n2} rows > cap"}
+            else:
+                assert_parity(
+                    sdf, con, f"SELECT * FROM ({ORACLES[key]}) WHERE {gate}", skey
+                )
+                rec = {"status": "slice_pass", "rows": n2,
+                       "slice": f"LCG-gated 1/{mod} of the output, full value hash"}
         except Exception as exc:  # noqa: BLE001 - record, keep sweeping
-            results[result_key] = {
-                "status": "ERROR", "slice": note,
-                "detail": f"{type(exc).__name__}: {str(exc)[:300]}",
-                "sec": round(time.perf_counter() - t0, 1),
-            }
+            rec = _failure(exc, "slice_")
+        results[skey] = {**rec, "sec": round(time.perf_counter() - t0, 1)}
+        log(skey)
+
+    def check(result_key: str, key: str, kind: str | None = None, note: str = "") -> None:
+        """Run ``key`` on the full data, or on slice ``kind``, compare
+        it through its tier, record the outcome and flush."""
+        nonlocal keys_since_recycle
+        ensure_alive(key)
+        keys_since_recycle += 1
+        kcon = duck_con(slice_dirs[kind]) if kind else con
+        tier, t0, df, n = ("slice_" if kind else ""), time.perf_counter(), None, 0
+        try:
+            df = QUERIES[key](spark, slice_dirs[kind] if kind else super_dir)
+            n = df.count()
+            rec = {"rows": n}
+            if n > ROW_CAP and not kind:
+                tier = "digest_"
+                rec["digest_terms"] = assert_digest_parity(df, kcon, ORACLES[key], key)
+            else:
+                assert_parity(df, kcon, ORACLES[key], key)
+            rec = {"status": tier + "pass", **rec}
+        except Exception as exc:  # noqa: BLE001 - record, keep sweeping
+            rec = _failure(exc, tier)
         finally:
-            scon.close()
-        print(f"{result_key}: {results[result_key]['status']} "
-              f"({results[result_key].get('sec')} s)", file=sys.stderr)
-        flush(results)
+            if kind:
+                kcon.close()
+        results[result_key] = {
+            **rec, **({"slice": note} if note else {}),
+            "sec": round(time.perf_counter() - t0, 1),
+        }
+        log(result_key)
+        if rec["status"] == "digest_pass" and key in SLICE_GATES:
+            gated_slice(key, df, n)
+        flush()
 
     for key in QUERIES:
         if key in results:
@@ -472,100 +376,13 @@ def main() -> None:
         if key not in ORACLES:
             results[key] = {"status": "excluded", "reason": "no oracle"}
             continue
-        ensure_alive(key)
-        if key in BOUNDED_SLICE:
-            kind, note = BOUNDED_SLICE[key]
-            run_sliced(key, key, kind, note)
-            continue
-        t0 = time.perf_counter()
-        try:
-            df = QUERIES[key](spark, super_dir)
-            n = df.count()
-            if n > ROW_CAP:
-                # too big to hash python-side: compare an ORDER-
-                # INSENSITIVE EXACT DIGEST instead — row count plus,
-                # per column, the non-null count and (where an exact
-                # cross-engine sum exists) a DECIMAL(38,0) sum of the
-                # value / its length / its epoch-micros.  Integer
-                # decimal sums are exact in both engines, so a digest
-                # mismatch is always a real divergence; float columns
-                # contribute only their null layout (their value check
-                # is what the ≤ROW_CAP full-hash path is for).
-                # the digest tier must still hold the column-set and
-                # dtype parity the ≤ROW_CAP path gets from
-                # assert_parity — digest expressions derive from the
-                # SPARK schema alone, so an extra oracle column or a
-                # width/type drift would otherwise digest green on a
-                # key the grading driver fails (round-14 self-review)
-                rel = con.sql(f"SELECT * FROM ({ORACLES[key]}) LIMIT 0")
-                assert sorted(df.columns) == sorted(rel.columns), (
-                    f"[{key}] column mismatch: spark={sorted(df.columns)} "
-                    f"duck={sorted(rel.columns)}"
-                )
-                assert_type_parity(df, con, ORACLES[key], key)
-                s_exprs, d_exprs = digest_exprs(df.schema)
-                s_digest = [
-                    None if v is None else int(v)
-                    for v in df.selectExpr(*s_exprs).collect()[0]
-                ]
-                d_digest = [
-                    None if v is None else int(v)
-                    for v in con.execute(
-                        f"SELECT {', '.join(d_exprs)} FROM ({ORACLES[key]})"
-                    ).fetchone()
-                ]
-                match = s_digest == d_digest
-                results[key] = {
-                    "status": "digest_pass" if match else "digest_FAIL",
-                    "rows": n,
-                    "digest_terms": len(s_digest),
-                    "sec": round(time.perf_counter() - t0, 1),
-                }
-                if not match:
-                    results[key]["spark_digest"] = s_digest
-                    results[key]["oracle_digest"] = d_digest
-                print(f"{key}: {results[key]['status']} ({n} rows, "
-                      f"{len(s_digest)} terms)", file=sys.stderr)
-                # fall through to the shared flush + recycle-count tail
-                # (this branch used to `continue` past both, so digest
-                # keys never flushed incrementally and never counted
-                # toward the JVM-recycle cadence — two adjacent heavy
-                # streaming digest keys could then share one JVM,
-                # exactly the back-to-back OOM HEAVY_FRESH exists to
-                # prevent; round-14 self-review)
-                flush(results)
-                keys_since_recycle += 1
-                continue
-            assert_parity(df, con, ORACLES[key], key)
-            results[key] = {
-                "status": "pass",
-                "rows": n,
-                "sec": round(time.perf_counter() - t0, 1),
-            }
-        except AssertionError as exc:
-            results[key] = {
-                "status": "FAIL",
-                "detail": str(exc)[:400],
-                "sec": round(time.perf_counter() - t0, 1),
-            }
-        except Exception as exc:  # noqa: BLE001 - record, keep sweeping
-            results[key] = {
-                "status": "ERROR",
-                "detail": f"{type(exc).__name__}: {str(exc)[:300]}",
-                "sec": round(time.perf_counter() - t0, 1),
-            }
-        print(f"{key}: {results[key]['status']} "
-              f"({results[key].get('sec')} s)", file=sys.stderr)
-        flush(results)
-        keys_since_recycle += 1
-
+        kind, note = BOUNDED_SLICE.get(key, (None, ""))
+        check(key, key, kind, note)
     for result_key, key, kind, note in SUPPLEMENTAL:
-        if result_key in results:
-            continue
-        ensure_alive(key)
-        run_sliced(result_key, key, kind, note)
+        if result_key not in results:
+            check(result_key, key, kind, note)
 
-    counts = flush(results, complete=True)
+    counts = flush(complete=True)
     print(json.dumps({"written": out_json, "counts": counts}))
 
 
