@@ -55,7 +55,7 @@ _EXPENSIVE_LAST = [
     "stream_tumbling",
     "stream_recovery",
     "stream_watermark_late",
-    # round-7 custom-connector streams: poll-drained (~5-10 s each)
+    # round-7 custom-connector streams (~5-10 s each)
     "stream_python_datasource",
     "stream_python_sink",
     # round-7 iterative/inverted-index keys ≥ ~2 s at sf0.01
@@ -95,16 +95,9 @@ _SWEEP_FIT_HEADROOM = 5
 # transient OSError (EIO/EACCES, not just absence) on an EXISTING
 # _EPOCHS manifest to zero lines — that degrade made the
 # read-modify-rewrite discard every previously committed batch
-# total and the drain then undercounted into a TimeoutError.
-# commit() now reads with missing_only=True (FileNotFoundError +
-# content garbage still degrade; real IO errors fail the query
-# loudly — a restart from checkpoint replays the batch, and
-# commit() is idempotent per batchId); the drain-reader sites keep
-# the full silent-degrade.  Both poll-drain loops additionally
-# surface q.exception() each tick (the round's self-review found
-# the loud failure otherwise died in the micro-batch thread and
-# the drain stalled into the same opaque TimeoutError the fix
-# targets), which also touches stream_python_datasource's drain.
+# total.  FileNotFoundError + content garbage still degrade; real
+# IO errors fail the query loudly — a restart from checkpoint
+# replays the batch, and commit() is idempotent per batchId.
 # Surviving r17 rows for both keys validate pre-fix code, so they
 # re-sweep ahead of the green pool until a row from round ≥ 18
 # exists — a green CORRECTNESS row should always describe the code

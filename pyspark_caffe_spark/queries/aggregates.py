@@ -899,7 +899,7 @@ def agg_topk_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.expr("approx_top_k_accumulate(event_type, 100)").alias("sk")
     )
-    path = _scratch("topk_sketches_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("topk_sketches_", sf_dir)
     daily.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path)
     merged = stored.agg(
@@ -1115,7 +1115,7 @@ def agg_theta_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.theta_sketch_agg("user_id").alias("sk")
     )
-    path = _scratch("theta_sketches_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("theta_sketches_", sf_dir)
     daily.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path).filter(
         F.col("day") < F.lit("2024-01-16").cast("date")
@@ -1211,7 +1211,7 @@ def agg_kll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.kll_sketch_agg_double("value").alias("sk")
     )
-    path = _scratch("kll_sketches_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("kll_sketches_", sf_dir)
     daily.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path).filter(
         F.col("day") < F.lit("2024-01-16").cast("date")

@@ -19,7 +19,11 @@ from pyspark_caffe_spark import textops
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.queries.streaming import _drain, _read_events_stream
+from pyspark_caffe_spark.queries.streaming import (
+    _drain,
+    _read_events_stream,
+    _run_available_now,
+)
 from pyspark_caffe_spark.tables import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -255,8 +259,9 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark_caffe_spark.queries.relational import _scratch
 
-    out_dir = _scratch("feb_out_" + os.path.basename(sf_dir.rstrip("/")))
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir, ckpt = _scratch("feb_out_", sf_dir), _scratch("feb_ckpt_", sf_dir)
+    for d in (out_dir, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
     ev = _read_events_stream(spark, f"{sf_dir}/events.parquet")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -264,13 +269,10 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_dir
         )
 
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch("feb_ckpt_" + uuid.uuid4().hex[:8]))
-        .start()
+    _run_available_now(
+        spark,
+        ev.writeStream.foreachBatch(write_batch).option("checkpointLocation", ckpt),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")

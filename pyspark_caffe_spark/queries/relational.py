@@ -22,8 +22,13 @@ from pyspark_caffe_spark.tables import load_table
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
-def _scratch(name: str) -> str:
+def _scratch(name: str, sf_dir: str | None = None) -> str:
+    """Path of scratch entry ``name``; with ``sf_dir``, one entry per
+    scale factor (``name`` + the sf dir's last component, trailing
+    slash or not)."""
     os.makedirs(SCRATCH, exist_ok=True)
+    if sf_dir is not None:
+        name += os.path.basename(sf_dir.rstrip("/"))
     return os.path.join(SCRATCH, name)
 
 
@@ -485,7 +490,7 @@ def scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same reader fans out over an object-store listing; per-file
     rows then feed the multimodal_* decode stages."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 8)
-    d = _scratch("binfiles_" + os.path.basename(sf_dir.rstrip("/")))
+    d = _scratch("binfiles_", sf_dir)
     os.makedirs(d, exist_ok=True)
     for r in docs.select("doc_id", "text").collect():  # 8 rows, bounded
         with open(os.path.join(d, f"doc_{r['doc_id']}.bin"), "wb") as fh:
@@ -543,7 +548,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("merge_action"),
         )
     )
-    path = _scratch("merge_upsert_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("merge_upsert_", sf_dir)
     merged.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
@@ -789,7 +794,7 @@ def sink_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    path = _scratch("sink_bloom_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("sink_bloom_", sf_dir)
     (
         src.repartition(4)
         .sortWithinPartitions("o_orderdate")  # date layout ⇒ custkey scattered per row group
@@ -1026,22 +1031,13 @@ try:  # pragma: no cover - import surface probed once
             self.tmp_name = tmp_name
             self.n_rows = n_rows
 
-    class _ScratchJsonlSink(DataSource):
-        """Custom TRANSACTIONAL sink on the Python DataSource writer
-        API.  Tasks write to invisible temp files and report them in
-        commit messages; only the DRIVER's commit() renames them into
-        place and stamps a manifest — the same two-phase protocol every
-        exactly-once Spark sink uses, so a failed/speculative task can
-        never leave a half-written partition visible."""
+    class _JsonlTaskWriter:
+        """Task half of the two-phase JSONL sinks (``scratch_jsonl``
+        here, the streaming ``epoch_jsonl``): each task writes one
+        invisible ``_tmp-*`` file and reports it in a commit message;
+        the subclass's driver-side commit names the files through
+        :meth:`_install` and stamps its manifest."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "scratch_jsonl"
-
-        def writer(self, schema, overwrite: bool):
-            return _ScratchJsonlWriter(self.options["path"])
-
-    class _ScratchJsonlWriter(DataSourceWriter):
         def __init__(self, path: str):
             self.path = path
 
@@ -1058,14 +1054,15 @@ try:  # pragma: no cover - import surface probed once
                     n += 1
             return _JsonlCommitMessage(os.path.basename(tmp), n)
 
-        def commit(self, messages):
-            # Mirror the streaming twin: a failed task can hand the
-            # driver a None message — skip it (m.tmp_name on None would
-            # raise AttributeError past the OSError-only guards and
-            # mask the real task failure); empty partitions delete
-            # their temp file instead of renaming a zero-row part in.
-            total = 0
-            part = 0
+        def _install(self, messages, part_name) -> int:
+            """Rename every non-empty temp file to ``part_name(i)`` (i
+            counts the installed files) and return the installed rows.
+            A failed task hands the driver a None message: skip it
+            (m.tmp_name on None would raise AttributeError past the
+            OSError-only guards and mask the real task failure); empty
+            partitions delete their temp file instead of renaming a
+            zero-row part in."""
+            total = part = 0
             for m in messages:
                 if m is None:
                     continue
@@ -1073,15 +1070,12 @@ try:  # pragma: no cover - import surface probed once
                 if m.n_rows == 0:
                     os.remove(src)
                     continue
-                os.rename(
-                    src, os.path.join(self.path, f"part-{part:05d}.jsonl")
-                )
+                os.rename(src, os.path.join(self.path, part_name(part)))
                 part += 1
                 total += m.n_rows
-            with open(os.path.join(self.path, "_MANIFEST"), "w") as f:
-                f.write(str(total))
+            return total
 
-        def abort(self, messages):
+        def abort(self, messages, batchId: int | None = None) -> None:
             for m in messages:
                 if m is None:
                     continue
@@ -1089,6 +1083,27 @@ try:  # pragma: no cover - import surface probed once
                     os.remove(os.path.join(self.path, m.tmp_name))
                 except OSError:
                     pass
+
+    class _ScratchJsonlSink(DataSource):
+        """Custom TRANSACTIONAL sink on the Python DataSource writer
+        API.  Tasks write to invisible temp files and report them in
+        commit messages; only the DRIVER's commit() renames them into
+        place and stamps a manifest — the same two-phase protocol every
+        exactly-once Spark sink uses, so a failed/speculative task can
+        never leave a half-written partition visible."""
+
+        @classmethod
+        def name(cls) -> str:
+            return "scratch_jsonl"
+
+        def writer(self, schema, overwrite: bool):
+            return _ScratchJsonlWriter(self.options["path"])
+
+    class _ScratchJsonlWriter(_JsonlTaskWriter, DataSourceWriter):
+        def commit(self, messages):
+            total = self._install(messages, lambda i: f"part-{i:05d}.jsonl")
+            with open(os.path.join(self.path, "_MANIFEST"), "w") as f:
+                f.write(str(total))
 
 except ImportError:  # pragma: no cover
     pass
@@ -1118,11 +1133,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver — O(metadata), not O(data)."""
     import shutil
 
-    sink_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "..", ".scratch",
-        f"pyds_sink_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    sink_dir = os.path.abspath(sink_dir)
+    sink_dir = _scratch("pyds_sink_", sf_dir)
     shutil.rmtree(sink_dir, ignore_errors=True)
     spark.dataSource.register(_ScratchJsonlSink)
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)

@@ -1267,14 +1267,14 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_caffe_spark.queries.relational import _scratch
 
     orders = load_table(spark, sf_dir, "orders")
-    frag = _scratch("compact_in_" + os.path.basename(sf_dir.rstrip("/")))
+    frag = _scratch("compact_in_", sf_dir)
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     part_files = [
         os.path.join(frag, f) for f in os.listdir(frag) if f.endswith(".parquet")
     ]
     total_bytes = sum(os.path.getsize(f) for f in part_files)
     n_out = max(1, math.ceil(total_bytes / (16 << 20)))
-    out = _scratch("compact_out_" + os.path.basename(sf_dir.rstrip("/")))
+    out = _scratch("compact_out_", sf_dir)
     spark.read.parquet(frag).coalesce(n_out).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -1352,7 +1352,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("int").alias("tp_r"),
     )
     z = scaled.withColumn("zorder", _morton_interleave(F.col("ck_r"), F.col("tp_r")))
-    path = _scratch("sink_zorder_" + os.path.basename(sf_dir.rstrip("/")))
+    path = _scratch("sink_zorder_", sf_dir)
     # DETERMINISTIC range split: repartitionByRange picks boundaries by
     # RANDOM-seed sampling, so file layouts (and their min/max spans)
     # varied run to run — observed as a rare flake in the span test.
@@ -1633,9 +1633,8 @@ def pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cutoff_day = "2024-01-25"
     ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    state_path = _scratch(f"incr_state_{tag}")
-    delta_path = _scratch(f"incr_delta_{tag}")
+    state_path = _scratch("incr_state_", sf_dir)
+    delta_path = _scratch("incr_delta_", sf_dir)
     cutoff_ts = F.lit(cutoff_day).cast("timestamp")
 
     def day_agg(df: DataFrame) -> DataFrame:

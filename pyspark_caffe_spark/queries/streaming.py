@@ -16,7 +16,10 @@ shapes Structured Streaming runs incrementally on a real cluster; the
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import threading
 import time
 import uuid
 from typing import Iterator
@@ -25,6 +28,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -59,6 +63,14 @@ EVENTS_RAW_SCHEMA = StructType(
 )
 
 
+def _replay_rows(df: DataFrame) -> DataFrame:
+    """Events rows laid out as ``EVENTS_RAW_SCHEMA`` for a replay
+    file: ts as INT64 nanos, fields in schema order."""
+    return df.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long")).select(
+        *EVENTS_RAW_SCHEMA.fieldNames()
+    )
+
+
 def _read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """readStream over parquet with load_table's ts normalisation.
 
@@ -76,7 +88,7 @@ def _read_events_stream(spark: SparkSession, path: str) -> DataFrame:
         # a scratch dir via symlink (zero-copy). lexists + readlink
         # guard against stale/broken links when sf dirs move between
         # runs (exists() follows the link and would miss both cases).
-        d = _scratch("stream_src_" + os.path.basename(os.path.dirname(path)))
+        d = _scratch("stream_src_", os.path.dirname(path))
         os.makedirs(d, exist_ok=True)
         link = os.path.join(d, "events.parquet")
         if os.path.lexists(link) and os.readlink(link) != path:
@@ -87,9 +99,13 @@ def _read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return normalize_events_ts(spark.readStream.schema(schema).parquet(path), schema)
 
 
-def _drain(df: DataFrame, name: str, output_mode: str, partitions: int = 8) -> DataFrame:
-    """Run a streaming query to completion (availableNow) into a memory
-    sink; return the resulting table.
+def _run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, partitions: int = 8
+) -> None:
+    """Run ``writer``'s query to completion: start it with
+    ``trigger(availableNow=True)`` under ``partitions`` state
+    partitions, wait for it to stop (a failed query raises here) and
+    restore the session's shuffle-partition conf.
 
     Streaming state partitions = shuffle.partitions at query start and
     are fixed for the query's lifetime; each one is a state-store
@@ -101,20 +117,23 @@ def _drain(df: DataFrame, name: str, output_mode: str, partitions: int = 8) -> D
     THE streaming sizing knob — set it to sustained
     (rows/sec × window) ÷ target-partition-size before the first start.
     """
-    spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer.trigger(availableNow=True).start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _drain(df: DataFrame, name: str, output_mode: str, partitions: int = 8) -> DataFrame:
+    """Drain the streaming ``df`` into a memory sink with
+    :func:`_run_available_now` and return the resulting table."""
+    spark = df.sparkSession
+    _run_available_now(
+        spark,
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        partitions,
+    )
     # detach the result from the memory-sink temp view, then drop it —
     # uuid-named sink tables would otherwise accumulate full result
     # sets in driver memory for the session lifetime
@@ -169,9 +188,9 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(out, f"mem_sliding_{uuid.uuid4().hex[:8]}", "complete")
 
 
-@query(
-    "stream_session",
-    oracle="""
+# Sessionization by the classic lag/gap/cumsum rewrite: the batch
+# oracle of both session-window keys.
+_SESSION_ORACLE = """
     WITH marked AS (
       SELECT user_id, ts, value, event_id,
              CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -192,17 +211,11 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(value), 4) AS sum_value
     FROM sessions
     GROUP BY user_id, session_id
-    """,
-)
-def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-min inactivity gap) per user via
-    ``session_window`` — the same operator Structured Streaming runs
-    with state-store-backed merging; executed on the batch DataFrame
-    here because append-mode streaming only flushes sessions the
-    watermark has passed (non-deterministic tail under availableNow).
-    The oracle sessionizes via the classic lag/gap/cumsum rewrite.
     """
-    ev = load_table(spark, sf_dir, "events")
+
+
+def _sessions(ev: DataFrame) -> DataFrame:
+    """30-minute session windows per user: event count and value sum."""
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
@@ -216,31 +229,19 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_session_drain",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts, value, event_id,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       >= INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ), sessions AS (
-      SELECT user_id, ts, value, event_id,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marked
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events,
-           ROUND(SUM(value), 4) AS sum_value
-    FROM sessions
-    GROUP BY user_id, session_id
-    """,
-)
+@query("stream_session", oracle=_SESSION_ORACLE)
+def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session windows (30-min inactivity gap) per user via
+    ``session_window`` — the same operator Structured Streaming runs
+    with state-store-backed merging; executed on the batch DataFrame
+    here because append-mode streaming only flushes sessions the
+    watermark has passed (non-deterministic tail under availableNow).
+    The oracle sessionizes via the classic lag/gap/cumsum rewrite.
+    """
+    return _sessions(load_table(spark, sf_dir, "events"))
+
+
+@query("stream_session_drain", oracle=_SESSION_ORACLE)
 def stream_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows through a REAL Structured Streaming drain —
     the state-store-backed ``session_window`` merge running as a
@@ -259,21 +260,7 @@ def stream_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact drain at 100× density (2M-event slice, 1.9M sessions) with
     an exact-digest match against DuckDB
     (PARITY100_STREAMING_r19.json)."""
-    ev = _read_events_stream(spark, f"{sf_dir}/events.parquet")
-    sess = (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    sess = _sessions(_read_events_stream(spark, f"{sf_dir}/events.parquet"))
     return _drain(sess, f"mem_sessdrain_{uuid.uuid4().hex[:8]}", "complete")
 
 
@@ -312,25 +299,22 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream never drops, duplicates, or miscounts on-time data).
     The oracle emits literal ``true`` for both."""
     ev = load_table(spark, sf_dir, "events")
-    replay = _scratch("wm_replay_" + os.path.basename(sf_dir))
-
-    # raw long nanos back for the stream reader: write ts as long nanos
-    def _raw(df: DataFrame) -> DataFrame:
-        return df.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long")).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-
+    replay = _scratch("wm_replay_", sf_dir)
     jan2 = F.lit("2024-01-02").cast("timestamp")
     jan3 = F.lit("2024-01-03").cast("timestamp")
-    _raw(ev.filter(F.col("ts") >= jan3)).coalesce(1).write.mode("overwrite").parquet(replay)
+    _replay_rows(ev.filter(F.col("ts") >= jan3)).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(replay)
     # file source orders batches by mod time; local-FS mtime is
     # ms-resolution, so 150 ms is a wide ordering margin
     time.sleep(0.15)
-    _raw(ev.filter((F.col("ts") >= jan2) & (F.col("ts") < jan3))).coalesce(1).write.mode(
-        "append"
-    ).parquet(replay)
+    _replay_rows(ev.filter((F.col("ts") >= jan2) & (F.col("ts") < jan3))).coalesce(
+        1
+    ).write.mode("append").parquet(replay)
     time.sleep(0.15)
-    _raw(ev.filter(F.col("ts") < jan2)).coalesce(1).write.mode("append").parquet(replay)
+    _replay_rows(ev.filter(F.col("ts") < jan2)).coalesce(1).write.mode("append").parquet(
+        replay
+    )
 
     stream = normalize_events_ts(
         spark.readStream.schema(EVENTS_RAW_SCHEMA)
@@ -346,8 +330,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     drained = _drain(agg, f"mem_wm_{uuid.uuid4().hex[:8]}", "append", partitions=4)
 
-    jan2 = F.lit("2024-01-02").cast("timestamp")
-    jan3 = F.lit("2024-01-03").cast("timestamp")
     # expected flushable set: on-time (≥ Jan 3) day windows whose end
     # precedes the final watermark max(ts) − 1h
     wm = ev.agg((F.max("ts") - F.expr("INTERVAL 1 HOUR")).alias("_wm"))
@@ -389,10 +371,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At scale the watermarked variant
     (dropDuplicatesWithinWatermark) bounds the id-set state."""
     ev = load_table(spark, sf_dir, "events")
-    replay = _scratch("dedup_replay_" + os.path.basename(sf_dir))
-    raw = ev.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long")).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
+    replay = _scratch("dedup_replay_", sf_dir)
+    raw = _replay_rows(ev)
     raw.unionByName(raw).coalesce(2).write.mode("overwrite").parquet(replay)
 
     stream = _read_events_stream(spark, replay).dropDuplicates(["event_id"])
@@ -420,10 +400,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     one availableNow drain emits exactly the distinct events — the
     batch table is the full oracle."""
     ev = load_table(spark, sf_dir, "events")
-    replay = _scratch("dedup_wm_replay_" + os.path.basename(sf_dir.rstrip("/")))
-    raw = ev.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long")).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
+    replay = _scratch("dedup_wm_replay_", sf_dir)
+    raw = _replay_rows(ev)
     raw.unionByName(raw).coalesce(2).write.mode("overwrite").parquet(replay)
 
     stream = (
@@ -609,19 +587,11 @@ def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver loss; availableNow only changes the trigger, not the
     commit protocol."""
     ev = load_table(spark, sf_dir, "events")
-    base = _scratch("recovery_" + os.path.basename(sf_dir.rstrip("/")))
+    base = _scratch("recovery_", sf_dir)
     src, sink, ckpt = base + "/src", base + "/sink", base + "/ckpt"
-    import shutil
-
     for d in (src, sink, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src, exist_ok=True)
-
-    def _raw(df: DataFrame) -> DataFrame:
-        return df.withColumn("ts", (F.unix_micros("ts") * 1000).cast("long")).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-
     half = F.col("event_id") % 2 == 0
 
     def run_once() -> None:
@@ -629,20 +599,18 @@ def stream_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(EVENTS_RAW_SCHEMA).parquet(src),
             EVENTS_RAW_SCHEMA,
         ).select("event_id", "user_id", "event_type", "value")
-        q = (
+        _run_available_now(
+            spark,
             stream.writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
         )
-        q.awaitTermination()
 
-    _raw(ev.filter(half)).coalesce(1).write.mode("append").parquet(src)
+    _replay_rows(ev.filter(half)).coalesce(1).write.mode("append").parquet(src)
     run_once()  # drains file 1, commits offsets + sink txn log, stops
     time.sleep(0.15)  # distinct mtime for deterministic file ordering
-    _raw(ev.filter(~half)).coalesce(1).write.mode("append").parquet(src)
+    _replay_rows(ev.filter(~half)).coalesce(1).write.mode("append").parquet(src)
     run_once()  # restart from checkpoint: processes ONLY file 2
     return spark.read.parquet(sink)
 
@@ -727,29 +695,33 @@ except ImportError:  # pragma: no cover
     pass
 
 
-def _drain_until(q, done, *, timeout: float = 120.0, what: str = "stream drain"):
-    """Poll ``done()`` until it reports the drain is complete,
-    surfacing ``q.exception()`` every tick.
+def _process_all_available(q: StreamingQuery, what: str, timeout: float = 120.0) -> None:
+    """Wait until the running query ``q`` has processed all the input
+    its sources have, then stop it.
 
     Custom Python sources don't support availableNow, so their
-    queries drain by polling the sink — but a query that FAILS
-    (e.g. the epoch sink's commit() raising on a real IO error, the
-    round-18 loud-failure path) dies inside the engine's micro-batch
-    thread: the sink total just freezes, and a plain poll loop stalls
-    for the full deadline and reports an opaque TimeoutError instead
-    of the actual cause.  Every other stream key uses
-    ``awaitTermination()``, which surfaces the failure natively; this
-    helper gives the two poll-drain keys the same fail-fast-and-loud
-    behavior (round-18 self-review finding)."""
-    deadline = time.time() + timeout
-    while time.time() < deadline:
-        exc = q.exception()
-        if exc is not None:
-            raise exc
-        if done():
-            return
-        time.sleep(0.3)
-    raise TimeoutError(f"{what} did not complete")
+    queries run with a processing-time trigger and
+    ``processAllAvailable()`` waits for the engine to report no new
+    data.  A query that FAILS (a task error, or the epoch sink's
+    commit() raising on a real IO error) makes it rethrow the
+    failure.  A query that stalls is stopped by a timer after
+    ``timeout`` seconds, and the wait raises ``TimeoutError`` naming
+    the drain."""
+    timed_out = threading.Event()
+
+    def _stop() -> None:
+        timed_out.set()
+        q.stop()
+
+    timer = threading.Timer(timeout, _stop)
+    timer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        timer.cancel()
+        q.stop()
+    if timed_out.is_set():
+        raise TimeoutError(f"{what} did not complete within {timeout:g} s")
 
 
 @query(
@@ -778,8 +750,8 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch (count, sum) rollup hash-matches generate_series ONLY if
     every offset range was read exactly once — a dropped or repeated
     micro-batch breaks the oracle.  Custom Python sources don't
-    support availableNow (single-batch fallback), so the drain polls
-    the sink until the source reports caught-up."""
+    support availableNow (single-batch fallback), so the drain waits
+    on the engine until the source reports caught-up."""
     spark.dataSource.register(_SynthTickerSource)
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     q = (
@@ -791,14 +763,7 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    try:
-        _drain_until(
-            q,
-            lambda: spark.table(name).count() >= 500,
-            what="synth_ticker drain",
-        )
-    finally:
-        q.stop()
+    _process_all_available(q, "synth_ticker drain")
     out = spark.table(name).transform(pin)
     spark.catalog.dropTempView(name)
     return (
@@ -807,59 +772,35 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _epochs_manifest_read(
-    manifest: str, *, missing_only: bool = False
-) -> list[tuple[str, int]]:
+def _epochs_manifest_read(manifest: str) -> list[tuple[str, int]]:
     """Defensive read of the epoch sink's ``_EPOCHS`` manifest:
     ``(batch_id, n_rows)`` pairs for every well-formed
-    ``digits,digits`` line.  An absent file or non-UTF-8 content (a
-    torn write can leave partial multi-byte sequences — the same
-    crash class the round-16 ANN-manifest fuzz found: text-mode read
-    raised UnicodeDecodeError past an OSError-only guard) degrades
-    to NO lines, and malformed individual lines are dropped
-    (torn-final-line tolerance the drain loop always had), so
-    neither the driver-side ``commit()`` rewrite nor a concurrent
-    drain reader can crash on garbage.
-    Round-17: one definition for both read sites — commit() used to
-    read text-mode with no decode guard at all.  The decode is
-    per-file binary + ``errors="replace"`` rather than a whole-file
-    UnicodeDecodeError fallback: torn bytes become U+FFFD and only
-    THEIR line is dropped by the digits check, so the parseable
-    prefix (already-committed batch counts) survives a torn tail
-    instead of degrading the whole manifest.
+    ``digits,digits`` line.
 
-    ``missing_only`` (round-18 ADVICE closure): the WRITER side —
-    commit()'s read-modify-rewrite — must NOT treat a transient
-    OSError (EIO, EACCES, ...) on an EXISTING manifest as "no prior
-    batches": doing so rewrites the manifest containing only the
-    current batch, permanently discarding every previously committed
-    batch total, and the drain loop then undercounts and dies with a
-    TimeoutError instead of a loud commit failure.  With
-    ``missing_only=True`` only FileNotFoundError (plus decode/parse
-    garbage, which is content- not IO-level) degrades; any other
-    OSError propagates and fails the micro-batch loudly — the QUERY
-    terminates (Structured Streaming does not retry a failed
-    micro-batch within a run); a restart from the checkpoint replays
-    the batch, and commit() is idempotent per batchId so the replay
-    overwrites cleanly.  Reader-side drain sites keep the full
-    silent-degrade (a racing reader glimpsing a transient error just
-    polls again)."""
+    The only caller is commit()'s read-modify-rewrite, so only what
+    is safe to rewrite degrades.  An absent file (the first commit)
+    is no lines.  Non-UTF-8 content (a torn write can leave partial
+    multi-byte sequences) and malformed lines are content, not IO:
+    the decode is binary + ``errors="replace"``, so torn bytes become
+    U+FFFD and only THEIR line is dropped by the digits check, and
+    the parseable prefix (already-committed batch counts) survives.
+    Any other OSError (EIO, EACCES, ...) on an EXISTING manifest
+    propagates: degrading it to "no prior batches" would rewrite the
+    manifest with only the current batch and discard every committed
+    total.  The failed commit fails the query loudly instead; a
+    restart from the checkpoint replays the batch, and commit() is
+    idempotent per batchId."""
     try:
         with open(manifest, "rb") as f:
             raw = f.read().decode("utf-8", errors="replace").splitlines()
     except FileNotFoundError:
-        return []
-    except OSError:
-        if missing_only:
-            raise
         return []
     out: list[tuple[str, int]] = []
     for ln in raw:
         parts = ln.strip().split(",")
         # isdecimal(), NOT isdigit(): isdigit() is True for characters
         # int() rejects (superscript '²', circled digits), so garbage
-        # like b'1,\xc2\xb2' would raise ValueError past the guard —
-        # the round-17 self-review caught exactly that escape.
+        # like b'1,\xc2\xb2' would raise ValueError past the guard.
         # isdecimal() is True only for Unicode Nd characters, the
         # precise class int() accepts, so the int() below cannot raise.
         if len(parts) == 2 and parts[0].isdecimal() and parts[1].isdecimal():
@@ -868,12 +809,9 @@ def _epochs_manifest_read(
 
 
 try:  # pragma: no cover - import surface probed once
-    from pyspark.sql.datasource import DataSourceStreamWriter, WriterCommitMessage
+    from pyspark.sql.datasource import DataSourceStreamWriter
 
-    class _EpochCommitMessage(WriterCommitMessage):
-        def __init__(self, tmp_name: str, n_rows: int):
-            self.tmp_name = tmp_name
-            self.n_rows = n_rows
+    from pyspark_caffe_spark.queries.relational import _JsonlTaskWriter
 
     class _EpochJsonlStreamSink(DataSource):
         """Custom STREAMING sink: tasks write epoch temp files, the
@@ -890,62 +828,25 @@ try:  # pragma: no cover - import surface probed once
         def streamWriter(self, schema, overwrite: bool):
             return _EpochJsonlStreamWriter(self.options["path"])
 
-    class _EpochJsonlStreamWriter(DataSourceStreamWriter):
-        def __init__(self, path: str):
-            self.path = path
-
-        def write(self, iterator):
-            import json as _json
-            import uuid as _uuid
-
-            os.makedirs(self.path, exist_ok=True)
-            tmp = os.path.join(self.path, f"_tmp-{_uuid.uuid4().hex}.jsonl")
-            n = 0
-            with open(tmp, "w") as f:
-                for row in iterator:
-                    f.write(_json.dumps(row.asDict()) + "\n")
-                    n += 1
-            return _EpochCommitMessage(os.path.basename(tmp), n)
-
+    class _EpochJsonlStreamWriter(_JsonlTaskWriter, DataSourceStreamWriter):
         def commit(self, messages, batchId: int) -> None:
-            import glob as _glob
-
             # Idempotent per batchId: a micro-batch replayed after a
             # crash between sink commit and offset-log write must
             # OVERWRITE the first attempt, not add to it — drop any
             # epoch files a prior attempt left (the replay may produce
             # fewer non-empty partitions) and rewrite, not append, this
             # batch's manifest line.
-            for stale in _glob.glob(
+            for stale in glob.glob(
                 os.path.join(self.path, f"epoch-{batchId:05d}-*.jsonl")
             ):
                 os.remove(stale)
-            total = 0
-            part = 0
-            for m in messages:
-                if m is None:
-                    continue
-                src = os.path.join(self.path, m.tmp_name)
-                if m.n_rows == 0:
-                    os.remove(src)
-                    continue
-                os.rename(
-                    src,
-                    os.path.join(self.path, f"epoch-{batchId:05d}-{part:03d}.jsonl"),
-                )
-                part += 1
-                total += m.n_rows
+            total = self._install(
+                messages, lambda i: f"epoch-{batchId:05d}-{i:03d}.jsonl"
+            )
             manifest = os.path.join(self.path, "_EPOCHS")
-            # missing_only=True: commit() is the WRITER — degrading a
-            # transient EIO/EACCES on an existing manifest to "no
-            # prior batches" would rewrite it with only this batch's
-            # line, silently discarding all committed totals (round-18
-            # ADVICE).  Absence and content garbage still degrade;
-            # real IO errors fail the query loudly instead (a restart
-            # from checkpoint replays this batch idempotently).
             lines = [
                 f"{b},{n}"
-                for b, n in _epochs_manifest_read(manifest, missing_only=True)
+                for b, n in _epochs_manifest_read(manifest)
                 if b != str(batchId)
             ]
             lines.append(f"{batchId},{total}")
@@ -959,15 +860,6 @@ try:  # pragma: no cover - import surface probed once
             with open(manifest + ".tmp", "w") as f:
                 f.write("\n".join(lines) + "\n")
             os.replace(manifest + ".tmp", manifest)
-
-        def abort(self, messages, batchId: int) -> None:
-            for m in messages:
-                if m is None:
-                    continue
-                try:
-                    os.remove(os.path.join(self.path, m.tmp_name))
-                except OSError:
-                    pass
 
 except ImportError:  # pragma: no cover
     pass
@@ -997,15 +889,7 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     epochs, or dropped partitions all break the hash.  batch_no is
     recovered from the row payload (pos // 100), NOT the file name, so
     the check is data-level."""
-    from pyspark_caffe_spark.queries.streaming import _SynthTickerSource  # self
-
-    import shutil
-
-    sink_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "..", ".scratch",
-        f"pyds_stream_sink_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    sink_dir = os.path.abspath(sink_dir)
+    sink_dir = _scratch("pyds_stream_sink_", sf_dir)
     shutil.rmtree(sink_dir, ignore_errors=True)
     spark.dataSource.register(_SynthTickerSource)
     spark.dataSource.register(_EpochJsonlStreamSink)
@@ -1019,18 +903,7 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    epochs = os.path.join(sink_dir, "_EPOCHS")
-    try:
-        # the driver thread commits concurrently — the defensive
-        # reader tolerates absence / torn lines instead of crashing
-        # the drain
-        _drain_until(
-            q,
-            lambda: sum(n for _, n in _epochs_manifest_read(epochs)) >= 500,
-            what="epoch_jsonl drain",
-        )
-    finally:
-        q.stop()
+    _process_all_available(q, "epoch_jsonl drain")
     back = spark.read.json(os.path.join(sink_dir, "epoch-*.jsonl"))
     return back.groupBy((F.col("pos") / 100).cast("long").alias("batch_no")).agg(
         F.count("*").alias("n"), F.sum("val").alias("sum_val")
@@ -1063,32 +936,19 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this read is per-partition parallel over the state files
     and supports operator/batch selection options; the companion
     ``state-metadata`` format lists operators and batch ranges."""
-    import os
-    import shutil
-
-    from pyspark_caffe_spark.queries.relational import _scratch
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    ckpt = _scratch(f"state_inspect_ckpt_{tag}")
+    ckpt = _scratch("state_inspect_ckpt_", sf_dir)
     shutil.rmtree(ckpt, ignore_errors=True)
     ev = _read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_available_now(
+        spark,
+        agg.writeStream.format("noop")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt),
+    )
     st = spark.read.format("statestore").load(ckpt)
     vfields = [f.name for f in st.schema["value"].dataType.fields]
     return st.select(

@@ -179,6 +179,17 @@ def recycle_session(
             gw.shutdown()
         except Exception:
             pass
+        # shutdown() only closes the py4j sockets: the old JVM keeps
+        # running until its stdin closes.  End it and reap it, or every
+        # recycle leaves one more live JVM behind.
+        proc = getattr(gw, "proc", None)
+        if proc is not None:
+            try:
+                proc.stdin.close()
+                proc.terminate()
+                proc.wait(timeout=60)
+            except Exception:
+                pass
     SparkContext._gateway = None
     SparkContext._jvm = None
     SparkContext._active_spark_context = None

@@ -313,12 +313,10 @@ def test_python_sink_commit_leaves_no_temps(spark, sf_dir):
     import os as _os
 
     from pyspark_caffe_spark.queries import QUERIES
+    from pyspark_caffe_spark.queries.relational import _scratch
 
     QUERIES["sink_python_datasource"](spark, sf_dir).collect()
-    sink = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        ".scratch", f"pyds_sink_{_os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    sink = _scratch("pyds_sink_", sf_dir)
     assert not glob.glob(_os.path.join(sink, "_tmp-*"))
     parts = glob.glob(_os.path.join(sink, "part-*.jsonl"))
     assert parts
@@ -386,10 +384,8 @@ def test_epoch_sink_commit_is_idempotent(tmp_path):
     import glob
     import os as _os
 
-    from pyspark_caffe_spark.queries.streaming import (
-        _EpochCommitMessage,
-        _EpochJsonlStreamWriter,
-    )
+    from pyspark_caffe_spark.queries.relational import _JsonlCommitMessage
+    from pyspark_caffe_spark.queries.streaming import _EpochJsonlStreamWriter
 
     path = str(tmp_path / "epochs")
     w = _EpochJsonlStreamWriter(path)
@@ -399,7 +395,7 @@ def test_epoch_sink_commit_is_idempotent(tmp_path):
         with open(_os.path.join(path, name), "w") as f:
             for i in range(n):
                 f.write('{"v": %d}\n' % i)
-        return _EpochCommitMessage(name, n)
+        return _JsonlCommitMessage(name, n)
 
     w.commit([mk("_tmp-a", 2), mk("_tmp-b", 3), mk("_tmp-c", 4)], 0)
     assert len(glob.glob(_os.path.join(path, "epoch-00000-*.jsonl"))) == 3
@@ -1577,9 +1573,18 @@ def test_epochs_manifest_read_never_raises_on_garbage(tmp_path):
     # int('²') raises ValueError, so the first cut's isdigit() guard
     # did NOT protect the int() — b'1,\xc2\xb2' is VALID UTF-8 and
     # crashed the parser.  isdecimal() matches int()'s accepted class.
-    with open(manifest, "wb") as f:
-        f.write(b"0,5\n1,\xc2\xb2\n")
-    assert _epochs_manifest_read(manifest) == [("0", 5)]
+    # Further known-bad pins: a lone torn byte, a torn line between
+    # good ones, and an unterminated final line.
+    for blob, want in [
+        (b"0,5\n1,\xc2\xb2\n", [("0", 5)]),
+        (b"\x80", []),
+        (b"1,\xc2\xb2\n", []),
+        (b"0,5\n\x80torn\n1,\xc2\xb2\n", [("0", 5)]),
+        (b"0,5\n1,12", [("0", 5), ("1", 12)]),
+    ]:
+        with open(manifest, "wb") as f:
+            f.write(blob)
+        assert _epochs_manifest_read(manifest) == want, blob
     # round-trip property on top: what commit() writes, the parser
     # returns verbatim; absence degrades to no lines
     with open(manifest, "w") as f:
@@ -1597,10 +1602,8 @@ def test_epoch_sink_commit_survives_garbage_manifest(tmp_path):
     line — same degrade-don't-crash contract as the ANN manifest."""
     import os as _os
 
-    from pyspark_caffe_spark.queries.streaming import (
-        _EpochCommitMessage,
-        _EpochJsonlStreamWriter,
-    )
+    from pyspark_caffe_spark.queries.relational import _JsonlCommitMessage
+    from pyspark_caffe_spark.queries.streaming import _EpochJsonlStreamWriter
 
     path = str(tmp_path / "epochs")
     w = _EpochJsonlStreamWriter(path)
@@ -1610,7 +1613,7 @@ def test_epoch_sink_commit_survives_garbage_manifest(tmp_path):
 
     with open(_os.path.join(path, "_tmp-a"), "w") as f:
         f.write('{"v": 0}\n')
-    w.commit([_EpochCommitMessage("_tmp-a", 1)], 1)
+    w.commit([_JsonlCommitMessage("_tmp-a", 1)], 1)
 
     lines = open(_os.path.join(path, "_EPOCHS")).read().splitlines()
     # the parseable prior line survives; the torn tail is dropped
@@ -1618,49 +1621,35 @@ def test_epoch_sink_commit_survives_garbage_manifest(tmp_path):
 
 
 def test_epochs_manifest_commit_side_propagates_real_io_errors(tmp_path):
-    """Round-18 ADVICE closure: commit()'s read-modify-rewrite must
-    NOT degrade a transient OSError on an EXISTING manifest to zero
-    lines — that rewrite would contain only the current batch,
-    permanently discarding every previously committed total, and the
-    drain loop would then undercount into a TimeoutError instead of
-    a loud commit failure.  missing_only=True keeps the degrade for
-    FileNotFoundError + content garbage only; other OSErrors
-    propagate.  Concrete non-FNF OSError used: IsADirectoryError
-    (portable even under root, where chmod-000 does not block
-    reads)."""
+    """commit()'s read-modify-rewrite must NOT degrade a transient
+    OSError on an EXISTING manifest to zero lines — that rewrite would
+    contain only the current batch, permanently discarding every
+    previously committed total.  Absence and content garbage degrade;
+    other OSErrors propagate.  Concrete non-FNF OSError used:
+    IsADirectoryError (portable even under root, where chmod-000 does
+    not block reads)."""
     import os as _os
 
     import pytest
 
+    from pyspark_caffe_spark.queries.relational import _JsonlCommitMessage
     from pyspark_caffe_spark.queries.streaming import (
-        _EpochCommitMessage,
         _EpochJsonlStreamWriter,
         _epochs_manifest_read,
     )
 
     manifest = _os.path.join(str(tmp_path), "_EPOCHS")
 
-    # absence degrades in BOTH modes (first-ever commit has no manifest)
-    assert _epochs_manifest_read(manifest, missing_only=True) == []
+    # absence degrades (first-ever commit has no manifest)
     assert _epochs_manifest_read(manifest) == []
 
-    # content garbage degrades per-line in BOTH modes (IO succeeded;
-    # garbage is content-level, exactly what the parser exists for)
-    with open(manifest, "wb") as f:
-        f.write(b"0,5\n\x80torn\n1,\xc2\xb2\n")
-    assert _epochs_manifest_read(manifest, missing_only=True) == [("0", 5)]
-    assert _epochs_manifest_read(manifest) == [("0", 5)]
-
-    # a real IO error on an existing path: reader side degrades,
-    # writer side raises.  Opening a directory raises
-    # IsADirectoryError on POSIX but PermissionError on Windows, so
-    # the pin asserts the portable contract: an OSError that is NOT
-    # FileNotFoundError propagates.
-    _os.remove(manifest)
+    # a real IO error on an existing path raises.  Opening a directory
+    # raises IsADirectoryError on POSIX but PermissionError on
+    # Windows, so the pin asserts the portable contract: an OSError
+    # that is NOT FileNotFoundError propagates.
     _os.makedirs(manifest)
-    assert _epochs_manifest_read(manifest) == []
     with pytest.raises(OSError) as ei:
-        _epochs_manifest_read(manifest, missing_only=True)
+        _epochs_manifest_read(manifest)
     assert not isinstance(ei.value, FileNotFoundError)
 
     # integration: commit() fails LOUD on the same condition instead
@@ -1671,17 +1660,18 @@ def test_epochs_manifest_commit_side_propagates_real_io_errors(tmp_path):
     with open(_os.path.join(path, "_tmp-a"), "w") as f:
         f.write('{"v": 0}\n')
     with pytest.raises(OSError) as ei:
-        w.commit([_EpochCommitMessage("_tmp-a", 1)], 1)
+        w.commit([_JsonlCommitMessage("_tmp-a", 1)], 1)
     assert not isinstance(ei.value, FileNotFoundError)
 
 
 def test_epochs_manifest_read_strict_mode_never_raises_on_content(tmp_path):
-    """Fuzz twin of the round-18 ADVICE fix: missing_only=True must
-    still be content-proof — ANY byte blob in an existing, readable
-    _EPOCHS parses without raising (the strict mode re-raises IO
-    errors only, never content errors), and both modes agree on the
-    parse when IO succeeds."""
+    """The reader is strict about IO (a non-FNF OSError propagates)
+    but never about content: ANY byte blob in an existing, readable
+    _EPOCHS parses without raising, and the parse equals an
+    independent reference (replace-decode, keep only lines that are
+    exactly ``<Nd digits>,<Nd digits>`` after stripping)."""
     import os as _os
+    import re as _re
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -1689,18 +1679,26 @@ def test_epochs_manifest_read_strict_mode_never_raises_on_content(tmp_path):
     from pyspark_caffe_spark.queries.streaming import _epochs_manifest_read
 
     manifest = _os.path.join(str(tmp_path), "_EPOCHS")
+    line_re = _re.compile(r"(\d+),(\d+)")
+
+    def reference(blob: bytes) -> list[tuple[str, int]]:
+        out = []
+        for ln in blob.decode("utf-8", errors="replace").splitlines():
+            m = line_re.fullmatch(ln.strip())
+            if m:
+                out.append((m.group(1), int(m.group(2))))
+        return out
 
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=512))
     def check(blob: bytes) -> None:
         with open(manifest, "wb") as f:
             f.write(blob)
-        strict = _epochs_manifest_read(manifest, missing_only=True)
-        assert strict == _epochs_manifest_read(manifest)
+        assert _epochs_manifest_read(manifest) == reference(blob)
 
     check()
-    # known-bad concrete pins (round-17 lesson: hypothesis missed the
-    # isdigit/int class in 300 examples — pin examples explicitly)
+    # known-bad concrete pins (hypothesis can miss the isdigit/int
+    # class in a few hundred examples, so pin examples explicitly)
     for blob, want in [
         (b"\x80", []),
         (b"1,\xc2\xb2\n", []),
@@ -1708,41 +1706,95 @@ def test_epochs_manifest_read_strict_mode_never_raises_on_content(tmp_path):
     ]:
         with open(manifest, "wb") as f:
             f.write(blob)
-        assert _epochs_manifest_read(manifest, missing_only=True) == want
+        assert _epochs_manifest_read(manifest) == want
+        assert reference(blob) == want
 
 
-def test_drain_until_surfaces_engine_exception_fast():
-    """Round-18 self-review finding: the poll-drain loops never
-    checked q.exception(), so a loudly-failed query (the new
-    commit() IO-error path) still stalled the full 120 s deadline
-    and reported an opaque TimeoutError — the exact symptom the
-    ADVICE fix set out to replace.  _drain_until must (a) raise the
-    engine's exception within one tick, (b) return promptly once
-    done() is true, (c) raise TimeoutError naming the drain when
-    neither happens."""
+def test_drain_raises_failed_sink_fast(spark, tmp_path):
+    """A query that fails inside the engine makes the poll-free drain
+    raise the engine's exception at once, not a TimeoutError at the
+    120 s bound: synth_ticker feeds epoch_jsonl at a path under a
+    regular file, so every write task fails on makedirs."""
+    import time as _time
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from pyspark_caffe_spark.queries.streaming import (
+        _EpochJsonlStreamSink,
+        _process_all_available,
+        _SynthTickerSource,
+    )
+
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("x")
+    spark.dataSource.register(_SynthTickerSource)
+    spark.dataSource.register(_EpochJsonlStreamSink)
+    t0 = _time.monotonic()
+    q = (
+        spark.readStream.format("synth_ticker")
+        .load()
+        .writeStream.format("epoch_jsonl")
+        .option("path", str(blocker / "sink"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    with pytest.raises(StreamingQueryException, match="NotADirectoryError"):
+        _process_all_available(q, "epoch_jsonl drain")
+    assert _time.monotonic() - t0 < 60.0
+    assert not q.isActive
+
+
+def test_drain_timeout_stops_query_and_names_drain():
+    """A drain the engine never finishes is stopped by the timer at
+    its bound, and the wait raises TimeoutError naming the drain."""
+    import threading
     import time as _time
 
     import pytest
 
-    from pyspark_caffe_spark.queries.streaming import _drain_until
+    from pyspark_caffe_spark.queries.streaming import _process_all_available
 
-    class _Q:
-        def __init__(self, exc=None):
-            self._exc = exc
+    class _StalledQuery:
+        def __init__(self):
+            self.stopped = threading.Event()
 
-        def exception(self):
-            return self._exc
+        def processAllAvailable(self):
+            # like the engine: returns once the query is no longer active
+            self.stopped.wait()
 
-    # (a) engine failure surfaces promptly, not after the deadline
-    boom = ValueError("commit exploded")
+        def stop(self):
+            self.stopped.set()
+
+    q = _StalledQuery()
     t0 = _time.monotonic()
-    with pytest.raises(ValueError, match="commit exploded"):
-        _drain_until(_Q(boom), lambda: False, timeout=60.0)
+    with pytest.raises(TimeoutError, match="epoch_jsonl drain"):
+        _process_all_available(q, "epoch_jsonl drain", timeout=0.2)
+    assert q.stopped.is_set()
     assert _time.monotonic() - t0 < 5.0
 
-    # (b) completion path
-    _drain_until(_Q(), lambda: True, timeout=60.0)
 
-    # (c) timeout path keeps the old message shape
-    with pytest.raises(TimeoutError, match="epoch_jsonl drain"):
-        _drain_until(_Q(), lambda: False, timeout=0.0, what="epoch_jsonl drain")
+def test_scratch_path_ignores_trailing_slash():
+    """One scratch entry per scale factor, however the sf dir is
+    spelled."""
+    from pyspark_caffe_spark.queries.relational import SCRATCH, _scratch
+
+    assert _scratch("wm_replay_", "/data/sf0.1/") == _scratch(
+        "wm_replay_", "/data/sf0.1"
+    ) == f"{SCRATCH}/wm_replay_sf0.1"
+
+
+def test_foreachbatch_reuses_one_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
+    """stream_foreachbatch keeps one checkpoint per scale factor and
+    clears it before each run: two runs leave exactly one feb_ckpt_*
+    dir and give the same answer."""
+    import glob
+
+    from pyspark_caffe_spark.queries import QUERIES, relational
+
+    monkeypatch.setattr(relational, "SCRATCH", str(tmp_path))
+    first = sorted(QUERIES["stream_foreachbatch"](spark, sf_dir).collect())
+    second = sorted(QUERIES["stream_foreachbatch"](spark, sf_dir).collect())
+    assert first == second
+    assert len(glob.glob(str(tmp_path / "feb_ckpt_*"))) == 1

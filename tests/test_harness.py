@@ -259,8 +259,9 @@ def test_recycle_session_resets_process_globals(monkeypatch):
     """``recycle_session`` (round-10 verdict #6: the JVM-hygiene
     recipe promoted from tools/parity_super100.py into the library)
     must stop live sessions — including extra handles passed via
-    ``also_stop`` — shut down the py4j gateway, null every pyspark
-    process global ``getOrCreate`` consults, and return whatever
+    ``also_stop`` — shut down the py4j gateway, end and reap the old
+    JVM process (stdin closed, terminated, waited on), null every
+    pyspark process global ``getOrCreate`` consults, and return whatever
     ``get_spark`` builds.  All of it exception-tolerantly: the whole
     point is to run while the JVM is in an arbitrary state of dead
     (here, ``getActiveSession`` raising and one session whose
@@ -283,8 +284,30 @@ def test_recycle_session_resets_process_globals(monkeypatch):
             if self.raise_on_stop:
                 raise RuntimeError("py4j socket closed")
 
+    class FakeStdin:
+        closed = False
+
+        def close(self):
+            self.closed = True
+
+    class FakeProc:
+        terminated = reaped = False
+
+        def __init__(self):
+            self.stdin = FakeStdin()
+
+        def terminate(self):
+            self.terminated = True
+
+        def wait(self, timeout=None):
+            self.reaped = True
+            return 0
+
     class FakeGateway:
         down = False
+
+        def __init__(self):
+            self.proc = FakeProc()
 
         def shutdown(self):
             self.down = True
@@ -315,6 +338,8 @@ def test_recycle_session_resets_process_globals(monkeypatch):
     assert out is sentinel, "must return whatever get_spark builds"
     assert stopped == ["extra", "instantiated"], stopped
     assert gw.down, "gateway.shutdown() not called"
+    assert gw.proc.stdin.closed, "old JVM's stdin left open"
+    assert gw.proc.terminated and gw.proc.reaped, "old JVM left running"
     for attr in ("_gateway", "_jvm", "_active_spark_context"):
         assert getattr(SparkContext, attr) is None, attr
     for attr in ("_instantiatedSession", "_activeSession", "_defaultSession"):
