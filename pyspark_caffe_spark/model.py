@@ -21,7 +21,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 

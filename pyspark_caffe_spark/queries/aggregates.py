@@ -11,12 +11,131 @@ the comparison exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.registry import query
 from pyspark_caffe_spark.tables import load_table, row_count
+
+#: Exclusive end of the date range the stored-sketch range queries read
+#: (the oracles spell it as ``TIMESTAMP '2024-01-16'``).
+_RANGE_END = "2024-01-16"
+
+
+def _within_5pct(est: Column, exact: Column, slack: float = 0.0) -> Column:
+    """The sketch keys' in-plan accuracy flag:
+    ``|est − exact| ≤ 0.05·exact + slack``.  The oracles emit literal
+    ``true``, so an estimate out of bound flips a hashed value."""
+    return F.abs(est - exact) <= F.lit(0.05) * exact + F.lit(slack)
+
+
+def _stored_sketches(daily: DataFrame, name: str, sf_dir: str) -> DataFrame:
+    """Write the daily sketch rows once to the scratch parquet ``name``
+    (one per scale factor) and read them back, so a range query scans
+    the stored sketches, never the event stream."""
+    from pyspark_caffe_spark.queries.relational import _scratch
+
+    path = _scratch(name, sf_dir)
+    daily.write.mode("overwrite").parquet(path)
+    return daily.sparkSession.read.parquet(path)
+
+
+def _theta_overlap(ev: DataFrame, sketches: DataFrame) -> DataFrame:
+    """Pairwise audience overlap of the event types in ``ev``.
+
+    The exact counts (``n_a``, ``n_b``, ``n_intersect``, ``n_union``)
+    come from a self-join of the distinct (user, type) pairs,
+    affordable because |users|·|types| ≪ |events|.  ``est_within_bound``
+    checks the theta intersection and union estimates of the per-type
+    ``sketches`` (``event_type``, ``sk``) against them: exact below the
+    sketch's 4096-entry exact mode, within ±5 % (+1 absolute) in
+    estimation mode (these audiences overlap heavily, so the
+    intersection's relative error stays near the union's
+    RSE ≈ 1/√4096)."""
+    ut = ev.select("user_id", "event_type").distinct()
+    tc = ut.groupBy("event_type").agg(F.count("*").alias("n"))
+    ix = (
+        ut.alias("a")
+        .join(
+            ut.alias("b"),
+            (F.col("a.user_id") == F.col("b.user_id"))
+            & (F.col("a.event_type") < F.col("b.event_type")),
+        )
+        .groupBy(
+            F.col("a.event_type").alias("type_a"),
+            F.col("b.event_type").alias("type_b"),
+        )
+        .agg(F.count("*").alias("n_intersect"))
+    )
+    ests = (
+        sketches.alias("sa")
+        .join(
+            F.broadcast(sketches.alias("sb")),
+            F.col("sa.event_type") < F.col("sb.event_type"),
+        )
+        .select(
+            F.col("sa.event_type").alias("type_a"),
+            F.col("sb.event_type").alias("type_b"),
+            F.theta_sketch_estimate(
+                F.theta_intersection(F.col("sa.sk"), F.col("sb.sk"))
+            ).alias("est_i"),
+            F.theta_sketch_estimate(
+                F.theta_union(F.col("sa.sk"), F.col("sb.sk"))
+            ).alias("est_u"),
+        )
+    )
+    exact = (
+        ix.join(tc.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a")), "type_a")
+        .join(tc.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b")), "type_b")
+        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_intersect"))
+    )
+    return exact.join(F.broadcast(ests), ["type_a", "type_b"]).select(
+        "type_a",
+        "type_b",
+        "n_a",
+        "n_b",
+        "n_intersect",
+        "n_union",
+        (
+            _within_5pct(F.col("est_i"), F.col("n_intersect"), 1.0)
+            & _within_5pct(F.col("est_u"), F.col("n_union"), 1.0)
+        ).alias("est_within_bound"),
+    )
+
+
+def _kll_rank_proof(
+    rows: DataFrame, key: str, val: str, sketches: DataFrame, ps: tuple[float, ...]
+) -> DataFrame:
+    """``(key, n, p<NN>_rank_ok ...)`` for each p in ``ps``.
+
+    The p-quantile of each group's KLL sketch in ``sketches`` (``key``,
+    ``sk``) is broadcast back onto ``rows``; one conditional-count pass
+    gives its TRUE rank in the group's ``val`` column, and the flag is
+    ``|rank − p| ≤ 0.025``.  KLL bounds rank, not value: at Spark's
+    default k=200 the normalized rank error is ≈1.65 %."""
+    names = [f"q{round(p * 100)}" for p in ps]
+    qs = sketches.select(
+        key,
+        *[
+            F.kll_sketch_get_quantile_double("sk", F.lit(p)).alias(q)
+            for p, q in zip(ps, names)
+        ],
+    )
+    ranks = rows.select(key, val).join(F.broadcast(qs), key).groupBy(key).agg(
+        F.count("*").alias("n"),
+        *[F.sum((F.col(val) <= F.col(q)).cast("long")).alias(f"le_{q}") for q in names],
+    )
+    return ranks.select(
+        key,
+        "n",
+        *[
+            (F.abs(F.col(f"le_{q}") / F.col("n") - F.lit(p)) <= F.lit(0.025)).alias(
+                f"p{q[1:]}_rank_ok"
+            )
+            for p, q in zip(ps, names)
+        ],
+    )
 
 
 @query(
@@ -121,10 +240,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.join(F.broadcast(est), "event_type").select(
         "event_type",
         "n_users_exact",
-        (
-            F.abs(F.col("approx_users") - F.col("n_users_exact"))
-            <= 0.05 * F.col("n_users_exact")
-        ).alias("within_tol"),
+        _within_5pct(F.col("approx_users"), F.col("n_users_exact")).alias("within_tol"),
     )
 
 
@@ -362,10 +478,7 @@ def agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_days",
         "n_users_exact",
-        (
-            F.abs(F.col("approx_users") - F.col("n_users_exact"))
-            <= 0.05 * F.col("n_users_exact")
-        ).alias("within_tol"),
+        _within_5pct(F.col("approx_users"), F.col("n_users_exact")).alias("within_tol"),
     )
 
 
@@ -735,10 +848,7 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_users_exact",
         (F.col("merged_users") == F.col("direct_users")).alias("merged_eq_direct"),
-        (
-            F.abs(F.col("merged_users") - F.col("n_users_exact"))
-            <= 0.05 * F.col("n_users_exact")
-        ).alias("within_tol"),
+        _within_5pct(F.col("merged_users"), F.col("n_users_exact")).alias("within_tol"),
     )
 
 
@@ -891,17 +1001,11 @@ def agg_topk_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against capacity 100, so each is exact, and the Misra-Gries merge
     of exact sketches whose union of distinct items fits capacity is
     exact — the estimate provably equals the plain GROUP BY."""
-    import os
-
-    from pyspark_caffe_spark.queries.relational import _scratch
-
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.expr("approx_top_k_accumulate(event_type, 100)").alias("sk")
     )
-    path = _scratch("topk_sketches_", sf_dir)
-    daily.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path)
+    stored = _stored_sketches(daily, "topk_sketches_", sf_dir)
     merged = stored.agg(
         F.expr("approx_top_k_estimate(approx_top_k_combine(sk, 100), 5)").alias("tk")
     )
@@ -939,70 +1043,15 @@ def agg_theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (map-side partial agg, the exchange carries sketches), stored
     KB-sized, and ANY pairwise overlap question is answered from them.
 
-    The exact pairwise counts ride the same plan (distinct user-type
-    pairs → self-join; affordable because |users|·|types| ≪ |events|)
-    and are the hash-matched columns; the sketch estimates are checked
-    IN-PLAN against them — exact below the sketch's 4096-entry exact
-    mode, within ±5 % relative (+1 absolute slack) in estimation mode
-    (these audiences overlap heavily, so the intersection's relative
-    error stays near the union's RSE ≈ 1/√4096) — and the verdict is
-    the hash-checked ``est_within_bound`` boolean (oracle: literal
+    The exact pairwise counts ride the same plan and are the
+    hash-matched columns; the sketch estimates are checked IN-PLAN
+    against them (:func:`_theta_overlap`) and the verdict is the
+    hash-checked ``est_within_bound`` boolean (oracle: literal
     ``true``).  tests/test_api.py additionally proves the estimates
     enter REAL estimation mode at 100×-scale cardinalities."""
     ev = load_table(spark, sf_dir, "events")
-    ut = ev.select("user_id", "event_type").distinct()
-    tc = ut.groupBy("event_type").agg(F.count("*").alias("n"))
-    ix = (
-        ut.alias("a")
-        .join(
-            ut.alias("b"),
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count("*").alias("n_intersect"))
-    )
     sk = ev.groupBy("event_type").agg(F.theta_sketch_agg("user_id").alias("sk"))
-    ests = (
-        sk.alias("sa")
-        .join(
-            F.broadcast(sk.alias("sb")),
-            F.col("sa.event_type") < F.col("sb.event_type"),
-        )
-        .select(
-            F.col("sa.event_type").alias("type_a"),
-            F.col("sb.event_type").alias("type_b"),
-            F.theta_sketch_estimate(
-                F.theta_intersection(F.col("sa.sk"), F.col("sb.sk"))
-            ).alias("est_i"),
-            F.theta_sketch_estimate(
-                F.theta_union(F.col("sa.sk"), F.col("sb.sk"))
-            ).alias("est_u"),
-        )
-    )
-    exact = (
-        ix.join(tc.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a")), "type_a")
-        .join(tc.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b")), "type_b")
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_intersect"))
-    )
-
-    def ok(est, ex):
-        return F.abs(est - ex) <= F.lit(0.05) * ex + F.lit(1.0)
-
-    return exact.join(F.broadcast(ests), ["type_a", "type_b"]).select(
-        "type_a",
-        "type_b",
-        "n_a",
-        "n_b",
-        "n_intersect",
-        "n_union",
-        (ok(F.col("est_i"), F.col("n_intersect")) & ok(F.col("est_u"), F.col("n_union"))).alias(
-            "est_within_bound"
-        ),
-    )
+    return _theta_overlap(ev, sk)
 
 
 @query(
@@ -1023,47 +1072,16 @@ def agg_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches, merge is associative — the same scale story as the HLL /
     frequent-items / theta keys, for quantiles.
 
-    The KLL guarantee is on RANK, not value: with Spark's default
-    k=200 the normalized rank error is ≈1.65 %.  So the in-plan check
-    computes each estimate's TRUE rank (one conditional-count pass
-    with the 3 quantile values broadcast back onto the scan) and
+    The KLL guarantee is on RANK, not value, so the in-plan check
+    (:func:`_kll_rank_proof`) recomputes each estimate's TRUE rank and
     asserts |rank(q̂_p) − p| ≤ 0.025 — hash-checked booleans against
     the oracle's literal ``true`` next to the exact group sizes, the
     invariant-flag discipline every sketch key here follows."""
     li = load_table(spark, sf_dir, "lineitem")
     sk = li.groupBy("l_returnflag").agg(
-        F.kll_sketch_agg_double("l_extendedprice").alias("sk"),
-        F.count("*").alias("n"),
+        F.kll_sketch_agg_double("l_extendedprice").alias("sk")
     )
-    qs = sk.select(
-        "l_returnflag",
-        "n",
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("q50"),
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.9)).alias("q90"),
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.99)).alias("q99"),
-    )
-    joined = li.select("l_returnflag", "l_extendedprice").join(
-        F.broadcast(qs), "l_returnflag"
-    )
-    ranks = joined.groupBy("l_returnflag").agg(
-        F.max("n").alias("n"),
-        *[
-            F.sum((F.col("l_extendedprice") <= F.col(q)).cast("long")).alias(f"le_{q}")
-            for q in ("q50", "q90", "q99")
-        ],
-    )
-
-    def rank_ok(cnt_col: str, p: float):
-        rank = F.col(cnt_col).cast("double") / F.col("n")
-        return F.abs(rank - F.lit(p)) <= F.lit(0.025)
-
-    return ranks.select(
-        "l_returnflag",
-        "n",
-        rank_ok("le_q50", 0.5).alias("p50_rank_ok"),
-        rank_ok("le_q90", 0.9).alias("p90_rank_ok"),
-        rank_ok("le_q99", 0.99).alias("p99_rank_ok"),
-    )
+    return _kll_rank_proof(li, "l_returnflag", "l_extendedprice", sk, (0.5, 0.9, 0.99))
 
 
 @query(
@@ -1106,75 +1124,18 @@ def agg_theta_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified in-plan within ±5 % (+1) — at 100× the 150k-user range
     audiences are deep in estimation mode, so the hash-checked flag is
     doing real work there, not riding the exact mode."""
-    import os
-
-    from pyspark_caffe_spark.queries.relational import _scratch
-
-    cutoff = F.lit("2024-01-16").cast("timestamp")
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.theta_sketch_agg("user_id").alias("sk")
     )
-    path = _scratch("theta_sketches_", sf_dir)
-    daily.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path).filter(
-        F.col("day") < F.lit("2024-01-16").cast("date")
+    stored = _stored_sketches(daily, "theta_sketches_", sf_dir).filter(
+        F.col("day") < F.lit(_RANGE_END).cast("date")
     )
     per_type = stored.groupBy("event_type").agg(
         F.theta_union_agg("sk").alias("sk")
     )
-    ests = (
-        per_type.alias("sa")
-        .join(
-            F.broadcast(per_type.alias("sb")),
-            F.col("sa.event_type") < F.col("sb.event_type"),
-        )
-        .select(
-            F.col("sa.event_type").alias("type_a"),
-            F.col("sb.event_type").alias("type_b"),
-            F.theta_sketch_estimate(
-                F.theta_intersection(F.col("sa.sk"), F.col("sb.sk"))
-            ).alias("est_i"),
-            F.theta_sketch_estimate(
-                F.theta_union(F.col("sa.sk"), F.col("sb.sk"))
-            ).alias("est_u"),
-        )
-    )
-    ut = ev.filter(F.col("ts") < cutoff).select("user_id", "event_type").distinct()
-    tc = ut.groupBy("event_type").agg(F.count("*").alias("n"))
-    ix = (
-        ut.alias("a")
-        .join(
-            ut.alias("b"),
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count("*").alias("n_intersect"))
-    )
-    exact = (
-        ix.join(tc.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a")), "type_a")
-        .join(tc.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b")), "type_b")
-        .withColumn("n_union", F.col("n_a") + F.col("n_b") - F.col("n_intersect"))
-    )
-
-    def ok(est, ex):
-        return F.abs(est - ex) <= F.lit(0.05) * ex + F.lit(1.0)
-
-    return exact.join(F.broadcast(ests), ["type_a", "type_b"]).select(
-        "type_a",
-        "type_b",
-        "n_a",
-        "n_b",
-        "n_intersect",
-        "n_union",
-        (ok(F.col("est_i"), F.col("n_intersect")) & ok(F.col("est_u"), F.col("n_union"))).alias(
-            "est_within_bound"
-        ),
-    )
+    ranged = ev.filter(F.col("ts") < F.lit(_RANGE_END).cast("timestamp"))
+    return _theta_overlap(ranged, per_type)
 
 
 @query(
@@ -1202,19 +1163,12 @@ def agg_kll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the range-filtered stream and assert |rank − p| ≤ 0.025,
     hash-checked against the oracle's literal ``true`` beside the
     exact range counts."""
-    import os
-
-    from pyspark_caffe_spark.queries.relational import _scratch
-
-    cutoff = F.lit("2024-01-16").cast("timestamp")
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.kll_sketch_agg_double("value").alias("sk")
     )
-    path = _scratch("kll_sketches_", sf_dir)
-    daily.write.mode("overwrite").parquet(path)
-    stored = spark.read.parquet(path).filter(
-        F.col("day") < F.lit("2024-01-16").cast("date")
+    stored = _stored_sketches(daily, "kll_sketches_", sf_dir).filter(
+        F.col("day") < F.lit(_RANGE_END).cast("date")
     )
     # kll_sketch_merge_double is a BINARY scalar (no agg form), so the
     # per-type merge folds the ≤31 stored daily sketches with the
@@ -1233,28 +1187,8 @@ def agg_kll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sk"),
         )
     )
-    qs = merged.select(
-        "event_type",
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("q50"),
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.9)).alias("q90"),
-    )
-    ranged = ev.filter(F.col("ts") < cutoff).select("event_type", "value")
-    ranks = ranged.join(F.broadcast(qs), "event_type").groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum((F.col("value") <= F.col("q50")).cast("long")).alias("le_q50"),
-        F.sum((F.col("value") <= F.col("q90")).cast("long")).alias("le_q90"),
-    )
-
-    def rank_ok(cnt_col: str, p: float):
-        rank = F.col(cnt_col).cast("double") / F.col("n")
-        return F.abs(rank - F.lit(p)) <= F.lit(0.025)
-
-    return ranks.select(
-        "event_type",
-        "n",
-        rank_ok("le_q50", 0.5).alias("p50_rank_ok"),
-        rank_ok("le_q90", 0.9).alias("p90_rank_ok"),
-    )
+    ranged = ev.filter(F.col("ts") < F.lit(_RANGE_END).cast("timestamp"))
+    return _kll_rank_proof(ranged, "event_type", "value", merged, (0.5, 0.9))
 
 
 #: Benford first-digit law P(d) = log10(1 + 1/d) — shortest-round-trip

@@ -9,7 +9,6 @@ resolution; the stream-static join is the standard streaming enrich
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window

@@ -1085,7 +1085,8 @@ def join_recursive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edges — one hash-join shuffle per level, O(depth) ≈ log(N)
     iterations, never re-joining the whole closure (the quadratic
     mistake).  localCheckpoint per level truncates the growing
-    lineage, the dedup_clusters discipline.  The tree structure makes
+    lineage, as in graph_pagerank and the connected-components rounds
+    (scale_ops._cc_large_small_star).  The tree structure makes
     every generated pair unique, so the union needs no dedup.  Oracle
     is the genuine recursive CTE — proving the iterative plan equals
     the declarative recursion exactly."""

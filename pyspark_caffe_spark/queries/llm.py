@@ -24,9 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark import textops, vecops
-from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table, row_count
+from pyspark_caffe_spark.tables import lcg_hash, load_table, row_count
 from pyspark_caffe_spark.textops import STOPWORDS
 
 # Marker words per language for the (deliberately simple, deterministic)
@@ -543,73 +542,30 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS from candidate pairs — connected components
-    by iterative min-label propagation (the step every dedup pipeline
-    needs after pairing: pairs → groups → keep one per group).
+    over the 4-gram Jaccard edges (the step every dedup pipeline needs
+    after pairing: pairs → groups → keep one per group).
 
-    Each iteration: label(node) ← min(label over neighbors ∪ self);
-    loop until convergence (graph diameter iterations — near-dup
-    graphs are shallow; at 100 TB this is the standard large-scale
-    connected-components pattern, one shuffle per hop, with persist()
-    between hops). Convergence check (round-5 judge nit): labels are
-    MONOTONE NON-INCREASING per node (least(old, neighbors)), so the
-    label SUM is unchanged iff no label changed — one map-side-partial
-    decimal sum over the already-checkpointed frame per hop, instead
-    of the old join-with-previous + count (a full extra shuffle job
-    per hop).  Oracle: recursive CTE computing min reachable id per
-    node. Emits (cluster_id=min doc_id, size>1).
+    The components come from ``scale_ops._cc_large_small_star``, the
+    package's one connected-components algorithm (alternating
+    large-star / small-star, O(log² n) rounds on any graph, where
+    min-label propagation needs one shuffle per hop of the component
+    diameter).  Its fixpoint is one star per component, rooted at the
+    component's min doc id, so a cluster is a root and its star edges.
+    Oracle: recursive CTE computing min reachable id per node. Emits
+    (cluster_id=min doc_id, size>1).
     """
-    docs = _perturbed_docs(load_table(spark, sf_dir, "documents"))
-    edges = textops.jaccard_pairs(docs, "text", "doc_id", shingle_k=4, threshold=0.5).select(
-        "id_a", "id_b"
-    )
-    und = edges.unionByName(
-        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    labels = docs.select(F.col("doc_id").alias("node"), F.col("doc_id").alias("lbl"))
-    # decimal(38,0) sum: exact at any corpus scale (a long sum would
-    # overflow around 10^19 total id mass)
-    def _label_sum(frame: DataFrame):
-        return frame.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).collect()[0][0]
+    # imported here, not at module level: importing scale_ops registers
+    # its keys, and registration order is the driver's sweep order
+    from pyspark_caffe_spark.queries.scale_ops import _cc_large_small_star
 
-    max_iters, converged = 20, False
-    try:
-        prev_sum = _label_sum(labels)
-        for _ in range(max_iters):
-            neigh = (
-                und.join(labels, und.id_b == labels.node)
-                .groupBy(F.col("id_a").alias("node"))
-                .agg(F.min("lbl").alias("nlbl"))
-            )
-            # localCheckpoint truncates the lineage each hop — without
-            # it the logical plan doubles per iteration (labels appears
-            # twice in new_labels) and the ANALYZER, not the data,
-            # becomes the bottleneck by hop ~15
-            new_labels = (
-                labels.join(neigh, "node", "left")
-                .select("node", F.least("lbl", "nlbl").alias("lbl"))
-                .transform(pin)
-            )
-            labels = new_labels
-            cur_sum = _label_sum(labels)
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-        if not converged:
-            raise RuntimeError(
-                f"dedup_clusters: label propagation did not converge in {max_iters} "
-                "hops (component diameter exceeds the cap) — raise max_iters"
-            )
-        return (
-            labels.groupBy("lbl")
-            .agg(F.count("*").alias("cluster_size"))  # node unique per row
-            .filter(F.col("cluster_size") > 1)
-            .select(F.col("lbl").cast("long").alias("cluster_id"), "cluster_size")
-            # detach the result from the loop's checkpoint before unpersist
-            .transform(pin)
-        )
-    finally:
-        und.unpersist()
+    docs = _perturbed_docs(load_table(spark, sf_dir, "documents"))
+    edges = textops.jaccard_pairs(docs, "text", "doc_id", shingle_k=4, threshold=0.5)
+    stars, _ = _cc_large_small_star(
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+    )
+    return stars.groupBy(F.col("u").cast("long").alias("cluster_id")).agg(
+        (F.count("*") + 1).alias("cluster_size")
+    )
 
 
 @query(
@@ -1336,7 +1292,7 @@ def pipeline_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("lang").alias("lang"),
         F.min("n_words").alias("n_words"),
     )
-    h = F.pmod(F.col("doc_id") * F.lit(1103515245) + F.lit(12345), F.lit((1 << 31) - 1))
+    h = lcg_hash(F.col("doc_id"))
     return deduped.filter(F.pmod(h, F.lit(2)) == 0).select("doc_id", "lang", "n_words")
 
 
@@ -1473,7 +1429,7 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", F.explode(F.sequence(F.lit(0), F.lit(1))).alias("_ci"))
         .select("doc_id", "lang", F.col("_ci").cast("long").alias("copy_idx"))
     )
-    h = F.pmod(F.col("doc_id") * F.lit(1103515245) + F.lit(12345), F.lit((1 << 31) - 1))
+    h = lcg_hash(F.col("doc_id"))
     rest = (
         docs.filter(F.col("lang") != "en")
         .filter(F.col("lang").isin("de", "fr") | (F.pmod(h, F.lit(2)) == 0))
@@ -2267,22 +2223,12 @@ def corpus_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.col("n_chars") >= 300, 150).otherwise(0),
         F.lit(950),
     )
-    # pre-reduce the id mod the Mersenne prime BEFORE the LCG multiply:
-    # id * 1103515245 overflows int64 for id ≳ 8.4e9 (silent wrap in
-    # non-ANSI Spark, an ERROR in DuckDB — a cross-engine divergence at
-    # exactly the 100 TB id ranges this gate exists for); the reduced
-    # product is < 2^62, exact in both engines.  Sign caveat: Spark's
-    # pmod returns a non-negative residue while SQL `%` keeps the
-    # dividend's sign, so for NEGATIVE ids the oracle applies the
-    # ((x % m) + m) % m idiom at the innermost mod (the only step whose
-    # dividend can be negative — after it, every operand is ≥ 0).
-    u = F.pmod(
-        F.pmod(
-            F.pmod(F.col("doc_id"), F.lit((1 << 31) - 1)) * 1103515245 + 54321,
-            F.lit((1 << 31) - 1),
-        ),
-        F.lit(1000),
-    )
+    # Sign caveat: Spark's pmod returns a non-negative residue while SQL
+    # `%` keeps the dividend's sign, so for NEGATIVE ids the oracle
+    # applies the ((x % m) + m) % m idiom at the innermost mod (the only
+    # step whose dividend can be negative — after it, every operand is
+    # ≥ 0).
+    u = F.pmod(lcg_hash(F.col("doc_id"), inc=54321), F.lit(1000))
     return (
         docs.withColumn("p_permille", p.cast("long"))
         .filter(u < F.col("p_permille"))

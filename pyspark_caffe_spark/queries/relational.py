@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import lcg_hash, load_table
 
 # Scratch space for sink/roundtrip ops (gitignored, inside the repo —
 # the environment forbids writes elsewhere).
@@ -314,14 +314,7 @@ def sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     chosen by AQE. Hash-gating is stable across partitioning, engines
     (exact SQL twin), and reruns."""
     orders = load_table(spark, sf_dir, "orders")
-    # id reduced mod the Mersenne prime BEFORE the multiply: the raw
-    # product overflows int64 for keys ≳ 8.4e9 (silent wrap in
-    # non-ANSI Spark vs an overflow ERROR in DuckDB)
-    h = F.pmod(
-        F.pmod(F.col("o_orderkey"), F.lit((1 << 31) - 1)) * F.lit(1103515245)
-        + F.lit(12345),
-        F.lit((1 << 31) - 1),
-    )
+    h = lcg_hash(F.col("o_orderkey"))
     return orders.filter(F.pmod(h, F.lit(10)) == 0).select("o_orderkey", "o_totalprice")
 
 

@@ -27,7 +27,7 @@ from pyspark_caffe_spark.money import (
 )
 from pyspark_caffe_spark.materialize import pin, pin_lazy
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import LCG_SQL, lcg_hash, load_table
 
 # Exceptions a spark.read.parquet of a TORN dataset (crash mid-write:
 # corrupt footer, missing commit marker) can raise — reuse gates catch
@@ -66,15 +66,20 @@ _ARTIFACT_ERROR_SHAPES = (
 )
 
 
+#: The ANN query batch as SQL: the predicate every ``sim_knn_ivf_*``
+#: oracle filters on and :func:`_ann_query_slice` evaluates.
+_ANN_QUERY_SLICE_SQL = "vec_id % 20 = 3 AND vec_id < 2000"
+
+
 def _ann_query_slice() -> Column:
     """The ANN query batch: the hash-exact ``vec_id % 20 = 3`` slice of
-    the embeddings, the same one the ``sim_knn_ivf_*`` oracles name.
+    the embeddings, :data:`_ANN_QUERY_SLICE_SQL`.
     The ``vec_id < 2000`` cap is a no-op at every fixture SF (ids stop
     below 2000) but pins |Q| at scale — a query set defined as a fixed
     fraction of the corpus would make a serving pass O(|Q|·N) =
     quadratic (round-8 100× sweep lesson).  Its negation is the served
     corpus."""
-    return (F.pmod(F.col("vec_id"), F.lit(20)) == 3) & (F.col("vec_id") < 2000)
+    return F.expr(_ANN_QUERY_SLICE_SQL)
 
 
 def _ann_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,7 +406,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gating is content-deterministic and has an exact SQL twin —
     the reproducibility property a snapshotted training set needs."""
     ev = load_table(spark, sf_dir, "events")
-    h = F.pmod(F.col("event_id") * F.lit(1103515245) + F.lit(12345), F.lit((1 << 31) - 1))
+    h = lcg_hash(F.col("event_id"))
     keep = F.when(
         F.col("event_type").isin("click", "view"), F.pmod(h, F.lit(5)) == 0
     ).otherwise(F.lit(True))
@@ -637,10 +642,10 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_ivf_batch",
-    oracle="""
+    oracle=f"""
     SELECT vec_id AS qid, CAST(10 AS INT) AS k, true AS recall_ok
     FROM embeddings
-    WHERE vec_id % 20 = 3 AND vec_id < 2000
+    WHERE {_ANN_QUERY_SLICE_SQL}
     """,
 )
 def sim_knn_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,8 +843,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iteration's join then reuses that partitioning and only the
     (node, rank) pairs — two narrow columns — shuffle per hop.
     ``localCheckpoint`` per iteration truncates the lineage so the plan
-    does not grow exponentially (same pattern as dedup_clusters'
-    label propagation).  Both directions of each edge are materialized,
+    does not grow exponentially (same pattern as the rounds of
+    _cc_large_small_star).  Both directions of each edge are materialized,
     so the bipartite graph has no dangling nodes and rank mass is
     conserved (sum ranks = |nodes|, asserted in tests).  At 100 TB
     scale: Pregel-style vertex partitioning is exactly this plan with
@@ -881,9 +886,11 @@ def _cc_large_small_star(
     """Connected components by ALTERNATING large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SOCC'14 — public algorithm): converges in O(log² n) rounds on ANY
-    graph, where min-label propagation (dedup_clusters) needs
-    O(diameter) shuffles — degenerate on a long chain (10k hops for a
-    10k-link chain; this takes ~log₂ rounds, asserted in tests).
+    graph, where min-label propagation needs O(diameter) shuffles —
+    degenerate on a long chain (10k hops for a 10k-link chain; this
+    takes ~log₂ rounds, asserted in tests).  The package's one
+    connected-components implementation: graph_connected_components
+    and dedup_clusters both call it.
 
     Per round, with Γ⁺(u) = neighbors(u) ∪ {u} and m(u) = min Γ⁺(u):
 
@@ -899,7 +906,7 @@ def _cc_large_small_star(
     long pairs only, never adjacency lists, so a hot high-degree node
     costs a skewed-key aggregate (AQE-splittable) rather than an OOM
     row.  ``localCheckpoint`` per round truncates the iterative
-    lineage (same discipline as graph_pagerank / dedup_clusters).
+    lineage (same discipline as graph_pagerank).
 
     Convergence check (round-11, replaces the (count, hash-sum)
     checksum): a canonical edge set (u < v, distinct) is the
@@ -1033,29 +1040,17 @@ def _cc_large_small_star(
         rounds += 1
 
 
-#: LCG mix (same Mersenne-prime recipe as sample_seeded) — exact in
-#: both engines, so the derived graph is identical in Spark and DuckDB
-_CC_LCG_SQL = "((({col} % 2147483647) * 1103515245 + 12345) % 2147483647)"
-
-
-def _cc_lcg(col: Column) -> Column:
-    return F.pmod(
-        F.pmod(col, F.lit((1 << 31) - 1)) * F.lit(1103515245) + F.lit(12345),
-        F.lit((1 << 31) - 1),
-    )
-
-
 @query(
     "graph_connected_components",
     oracle=f"""
     WITH RECURSIVE nodes AS (SELECT DISTINCT user_id AS u FROM events),
     ch AS (
       SELECT n.u, n.u + 1 AS v FROM nodes n JOIN nodes m ON m.u = n.u + 1
-      WHERE {_CC_LCG_SQL.format(col="n.u")} % 8 <> 0
+      WHERE {LCG_SQL.format(col="n.u")} % 8 <> 0
     ),
     sc AS (
       SELECT n.u, n.u + 17 AS v FROM nodes n JOIN nodes m ON m.u = n.u + 17
-      WHERE {_CC_LCG_SQL.format(col="n.u")} % 16 = 1
+      WHERE {LCG_SQL.format(col="n.u")} % 16 = 1
     ),
     edges AS (SELECT u, v FROM ch UNION SELECT u, v FROM sc),
     und AS (SELECT u AS src, v AS dst FROM edges UNION SELECT v, u FROM edges),
@@ -1072,11 +1067,12 @@ def _cc_lcg(col: Column) -> Column:
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components at SCALE — alternating large-star/
-    small-star over a deterministic user-adjacency graph, the
-    O(log² n)-round complement to dedup_clusters' O(diameter)
-    min-label propagation (round-9 verdict #6: a planted 10k-link
-    chain costs propagation 10k shuffles but this ~log₂ rounds;
-    tests/test_scale_ops.py plants exactly that chain and counts).
+    small-star (:func:`_cc_large_small_star`, shared with
+    dedup_clusters) over a deterministic user-adjacency graph:
+    O(log² n) rounds where min-label propagation needs O(diameter)
+    shuffles (a planted 10k-link chain costs propagation 10k shuffles
+    but this ~log₂ rounds; tests/test_scale_ops.py plants exactly that
+    chain and counts).
 
     The graph, derived identically in both engines (LCG hash gate,
     exact integer arithmetic): an edge links consecutive user ids
@@ -1091,7 +1087,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     every node label matters, not just the big clusters."""
     ev = load_table(spark, sf_dir, "events")
     nodes = ev.select(F.col("user_id").alias("u")).distinct()
-    gate = _cc_lcg(F.col("u"))
+    gate = lcg_hash(F.col("u"))
     nv = nodes.select(F.col("u").alias("v"))
 
     def edges_step(step: int, keep: Column) -> DataFrame:
@@ -1122,7 +1118,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     edges AS (
       SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v FROM pairs
-      WHERE {_CC_LCG_SQL.format(col="(LEAST(a, b) * 400 + GREATEST(a, b))")} % 4 = 0
+      WHERE {LCG_SQL.format(col="(LEAST(a, b) * 400 + GREATEST(a, b))")} % 4 = 0
     ),
     tri AS (
       SELECT e1.u AS a, e1.v AS b, e2.v AS c
@@ -1182,7 +1178,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
         .distinct()
-        .filter(F.pmod(_cc_lcg(cell), F.lit(4)) == 0)
+        .filter(F.pmod(lcg_hash(cell), F.lit(4)) == 0)
         # MATERIALIZE the derived edge set once (round 18, guide §3.3):
         # the plan references edges five times (und×2 via deg, the
         # orient join, the wedge-closing join) and each reference
@@ -2579,10 +2575,10 @@ def sink_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_ivf_serve",
-    oracle="""
+    oracle=f"""
     SELECT vec_id AS qid, CAST(10 AS INT) AS k, true AS recall_ok
     FROM embeddings
-    WHERE vec_id % 20 = 3 AND vec_id < 2000
+    WHERE {_ANN_QUERY_SLICE_SQL}
     """,
 )
 def sim_knn_ivf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2623,10 +2619,10 @@ def sim_knn_ivf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_ivf_serve_only",
-    oracle="""
+    oracle=f"""
     SELECT vec_id AS qid, CAST(10 AS BIGINT) AS n_results
     FROM embeddings
-    WHERE vec_id % 20 = 3 AND vec_id < 2000
+    WHERE {_ANN_QUERY_SLICE_SQL}
     """,
 )
 def sim_knn_ivf_serve_only(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2673,12 +2669,12 @@ def sim_knn_ivf_serve_only(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_knn_ivf_refresh",
-    oracle="""
+    oracle=f"""
     SELECT vec_id AS qid,
            CAST(10 AS BIGINT) AS n_results,
            true AS best_cos_not_worse
     FROM embeddings
-    WHERE vec_id % 20 = 3 AND vec_id < 2000
+    WHERE {_ANN_QUERY_SLICE_SQL}
     """,
 )
 def sim_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:

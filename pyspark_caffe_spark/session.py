@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from pyspark_caffe_spark.tables import CORRECTNESS_CONFS
+
 
 def _parse_mib(size: str) -> int:
     """JVM memory string ('8g', '512m', '1024') → MiB (bare = MiB)."""
@@ -36,13 +38,9 @@ def _parse_mib(size: str) -> int:
 def get_spark(app_name: str = "pyspark-caffe-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    Settings that are correctness-critical:
-      * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the ``events``
-        fixture stores ``ts`` as INT64 TIMESTAMP(NANOS); PySpark 4.x
-        rejects it otherwise (SURVEY.md §1.3.1).  Must be set before
-        the first parquet read, hence here.
-      * ``spark.sql.session.timeZone=UTC`` — the DuckDB oracle reads
-        naive timestamps; pinning UTC makes collected values agree.
+    Settings that are correctness-critical: ``tables.CORRECTNESS_CONFS``
+    (``nanosAsLong=true``, ``timeZone=UTC``), set at build time so they
+    hold before the first parquet read.
 
     Settings that are performance-tuning:
       * AQE on (default in 4.x) with skew-join handling — at 100 TB a
@@ -81,8 +79,7 @@ def get_spark(app_name: str = "pyspark-caffe-spark", cpus: int | None = None) ->
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=CORRECTNESS_CONFS)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

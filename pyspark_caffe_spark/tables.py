@@ -10,6 +10,8 @@ here so that every query sees identical, oracle-compatible types:
     :func:`emb_double` when a query needs higher-order aggregation
     (Spark's ``aggregate`` with a double accumulator rejects float
     element types).
+  * Hash-gated samples gate on :func:`lcg_hash`, which reduces an id
+    before its multiply so that ids past 8.4e9 cannot overflow int64.
 
 Cost note: ``spark.read.parquet`` without a schema launches a one-task
 Spark job (named ``parquet``) that reads the file footer to infer the
@@ -29,7 +31,7 @@ import os
 import weakref
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -45,6 +47,18 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
+
+
+#: The correctness-critical runtime confs: ``get_spark`` builds every
+#: session with them and :func:`ensure_session_confs` forces them on any
+#: other session.  ``nanosAsLong`` lets a nanosecond ``events.ts``
+#: parquet be read at all (PySpark 4.x rejects it otherwise); a UTC
+#: session time zone makes collected timestamps agree with DuckDB's
+#: naive ones.
+CORRECTNESS_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
 
 
 # Sessions already configured — ensure_session_confs runs on EVERY
@@ -67,14 +81,12 @@ def ensure_session_confs(spark: SparkSession) -> None:
     mid-run is re-corrected on the next table load (set only on drift:
     gets are read-only py4j calls, sets invalidate cached relations).
     """
-    if spark in _CONFIGURED_SESSIONS:
-        if (
-            spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
-            and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "") == "true"
-        ):
-            return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if spark in _CONFIGURED_SESSIONS and all(
+        spark.conf.get(k, "") == v for k, v in CORRECTNESS_CONFS.items()
+    ):
+        return
+    for k, v in CORRECTNESS_CONFS.items():
+        spark.conf.set(k, v)
     _CONFIGURED_SESSIONS.add(spark)
 
 
@@ -190,3 +202,26 @@ def emb_double(df: DataFrame, col: str = "embedding") -> DataFrame:
     unit-normalised, so dot product == cosine similarity.
     """
     return df.withColumn(col, F.col(col).cast("array<double>"))
+
+
+#: The LCG hash gate as DuckDB SQL, ``{col}`` reduced first like
+#: :func:`lcg_hash`.
+LCG_SQL = "((({col} % 2147483647) * 1103515245 + 12345) % 2147483647)"
+
+
+def lcg_hash(col: Column, inc: int = 12345) -> Column:
+    """``((col mod p) * 1103515245 + inc) mod p`` with the Mersenne
+    prime p = 2^31 - 1: the deterministic hash behind every hash-gated
+    sample, exact in both engines, so a gated row set is identical in
+    Spark and in the DuckDB oracle and does not depend on partitioning.
+
+    ``col`` is reduced mod p BEFORE the multiply: the raw product
+    overflows int64 for ids ≳ 8.4e9 (a silent wrap without ANSI mode,
+    ARITHMETIC_OVERFLOW with it, an error in DuckDB), while the reduced
+    product stays below 2^62.  For 0 ≤ id < p the result equals the
+    unreduced ``(id * 1103515245 + inc) % p`` the oracles spell.  The
+    result is non-negative: ``pmod`` of a negative id is its positive
+    residue.
+    """
+    p = F.lit((1 << 31) - 1)
+    return F.pmod(F.pmod(col, p) * F.lit(1103515245) + F.lit(inc), p)

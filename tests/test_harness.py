@@ -176,6 +176,24 @@ def test_ensure_session_confs_memoized_but_verifying(spark):
         real_set("spark.sql.session.timeZone", "UTC")
 
 
+def test_lcg_hash_reduces_before_multiply(spark):
+    """The hash-gate LCG must not overflow on ids past 8.4e9: the id is
+    reduced mod 2^31 - 1 before the multiply, so under ANSI mode id
+    10^10 neither raises ARITHMETIC_OVERFLOW nor wraps, and the result
+    is the exact modular value."""
+    from pyspark.sql import functions as F
+
+    p, big = (1 << 31) - 1, 10**10
+    want = ((big % p) * 1103515245 + 12345) % p
+    real_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = spark.range(1).select(tables.lcg_hash(F.lit(big))).first()[0]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", real_ansi)
+    assert got == want
+
+
 def _next_job_id(spark) -> int:
     """The id the DAG scheduler will give the next submitted job."""
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()

@@ -453,11 +453,12 @@ def test_ann_corpus_validation_cached_per_generation(spark, sf_dir, monkeypatch)
 
 
 def test_cc_planted_chain_logarithmic_rounds(spark):
-    """Round-10 verdict #6: min-label propagation (dedup_clusters) is
-    O(diameter) shuffles — a planted 10k-link chain would take 10k
-    hops.  Alternating large-star/small-star must label the SAME chain
-    in ~log rounds: assert rounds <= 2*ceil(log2(n)) + 2 and the labels
-    are exactly {0 -> everyone} (one component, min label 0)."""
+    """Min-label propagation is O(diameter) shuffles — a planted
+    10k-link chain would take 10k hops.  Alternating large-star/
+    small-star, the package's one connected-components algorithm
+    (graph_connected_components and dedup_clusters), must label the
+    chain in ~log rounds: assert rounds <= 2*ceil(log2(n)) + 2 and the
+    labels are exactly {0 -> everyone} (one component, min label 0)."""
     import math
 
     from pyspark_caffe_spark.queries.scale_ops import _cc_large_small_star
@@ -499,6 +500,25 @@ def test_cc_star_and_disjoint_components(spark):
     assert rounds <= 6
 
 
+def test_dedup_clusters_long_chain(spark, sf_dir, monkeypatch):
+    """dedup_clusters labels components with the star algorithm, so a
+    near-dup chain longer than any fixed hop cap is still one cluster:
+    a 30-link chain 0-1-...-30 is one cluster rooted at 0 with 31
+    members (min-label propagation capped at 20 hops raised here)."""
+    from pyspark_caffe_spark import textops
+    from pyspark_caffe_spark.queries import llm
+
+    monkeypatch.setattr(
+        textops,
+        "jaccard_pairs",
+        lambda *a, **k: spark.range(30).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        ),
+    )
+    rows = llm.dedup_clusters(spark, sf_dir).collect()
+    assert [(r.cluster_id, r.cluster_size) for r in rows] == [(0, 31)]
+
+
 def test_triangle_count_bruteforce(spark, sf_dir):
     """Independent check behind graph_triangle_count's oracle: rebuild
     the SAME derived graph driver-side (bounded: <= ~20k gated edges on
@@ -507,8 +527,7 @@ def test_triangle_count_bruteforce(spark, sf_dir):
     no CartesianProduct, and the degree-orientation join broadcasts."""
     from itertools import combinations
 
-    from pyspark_caffe_spark.queries.scale_ops import _cc_lcg
-    from pyspark_caffe_spark.tables import load_table
+    from pyspark_caffe_spark.tables import lcg_hash, load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     a = F.pmod(F.col("l_partkey"), F.lit(400))
@@ -521,7 +540,7 @@ def test_triangle_count_bruteforce(spark, sf_dir):
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         )
         .distinct()
-        .filter(F.pmod(_cc_lcg(cell), F.lit(4)) == 0)
+        .filter(F.pmod(lcg_hash(cell), F.lit(4)) == 0)
         .collect()
     ]
     adj: dict[int, set[int]] = {}

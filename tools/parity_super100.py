@@ -40,8 +40,7 @@ sys.path.insert(0, _REPO)
 
 from pyspark_caffe_spark import get_spark, recycle_session  # noqa: E402
 from pyspark_caffe_spark.queries import ORACLES, QUERIES  # noqa: E402
-from pyspark_caffe_spark.queries.scale_ops import _CC_LCG_SQL  # noqa: E402
-from pyspark_caffe_spark.tables import TABLE_NAMES  # noqa: E402
+from pyspark_caffe_spark.tables import LCG_SQL, TABLE_NAMES  # noqa: E402
 from tests.parity import assert_digest_parity, assert_parity  # noqa: E402
 
 ROW_CAP = 200_000
@@ -320,7 +319,7 @@ def main() -> None:
         # the expected slice is at most ROW_CAP / 2, so the gate's
         # spread around it rarely pushes a slice over the cap
         mod = max(16, 2 * n // ROW_CAP)
-        gate = f"{_CC_LCG_SQL.format(col=SLICE_GATES[key])} % {mod} = 3"
+        gate = f"{LCG_SQL.format(col=SLICE_GATES[key])} % {mod} = 3"
         skey, t0 = key + "__slice", time.perf_counter()
         try:
             sdf = df.filter(gate)
