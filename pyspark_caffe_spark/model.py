@@ -60,39 +60,42 @@ class LinearModel:
         )
 
 
-def _batches(series: pd.Series) -> np.ndarray:
-    return np.stack(series.to_numpy()).astype(np.float64)
+def _forward(
+    df: DataFrame,
+    model: LinearModel,
+    input_col: str,
+    output_col: str,
+    ndigits: int | None,
+    return_type: str,
+    finish: Callable[[np.ndarray], object],
+) -> DataFrame:
+    """The one forward pass behind every public apply: broadcast
+    ``model`` once, run ``forward`` per Arrow batch, round half away
+    from zero when ``ndigits`` is set, and append ``finish(out)`` as
+    ``output_col`` of ``return_type``."""
+    bc = df.sparkSession.sparkContext.broadcast(model)
+
+    @pandas_udf(return_type)
+    def _apply(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        m = bc.value
+        for s in batches:
+            out = m.forward(np.stack(s.to_numpy()).astype(np.float64))
+            if ndigits is not None:
+                out = round_half_away(out, ndigits)
+            yield pd.Series(finish(out))
+
+    return df.withColumn(output_col, _apply(F.col(input_col).cast("array<double>")))
 
 
 def score_column(df: DataFrame, model: LinearModel, input_col: str, output_col: str = "score", ndigits: int | None = None) -> DataFrame:
     """Append a scalar model score per row (reference: net.forward →
     single output blob)."""
-    bc = df.sparkSession.sparkContext.broadcast(model)
-
-    @pandas_udf("double")
-    def _score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = bc.value
-        for s in batches:
-            out = m.forward(_batches(s))
-            yield pd.Series(round_half_away(out, ndigits) if ndigits is not None else out)
-
-    return df.withColumn(output_col, _score(F.col(input_col).cast("array<double>")))
+    return _forward(df, model, input_col, output_col, ndigits, "double", lambda out: out)
 
 
 def extract_features(df: DataFrame, model: LinearModel, input_col: str, output_col: str = "features", ndigits: int | None = None) -> DataFrame:
     """Append an array feature column (reference: blob extraction)."""
-    bc = df.sparkSession.sparkContext.broadcast(model)
-
-    @pandas_udf("array<double>")
-    def _feat(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = bc.value
-        for s in batches:
-            out = m.forward(_batches(s))
-            if ndigits is not None:
-                out = round_half_away(out, ndigits)
-            yield pd.Series(list(out))
-
-    return df.withColumn(output_col, _feat(F.col(input_col).cast("array<double>")))
+    return _forward(df, model, input_col, output_col, ndigits, "array<double>", list)
 
 
 def predict_class(
@@ -108,18 +111,10 @@ def predict_class(
     wins, matching a SQL ``CASE GREATEST(...) WHEN ...`` in class
     order) so near-tie predictions are cross-engine stable — required
     for oracle-checked keys."""
-    bc = df.sparkSession.sparkContext.broadcast(model)
-
-    @pandas_udf("int")
-    def _pred(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        m = bc.value
-        for s in batches:
-            out = m.forward(_batches(s))
-            if ndigits is not None:
-                out = round_half_away(out, ndigits)
-            yield pd.Series(np.argmax(out, axis=1).astype("int32"))
-
-    return df.withColumn(output_col, _pred(F.col(input_col).cast("array<double>")))
+    return _forward(
+        df, model, input_col, output_col, ndigits, "int",
+        lambda out: np.argmax(out, axis=1).astype("int32"),
+    )
 
 
 def train_parameter_averaging(

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pyspark_caffe_spark import textops, vecops
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import lcg_hash, load_table, row_count
+from pyspark_caffe_spark.tables import lcg_hash, load_embeddings, load_table, row_count
 from pyspark_caffe_spark.textops import STOPWORDS
 
 # Marker words per language for the (deliberately simple, deterministic)
@@ -628,10 +628,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation runs after sign-LSH bucketing (sim_lsh_bucketed)
     prunes the candidate pairs.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    pairs = vecops.threshold_pairs(emb, tau=0.4)
+    pairs = vecops.threshold_pairs(load_embeddings(spark, sf_dir), tau=0.4)
     decisions = pairs.groupBy(F.col("id_b").alias("dup_id")).agg(
         F.min("id_a").alias("keep_id"),
         F.max("cos").alias("max_cos"),

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.model import (
@@ -31,8 +31,8 @@ from pyspark_caffe_spark.model import (
     train_parameter_averaging,
 )
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import emb_double, load_table
-from pyspark_caffe_spark.vecops import _dot
+from pyspark_caffe_spark.tables import load_embeddings, load_table
+from pyspark_caffe_spark.vecops import _dot, knn_batch
 
 DIM = 64
 N_CLASSES = 10
@@ -60,6 +60,13 @@ def _sql_vec(v: np.ndarray) -> str:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
+
+
+def _argmax(s: Column) -> Column:
+    """0-based index of the first maximum of the array column ``s`` —
+    np.argmax's first-max-wins rule, the oracles' ``CASE GREATEST``
+    order."""
+    return (F.array_position(s, F.array_max(s)) - 1).cast("int")
 
 
 @query(
@@ -261,38 +268,19 @@ def ml_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ml_multi_model_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-zoo batch inference: THREE scoring heads applied in ONE
-    Arrow pass over the corpus (one mapInPandas, one matmul against
-    the stacked weight matrix) instead of three separate scans — at
-    100 TB, scan count is the cost, so multi-head application must
-    amortize it. best_model = argmax over heads (first-wins on rounded
-    ties, mirrored in the oracle's CASE ordering)."""
-    import pandas as pd
-    from typing import Iterator
-
-    emb = _emb(spark, sf_dir)
-    stacked = W_FEAT[:3]  # 3 heads × 64
-    bc = spark.sparkContext.broadcast(stacked)
-
-    def score3(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            s = np.round(x @ w.T, 6)  # one matmul, all heads
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "score_m0": s[:, 0],
-                    "score_m1": s[:, 1],
-                    "score_m2": s[:, 2],
-                    "best_model": np.argmax(s, axis=1).astype("int32"),
-                }
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(
-        score3,
-        schema="vec_id long, score_m0 double, score_m1 double, score_m2 double, best_model int",
+    Arrow pass over the corpus (one model.extract_features pass, one
+    matmul against the stacked 3×64 weight matrix) instead of three
+    separate scans — at 100 TB, scan count is the cost, so multi-head
+    application must amortize it. best_model = argmax over the
+    rounded heads, first-max-wins (:func:`_argmax`) — mirrored in the
+    oracle's CASE ordering."""
+    s = F.col("s")
+    return extract_features(
+        _emb(spark, sf_dir), LinearModel(W_FEAT[:3]), "embedding", "s", ndigits=6
+    ).select(
+        "vec_id",
+        *[s[m].alias(f"score_m{m}") for m in range(3)],
+        _argmax(s).alias("best_model"),
     )
 
 
@@ -495,11 +483,10 @@ def ml_embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN classification (k=5, cosine-by-dot, majority vote with
     smallest-label tiebreak): the query block (every 50th vector)
-    broadcasts onto the corpus — sim_knn_batch's serving shape — then
-    two tiny windows (rank neighbours, rank votes) pick the
-    prediction.  The corpus never shuffles: scoring is
-    broadcast×scan, and everything after the top-k cut is
-    queries×k rows.  Rounded scores + id/label tiebreaks keep the
+    broadcasts onto the corpus — vecops.knn_batch — then two tiny
+    windows (rank neighbours, rank votes) pick the prediction.  The
+    corpus never shuffles: scoring is broadcast×scan, and everything
+    after the top-k cut is queries×k rows.  Rounded scores + id/label tiebreaks keep the
     vote oracle-stable.
 
     The query slice is BOUNDED (`vec_id < 2000` — a no-op at every
@@ -508,22 +495,15 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size — the round-8 100× sweep measured exactly that (4000
     queries × 200k corpus = 8×10⁸ scored rows).  The serving contract
     is a bounded query set against an unbounded corpus."""
-    emb = emb_double(_emb(spark, sf_dir))
+    emb = load_embeddings(spark, sf_dir)
     q = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2000)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_emb"),
         F.col("label").alias("true_label"),
     )
-    pairs = _emb(spark, sf_dir).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<double>").alias("ce"),
-        F.col("label").alias("nlabel"),
-    ).join(F.broadcast(q), F.col("qid") != F.col("cid"))
-    dot = _dot("qe", "ce")
-    w_rank = Window.partitionBy("qid").orderBy(
-        F.round(dot, 6).desc(), F.col("cid").asc()
+    top = knn_batch(emb, q, 5).select(
+        F.col("query_id").alias("qid"), "true_label", F.col("label").alias("nlabel")
     )
-    top = pairs.withColumn("rk", F.row_number().over(w_rank)).filter(F.col("rk") <= 5)
     votes = top.groupBy("qid", "true_label", "nlabel").agg(
         F.count("*").alias("n_votes")
     )
@@ -610,8 +590,9 @@ def ml_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
          O(dim²) each), forms the population covariance, and
          eigensolves 64×64 — microseconds, data never leaves the
          cluster except as moments;
-      3. the top-4 components broadcast back and a second Arrow pass
-         projects every vector.
+      3. the top-4 components broadcast back as a centred linear model
+         and a second Arrow pass (model.extract_features) projects
+         every vector.
 
     Eigenvalues/vectors are LAPACK-determined (not portable SQL), so
     per the registry's invariant-oracle pattern the key emits hash-
@@ -668,25 +649,13 @@ def ml_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = comps @ comps.T
     ortho_ok = bool(np.max(np.abs(gram - np.eye(4))) < 1e-9)
 
-    bc = spark.sparkContext.broadcast((mean, comps))
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mu, w = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            p = (x - mu) @ w.T
-            yield pd.DataFrame(
-                {f"p{k}": p[:, k] for k in range(4)}
-            )
-
-    proj = emb.select("embedding").mapInPandas(
-        project, schema="p0 double, p1 double, p2 double, p3 double"
+    # (x - mean) @ comps.T as one linear model
+    proj = extract_features(
+        emb.select("embedding"), LinearModel(comps, bias=-(comps @ mean)), "embedding", "p"
     )
     # distributed population variance of each projected coordinate
     var_row = proj.agg(
-        *[F.var_pop(f"p{k}").alias(f"v{k}") for k in range(4)]
+        *[F.var_pop(F.col("p")[k]).alias(f"v{k}") for k in range(4)]
     ).collect()[0]
     tol = 1e-6 * max(float(lam[0]), 1e-12)
     var_matches = bool(
@@ -748,25 +717,16 @@ def ml_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     forms (a fleet-level MRR average would be summation-order
     dependent; consumers aggregate the per-query rows however they
     need).  Scale shape: the 16-query block broadcasts onto one corpus
-    scan (sim_knn_batch's serving shape), both rank windows share one
-    query_id partitioning, output is |queries| rows."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
-    )
+    scan (vecops.knn_batch), the rank window and the per-query
+    aggregate share one query_id partitioning, output is |queries|
+    rows."""
+    emb = load_embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
         F.col("label").alias("q_label"),
     )
-    dot = _dot("emb", "q_emb")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    ranked = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "q_label", "vec_id", "label", F.round(dot, 6).alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .withColumn("rel", F.col("label") == F.col("q_label"))
-    )
+    ranked = knn_batch(emb, q, 10).withColumn("rel", F.col("label") == F.col("q_label"))
     first_rel = F.min(F.when(F.col("rel"), F.col("rnk")))
     return ranked.groupBy("query_id").agg(
         first_rel.cast("long").alias("first_rel_rank"),

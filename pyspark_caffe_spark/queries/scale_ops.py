@@ -27,7 +27,8 @@ from pyspark_caffe_spark.money import (
 )
 from pyspark_caffe_spark.materialize import pin, pin_lazy
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import LCG_SQL, lcg_hash, load_table
+from pyspark_caffe_spark.nputil import round_half_away
+from pyspark_caffe_spark.tables import LCG_SQL, lcg_hash, load_embeddings, load_table
 
 # Exceptions a spark.read.parquet of a TORN dataset (crash mid-write:
 # corrupt footer, missing commit marker) can raise — reuse gates catch
@@ -85,9 +86,7 @@ def _ann_query_slice() -> Column:
 def _ann_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``embeddings`` table as the ``(vec_id, emb array<double>)``
     rows every IVF build, append and serve reads."""
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    return load_embeddings(spark, sf_dir).select("vec_id", "emb")
 
 
 def _is_artifact_read_failure(ex: BaseException) -> bool:
@@ -441,6 +440,15 @@ def _ivf_batches(
             yield pdf, np.stack(pdf["emb"].to_numpy()).astype(np.float64)
 
 
+def _ivf_scores(x: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Scores of the ``[rows × dim]`` batch ``x`` against query vector(s)
+    ``q``, rounded half away from zero to 6 places — the rule of
+    Spark's ``F.round`` (the JVM-tier exact baseline,
+    :func:`vecops.knn_for_query`) and DuckDB's ``ROUND``, so a score on
+    the rounding boundary ties and ranks the same in every engine."""
+    return round_half_away(x @ q.T, 6)
+
+
 def _ivf_train_centroids(emb: DataFrame, nlist: int) -> tuple[np.ndarray, int]:
     """IVF centroid training, the FAISS recipe: driver-side Lloyd on a
     deterministic ~50% hash sample of the corpus (hash-gated, not
@@ -592,9 +600,7 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     slots (tightened from 60%; measured value is 100%). Oracle emits
     literal ``true``."""
     nlist, nprobe, k = 16, 6, 10
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
-    )
+    emb = load_embeddings(spark, sf_dir)
     centroids, nlist = _ivf_train_centroids(emb, nlist)
     nprobe = min(nprobe, nlist)
     qrow = emb.filter(F.col("vec_id") == 0).collect()  # query = vec_id 0
@@ -616,7 +622,7 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             sel = x[in_probe]
             ids = pdf["vec_id"].to_numpy()[in_probe]
-            scores = np.round(sel @ q, 6)
+            scores = _ivf_scores(sel, q)
             yield pd.DataFrame({"vec_id": ids, "cos": scores})
 
     cand = emb.mapInPandas(search, schema="vec_id long, cos double")
@@ -708,7 +714,7 @@ def sim_knn_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cand[i, q]: corpus row i is in one of query q's probed
             # cells under EITHER of its m assigned cells
             cand = p_mask[:, top_m].any(axis=2).T  # [rows × nq]
-            scores = np.round(x @ q_mat.T, 6)      # [rows × nq]
+            scores = _ivf_scores(x, q_mat)  # [rows × nq]
             yield pd.concat([
                 _ivf_local_topk(q_ids, ids, scores, k).assign(stream="exact"),
                 _ivf_local_topk(q_ids, ids, scores, k, cand).assign(stream="ivf"),
@@ -3381,8 +3387,8 @@ def _serve_from_ann_index(
             # cells) so duplicates can't crowd the local top-k
             ids, scores, cand = _ivf_collapse(
                 pdf["vec_id"].to_numpy(),
-                np.round(x @ q_mat.T, 6),  # [rows × nq]
-                p_mask[:, cells].T,        # [rows × nq]
+                _ivf_scores(x, q_mat),  # [rows × nq]
+                p_mask[:, cells].T,     # [rows × nq]
             )
             top = _ivf_local_topk(q_ids, ids, scores, k, cand)
             if len(top):
@@ -3404,7 +3410,7 @@ def _serve_from_ann_index(
         q_ids, q_mat = bc_q.value
         for pdf, x in _ivf_batches(batches):
             yield _ivf_local_topk(
-                q_ids, pdf["vec_id"].to_numpy(), np.round(x @ q_mat.T, 6), k
+                q_ids, pdf["vec_id"].to_numpy(), _ivf_scores(x, q_mat), k
             )
 
     ex = corpus.mapInPandas(exact, schema="qid long, vec_id long, cos double")

@@ -21,15 +21,18 @@ from pyspark.sql import functions as F
 from pyspark_caffe_spark import vecops
 from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import load_embeddings
 
 _rng = np.random.default_rng(7)
 LSH_PLANES = np.round(_rng.standard_normal((8, 64)), 6)
 
 
-def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
+def _first_queries(emb: DataFrame, n: int) -> DataFrame:
+    """The query block of the batch-retrieval keys: the vectors with
+    ``vec_id < n``, in :func:`vecops.knn_batch`'s ``(query_id, q_emb)``
+    shape."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
 
 
@@ -50,7 +53,7 @@ def sim_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast + block matmul + k-row merge); larger corpora take the
     distributed block-pair tier automatically — no driver-side
     materialization at any size (round-1 judge item #2)."""
-    return vecops.topk_pairs(_load_emb(spark, sf_dir), k=10)
+    return vecops.topk_pairs(load_embeddings(spark, sf_dir), k=10)
 
 
 @query(
@@ -69,7 +72,7 @@ def sim_knn_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-query brute-force ANN baseline: top-10 neighbours of
     vec_id=0. The dot product is vecops.dot_with — codegen'd zip_with/
     aggregate, fully JVM-side, scan + TakeOrdered."""
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     qvec = emb.filter(F.col("vec_id") == 0).select("emb").collect()[0]["emb"]
     return (
         emb.filter(F.col("vec_id") != 0)
@@ -100,7 +103,7 @@ def sim_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sim_knn_lsh / sim_lsh_bucketed) prunes candidates first —
     exactness traded for candidate pruning."""
     out = vecops.threshold_pairs(
-        _load_emb(spark, sf_dir), tau=0.4, extra_cols=["label"]
+        load_embeddings(spark, sf_dir), tau=0.4, extra_cols=["label"]
     )
     return out.select("id_a", "id_b", "label_a", "label_b", "cos")
 
@@ -138,7 +141,7 @@ def sim_optimizer_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is value-identical to the naive one."""
     from pyspark_caffe_spark import optimizer
 
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"))
     dot = F.aggregate(
@@ -194,7 +197,7 @@ def sim_bipartite_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive spelling."""
     from pyspark_caffe_spark import optimizer
 
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     queries_df = emb.filter(F.col("label") <= 1).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("q_emb")
     )
@@ -252,7 +255,7 @@ def sim_bipartite_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact broadcast route, so the result is value-identical;
     tests/test_api.py forces the swapped-broadcast and LSH routes and
     checks exactness/soundness/recall there."""
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     left = emb.filter(F.col("label") <= 4)
     right = emb.filter(F.col("label") >= 5)
     return vecops.auto_bipartite_threshold_pairs(left, right, tau=0.38)
@@ -302,7 +305,7 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     set must cover ≥ 80% of those true pairs (left join truth→
     candidates, counted in one aggregate). Oracle emits literal
     ``true``; a bucketing regression flips the hash-checked flag."""
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     truth = vecops.threshold_pairs(emb, tau=0.4).select("id_a", "id_b")
     cand = _mllib_lsh_pairs(emb).select("id_a", "id_b", F.lit(1).alias("_hit"))
     joined = truth.join(cand, ["id_a", "id_b"], "left")
@@ -332,7 +335,7 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine count) plus an IN-PLAN flag that every signature
     lands in the 8-bit domain with a sane bucket count. Oracle emits
     literal ``true``."""
-    emb = _load_emb(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
     sizes = (
         vecops.lsh_bucket(emb, LSH_PLANES)
         .groupBy("bucket")
@@ -362,27 +365,14 @@ def sim_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch KNN — top-3 neighbours for EACH of a set of query vectors
     (the realistic serving/eval shape, vs sim_knn_query's single
-    probe). The 5-query table broadcasts onto every corpus partition
-    (5× scan fan-out, zero shuffle of the corpus); the per-query rank
-    is one window over (query_id). Fully JVM-side: zip_with/aggregate
-    dot product, no Python. At 100 TB with thousands of queries the
+    probe) — vecops.knn_batch. The 5-query table broadcasts onto every
+    corpus partition (5× scan fan-out, zero shuffle of the corpus); the
+    per-query rank is one window over (query_id). Fully JVM-side:
+    zip_with/aggregate dot product, no Python. At 100 TB with thousands of queries the
     same plan holds — broadcast the query block, fan out, rank."""
-    from pyspark.sql import Window
-
-    emb = _load_emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    dot = vecops._dot("emb", "q_emb")
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(dot, 6).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 3)
-        .select("query_id", "vec_id", "cos")
+    emb = load_embeddings(spark, sf_dir)
+    return vecops.knn_batch(emb, _first_queries(emb, 5), 3).select(
+        "query_id", "vec_id", "cos"
     )
 
 
@@ -420,19 +410,8 @@ def sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_caffe_spark.model import score_column
     from pyspark_caffe_spark.queries.ml import SCORER
 
-    emb = _load_emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    dot = vecops._dot("emb", "q_emb")
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    cand = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "emb", F.round(dot, 6).alias("cos"))
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= 10)
-        .drop("_rn")
-    )
+    emb = load_embeddings(spark, sf_dir)
+    cand = vecops.knn_batch(emb, _first_queries(emb, 5), 10)
     rescored = score_column(cand, SCORER, "emb", "rerank_score", ndigits=6)
     w2 = Window.partitionBy("query_id").orderBy(F.desc("rerank_score"), F.asc("vec_id"))
     return (
@@ -528,18 +507,9 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     lam = float(_MMR_LAMBDA)
-    emb = _load_emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < _MMR_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    dot_q = vecops._dot("emb", "q_emb")
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "emb", F.round(dot_q, 6).alias("rel"))
-        .withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= _MMR_CAND)
-        .drop("_rn")
+    emb = load_embeddings(spark, sf_dir)
+    cand = vecops.knn_batch(emb, _first_queries(emb, _MMR_QUERIES), _MMR_CAND).select(
+        "query_id", "vec_id", "emb", F.col("cos").alias("rel")
     )
     a = cand.select("query_id", F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"))
     b = cand.select("query_id", F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"))

@@ -6,10 +6,10 @@ here so that every query sees identical, oracle-compatible types:
   * ``events.ts`` is normalised to a microsecond TimestampType matching
     DuckDB's native read of the same parquet, whichever physical
     layout is on disk (:func:`normalize_events_ts`).
-  * ``embeddings.embedding`` stays ``array<float>`` on disk; use
-    :func:`emb_double` when a query needs higher-order aggregation
-    (Spark's ``aggregate`` with a double accumulator rejects float
-    element types).
+  * ``embeddings.embedding`` stays ``array<float>`` on disk;
+    :func:`load_embeddings` is the one ``(vec_id, emb, label)`` view
+    with the vectors cast to ``array<double>`` (Spark's ``aggregate``
+    with a double accumulator rejects float element types).
   * Hash-gated samples gate on :func:`lcg_hash`, which reduces an id
     before its multiply so that ids past 8.4e9 cannot overflow int64.
 
@@ -193,15 +193,18 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = False) 
     return tables
 
 
-def emb_double(df: DataFrame, col: str = "embedding") -> DataFrame:
-    """Cast an array<float> embedding column to array<double>.
+def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``embeddings`` table as ``(vec_id, emb array<double>, label)``.
 
-    Required before Spark higher-order aggregation with a double
-    accumulator, and for value parity with DuckDB (which promotes to
-    double in list arithmetic).  FIXTURES.md: vectors are length-64 and
-    unit-normalised, so dot product == cosine similarity.
+    The double cast is required before Spark higher-order aggregation
+    with a double accumulator, and gives value parity with DuckDB
+    (which promotes to double in list arithmetic).  FIXTURES.md:
+    vectors are length-64 and unit-normalised, so dot product ==
+    cosine similarity.
     """
-    return df.withColumn(col, F.col(col).cast("array<double>"))
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
+    )
 
 
 #: The LCG hash gate as DuckDB SQL, ``{col}`` reduced first like

@@ -11,8 +11,9 @@ branch on which caller they serve.
 
 Tiers, chosen per call:
   * JVM tier — :func:`_dot` (zip_with/aggregate), codegen'd, for
-    per-row scores against a constant query vector and for the exact
-    verify of LSH candidates;
+    per-row scores against a constant query vector, for the exact
+    per-query top-k of a broadcast query block (:func:`knn_batch`) and
+    for the exact verify of LSH candidates;
   * bounded broadcast tier (:func:`_pairs_broadcast`) — the right side
     (the whole corpus for a self-join) is collected under a hard row
     guard (``BROADCAST_MAX_ROWS``) and broadcast; the left side streams
@@ -49,7 +50,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.nputil import round_half_away
@@ -100,6 +101,25 @@ def knn_for_query(
         df.select(id_col, F.round(dot_with(vec_col, query), ndigits).alias("cos"))
         .orderBy(F.desc("cos"), F.asc(id_col))
         .limit(k)
+    )
+
+
+def knn_batch(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact top-k neighbours of every query, JVM tier — REPOSE's local
+    top-k + merge shape.  The ``queries`` block ``(query_id, q_emb, …)``
+    is broadcast onto every ``corpus`` ``(vec_id, emb, …)`` partition,
+    a query never matches its own ``vec_id``, each pair scores ``cos =
+    round(_dot(emb, q_emb), 6)``, and ``rnk`` numbers each query's
+    pairs by ``(cos desc, vec_id)``.  Returns the ``rnk ≤ k`` rows with
+    every other column of both sides but ``q_emb``.  The corpus never
+    shuffles; only the scored pairs reach the per-query window."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return (
+        corpus.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
+        .withColumn("cos", F.round(_dot("emb", "q_emb"), 6))
+        .drop("q_emb")
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
     )
 
 

@@ -286,6 +286,71 @@ def test_vecops_knn_for_query(spark, emb_df):
     assert got == [int(v) for v in want]
 
 
+def test_vecops_knn_batch_matches_numpy(spark, emb_df):
+    """knn_batch equals a numpy brute force over the rounded scores:
+    no query is its own neighbour, ranks follow (cos desc, vec_id), and
+    a planted tie that only rounding creates goes to the smaller id."""
+    from pyspark_caffe_spark.nputil import round_half_away
+
+    _, mat = emb_df
+    q0 = mat[0]
+    near = q0 + 1e-5 * mat[1]
+    near /= np.linalg.norm(near)  # raw cos 1 - O(1e-11): rounds to 1.0
+    ids = np.arange(42)
+    corpus_mat = np.vstack([mat, near, q0])  # id 40 = near, id 41 = exact copy
+    assert corpus_mat[41] @ q0 > corpus_mat[40] @ q0
+    rows = [(int(i), [float(v) for v in corpus_mat[i]], int(i) % 3) for i in ids]
+    corpus = spark.createDataFrame(rows, schema="vec_id long, emb array<double>, tag int")
+    queries = corpus.filter("vec_id < 4").select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), F.col("tag").alias("q_tag")
+    )
+    out = vecops.knn_batch(corpus, queries, 3)
+    assert "q_emb" not in out.columns and {"emb", "tag", "q_tag"} <= set(out.columns)
+    got = sorted(
+        (r["query_id"], r["rnk"], r["vec_id"], r["cos"], r["q_tag"])
+        for r in out.collect()
+    )
+    want = []
+    for qi in range(4):
+        scores = round_half_away(corpus_mat @ corpus_mat[qi], 6)
+        order = [i for i in np.lexsort((ids, -scores)) if i != qi][:3]
+        want += [(qi, r + 1, int(i), float(scores[i]), qi % 3) for r, i in enumerate(order)]
+    assert got == sorted(want)
+    # query 0 ties at 1.0 between ids 40 and 41: the smaller id ranks first
+    assert [g[2] for g in got if g[0] == 0][:2] == [40, 41]
+
+
+def test_extract_features_multi_head_matches_rounded_numpy(spark, emb_df):
+    """A 3-head extract_features pass with ndigits=6 equals
+    round_half_away(x @ W.T, 6), including a score that sits exactly
+    on the half (2.5e-6 → 3e-6, where np.round gives 2e-6)."""
+    from pyspark_caffe_spark.nputil import round_half_away
+
+    _, mat = emb_df
+    w = np.round(np.random.default_rng(9).standard_normal((3, 8)), 6)
+    w[0] = [1.0] + [0.0] * 7
+    half = np.array([[2.5e-6] + [0.0] * 7])
+    x = np.vstack([mat, half])
+    rows = [(i, [float(v) for v in x[i]]) for i in range(len(x))]
+    df = spark.createDataFrame(rows, schema="vec_id long, emb array<double>")
+    out = model.extract_features(df, model.LinearModel(w), "emb", "f", ndigits=6)
+    got = np.array([r["f"] for r in out.orderBy("vec_id").collect()])
+    assert got.shape == (len(x), 3)
+    assert np.allclose(got, round_half_away(x @ w.T, 6), rtol=0, atol=1e-12)
+    assert got[-1, 0] == 3e-6
+
+
+def test_multi_head_argmax_first_max_wins(spark):
+    """ml_multi_model_apply's array_position(array_max) argmax picks
+    the FIRST head on a tie, as np.argmax and the oracle's CASE do."""
+    from pyspark_caffe_spark.queries.ml import _argmax
+
+    scores = [[0.5, 0.7, 0.7], [0.2, 0.2, 0.1], [-1.0, -1.0, -1.0], [0.0, 0.1, 0.3]]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(scores)], "i int, s array<double>")
+    got = [r["best"] for r in df.select("i", _argmax(F.col("s")).alias("best")).orderBy("i").collect()]
+    assert got == [int(v) for v in np.argmax(np.array(scores), axis=1)] == [1, 0, 0, 2]
+
+
 def test_python_datasource_partition_parallelism(spark):
     """The custom Python DataSource must expose its declared
     parallelism: 8 InputPartitions -> 8 Spark partitions, disjoint

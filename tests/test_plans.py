@@ -165,7 +165,7 @@ CASES = [
     ("ml_model_apply", r"ArrowEvalPython", r"BatchEvalPython", "model apply is an Arrow-batched pandas UDF, never row-at-a-time Python"),
     ("ml_feature_extract", r"ArrowEvalPython", r"BatchEvalPython", "feature extraction is Arrow-batched, never row-at-a-time Python"),
     ("ml_predict_join", r"ArrowEvalPython", r"BatchEvalPython|CartesianProduct", "scoring UDF is Arrow-batched; the prediction join stays equi"),
-    ("ml_multi_model_apply", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "multi-model scoring is JVM expression arithmetic at scan speed"),
+    ("ml_multi_model_apply", r"ArrowEvalPython", r"Exchange|BatchEvalPython|MapInPandas", "multi-model scoring is one Arrow-batched model pass, no shuffle"),
     ("ml_quantize_int8", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "int8 quantization is JVM array arithmetic at scan speed"),
     ("ml_pca_project", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "PCA projection is JVM array arithmetic at scan speed"),
     ("join_exists_flag", r"BroadcastHashJoin", r"CartesianProduct|BroadcastNestedLoopJoin", "EXISTS flag is an equi-join, never a correlated loop"),

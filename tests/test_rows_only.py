@@ -122,7 +122,8 @@ def test_dedup_simhash_recall(spark, sf_dir):
 def test_sim_knn_lsh_recall(spark, sf_dir):
     """Deep check behind the key's recall_ok flag: MLlib LSH candidate
     pairs cover ≥ 80% of the exact cosine ≥ 0.4 pairs."""
-    from pyspark_caffe_spark.queries.similarity import _load_emb, _mllib_lsh_pairs
+    from pyspark_caffe_spark.queries.similarity import _mllib_lsh_pairs
+    from pyspark_caffe_spark.tables import load_embeddings
 
     exact = {
         (r["id_a"], r["id_b"])
@@ -130,7 +131,7 @@ def test_sim_knn_lsh_recall(spark, sf_dir):
     }
     approx = {
         (r["id_a"], r["id_b"])
-        for r in _mllib_lsh_pairs(_load_emb(spark, sf_dir)).collect()
+        for r in _mllib_lsh_pairs(load_embeddings(spark, sf_dir)).collect()
     }
     assert exact, "exact threshold join returned no pairs - vacuous recall test"
     recall = len(exact & approx) / len(exact)
@@ -141,10 +142,11 @@ def test_sim_knn_lsh_recall(spark, sf_dir):
 
 def test_sim_lsh_bucketed(spark, sf_dir):
     from pyspark_caffe_spark import vecops
-    from pyspark_caffe_spark.queries.similarity import _load_emb, LSH_PLANES
+    from pyspark_caffe_spark.queries.similarity import LSH_PLANES
+    from pyspark_caffe_spark.tables import load_embeddings
 
     sizes = (
-        vecops.lsh_bucket(_load_emb(spark, sf_dir), LSH_PLANES)
+        vecops.lsh_bucket(load_embeddings(spark, sf_dir), LSH_PLANES)
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"))
         .collect()

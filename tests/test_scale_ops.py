@@ -2171,3 +2171,19 @@ def test_ann_manifest_commit_fchmod_failure_leaves_no_litter(tmp_path, monkeypat
     assert glob.glob(os.path.join(root, so._ANN_GEN_POINTER + ".tmp.*")) == []
     # ...and the live manifest still carries the pre-failure layout
     assert so._ann_manifest_read(root) == live_before
+
+
+def test_ivf_scores_round_half_away_like_the_jvm(spark):
+    """The IVF kernels' score rounding matches the JVM F.round of their
+    exact baseline (vecops.knn_for_query): 2.5e-6 rounds to 3e-6, where
+    np.round's half-to-even gives 2e-6."""
+    import numpy as np
+
+    from pyspark_caffe_spark.queries import scale_ops as so
+
+    x = np.array([[2.5e-6, 0.0], [-2.5e-6, 0.0]])
+    q = np.array([1.0, 0.0])
+    assert so._ivf_scores(x, q).tolist() == [3e-6, -3e-6]
+    assert so._ivf_scores(x, q[None, :])[:, 0].tolist() == [3e-6, -3e-6]
+    jvm = spark.range(1).select(F.round(F.lit(2.5e-6), 6).alias("r")).collect()[0]["r"]
+    assert jvm == 3e-6 and np.round(2.5e-6, 6) == 2e-6
