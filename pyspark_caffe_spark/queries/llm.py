@@ -236,30 +236,34 @@ _NORM_SQL = "LOWER(TRIM(REGEXP_REPLACE({col}, '\\s+', ' ', 'g')))"
     """,
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: xxhash64 of the case/whitespace-normalized
-    text — the exact-dedup key at scale (group by 8-byte fingerprint,
-    never by the full text).
+    """Document fingerprint: the 128-bit ``textops.fingerprint`` of the
+    case/whitespace-normalized text, the key every exact-dedup operator
+    groups, partitions and joins on (never the full text).
 
-    Invariant-literal oracle: the 64-bit value is engine-specific, so
+    Invariant-literal oracle: the hash values are engine-specific, so
     the checked columns are the normalized-text length (cross-engine
-    exact) plus an IN-PLAN injectivity flag — #distinct fingerprints
+    exact) plus an IN-PLAN injectivity flag — #distinct 128-bit keys
     == #distinct normalized texts over the whole corpus (the property
-    that makes the 8-byte key a safe stand-in for the text; a single
-    collision flips every row's boolean). The corpus-level counts ride
-    a broadcast 1-row crossJoin, so the per-doc scan stays map-only."""
+    that makes the 16-byte key a safe stand-in for the text; a single
+    collision flips every row's boolean).
+
+    The audit shuffles each text once, hash-partitioned on its key, so
+    every copy of a key lands in one partition; there each key's
+    distinct normalized texts are counted, and the sums need no second
+    keyed shuffle. The corpus-level counts ride a broadcast 1-row
+    crossJoin, so the per-doc scan stays map-only."""
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select(
-        "doc_id",
-        textops.fingerprint("text").alias("_fp"),
-        textops.normalized("text").alias("_norm"),
+    fp = textops.fingerprint("text")
+    stats = (
+        docs.select("text")
+        .repartition(fp)
+        .groupBy(fp)
+        .agg(F.countDistinct(textops.normalized("text")).alias("_n"))
+        .agg(F.count("*").alias("_dfp"), F.sum("_n").alias("_dnorm"))
     )
-    stats = per_doc.agg(
-        F.countDistinct("_fp").alias("_dfp"),
-        F.countDistinct("_norm").alias("_dnorm"),
-    )
-    return per_doc.crossJoin(F.broadcast(stats)).select(
+    return docs.crossJoin(F.broadcast(stats)).select(
         "doc_id",
-        F.length("_norm").cast("long").alias("norm_len"),
+        F.length(textops.normalized("text")).cast("long").alias("norm_len"),
         (F.col("_dfp") == F.col("_dnorm")).alias("fp_injective"),
     )
 
@@ -301,10 +305,10 @@ _AUG_SQL = """
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by normalized text: group by the normalization key,
-    keep the smallest id. At 100 TB: group by xxhash64(norm) instead of
-    the text itself (see text_fingerprint) — same shuffle shape, 8-byte
-    keys."""
+    """Exact dedup by normalized text: group on its 128-bit fingerprint
+    (``textops.exact_dedup``), keep the smallest id. The shuffle
+    carries 16-byte keys, never the text; the oracle groups by the
+    text itself, so it checks the substitution."""
     docs = _augmented_docs(load_table(spark, sf_dir, "documents"))
     return textops.exact_dedup(docs, "text", "doc_id").select("keep_id", "n_copies")
 
@@ -790,9 +794,10 @@ def pipeline_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus pipeline composition: ingest (with planted
     duplicate pollution) → quality gate → exact dedup (keep min id) →
     per-language stats. One declarative plan: Catalyst fuses the
-    quality filter into the scan side of the dedup shuffle; nothing
-    materializes between stages. The shape every pretraining data job
-    takes at 100 TB."""
+    quality filter into the scan side of the dedup shuffle, which is
+    keyed on the 128-bit ``textops.fingerprint`` (16 bytes, never the
+    text); nothing materializes between stages. The shape every
+    pretraining data job takes at 100 TB."""
     docs = load_table(spark, sf_dir, "documents")
     aug = _augmented_docs(docs)
     enriched = aug.join(
@@ -802,7 +807,7 @@ def pipeline_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = textops.quality_columns("text", STOPWORDS)
     quality = enriched.filter((q["n_words"] >= 20) & (q["stopword_ratio"] < 0.5))
     deduped = (
-        quality.groupBy(textops.normalized("text").alias("_norm"))
+        quality.groupBy(textops.fingerprint("text").alias("_fp"))
         .agg(
             F.min("doc_id").alias("doc_id"),
             F.min("lang").alias("lang"),
@@ -1273,10 +1278,10 @@ def pipeline_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsample → per-doc manifest (id, lang, token count).
 
     Every stage is the scale-correct form: the quality gate is a pure
-    codegen'd map (runs scan-side), dedup shuffles once on the
-    normalization key (at 100 TB: on xxhash64 of it — text_fingerprint),
-    and the subsample is content-deterministic (same LCG gate as
-    sample_seeded) so a snapshot is reproducible regardless of
+    codegen'd map (runs scan-side), dedup shuffles once on the 128-bit
+    ``textops.fingerprint`` of the normalized text (16-byte keys, never
+    the text), and the subsample is content-deterministic (same LCG
+    gate as sample_seeded) so a snapshot is reproducible regardless of
     partitioning. Catalyst pipelines all of it with no driver
     round-trips."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1284,7 +1289,7 @@ def pipeline_training_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = docs.select("doc_id", "lang", "text", q["n_words"].alias("n_words")).filter(
         (q["n_words"] >= 30) & (q["stopword_ratio"] < 0.4)
     )
-    deduped = quality.groupBy(textops.normalized("text").alias("_norm")).agg(
+    deduped = quality.groupBy(textops.fingerprint("text").alias("_fp")).agg(
         F.min("doc_id").alias("doc_id"),
         F.min("lang").alias("lang"),
         F.min("n_words").alias("n_words"),
@@ -1460,26 +1465,26 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the held-out benchmark set. Docs 0-49 stand in for the benchmark;
     the training side is docs 50+ plus 25 PLANTED contaminated copies
     of benchmark docs (ids +1,000,000) that the anti-join must drop.
-    One left-anti join on the normalization key; at 100 TB the key
-    becomes the 8-byte fingerprint (text_fingerprint) and the
-    benchmark side — tiny by definition — broadcasts, so
-    decontamination costs one map-side scan of the corpus. (Real
-    decontamination also n-gram-overlaps; that tier is
-    dedup_ngram_jaccard against the benchmark.)"""
+    One left-anti join on the 128-bit ``textops.fingerprint`` of the
+    normalized text; the benchmark side — tiny by definition —
+    broadcasts as 16-byte keys, never texts, so decontamination costs
+    one map-side scan of the corpus. (Real decontamination also
+    n-gram-overlaps; that tier is dedup_ngram_jaccard against the
+    benchmark.)"""
     docs = load_table(spark, sf_dir, "documents")
-    norm = textops.normalized("text")
-    bench = docs.filter(F.col("doc_id") < 50).select(norm.alias("norm"))
+    fp = textops.fingerprint("text")
+    bench = docs.filter(F.col("doc_id") < 50).select(fp.alias("fp"))
     train = (
         docs.filter(F.col("doc_id") >= 50)
-        .select("doc_id", "lang", norm.alias("norm"))
+        .select("doc_id", "lang", fp.alias("fp"))
         .unionByName(
             docs.filter(F.col("doc_id") < 25).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "lang", norm.alias("norm")
+                (F.col("doc_id") + 1000000).alias("doc_id"), "lang", fp.alias("fp")
             )
         )
     )
     return train.join(
-        F.broadcast(bench), train.norm == bench.norm, "left_anti"
+        F.broadcast(bench), train.fp == bench.fp, "left_anti"
     ).select("doc_id", "lang")
 
 
@@ -1685,11 +1690,11 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     text arrives from several sources, keep the copy from the
     highest-priority source (lowest source number; doc_id tiebreak) —
     the curated-beats-crawl rule of corpus assembly.  Plants 40
-    low-priority 'src99' duplicates (fixtures have none).  One shuffle
-    on the normalization key; at 100 TB group by xxhash64(norm)
-    (8-byte keys) exactly as dedup_exact documents — here the emitted
-    key is MD5 (available in both engines) so the oracle can hash-match
-    values."""
+    low-priority 'src99' duplicates (fixtures have none).  One shuffle,
+    partitioned on the 128-bit ``textops.fingerprint`` of the
+    normalized text.  The emitted key is MD5 (available in both
+    engines) so the oracle can hash-match values; it is projected
+    below the windows, so the text never crosses the shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     aug = docs.select("doc_id", "text", "source").unionByName(
         docs.filter(F.col("doc_id") < 40).select(
@@ -1698,15 +1703,20 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("src99").alias("source"),
         )
     )
-    norm = textops.normalized("text")
-    prio = F.substring("source", 4, 10).cast("int")
-    w = Window.partitionBy(norm).orderBy(prio.asc(), F.col("doc_id").asc())
-    cnt = Window.partitionBy(norm)
+    keyed = aug.select(
+        textops.fingerprint("text").alias("_fp"),
+        F.md5(textops.normalized("text")).alias("norm_key"),
+        F.col("doc_id").alias("keep_id"),
+        F.col("source").alias("keep_source"),
+        F.substring("source", 4, 10).cast("int").alias("_prio"),
+    )
+    w = Window.partitionBy("_fp").orderBy(F.col("_prio").asc(), F.col("keep_id").asc())
+    cnt = Window.partitionBy("_fp")
     return (
-        aug.select(
-            F.md5(norm).alias("norm_key"),
-            F.col("doc_id").alias("keep_id"),
-            F.col("source").alias("keep_source"),
+        keyed.select(
+            "norm_key",
+            "keep_id",
+            "keep_source",
             F.count("*").over(cnt).alias("n_copies"),
             F.row_number().over(w).alias("rk"),
         )
@@ -1741,11 +1751,10 @@ def text_common_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, top-50 by document frequency.
 
     Spans stay array-native until ONE explode; the groupBy is
-    partial-aggregated.  At 100 TB the group key must be
-    xxhash64(span) (8-byte shuffle keys, hash-grouped then one
-    exemplar span joined back) — the string-keyed form here is the
-    oracle-checkable twin, exactly the text_fingerprint/dedup_exact
-    split."""
+    partial-aggregated.  The group key is the span string itself; at
+    100 TB it must be a hash of the span (hash-grouped, then one
+    exemplar span joined back), as dedup_exact groups on the 128-bit
+    ``textops.fingerprint``."""
     docs = load_table(spark, sf_dir, "documents")
     spans = F.array_distinct(textops.shingles_of("text", 16))
     exploded = docs.select("doc_id", F.explode(spans).alias("span"))
@@ -2359,8 +2368,8 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     line document-frequency is a single groupBy with map-side partial
     countDistinct; the reassembly is one groupBy(doc_id) with an
     order-restoring sorted collect.  The line join key is the line
-    text at fixture scale — at 100 TB group and join on xxhash64(line)
-    (8-byte shuffle keys, the textops.exact_dedup discipline) and
+    text at fixture scale — at 100 TB group and join on a hash of the
+    line (the ``textops.fingerprint`` discipline of exact dedup) and
     broadcast the frequent set (boilerplate is tiny by definition)
     into the flagging join."""
     docs = load_table(spark, sf_dir, "documents")

@@ -80,6 +80,33 @@ def test_shingles_and_fingerprint(spark, docs_df):
     assert fps[0] == fps[1] and fps[0] != fps[3]
 
 
+def test_fingerprint_is_128_bit_key_of_normalized_text(spark):
+    rows = [
+        (0, "Spark  Dedup\tKey "),
+        (1, "spark dedup key"),  # equal after case/whitespace normalization
+        (2, "spark dedup keys"),
+        (3, "another text entirely"),
+        (4, None),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, schema="doc_id long, text string").select(
+        "doc_id",
+        textops.fingerprint("text").alias("fp"),
+        F.xxhash64(textops.normalized("text"), F.lit(1)).alias("chained"),
+    )
+    fp_type = df.schema["fp"].dataType
+    assert [(f.name, f.dataType.typeName()) for f in fp_type.fields] == [
+        ("h0", "long"),
+        ("h1", "long"),
+    ]
+    out = {r["doc_id"]: r for r in df.collect()}
+    assert out[0]["fp"] == out[1]["fp"]
+    assert len({out[i]["fp"] for i in (1, 2, 3)}) == 3
+    assert out[4]["fp"] == out[5]["fp"]  # null texts form one group
+    # independent second hash: never Spark's seed-chained xxhash64(norm, 1)
+    assert all(out[i]["fp"]["h1"] != out[i]["chained"] for i in range(4))
+
+
 def test_minhash_pairs_find_near_dup(spark, docs_df):
     pairs = {
         (r["id_a"], r["id_b"])

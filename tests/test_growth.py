@@ -193,8 +193,9 @@ def test_dedup_skew_cap_soundness(spark):
     — the documented story being that a bucket only degenerates like
     that when its members are boilerplate-identical, and those members
     are still collapsed by the EXACT fingerprint pass that every
-    pipeline (pipeline_training_snapshot's groupBy(normalized), the
-    dedup_exact key) runs alongside LSH. This test plants a corpus that
+    pipeline runs alongside LSH: pipeline_training_snapshot and
+    dedup_exact group on the 128-bit textops.fingerprint of the
+    normalized text. This test plants a corpus that
     actually FIRES the cap and proves the composition loses nothing:
 
       * 120 byte-identical boilerplate docs — identical minhash rows,
@@ -237,11 +238,12 @@ def test_dedup_skew_cap_soundness(spark):
         "cap did not fire: boilerplate bucket (120 > 64) still emitted pairs"
     )
 
-    # exact fingerprint pass: normalized-text group representative per doc
+    # exact fingerprint pass: the group representative per doc, keyed on
+    # the 128-bit fingerprint the pipelines group on
     rep_rows = docs.select(
         "doc_id",
         F.min("doc_id")
-        .over(Window.partitionBy(textops.normalized("text")))
+        .over(Window.partitionBy(textops.fingerprint("text")))
         .alias("rep"),
     ).collect()
     rep = {r["doc_id"]: r["rep"] for r in rep_rows}

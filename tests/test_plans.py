@@ -167,7 +167,6 @@ CASES = [
     ("ml_predict_join", r"ArrowEvalPython", r"BatchEvalPython|CartesianProduct", "scoring UDF is Arrow-batched; the prediction join stays equi"),
     ("ml_multi_model_apply", r"ArrowEvalPython", r"Exchange|BatchEvalPython|MapInPandas", "multi-model scoring is one Arrow-batched model pass, no shuffle"),
     ("ml_quantize_int8", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "int8 quantization is JVM array arithmetic at scan speed"),
-    ("ml_pca_project", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "PCA projection is JVM array arithmetic at scan speed"),
     ("join_exists_flag", r"BroadcastHashJoin", r"CartesianProduct|BroadcastNestedLoopJoin", "EXISTS flag is an equi-join, never a correlated loop"),
     ("join_corr_scalar", r"BroadcastHashJoin", r"CartesianProduct", "correlated scalar subquery decorrelates to an equi-join"),
     ("join_snapshot_diff", None, r"CartesianProduct|BroadcastNestedLoopJoin|BatchEvalPython|ArrowEvalPython", "snapshot diff is a full-outer equi-join on the key"),
@@ -224,6 +223,69 @@ def test_dedup_latest_windows_share_one_shuffle(spark, sf_dir):
         plan = plan_of(QUERIES[key](spark, sf_dir))
         n = len(re.findall(r"\(\d+\) Exchange", plan))
         assert n == 1, f"{key}: expected exactly one Exchange, plan has {n}"
+
+
+def _split_top(s: str) -> list[str]:
+    """Split a plan argument list on its top-level commas."""
+    parts, depth, cur = [], 0, ""
+    for ch in s:
+        if ch == "," and depth == 0:
+            parts.append(cur.strip())
+            cur = ""
+            continue
+        depth += (ch in "([") - (ch in ")]")
+        cur += ch
+    return parts + [cur.strip()]
+
+
+def _text_keys(plan: str) -> list[str]:
+    """The hash-partitioning keys and broadcast columns of a formatted
+    plan that are the raw text column or its normalized text, each
+    resolved through the ``expr AS name#id`` aliases of the plan."""
+    defs = {}
+    for lst in re.findall(r"^(?:Output|Results|Keys) \[\d+\]: \[(.*)\]$", plan, re.M):
+        for item in _split_top(lst):
+            m = re.fullmatch(r"(.+) AS (\w+#\d+L?)", item)
+            if m:
+                defs[m.group(2)] = m.group(1)
+
+    def resolve(expr: str) -> str:
+        while expr in defs:
+            expr = defs[expr]
+        return expr
+
+    keys = [
+        k
+        for args in re.findall(r"Arguments: hashpartitioning\((.*)\), \w+, \[plan_id", plan)
+        for k in _split_top(args)[:-1]  # the last argument is the partition count
+    ]
+    keys += [
+        k
+        for cols in re.findall(r"BroadcastExchange\nInput \[\d+\]: \[(.*)\]", plan)
+        for k in _split_top(cols)
+    ]
+    text = re.compile(r"text#\d+|lower\(trim\(regexp_replace\(.*")
+    return [k for k in keys if text.fullmatch(resolve(k))]
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "dedup_exact",
+        "pipeline_corpus",
+        "pipeline_training_snapshot",
+        "dedup_source_priority",
+        "dedup_decontaminate",
+    ],
+)
+def test_exact_dedup_keys_on_fingerprint(key, spark, sf_dir):
+    """Every exact-dedup site groups, partitions or broadcast-joins on
+    the 128-bit textops.fingerprint: neither the text column nor its
+    normalized text is a shuffle key or a broadcast column."""
+    plan = plan_of(QUERIES[key](spark, sf_dir))
+    assert "hashpartitioning" in plan or "BroadcastExchange" in plan, key
+    bad = _text_keys(plan)
+    assert not bad, f"{key}: text crosses an exchange as {bad}"
 
 
 def test_q21_single_lineitem_scan(spark, sf_dir):

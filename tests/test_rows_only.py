@@ -171,8 +171,9 @@ def test_text_ngram_hash(spark, sf_dir):
 
 
 def test_text_fingerprint(spark, sf_dir):
-    """Deep check behind the key's fp_injective flag: raw fingerprints
-    are collision-free on the fixture corpus (no duplicate texts)."""
+    """Deep check behind the key's fp_injective flag: the 128-bit
+    fingerprints every exact-dedup operator keys on are collision-free
+    on the fixture corpus (no duplicate texts)."""
     from pyspark_caffe_spark import textops
 
     docs = load_table(spark, sf_dir, "documents")
