@@ -1232,11 +1232,15 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5 — stable across engines), group, keep the smallest id. The
     canonical first pass over a scraped image/audio corpus: byte-exact
     duplicates collapse BEFORE any expensive decode or embedding step,
-    and the shuffle carries (16-byte hash, id) — never the payload.
-    Payloads here are the documents' bytes standing in for media blobs
-    (no image libs in this container); 50 byte-identical copies are
-    planted at ids +1,000,000. The Spark side hashes the BINARY
-    column — exactly what it would do on real image bytes."""
+    and the shuffle carries (16-byte hash, id) — never the payload:
+    the group key is ``unhex(md5(payload))``, hexed (lower-case, as
+    md5 prints) only after the aggregate, so neither the payload nor
+    the 32-char hex string crosses the exchange (sf0.1: 107,109 →
+    90,100 shuffle B against the hex key).  Payloads here are the
+    documents' bytes standing in for media blobs (the package has no
+    image-library dependency); 50 byte-identical copies are planted at
+    ids +1,000,000. The Spark side hashes the BINARY column — exactly
+    what it would do on real image bytes."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") < 50).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
@@ -1245,8 +1249,9 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )
     return (
-        media.groupBy(F.md5("payload").alias("content_hash"))
+        media.groupBy(F.unhex(F.md5("payload")).alias("_h"))
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
+        .select(F.lower(F.hex("_h")).alias("content_hash"), "keep_id", "n_copies")
     )
 
 
@@ -1579,10 +1584,23 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
       bare scan+projection, identical in both branches, so round 18's
       ``sum(least(1, n_t))`` pruning workaround is no longer needed
       and dfq is a plain count again);
-    * the exchange carries (doc_id, text) — strictly fewer bytes than
+    * the exchange carries (doc_id, bag) — strictly fewer bytes than
       the exploded token rows it replaces (each token duplicates
       doc_id and tokenization overhead), and AQE still coalesces it
-      (no pinned partition count).
+      (no pinned partition count).  ``bag`` is
+      ``textops.word_bag(text)``, the text's tokens sorted: everything
+      above the exchange needs only each token's count per document,
+      never the word order, and the sorted repeats compress as zstd
+      runs.  Key shuffle bytes, text → bag (``tools/dryrun_sweep.py``,
+      2 cores, zstd): sf0.01 40,871 → 26,622 B, sf0.1 388,607 →
+      256,416 B, 3x sf0.1 1,318,486 → 879,116 B; same rows, same 5
+      jobs.  The price is a split, a sort and a join per document
+      on the map side: warm, the key's executor CPU stays within
+      run-to-run noise, but perfbench's traced LLM pass reads about
+      0.2 s more.  The sorted ``array<string>`` itself ships more than
+      the text (471,229 B at sf0.1); run-length (token, count) arrays
+      built with ``F.aggregate`` ship about 12% more than the bag and
+      ran the key 2–3x slower.
 
     The idf join broadcasts ``dfq`` by explicit hint (guide §3.1):
     dfq is vocabulary-sized — Zipf vocab ≪ corpus, the same property
@@ -1596,8 +1614,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 0.81 → 0.76 s, zero row diffs at both scales."""
     docs = load_table(spark, sf_dir, "documents")
     n_docs = float(row_count(spark, sf_dir, "documents"))
-    by_doc = docs.select("doc_id", "text").repartition("doc_id")
-    toks = by_doc.select("doc_id", F.explode(textops.words_of("text")).alias("token"))
+    by_doc = docs.select("doc_id", textops.word_bag("text").alias("bag")).repartition("doc_id")
+    toks = by_doc.select("doc_id", F.explode(textops.words_of("bag")).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("n_t"))
     dfq = tf.groupBy("token").agg(F.count("*").alias("dfreq"))
     scored = (
@@ -1694,7 +1712,10 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned on the 128-bit ``textops.fingerprint`` of the
     normalized text.  The emitted key is MD5 (available in both
     engines) so the oracle can hash-match values; it is projected
-    below the windows, so the text never crosses the shuffle."""
+    below the windows as the 16-byte ``unhex(md5(norm))``, so the text
+    never crosses the shuffle, and hexed only after the ``rk = 1``
+    filter (sf0.1: 222,011 → 190,808 shuffle B against shipping the
+    32-char hex string)."""
     docs = load_table(spark, sf_dir, "documents")
     aug = docs.select("doc_id", "text", "source").unionByName(
         docs.filter(F.col("doc_id") < 40).select(
@@ -1705,7 +1726,7 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keyed = aug.select(
         textops.fingerprint("text").alias("_fp"),
-        F.md5(textops.normalized("text")).alias("norm_key"),
+        F.unhex(F.md5(textops.normalized("text"))).alias("_key"),
         F.col("doc_id").alias("keep_id"),
         F.col("source").alias("keep_source"),
         F.substring("source", 4, 10).cast("int").alias("_prio"),
@@ -1714,14 +1735,14 @@ def dedup_source_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = Window.partitionBy("_fp")
     return (
         keyed.select(
-            "norm_key",
+            "_key",
             "keep_id",
             "keep_source",
             F.count("*").over(cnt).alias("n_copies"),
             F.row_number().over(w).alias("rk"),
         )
         .filter((F.col("rk") == 1) & (F.col("n_copies") > 1))
-        .drop("rk")
+        .select(F.lower(F.hex("_key")).alias("norm_key"), "keep_id", "keep_source", "n_copies")
     )
 
 
@@ -1752,9 +1773,11 @@ def text_common_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spans stay array-native until ONE explode; the groupBy is
     partial-aggregated.  The group key is the span string itself; at
-    100 TB it must be a hash of the span (hash-grouped, then one
-    exemplar span joined back), as dedup_exact groups on the 128-bit
-    ``textops.fingerprint``."""
+    100 TB it must be the span's 128-bit ``textops.fingerprint``
+    (hash-grouped, then one exemplar span joined back), as dedup_exact
+    groups — a 64-bit ``xxhash64`` collides at 10¹¹ spans.
+    Fingerprints do not compress while the fixture's repeated spans
+    do, so that key change needs its own shuffle-byte measurement."""
     docs = load_table(spark, sf_dir, "documents")
     spans = F.array_distinct(textops.shingles_of("text", 16))
     exploded = docs.select("doc_id", F.explode(spans).alias("span"))
@@ -2368,10 +2391,13 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     line document-frequency is a single groupBy with map-side partial
     countDistinct; the reassembly is one groupBy(doc_id) with an
     order-restoring sorted collect.  The line join key is the line
-    text at fixture scale — at 100 TB group and join on a hash of the
-    line (the ``textops.fingerprint`` discipline of exact dedup) and
-    broadcast the frequent set (boilerplate is tiny by definition)
-    into the flagging join."""
+    text at fixture scale — at 100 TB group and join on the line's
+    128-bit ``textops.fingerprint`` (the exact-dedup discipline; a
+    64-bit ``xxhash64`` collides at 10¹¹ lines) and broadcast the
+    frequent set (boilerplate is tiny by definition) into the flagging
+    join.  Fingerprints do not compress while the fixture's repeated
+    lines do, so that key change needs its own shuffle-byte
+    measurement."""
     docs = load_table(spark, sf_dir, "documents")
     aug = docs.select(
         "doc_id",
@@ -2552,8 +2578,11 @@ def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase host, strip leading www. and :443, strip trailing path
     slashes, drop the fragment, drop utm_* params, SORT surviving
     params.  All codegen'd regexp/array ops — a pure scan-side map at
-    100 TB — followed by ONE groupBy on the canonical key (at scale:
-    on xxhash64 of it, the exact-dedup discipline)."""
+    100 TB — followed by ONE groupBy on the canonical key.  At that
+    scale group on its 128-bit ``textops.fingerprint`` (the exact-dedup
+    discipline), not on a 64-bit ``xxhash64``, which collides at 10¹¹
+    keys; 16 random bytes do not compress while the fixture's URLs do,
+    so such a key change needs its own shuffle-byte measurement."""
     docs = load_table(spark, sf_dir, "documents")
     base = F.expr("doc_id div 5").cast("string")
     v = F.col("doc_id") % 5

@@ -107,6 +107,27 @@ def test_fingerprint_is_128_bit_key_of_normalized_text(spark):
     assert all(out[i]["fp"]["h1"] != out[i]["chained"] for i in range(4))
 
 
+def test_word_bag_keeps_token_multiset(spark):
+    texts = [None, "", " ", "a  b", " lead", "trail ", "  both  ", "b a b c a b", "x"]
+    df = spark.createDataFrame(list(enumerate(texts)), schema="doc_id long, text string")
+    out = df.select(
+        "doc_id",
+        textops.words_of("text").alias("words"),
+        textops.word_bag("text").alias("bag"),
+        textops.words_of(textops.word_bag("text")).alias("bag_words"),
+    ).collect()
+    assert len(out) == len(texts)
+    for r in out:
+        if texts[r["doc_id"]] is None:
+            assert r["bag"] is None and r["bag_words"] is None
+            continue
+        assert sorted(r["bag_words"]) == sorted(r["words"]), (texts[r["doc_id"]], r["bag"])
+        assert r["bag_words"] == sorted(r["bag_words"])  # equal tokens sit next to each other
+    bags = {texts[r["doc_id"]]: r["bag"] for r in out}
+    assert bags["a  b"] == " a b"  # the empty token of the double space is kept
+    assert bags["b a b c a b"] == "a a b b b c"
+
+
 def test_minhash_pairs_find_near_dup(spark, docs_df):
     pairs = {
         (r["id_a"], r["id_b"])

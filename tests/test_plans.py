@@ -238,10 +238,9 @@ def _split_top(s: str) -> list[str]:
     return parts + [cur.strip()]
 
 
-def _text_keys(plan: str) -> list[str]:
-    """The hash-partitioning keys and broadcast columns of a formatted
-    plan that are the raw text column or its normalized text, each
-    resolved through the ``expr AS name#id`` aliases of the plan."""
+def _resolver(plan: str):
+    """Resolve a formatted plan's attribute (``name#id``) to the
+    expression its ``expr AS name#id`` alias defines."""
     defs = {}
     for lst in re.findall(r"^(?:Output|Results|Keys) \[\d+\]: \[(.*)\]$", plan, re.M):
         for item in _split_top(lst):
@@ -254,11 +253,24 @@ def _text_keys(plan: str) -> list[str]:
             expr = defs[expr]
         return expr
 
-    keys = [
+    return resolve
+
+
+def _hash_keys(plan: str) -> list[str]:
+    """The hash-partitioning keys of a formatted plan's exchanges."""
+    return [
         k
         for args in re.findall(r"Arguments: hashpartitioning\((.*)\), \w+, \[plan_id", plan)
         for k in _split_top(args)[:-1]  # the last argument is the partition count
     ]
+
+
+def _text_keys(plan: str) -> list[str]:
+    """The hash-partitioning keys and broadcast columns of a formatted
+    plan that are the raw text column or its normalized text, each
+    resolved through the ``expr AS name#id`` aliases of the plan."""
+    resolve = _resolver(plan)
+    keys = _hash_keys(plan)
     keys += [
         k
         for cols in re.findall(r"BroadcastExchange\nInput \[\d+\]: \[(.*)\]", plan)
@@ -286,6 +298,26 @@ def test_exact_dedup_keys_on_fingerprint(key, spark, sf_dir):
     assert "hashpartitioning" in plan or "BroadcastExchange" in plan, key
     bad = _text_keys(plan)
     assert not bad, f"{key}: text crosses an exchange as {bad}"
+
+
+@pytest.mark.parametrize("key", ["multimodal_dedup", "dedup_source_priority"])
+def test_md5_dedup_ships_16_byte_key(key, spark, sf_dir):
+    """The md5-keyed dedups ship the 16-byte ``unhex(md5(...))`` binary
+    through their one exchange — multimodal_dedup as its
+    hash-partitioning key, dedup_source_priority as the column its
+    window carries to the output ``norm_key`` — and hex it only after
+    the aggregate or the ``rk = 1`` filter, never the 32-char hex
+    string."""
+    plan = plan_of(QUERIES[key](spark, sf_dir))
+    resolve = _resolver(plan)
+    shipped = _hash_keys(plan) + [
+        c
+        for cols in re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]", plan)
+        for c in _split_top(cols)
+    ]
+    md5s = [e for e in map(resolve, shipped) if "md5(" in e]
+    assert md5s, f"{key}: no md5 key crosses the exchange"
+    assert all(e.startswith("unhex(md5(") for e in md5s), f"{key}: {md5s}"
 
 
 def test_q21_single_lineitem_scan(spark, sf_dir):
@@ -883,6 +915,15 @@ def test_tfidf_final_plan_broadcasts_vocab_join(spark, sf_dir):
     assert "ReusedExchange" in final, final[:2000]
     window_part = final.split("BroadcastHashJoin")[0]
     assert "Exchange hashpartitioning" not in window_part, window_part[:2000]
+    # The exchange carries each document's sorted bag of words, not its
+    # text: its child projects (doc_id, array_join(sort_array(split(
+    # text)))) and nothing above it sorts words.
+    lines = final.splitlines()
+    at = lines.index(real_reparts[0])
+    assert re.search(
+        r"Project \[doc_id#\d+L, array_join\(sort_array\(split\(text#", lines[at + 1]
+    ), lines[at + 1]
+    assert not any("sort_array" in ln for ln in lines[:at]), final[:2000]
 
 
 def test_ann_fence_serializes_threaded_writers(tmp_path):
