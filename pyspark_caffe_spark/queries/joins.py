@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import literal_lookup, load_table, nation_lookup
 
 
 @query(
@@ -47,14 +47,20 @@ def join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact ⋈ dim with an explicit broadcast hint: zero shuffle of the
-    600k-row (→100 TB) fact side; dims replicate to every executor."""
+    600k-row (→100 TB) fact side; supplier replicates to every
+    executor.  The 25-row nation join is a driver-side literal lookup
+    (``tables.nation_lookup``): an IN filter for the inner join's
+    drops, ``element_at`` for the name."""
     li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .select("l_orderkey", "l_linenumber", "s_name", "n_name")
+    nations = nation_lookup(spark, sf_dir)
+    supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey").isin(list(nations)))
+    return li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey).select(
+        "l_orderkey",
+        "l_linenumber",
+        "s_name",
+        literal_lookup(
+            F.col("s_nationkey"), {k: n.n_name for k, n in nations.items()}
+        ).alias("n_name"),
     )
 
 
@@ -76,21 +82,24 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style 6-table chain. Hand-ordered dims-last so the two
-    fact tables join first on their shared key; nation/region/supplier
-    broadcast. Date filter lands on the orders scan (pushdown).
+    """TPC-H Q5-style 6-table chain.  The two fact tables join first on
+    their shared key; customer and supplier broadcast onto them.
+    nation and region are fixed-size, so they are resolved on the
+    driver (``tables.nation_lookup``): the ASIA nation keys filter the
+    customer and supplier scans (pushed down as ``In``), and each row's
+    ``n_name`` is a literal-map lookup, so neither dimension is scanned
+    or broadcast.  The date filter lands on the orders scan (pushdown).
     Per-nation revenue is an EXACT money sum (round-11 cent-flip
     audit: ~1.4e9 per nation at 100×, the ROUND(SUM(double)) drift
     class the sweep caught red on agg_unpivot)."""
-    cust = load_table(spark, sf_dir, "customer")
+    asia = nation_lookup(spark, sf_dir, ["ASIA"])
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(list(asia)))
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     li = load_table(spark, sf_dir, "lineitem")
-    supp = load_table(spark, sf_dir, "supplier")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey").isin(list(asia)))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -98,9 +107,11 @@ def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(supp),
             (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("n_name")
+        .groupBy(
+            literal_lookup(
+                F.col("s_nationkey"), {k: n.n_name for k, n in asia.items()}
+            ).alias("n_name")
+        )
         .agg(
             exact_money_sum(
                 F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue"
@@ -897,14 +908,17 @@ def join_q20_semichain(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame twin of nested IN subqueries):
 
       part(name filter) ⋉ lineitem(date filter) → HAVING agg
-        → supplier ⋉ qualifying suppkeys ⋉ region-filtered nations
+        → supplier(region-0-2 nation keys) ⋉ qualifying suppkeys
 
     Scale shape: every probe side is reduced BEFORE touching the next
     table — the name filter prunes part to a broadcastable key list,
     the date filter is pushed to the lineitem scan, the HAVING output
     is |qualifying (supp, part)| rows distinct-ed to supplier keys,
-    and both semi builds broadcast.  No row of supplier ever joins
-    more than once (semi semantics — no fan-out, no dedup pass)."""
+    and both semi builds broadcast.  The nation semi-join is an IN
+    filter on the supplier scan: the qualifying nation keys are read
+    on the driver (``tables.nation_lookup``).  No row of supplier ever
+    joins more than once (semi semantics — no fan-out, no dedup
+    pass)."""
     part_keys = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("red%"))
@@ -920,19 +934,15 @@ def join_q20_semichain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("qty") > 40)
         .select("l_suppkey")
     )
-    nations = (
-        load_table(spark, sf_dir, "nation")
-        .filter(F.col("n_regionkey") < 3)
-        .select("n_nationkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier")
-    return (
-        supp.join(
-            F.broadcast(qualifying), supp.s_suppkey == qualifying.l_suppkey, "left_semi"
-        )
-        .join(F.broadcast(nations), supp.s_nationkey == nations.n_nationkey, "left_semi")
-        .select("s_suppkey", "s_name")
-    )
+    nation_keys = [
+        k
+        for k, n in nation_lookup(spark, sf_dir).items()
+        if n.n_regionkey is not None and n.n_regionkey < 3
+    ]
+    supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey").isin(nation_keys))
+    return supp.join(
+        F.broadcast(qualifying), supp.s_suppkey == qualifying.l_suppkey, "left_semi"
+    ).select("s_suppkey", "s_name")
 
 
 @query(

@@ -8,9 +8,12 @@ l_shipmode / p_container; "late" is expressed as a shipdate lag
 against o_orderdate, partsupp-derived quantities come from lineitem).
 
 Scale notes shared by every key here:
-- dimension tables (part, supplier, customer, nation, region) are
-  pinned ``F.broadcast`` — they stay dimension-sized at 100 TB fact
-  scale, so no fact-side shuffle is ever spent on them;
+- dimension tables (part, supplier, customer) are pinned
+  ``F.broadcast`` — they stay dimension-sized at 100 TB fact scale, so
+  no fact-side shuffle is ever spent on them; nation and region, fixed
+  at 25 and 5 rows at every scale factor, are resolved on the driver
+  (``tables.nation_lookup``) into IN filters and literal-map labels,
+  so they are never scanned or broadcast;
 - the only unavoidable big-big shuffle is lineitem ⋈ orders on the
   order key, and each query does it at most ONCE, after every
   single-table predicate has been pushed to the scans;
@@ -26,7 +29,7 @@ from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_table
+from pyspark_caffe_spark.tables import literal_lookup, load_table, nation_lookup
 
 
 @query(
@@ -102,29 +105,35 @@ def join_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation × customer nation × ship year.
 
     Scale shape: the region pair predicate cannot be split per-scan
-    (either side may be ASIA), so BOTH nation-region maps broadcast
-    onto their fact side first — supplier and customer each shrink to
-    the two-region subset BEFORE the only big shuffle (lineitem ⋈
-    orders on the order key); the asymmetric pair filter then runs as
-    a residual on the joined row.  The two-year shipdate filter is
-    pushed to the lineitem scan."""
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name").isin("ASIA", "EUROPE")
-    )
-    # nation -> region-name map restricted to the two regions in play
-    nr = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select("n_nationkey", "n_name", "r_name")
+    (either side may be ASIA), so supplier and customer are each
+    filtered to the nations of the two regions (an IN filter pushed to
+    the scan, nation keys read on the driver by
+    ``tables.nation_lookup``) and labelled with their nation and region
+    names from literal maps, then broadcast onto their fact side —
+    both shrink to the two-region subset BEFORE the only big shuffle
+    (lineitem ⋈ orders on the order key); the asymmetric pair filter
+    then runs as a residual on the joined row.  The two-year shipdate
+    filter is pushed to the lineitem scan."""
+    nr = nation_lookup(spark, sf_dir, ["ASIA", "EUROPE"])
+    names = {k: n.n_name for k, n in nr.items()}
+    regions = {k: n.r_name for k, n in nr.items()}
     supp = (
         load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nr), F.col("s_nationkey") == nr.n_nationkey)
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"), F.col("r_name").alias("supp_region"))
+        .filter(F.col("s_nationkey").isin(list(nr)))
+        .select(
+            "s_suppkey",
+            literal_lookup(F.col("s_nationkey"), names).alias("supp_nation"),
+            literal_lookup(F.col("s_nationkey"), regions).alias("supp_region"),
+        )
     )
     cust = (
         load_table(spark, sf_dir, "customer")
-        .join(F.broadcast(nr), F.col("c_nationkey") == nr.n_nationkey)
-        .select("c_custkey", F.col("n_name").alias("cust_nation"), F.col("r_name").alias("cust_region"))
+        .filter(F.col("c_nationkey").isin(list(nr)))
+        .select(
+            "c_custkey",
+            literal_lookup(F.col("c_nationkey"), names).alias("cust_nation"),
+            literal_lookup(F.col("c_nationkey"), regions).alias("cust_region"),
+        )
     )
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
@@ -189,28 +198,32 @@ def agg_q8_mktshare(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: part is filtered to one p_type then broadcast-semi
     prunes lineitem FIRST (the most selective reducer); customers
-    collapse to an AMERICA key set via two broadcast hops; orders
-    carry the two-year pushdown.  One big shuffle (order key), one
-    2-row final agg."""
+    collapse to an AMERICA key set by an IN filter on the customer
+    scan, and suppliers take their nation name from a literal map,
+    both from nation keys read on the driver
+    (``tables.nation_lookup``); orders carry the two-year pushdown.
+    One big shuffle (order key), one 2-row final agg."""
     part_keys = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "ECONOMY")
         .select("p_partkey")
     )
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    amer_nations = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select("n_nationkey")
+    amer_keys = list(nation_lookup(spark, sf_dir, ["AMERICA"]))
     cust_keys = (
         load_table(spark, sf_dir, "customer")
-        .join(F.broadcast(amer_nations), F.col("c_nationkey") == F.col("n_nationkey"))
+        .filter(F.col("c_nationkey").isin(amer_keys))
         .select("c_custkey")
     )
+    nations = nation_lookup(spark, sf_dir)
     supp = (
         load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == nation.n_nationkey)
-        .select("s_suppkey", F.col("n_name").alias("nation"))
+        .filter(F.col("s_nationkey").isin(list(nations)))
+        .select(
+            "s_suppkey",
+            literal_lookup(
+                F.col("s_nationkey"), {k: n.n_name for k, n in nations.items()}
+            ).alias("nation"),
+        )
     )
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
@@ -267,8 +280,9 @@ def agg_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     it DOES prune part to a small keyed dim that broadcast-joins (part
     carries the retail price needed in the measure, so a semi-prune is
     not enough — the broadcast join does both jobs in one hop).
-    Supplier/nation broadcast; the single big shuffle is lineitem ⋈
-    orders, needed only for the order year.
+    Supplier broadcasts, labelled with its nation name from a literal
+    map (``tables.nation_lookup``); the single big shuffle is lineitem
+    ⋈ orders, needed only for the order year.
 
     The per-row amount SUBTRACTS two products (cancellation-prone), so
     it is cast to DECIMAL(18,4) before summing on both engines: the
@@ -280,13 +294,16 @@ def agg_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_name").like("%widget%"))
         .select("p_partkey", "p_retailprice")
     )
+    nations = nation_lookup(spark, sf_dir)
     supp = (
         load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(load_table(spark, sf_dir, "nation")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
+        .filter(F.col("s_nationkey").isin(list(nations)))
+        .select(
+            "s_suppkey",
+            literal_lookup(
+                F.col("s_nationkey"), {k: n.n_name for k, n in nations.items()}
+            ).alias("nation"),
         )
-        .select("s_suppkey", F.col("n_name").alias("nation"))
     )
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     li = load_table(spark, sf_dir, "lineitem")
@@ -330,21 +347,27 @@ def join_q10_returned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     most returned revenue in one quarter.
 
     Scale shape: both single-table predicates (quarter on orders,
-    return flag on lineitem) push to their scans; customer+nation
-    broadcast onto the order side, so the one big shuffle is lineitem
+    return flag on lineitem) push to their scans; customer, labelled
+    with its nation name from a literal map (``tables.nation_lookup``),
+    broadcasts onto the order side, so the one big shuffle is lineitem
     ⋈ orders; the top-20 is a TakeOrdered (per-partition heap + driver
     merge), not a global sort.  Per-row revenue is cast to
     DECIMAL(18,4) before summing (bit-identical per-row doubles →
     exact, order-independent group totals in both engines), and the
     ranking tie-breaks on the customer key, so the cut at rank 20 is
     deterministic across engines and partitionings."""
+    nations = nation_lookup(spark, sf_dir)
     cust = (
         load_table(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(load_table(spark, sf_dir, "nation")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
+        .filter(F.col("c_nationkey").isin(list(nations)))
+        .select(
+            "c_custkey",
+            "c_name",
+            "c_acctbal",
+            literal_lookup(
+                F.col("c_nationkey"), {k: n.n_name for k, n in nations.items()}
+            ).alias("n_name"),
         )
-        .select("c_custkey", "c_name", "c_acctbal", "n_name")
     )
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
@@ -608,7 +631,9 @@ def join_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order, supplier) partials first, then order — instead of two
     countDistincts, so no Expand ever multiplies the joined rows
     (round 18); numwait = SUM(n_lines) per supplier after a broadcast
-    nation/supplier hop.  One lineitem scan."""
+    supplier hop, the supplier scan filtered to the two nations' keys
+    (read on the driver by ``tables.nation_lookup``).  One lineitem
+    scan."""
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
@@ -645,16 +670,14 @@ def join_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
     )
+    nation_keys = [
+        k
+        for k, n in nation_lookup(spark, sf_dir).items()
+        if n.n_name in ("NATION_3", "NATION_4")
+    ]
     supp = (
         load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(
-                load_table(spark, sf_dir, "nation").filter(
-                    F.col("n_name").isin("NATION_3", "NATION_4")
-                )
-            ),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
+        .filter(F.col("s_nationkey").isin(nation_keys))
         .select("s_suppkey", "s_name")
     )
     return (

@@ -19,16 +19,20 @@ schema — on every call.  :func:`parquet_schema` infers each file's
 schema once and caches the ``StructType``, so every later load reads
 with an explicit schema and builds its plan with no Spark job;
 :func:`row_count` reads a table's row count from the same footers
-with ``pyarrow`` and caches it the same way.  The DataFrame is never
-cached: each load returns a fresh relation with fresh attribute ids,
-so two loads of one table can be self-joined.  Column pruning and
-predicate pushdown still happen per-query via Catalyst.
+with ``pyarrow`` and caches it the same way; :func:`nation_lookup`
+reads the two fixed-size TPC-H dimensions, ``nation`` and ``region``,
+the same way and hands them to a query as literals, so no query scans
+or broadcasts them.  The DataFrame is never cached: each load returns
+a fresh relation with fresh attribute ids, so two loads of one table
+can be self-joined.  Column pruning and predicate pushdown still
+happen per-query via Catalyst.
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from typing import Iterable, NamedTuple
 
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -147,6 +151,91 @@ def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     return _per_file_version(
         _ROW_COUNTS, path, from_footers, lambda: load_table(spark, sf_dir, name).count()
     )
+
+
+#: Most rows :func:`nation_lookup` reads from ``nation`` or ``region``.
+#: TPC-H fixes them at 25 and 5 at every scale factor; a table past
+#: this is no longer a fixed dimension, and its lookup would put that
+#: many literals into every plan that uses it.
+DIM_ROW_CAP = 1000
+# File version → the validated key rows of a nation or region table.
+_DIM_ROWS: dict[tuple[str, int, int], tuple] = {}
+
+
+class Nation(NamedTuple):
+    """A nation as :func:`nation_lookup` returns it; ``r_name`` is null
+    when no region has its ``n_regionkey``."""
+
+    n_name: str | None
+    n_regionkey: int | None
+    r_name: str | None
+
+
+def _dim_rows(spark: SparkSession, sf_dir: str, name: str, cols: list[str]) -> tuple:
+    """The ``cols`` rows of a fixed-size dimension whose first column
+    is its key, null keys dropped, once per file version."""
+    path = f"{sf_dir}/{name}.parquet"
+
+    def check_size(n: int) -> None:
+        if n > DIM_ROW_CAP:
+            raise ValueError(f"{path}: over {DIM_ROW_CAP} rows, not a fixed-size dimension")
+
+    def checked(rows: list[tuple]) -> tuple:
+        check_size(len(rows))
+        rows = [r for r in rows if r[0] is not None]
+        if len({r[0] for r in rows}) != len(rows):
+            raise ValueError(f"{path}: {cols[0]} is not unique")
+        return tuple(rows)
+
+    def from_file() -> tuple:
+        check_size(row_count(spark, sf_dir, name))
+        t = pq.read_table(path, columns=cols)
+        return checked(list(zip(*(t.column(c).to_pylist() for c in cols))))
+
+    def with_spark() -> tuple:
+        df = load_table(spark, sf_dir, name).select(*cols).limit(DIM_ROW_CAP + 1)
+        return checked([tuple(r) for r in df.collect()])
+
+    return _per_file_version(_DIM_ROWS, path, from_file, with_spark)
+
+
+def nation_lookup(
+    spark: SparkSession, sf_dir: str, regions: Iterable[str] | None = None
+) -> dict[int, Nation]:
+    """``n_nationkey`` → :class:`Nation` for the ``nation`` table of
+    ``sf_dir``, read on the driver, for a query that joins ``nation``
+    (and ``region``) only to label or filter its rows.
+
+    Without ``regions`` it is ``nation`` alone, as a query joining only
+    ``nation`` sees it: every nation with a non-null key, ``r_name``
+    null where no region matches.  With ``regions`` it is ``nation ⋈
+    region`` restricted to those region names: a nation whose region
+    key is null or matches no region is dropped, as the inner join
+    drops it.
+
+    Both tables are read with ``pyarrow`` and cached per file version,
+    so the lookup runs no Spark job; a path ``os.stat`` cannot see is
+    collected with Spark on every call instead.  Raises ``ValueError``
+    if either table has more than :data:`DIM_ROW_CAP` rows or a
+    duplicate non-null key: a literal lookup could not stand in for the
+    join then.
+    """
+    nations = _dim_rows(spark, sf_dir, "nation", ["n_nationkey", "n_name", "n_regionkey"])
+    region_names = dict(_dim_rows(spark, sf_dir, "region", ["r_regionkey", "r_name"]))
+    lookup = {k: Nation(n, rk, region_names.get(rk)) for k, n, rk in nations}
+    if regions is None:
+        return lookup
+    keep = set(regions)
+    return {k: v for k, v in lookup.items() if v.r_name in keep}
+
+
+def literal_lookup(key: Column, mapping: dict[int, str | None]) -> Column:
+    """``mapping[key]`` as a string column: ``element_at`` over a
+    literal map, null for a key not in ``mapping``."""
+    pairs = [F.lit(x) for kv in mapping.items() for x in kv]
+    if not pairs:
+        return F.lit(None).cast("string")
+    return F.element_at(F.create_map(*pairs), key)
 
 
 def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:

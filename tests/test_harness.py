@@ -264,6 +264,91 @@ def test_load_table_reinfers_rewritten_file(spark, sf_dir, tmp_path):
     assert df.count() == t.num_rows == tables.row_count(spark, d, "region") == 2 * n
 
 
+def _write_dims(d, nations, regions) -> str:
+    """Write ``nation`` and ``region`` parquet files of the given rows
+    into the directory ``d`` (made if missing)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir(exist_ok=True)
+    key, name = pa.int32(), pa.string()
+    for table, rows, schema in (
+        ("nation", nations, [("n_nationkey", key), ("n_name", name), ("n_regionkey", key)]),
+        ("region", regions, [("r_regionkey", key), ("r_name", name)]),
+    ):
+        cols = [c for c, _ in schema]
+        t = pa.Table.from_pylist([dict(zip(cols, r)) for r in rows], pa.schema(schema))
+        pq.write_table(t, f"{d}/{table}.parquet")
+    return str(d)
+
+
+def test_nation_lookup_runs_no_job(spark, sf_dir, tmp_path):
+    """The nation/region lookup reads both tables with pyarrow on the
+    driver: even its first call on a file runs no Spark job.  A path
+    ``os.stat`` cannot see takes the Spark-collect fallback and gives
+    the same lookup."""
+    import shutil
+
+    for t in ("nation", "region"):
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    d = str(tmp_path)
+    before = _next_job_id(spark)
+    everything = tables.nation_lookup(spark, d)
+    asia = tables.nation_lookup(spark, d, ["ASIA"])
+    assert _next_job_id(spark) == before, "the nation lookup ran a Spark job"
+    assert len(everything) == 25
+    assert asia and all(n.r_name == "ASIA" for n in asia.values())
+    assert asia == {k: n for k, n in everything.items() if n.r_name == "ASIA"}
+    assert tables.nation_lookup(spark, f"file://{d}") == everything
+
+
+def test_nation_lookup_follows_rewritten_file(spark, tmp_path):
+    """The lookup is cached per file version: a rewritten nation table
+    is read again."""
+    d = _write_dims(tmp_path, [(0, "N0", 0)], [(0, "R0")])
+    assert tables.nation_lookup(spark, d) == {0: tables.Nation("N0", 0, "R0")}
+    _write_dims(tmp_path, [(0, "N0-renamed", 0), (1, "N1", 0)], [(0, "R0")])
+    assert tables.nation_lookup(spark, d) == {
+        0: tables.Nation("N0-renamed", 0, "R0"),
+        1: tables.Nation("N1", 0, "R0"),
+    }
+
+
+def test_nation_lookup_raises_on_duplicate_key_or_over_cap(spark, tmp_path):
+    """A duplicate key or an over-cap table would change what the join
+    it stands for returns, so the lookup raises instead."""
+    import pytest
+
+    d = _write_dims(tmp_path / "a", [(0, "N0", 0), (0, "N0b", 0)], [(0, "R0")])
+    with pytest.raises(ValueError, match="n_nationkey is not unique"):
+        tables.nation_lookup(spark, d)
+    d = _write_dims(tmp_path / "b", [(0, "N0", 0)], [(0, "R0"), (0, "R0b")])
+    with pytest.raises(ValueError, match="r_regionkey is not unique"):
+        tables.nation_lookup(spark, d)
+    many = [(k, f"N{k}", 0) for k in range(tables.DIM_ROW_CAP + 1)]
+    d = _write_dims(tmp_path / "c", many, [(0, "R0")])
+    with pytest.raises(ValueError, match="not a fixed-size dimension"):
+        tables.nation_lookup(spark, d)
+
+
+def test_nation_lookup_drops_what_an_inner_join_drops(spark, tmp_path):
+    """A null nation key never joins, so it is dropped.  A nation whose
+    region key is null or matches no region is dropped once the lookup
+    is limited to region names (nation ⋈ region); without a limit the
+    lookup is nation alone and keeps it with a null ``r_name``."""
+    d = _write_dims(
+        tmp_path,
+        [(None, "NULLKEY", 0), (1, "N1", 0), (2, "ORPHAN", 9), (3, "NOREGION", None)],
+        [(0, "R0"), (None, "R0")],
+    )
+    assert tables.nation_lookup(spark, d) == {
+        1: tables.Nation("N1", 0, "R0"),
+        2: tables.Nation("ORPHAN", 9, None),
+        3: tables.Nation("NOREGION", None, None),
+    }
+    assert tables.nation_lookup(spark, d, ["R0"]) == {1: tables.Nation("N1", 0, "R0")}
+
+
 def test_load_table_events_ts_is_timestamp(spark, sf_dir):
     """The cached schema still drives the events ts normalisation."""
     from pyspark.sql.types import TimestampType

@@ -27,7 +27,9 @@ CASES = [
     ("filter_conj", r"PushedFilters: \[[^\]]*EqualTo\(l_returnflag", None, "equality pushdown"),
     ("project_compute", r"ReadSchema: [^\n]*l_extendedprice", r"ReadSchema: [^\n]*l_shipdate", "column pruning: unused columns not read"),
     ("join_broadcast", r"BroadcastHashJoin", r"SortMergeJoin", "dims broadcast, no fact shuffle"),
-    ("join_multiway", r"BroadcastHashJoin", None, "dims broadcast in q5 chain"),
+    ("join_multiway", r"BroadcastHashJoin", None, "customer/supplier broadcast in q5 chain"),
+    ("join_multiway", r"PushedFilters: \[[^\]]*In\(s_nationkey", None, "supplier scan filtered to the ASIA nation keys"),
+    ("join_multiway", r"PushedFilters: \[[^\]]*In\(c_nationkey", None, "customer scan filtered to the ASIA nation keys"),
     ("join_q3_topk", r"TakeOrderedAndProject", None, "top-10 is TakeOrdered, not global sort"),
     ("topk_global", r"TakeOrderedAndProject", None, "top-k merge"),
     ("ml_batch_score_topk", r"TakeOrderedAndProject", None, "top-k after model apply"),
@@ -175,6 +177,12 @@ CASES = [
     ("join_theta_range", r"BroadcastNestedLoopJoin", r"CartesianProduct", "range theta join broadcasts the small side, never a cartesian shuffle"),
     ("profile_referential", None, r"CartesianProduct|BatchEvalPython|ArrowEvalPython", "referential-integrity checks ride key equi-joins"),
     ("profile_drift_psi", None, r"CartesianProduct|BatchEvalPython|ArrowEvalPython", "PSI drift bins join on the bin key, all-JVM"),
+] + [
+    (key, None, r"nation\.parquet|region\.parquet", "nation/region resolved on the driver, never scanned")
+    for key in (
+        "join_broadcast", "join_multiway", "join_q7_volume", "agg_q8_mktshare", "agg_q9_profit",
+        "join_q10_returned_topk", "join_q20_semichain", "join_q21_waiting",
+    )
 ]
 
 

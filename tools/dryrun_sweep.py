@@ -14,10 +14,13 @@ collect) run under the job group ``key``; its OK/FAIL line ends with
 ``jobs=N`` read back from the status tracker, so "per-key jobs
 unchanged" is one run of this tool on each side of a change.  Jobs
 Spark starts on its own threads for the key (broadcast exchanges)
-inherit the group and are in the count.  ``shuffle=B`` next to it is
-the shuffle bytes written by every stage submitted while the key ran,
-summed from the driver's status store, so "per-key shuffle bytes
-down, rows unchanged" is one run too.
+inherit the group and are in the count.  ``N`` is the key's own
+count, whatever runs before it: the schema of every fixture table of
+the scale factor is inferred (``tables.parquet_schema``, one footer
+job a file) before the first key, outside any job group.
+``shuffle=B`` next to it is the shuffle bytes written by every stage
+submitted while the key ran, summed from the driver's status store,
+so "per-key shuffle bytes down, rows unchanged" is one run too.
 
 An integer N checks the first N keys of ``queries()`` (the
 sweep-ordered registry — code-changed keys first, then stalest
@@ -80,7 +83,7 @@ def main() -> int:
     spec.loader.exec_module(mod)
 
     from pyspark_caffe_spark import get_spark
-    from pyspark_caffe_spark.tables import TABLE_NAMES
+    from pyspark_caffe_spark.tables import TABLE_NAMES, parquet_schema
     from tests.parity import assert_parity
 
     import duckdb
@@ -88,6 +91,7 @@ def main() -> int:
     spark = get_spark("dryrun-sweep")
     con = duckdb.connect()
     for t in TABLE_NAMES:
+        parquet_schema(spark, f"{sf_dir}/{t}.parquet")
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
