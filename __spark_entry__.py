@@ -113,7 +113,6 @@ _CODE_CHANGED = {
     "sink_ann_index": 18,
     "sim_knn_ivf_serve": 18,
     "sim_knn_ivf_serve_only": 18,
-    "sim_knn_ivf_refresh": 18,
     "sink_ann_index_compact": 18,
     "sink_ann_index_compact_only": 18,
     # round-18 optimization: repeated-subtree materialization, lag-of-
@@ -123,7 +122,6 @@ _CODE_CHANGED = {
     "win_ewma": 18,
     "agg_percentile_exact": 18,
     "agg_stats": 18,
-    "join_q21_waiting": 18,
     "events_rfm": 18,
     "events_attribution": 18,
     # round-18 optimization (resumed session): eager checkpoint of the
@@ -131,18 +129,48 @@ _CODE_CHANGED = {
     "graph_connected_components": 18,
     # round-18 optimization (resumed session): minhash shingle hash
     # from word-hash longs instead of joined shingle strings
-    "dedup_minhash": 18,
     "dedup_candidate_verify": 18,
-    # round-19 optimization: tfidf shuffles (doc_id, text) once by
-    # doc_id — the (doc,token) aggregation and the top-5 window both
-    # ride that partitioning (scored-rows exchange eliminated) and the
-    # dfq branch reuses the same exchange
-    "text_tfidf": 19,
     # round-19 optimization: the refresh's two serves share ONE
     # query-matrix collect (the batch is the same deterministic slice
     # in both — identical probe sets are what the before/after
     # comparison requires)
     "sim_knn_ivf_refresh": 19,
+    # round 20: exact dedup groups, partitions and joins on the 128-bit
+    # textops.fingerprint; md5 keys ship 16 bytes; tfidf ships each
+    # document's sorted bag of words
+    "dedup_exact": 20,
+    "pipeline_corpus": 20,
+    "pipeline_training_snapshot": 20,
+    "dedup_source_priority": 20,
+    "dedup_decontaminate": 20,
+    "text_fingerprint": 20,
+    "multimodal_dedup": 20,
+    "text_tfidf": 20,
+    # round 20: nation and region resolved on the driver as literals
+    "join_multiway": 20,
+    "join_broadcast": 20,
+    "join_q7_volume": 20,
+    "agg_q8_mktshare": 20,
+    "agg_q9_profit": 20,
+    "join_q10_returned_topk": 20,
+    "join_q20_semichain": 20,
+    "join_q21_waiting": 20,
+    # round 20: one as-of bracket (joins.asof_bracket), one gap-session
+    # number, one md5-to-number helper (tables.md5_long), one
+    # planted-recall tail
+    "join_asof": 20,
+    "join_asof_tolerance": 20,
+    "join_asof_nearest": 20,
+    "events_resample_interpolate": 20,
+    "events_sessionize": 20,
+    "events_pattern_detect": 20,
+    "corpus_domain_cap": 20,
+    "corpus_split_leakproof": 20,
+    "text_heavy_hitters": 20,
+    "ml_bootstrap_ci": 20,
+    "ml_permutation_test": 20,
+    "dedup_minhash": 20,
+    "dedup_simhash": 20,
 }
 
 

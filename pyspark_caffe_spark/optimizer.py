@@ -248,9 +248,6 @@ def _try_rewrite_impl(df: DataFrame, **router_kwargs) -> DataFrame | None:
         return None
     va_name, vb_name = match
 
-    # --- both Projects must alias the same base (id, vec) columns ---
-    va_attr = next(o for o in left_out if str(o.name()) == va_name)
-    vb_attr = next(o for o in right_out if str(o.name()) == vb_name)
     # --- output projection: only ids and the rounded cosine.  In the
     # self-join form the ids are pinned by the ordering conjunct; in
     # the bipartite form they are DISCOVERED here — exactly one

@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark import textops
 from pyspark_caffe_spark.money import exact_money_sum
 from pyspark_caffe_spark.materialize import pin
 from pyspark_caffe_spark.registry import query
+from pyspark_caffe_spark.queries.joins import asof_bracket
 from pyspark_caffe_spark.queries.streaming import (
     _drain,
     _read_events_stream,
@@ -630,6 +631,17 @@ def events_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _session_no() -> Column:
+    """Each event's session number within its user, a new session
+    starting after a >30-minute idle gap: LAG(ts) and a running sum of
+    the session-break flags over ONE (user_id; ts, event_id) order,
+    deterministic under ts ties via event_id."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
+    brk = F.when(prev_ts.isNull() | (F.col("ts") > prev_ts + F.expr("INTERVAL 30 MINUTES")), 1).otherwise(0)
+    return F.sum(brk).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+
 @query(
     "events_sessionize",
     oracle="""
@@ -656,23 +668,13 @@ def events_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: a new session starts after a >30-minute
-    idle gap.  LAG + running SUM of session-break flags over ONE
-    (user_id)-partitioned sort — both windows and the final per-session
-    aggregate reuse the same user_id partitioning, so the whole
-    pipeline is a single shuffle of the event stream (AQE coalesces
-    the rest).  Deterministic under ts ties via event_id."""
+    idle gap (:func:`_session_no`).  Both of its windows and the final
+    per-session aggregate reuse the same user_id partitioning, so the
+    whole pipeline is a single shuffle of the event stream (AQE
+    coalesces the rest)."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    brk = F.when(
-        prev_ts.isNull() | (F.col("ts") > prev_ts + F.expr("INTERVAL 30 MINUTES")),
-        1,
-    ).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     return (
-        ev.select("user_id", "ts", F.sum(brk).over(run).alias("session_no"))
+        ev.select("user_id", "ts", _session_no().alias("session_no"))
         .groupBy("user_id", "session_no")
         .agg(
             F.count("*").alias("n_events"),
@@ -1238,8 +1240,6 @@ def events_pattern_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces on the same key.  Flags are integers — exact on both
     engines."""
     ev = load_table(spark, sf_dir, "events")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.expr("INTERVAL 30 MINUTES")
     run = (
         lambda col: F.max(col)
         .over(
@@ -1248,16 +1248,7 @@ def events_pattern_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
     )
-    sess = ev.withColumn("prev_ts", F.lag("ts").over(wu)).withColumn(
-        "session_no",
-        F.sum(
-            F.when(
-                F.col("prev_ts").isNull() | (F.col("ts") > F.col("prev_ts") + gap), 1
-            ).otherwise(0)
-        )
-        .over(wu.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"),
-    )
+    sess = ev.withColumn("session_no", _session_no())
     flagged = (
         sess.withColumn("seen_view", run(F.when(F.col("event_type") == "view", 1).otherwise(0)))
         .withColumn(
@@ -1764,21 +1755,28 @@ def events_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     regularization for rate/trend features where carry-forward
     understates between sparse points.
 
-    Shape: per-user spine (sequence, no global calendar cross join),
-    then ONE union of observations + grid rows and TWO frames over a
-    single user_id sort — the asof-union-window trick — yield the
-    bracketing (t0,v0)/(t1,v1) without any join; grid points outside
-    the observed range drop (no extrapolation).  Exactness: brackets
-    are exact integers (cents, epoch-micros); the single interpolation
-    expression is written identically in both engines, so the doubles
-    match bit-for-bit (equal-timestamp brackets short-circuit to v0 —
-    a 0/0 NaN guard).  Ordering ties (grid point ON an observation)
-    break is_obs-first, making t0 = t and the interpolation collapse
-    to the observed value."""
+    Shape: the observations are repartitioned by user_id, and the
+    per-user bounds aggregate, the grid (sequence, no global calendar
+    cross join) and :func:`joins.asof_bracket` all ride that
+    partitioning, so the grid rows never cross a shuffle (41,273 →
+    12,015 B at sf0.1 against shuffling the union).  The plan holds two
+    such exchanges: Catalyst prunes ``v`` from the bounds' copy, so the
+    two are not one reused exchange.  The bracket brings each grid
+    point its ``prev`` (t0, v0) and ``next`` (t1, v1) observations with
+    no join; grid points outside the observed range drop (no
+    extrapolation).
+    Exactness: brackets are exact integers (cents, epoch-micros); the
+    single interpolation expression is written identically in both
+    engines, so the doubles match bit-for-bit.  The bracket's tie rule
+    (an observation at the grid point's own time is ``prev``) makes
+    t0 = t there, so the interpolation collapses to the observed value,
+    and t1 > t0 always: the oracle's equal-timestamp 0/0 guard never
+    fires here."""
     ev = load_table(spark, sf_dir, "events")
-    obs = ev.filter((F.col("event_type") == "purchase") & (F.col("user_id") < 50)).select(
-        "user_id", F.col("ts").alias("t"),
-        F.round(F.col("value") * 100).cast("long").alias("v"),
+    obs = (
+        ev.filter((F.col("event_type") == "purchase") & (F.col("user_id") < 50))
+        .select("user_id", F.col("ts").alias("t"), F.round(F.col("value") * 100).cast("long").alias("v"))
+        .repartition("user_id")
     )
     bounds = obs.groupBy("user_id").agg(
         (F.date_trunc("hour", F.min("t")) + F.expr("INTERVAL 1 HOUR")).alias("g_start"),
@@ -1790,37 +1788,14 @@ def events_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence("g_start", "g_end", F.expr("INTERVAL 1 HOUR"))
         ).alias("t"),
     )
-    u = obs.withColumn("is_obs", F.lit(1)).unionByName(
-        grid.select("user_id", "t", F.lit(None).cast("long").alias("v"), F.lit(0).alias("is_obs"))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("t"), F.desc("is_obs"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("t"), F.desc("is_obs"))
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    t_obs = F.when(F.col("v").isNotNull(), F.col("t"))
-    m = u.select(
-        "user_id",
-        "t",
-        "is_obs",
-        F.last("v", ignorenulls=True).over(w).alias("v0"),
-        F.last(t_obs, ignorenulls=True).over(w).alias("t0"),
-        F.first("v", ignorenulls=True).over(wf).alias("v1"),
-        F.first(t_obs, ignorenulls=True).over(wf).alias("t1"),
-    )
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp_ltz"))  # noqa: E731 - UTC-pinned session
-    interp = F.when(F.col("t1") == F.col("t0"), F.col("v0").cast("double")).otherwise(
-        F.col("v0").cast("double")
-        + (F.col("v1") - F.col("v0")).cast("double")
-        * ((us("t") - us("t0")).cast("double") / (us("t1") - us("t0")).cast("double"))
+    interp = F.col("prev.v").cast("double") + (F.col("next.v") - F.col("prev.v")).cast("double") * (
+        (us("t") - us("prev.t")).cast("double") / (us("next.t") - us("prev.t")).cast("double")
     )
     return (
-        m.filter((F.col("is_obs") == 0) & F.col("t0").isNotNull() & F.col("t1").isNotNull())
+        # an observation without a value brackets nothing (the oracle's IGNORE NULLS)
+        asof_bracket(grid, obs, "user_id", "t", F.when(F.col("v").isNotNull(), F.struct("t", "v")))
+        .filter(F.col("prev").isNotNull() & F.col("next").isNotNull())
         .select("user_id", F.col("t").alias("grid_ts"), interp.alias("v_interp_cents"))
     )
 

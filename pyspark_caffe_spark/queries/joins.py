@@ -4,13 +4,13 @@ Scale notes apply to every join here: equi-joins against dimension
 tables are explicitly broadcast (dims stay < broadcast threshold even
 at 100 TB fact scale); large-fact equi-joins go through sort-merge /
 shuffled-hash chosen by Catalyst + AQE (skew-join splitting on).
-The as-of join is implemented as a union + window — ONE shuffle by key,
-linear in input, instead of a quadratic range join.
+As-of matching is one union + window, :func:`asof_bracket` — ONE
+shuffle by key, linear in input, instead of a quadratic range join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_caffe_spark.money import exact_money_sum
@@ -226,6 +226,71 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def asof_bracket(probe: DataFrame, ref: DataFrame, by: str, ts: str, carry: Column) -> DataFrame:
+    """The one as-of plan: each ``probe`` row with the ``ref`` rows that
+    bracket it in time within its ``by`` key.
+
+    The two sides are tagged, unioned and windowed once, partitioned by
+    ``by`` and ordered by ``(ts, ref-before-probe)``.  ``carry`` is a
+    struct over the ref rows' columns; each probe row keeps its columns
+    and gains two values of it:
+
+    - ``prev``: from the last ref row with ``ref.ts <= probe.ts``;
+    - ``next``: from the first ref row with ``ref.ts > probe.ts``.
+
+    Either is null when no such row exists, and a ref row whose
+    ``carry`` is null brackets nothing.  The tie rule lives here: a ref
+    row at the probe's own timestamp sorts first, so it is ``prev`` and
+    never ``next``.  Carrying one struct keeps each frame's fields from
+    one row.  Several ref rows at one timestamp tie in the order; which
+    of them ``prev`` carries is then left to the sort.
+
+    Both frames share one sort and one Window node over ONE shuffle on
+    ``by``, and both are single passes: ``prev`` a running ``last``,
+    ``next`` a ``lead ... IGNORE NULLS``.  (``first`` over ``1
+    FOLLOWING .. UNBOUNDED FOLLOWING`` gives the same ``next`` but
+    rescans the rest of the partition for every row: 6.2 s for 10k rows
+    of one key and 70 s for 40k, against 0.5 s and 0.2 s, local[2].)"""
+    side = Window.partitionBy(by).orderBy(ts, "_probe")
+    tagged = probe.withColumn("_probe", F.lit(1)).unionByName(
+        ref.select(by, ts, carry.alias("_c"), F.lit(0).alias("_probe")),
+        allowMissingColumns=True,
+    )
+    return (
+        tagged.select(
+            *probe.columns,
+            "_probe",
+            F.last("_c", ignorenulls=True)
+            .over(side.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .alias("prev"),
+            F.expr("lead(_c) IGNORE NULLS").over(side).alias("next"),
+        )
+        .filter(F.col("_probe") == 1)
+        .drop("_probe")
+    )
+
+
+def _purchases_clicks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The as-of joins' two sides: purchases probe, clicks are the reference."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts"),
+        ev.filter(F.col("event_type") == "click").select("user_id", "ts"),
+    )
+
+
+def _nearest_click(tol_us: int | None = None) -> Column:
+    """The nearer of the bracket's ``prev.ts`` and ``next.ts`` to ``ts``
+    (a distance tie goes to ``prev``); with ``tol_us``, a click further
+    than that many microseconds away is no candidate."""
+    back, fwd = F.col("prev.ts"), F.col("next.ts")
+    d_back = F.unix_micros(F.col("ts")) - F.unix_micros(back)
+    d_fwd = F.unix_micros(fwd) - F.unix_micros(F.col("ts"))
+    if tol_us is not None:
+        back, fwd = F.when(d_back <= tol_us, back), F.when(d_fwd <= tol_us, fwd)
+    return F.when(back.isNull(), fwd).when(fwd.isNull(), back).when(d_back <= d_fwd, back).otherwise(fwd)
+
+
 @query(
     "join_asof",
     oracle="""
@@ -239,33 +304,14 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the latest click at-or-before
     it, per user.
 
-    Spark has no native ASOF; the scalable pattern is union the two
-    sides, window-order by (ts, side) within user, and carry the last
-    non-null click timestamp forward — one shuffle on user_id, O(n)
-    state, no range-join blowup. Equal timestamps: the click sorts
-    first (side flag), matching DuckDB's ``p.ts >= c.ts`` semantics.
+    Spark has no native ASOF; :func:`asof_bracket` is the scalable plan
+    (one shuffle on user_id, one sort, no range join).  Its ``prev``
+    frame is exactly DuckDB's ``p.ts >= c.ts``: a click at the
+    purchase's own timestamp sorts first and is the match.
     """
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", F.lit(None).cast("timestamp").alias("click_ts"), F.lit(1).alias("is_p")
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        "ts",
-        F.col("ts").alias("click_ts"),
-        F.lit(0).alias("is_p"),
-    )
-    unioned = purchases.unionByName(clicks)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_p").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        unioned.withColumn("click_ts", F.last("click_ts", ignorenulls=True).over(w))
-        .filter(F.col("is_p") == 1)
-        .select("event_id", "user_id", "ts", "click_ts")
+    purchases, clicks = _purchases_clicks(spark, sf_dir)
+    return asof_bracket(purchases, clicks, "user_id", "ts", F.struct("ts")).select(
+        "event_id", "user_id", "ts", F.col("prev.ts").alias("click_ts")
     )
 
 
@@ -292,56 +338,19 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     what telemetry alignment actually wants (an hours-stale match is
     worse than no match).
 
-    Scalable decomposition: ONE shuffle on user_id, then TWO window
-    passes over the same partitioning — the backward pass carries the
-    latest click at-or-before each purchase forward (ts asc, click
-    sorts first on ties so an exactly-coincident click is seen), the
-    forward pass carries the earliest click at-or-after backward (ts
-    desc, same tie flag); the nearer of the two candidates inside the
-    tolerance wins, distance ties break to the EARLIER click —
-    matching the oracle's ``ORDER BY abs(Δt), ts``.  No range-join
-    blowup: cost is the sort, state is one timestamp per direction.
-    The lateral-scan oracle is the semantic spec; it would be
-    quadratic per user at scale, which is the point of this plan."""
-    tol_us = 2 * 3600 * 1_000_000
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
+    Plan: :func:`asof_bracket` (one shuffle on user_id, one sort, no
+    range join) gives each purchase its ``prev`` click (latest at or
+    before it) and ``next`` click (earliest after it); the nearer one
+    inside the tolerance wins.  Under the bracket's tie rule a click at
+    the purchase's own timestamp is ``prev`` at distance 0, and
+    distance ties break to ``prev``, the EARLIER click — the oracle's
+    ``ORDER BY abs(Δt), ts``.  The lateral-scan oracle is the semantic
+    spec; it would be quadratic per user at scale, which is the point
+    of this plan."""
+    purchases, clicks = _purchases_clicks(spark, sf_dir)
+    return asof_bracket(purchases, clicks, "user_id", "ts", F.struct("ts")).select(
         "event_id", "user_id", "ts",
-        F.lit(None).cast("timestamp").alias("c_ts"),
-        F.lit(1).alias("is_p"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id", "ts",
-        F.col("ts").alias("c_ts"),
-        F.lit(0).alias("is_p"),
-    )
-    unioned = purchases.unionByName(clicks)
-    w_back = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_p").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").desc(), F.col("is_p").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    back = F.last("c_ts", ignorenulls=True).over(w_back)
-    fwd = F.last("c_ts", ignorenulls=True).over(w_fwd)
-    d_back = F.unix_micros(F.col("ts")) - F.unix_micros(back)
-    d_fwd = F.unix_micros(fwd) - F.unix_micros(F.col("ts"))
-    ok_back = back.isNotNull() & (d_back <= tol_us)
-    ok_fwd = fwd.isNotNull() & (d_fwd <= tol_us)
-    nearest = (
-        F.when(ok_back & ok_fwd, F.when(d_back <= d_fwd, back).otherwise(fwd))
-        .when(ok_back, back)
-        .when(ok_fwd, fwd)
-    )
-    return (
-        unioned.withColumn("click_ts", nearest)
-        .filter(F.col("is_p") == 1)
-        .select("event_id", "user_id", "ts", "click_ts")
+        _nearest_click(tol_us=2 * 3600 * 1_000_000).alias("click_ts"),
     )
 
 
@@ -537,49 +546,16 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction='nearest'``): each purchase matched to its temporally
     closest click per user, ties resolved toward the earlier click.
 
-    Same union+window architecture as join_asof — ONE shuffle on
-    user_id carrying both passes: a backward pass (last click
-    at-or-before, clicks sorting first on ties) and a forward pass
-    (first click at-or-after, clicks sorting after), then an exact
-    microsecond-distance CASE picks the nearer.  Two sorts share the
-    one exchange; no range join, no quadratic candidate set."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts",
-        F.lit(None).cast("timestamp").alias("click_ts"),
-        F.lit(1).alias("is_p"),
+    Same :func:`asof_bracket` plan as join_asof (one shuffle on
+    user_id, one sort, no range join): the exact microsecond distance
+    picks the nearer of ``prev`` and ``next``, and a distance tie goes
+    to ``prev``.  The oracle's at-or-after ``fts`` differs from
+    ``next`` only when a click sits at the purchase's own timestamp,
+    where both candidates are that timestamp at distance 0."""
+    purchases, clicks = _purchases_clicks(spark, sf_dir)
+    return asof_bracket(purchases, clicks, "user_id", "ts", F.struct("ts")).select(
+        "event_id", "user_id", "ts", _nearest_click().alias("near_click_ts")
     )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id", "ts",
-        F.col("ts").alias("click_ts"),
-        F.lit(0).alias("is_p"),
-    )
-    unioned = purchases.unionByName(clicks)
-    back = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_p").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("is_p").desc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    bts = F.last("click_ts", ignorenulls=True).over(back)
-    fts = F.first("click_ts", ignorenulls=True).over(fwd)
-    annotated = unioned.select(
-        "event_id", "user_id", "ts", "is_p", bts.alias("bts"), fts.alias("fts")
-    ).filter(F.col("is_p") == 1)
-    d_back = F.unix_micros(F.col("ts")) - F.unix_micros(F.col("bts"))
-    d_fwd = F.unix_micros(F.col("fts")) - F.unix_micros(F.col("ts"))
-    near = (
-        F.when(F.col("bts").isNull(), F.col("fts"))
-        .when(F.col("fts").isNull(), F.col("bts"))
-        .when(d_back <= d_fwd, F.col("bts"))
-        .otherwise(F.col("fts"))
-    )
-    return annotated.select("event_id", "user_id", "ts", near.alias("near_click_ts"))
 
 
 @query(

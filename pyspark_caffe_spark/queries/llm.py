@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pyspark_caffe_spark import textops, vecops
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import lcg_hash, load_embeddings, load_table, row_count
+from pyspark_caffe_spark.tables import lcg_hash, load_embeddings, load_table, md5_long, row_count
 from pyspark_caffe_spark.textops import STOPWORDS
 
 # Marker words per language for the (deliberately simple, deterministic)
@@ -360,10 +360,20 @@ _JACCARD_EDGES_SQL = """
 
 
 
-def _planted_pairs(spark: SparkSession, n_dups: int = 50) -> DataFrame:
-    """The ground-truth near-dup pairs _perturbed_docs plants: (i, i+1e6)."""
-    return spark.range(n_dups).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1000000).alias("id_b")
+def _planted_recall(spark: SparkSession, docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The near-dup candidate keys' one invariant row: ``n_docs_aug``,
+    the row count of the ACTUAL perturbed frame ``docs`` (not base + a
+    literal 50, which would tautologically equal the oracle's
+    expression: a dropped or duplicated plant breaks the cross-engine
+    value), and ``recall_ok``, whether ``pairs`` holds ≥ 40 (80%) of
+    the 50 pairs ``_perturbed_docs`` plants, (i, i + 1e6) — a broadcast
+    semi-join of that truth table against the candidates."""
+    planted = spark.range(50).select(F.col("id").alias("id_a"), (F.col("id") + 1000000).alias("id_b"))
+    found = planted.join(pairs, ["id_a", "id_b"], "left_semi").agg(F.count("*").alias("_found"))
+    return (
+        docs.agg(F.count("*").alias("n_docs_aug"))
+        .crossJoin(F.broadcast(found))
+        .select("n_docs_aug", (F.col("_found") >= 40).alias("recall_ok"))
     )
 
 
@@ -387,11 +397,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str, num_hashes: int = 32, bands:
     not O(n²).
 
     Invariant-literal oracle: the candidate pairs themselves are
-    hash-seed-specific, so the emitted row is the augmented corpus
-    size plus an IN-PLAN recall flag — ≥ 80% of the 50 planted
-    near-dup pairs (a broadcast semi-join of the tiny truth table
-    against the candidates; the full LSH pipeline still runs and
-    feeds the flag). Oracle emits literal ``true``.
+    hash-seed-specific, so the emitted row is :func:`_planted_recall`'s
+    augmented corpus size plus IN-PLAN recall flag (the full LSH
+    pipeline still runs and feeds the flag). Oracle emits literal
+    ``true``.
 
     (A first version computed xxhash64(shingle, k) per slot — the 32
     projection columns each re-evaluated the whole shingle-building
@@ -402,17 +411,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str, num_hashes: int = 32, bands:
     pairs = textops.minhash_dedup_pairs(
         docs, "text", "doc_id", num_hashes=num_hashes, bands=bands, shingle_k=5
     )
-    found = _planted_pairs(spark).join(pairs, ["id_a", "id_b"], "left_semi").agg(
-        F.count("*").alias("_found")
-    )
-    # n_docs_aug counts the ACTUAL perturbed frame (not base+literal 50,
-    # which would tautologically equal the oracle's expression): a
-    # dropped or duplicated plant now breaks the cross-engine value.
-    return (
-        docs.agg(F.count("*").alias("n_docs_aug"))
-        .crossJoin(F.broadcast(found))
-        .select("n_docs_aug", (F.col("_found") >= 40).alias("recall_ok"))
-    )
+    return _planted_recall(spark, docs, pairs)
 
 
 def _simhash_pairs(docs: DataFrame) -> DataFrame:
@@ -482,23 +481,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature/blocking design).
 
     Invariant-literal oracle: the 64-bit signatures are engine-
-    specific, so the emitted row is the augmented corpus size plus an
-    IN-PLAN recall flag — ≥ 80% of the 50 planted near-dup pairs
-    recovered by the chunk-blocked candidate join (broadcast semi-join
-    of the truth table; the full simhash pipeline feeds the flag).
-    Oracle emits literal ``true``."""
+    specific, so the emitted row is :func:`_planted_recall`'s augmented
+    corpus size plus IN-PLAN recall flag over the chunk-blocked
+    candidates (the full simhash pipeline feeds the flag).  Oracle
+    emits literal ``true``."""
     base = load_table(spark, sf_dir, "documents")
     docs = _perturbed_docs(base)
-    pairs = _simhash_pairs(docs)
-    found = _planted_pairs(spark).join(pairs, ["id_a", "id_b"], "left_semi").agg(
-        F.count("*").alias("_found")
-    )
-    # count the actual perturbed frame (see dedup_minhash note)
-    return (
-        docs.agg(F.count("*").alias("n_docs_aug"))
-        .crossJoin(F.broadcast(found))
-        .select("n_docs_aug", (F.col("_found") >= 40).alias("recall_ok"))
-    )
+    return _planted_recall(spark, docs, _simhash_pairs(docs))
 
 
 @query(
@@ -730,22 +719,14 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str, depth: int = 4, width: 
     across shards/days by cell-wise addition — the property that makes
     CMS the standard distributed heavy-hitter structure."""
     docs = load_table(spark, sf_dir, "documents")
-
-    def md5_bucket(depth_col, token_col):
-        h = F.conv(
-            F.substring(F.md5(F.concat(depth_col.cast("string"), F.lit(":"), token_col)), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        return F.pmod(h, F.lit(width))
-
+    cell = F.concat(F.col("depth").cast("string"), F.lit(":"), F.col("token"))
     toks = docs.select(F.explode(F.split("text", " ")).alias("token"))
     vocab = toks.groupBy("token").agg(F.count("*").alias("exact_cnt"))
     vb = vocab.select(
         "token",
         "exact_cnt",
         F.explode(F.array(*[F.lit(j) for j in range(depth)])).alias("depth"),
-    ).withColumn("bucket", md5_bucket(F.col("depth"), F.col("token")))
+    ).withColumn("bucket", F.pmod(md5_long(cell, 8), F.lit(width)))
     sketch = vb.groupBy("depth", "bucket").agg(F.sum("exact_cnt").alias("cnt"))
     est = (
         vb.join(F.broadcast(sketch), ["depth", "bucket"])
@@ -2161,9 +2142,9 @@ def corpus_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — so exact duplicates land in the SAME split by
     construction and a near-miss eval set cannot be contaminated by a
     re-crawled copy of a training document (the classic doc-id-split
-    leak).  The gate parses the first 4 hex chars of the fingerprint
-    into a uniform 16-bit integer with plain SUBSTR/ASCII arithmetic
-    — expressible IDENTICALLY in Spark and DuckDB, so the assignment
+    leak).  The gate reads the first 4 hex digits of the fingerprint
+    as a uniform 16-bit integer (``tables.md5_long``; the oracle spells
+    the same number with SUBSTR/ASCII arithmetic), so the assignment
     (not just the counts) is cross-engine exact.
 
     Output: per-split doc and distinct-fingerprint counts plus a
@@ -2174,17 +2155,10 @@ def corpus_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the texts.  At 100 TB the split column is written
     partitionBy so downstream readers partition-prune their split."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.lower(F.col("text"))))
-    hexval = lambda i: (
-        F.ascii(F.substring(F.col("fp"), i, 1))
-        - F.when(F.ascii(F.substring(F.col("fp"), i, 1)) >= 97, 87).otherwise(48)
-    )
+    norm = F.trim(F.lower(F.col("text")))
+    fp = F.md5(norm)
     s = (
-        docs.select("doc_id", fp.alias("fp"))
-        .withColumn(
-            "u16",
-            hexval(1) * 4096 + hexval(2) * 256 + hexval(3) * 16 + hexval(4),
-        )
+        docs.select("doc_id", fp.alias("fp"), md5_long(norm, 4).alias("u16"))
         .withColumn(
             "split",
             F.when(F.col("u16") < 52429, "train")
@@ -2272,14 +2246,6 @@ def corpus_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _md5_rank_key(id_col) -> "F.Column":
-    """Deterministic 60-bit rank key: first 15 md5 hex chars of the id
-    → long.  Content-deterministic (same sample across engines, reruns,
-    partitionings) and uniform — the rank-by-hash idiom that makes a
-    'random' per-group sample reproducible at 100 TB."""
-    return F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10).cast("long")
-
-
 @query(
     "corpus_domain_cap",
     oracle="""
@@ -2321,7 +2287,7 @@ def corpus_domain_cap(spark: SparkSession, sf_dir: str, k: int = 10, salts: int 
     the planted-skew frame, and the oracle IS the single-phase
     spelling."""
     docs = load_table(spark, sf_dir, "documents")
-    h = docs.select("source", "lang", "doc_id", _md5_rank_key("doc_id").alias("hk"))
+    h = docs.select("source", "lang", "doc_id", md5_long(F.col("doc_id").cast("string"), 15).alias("hk"))
     local_w = Window.partitionBy("source", F.pmod("doc_id", F.lit(salts))).orderBy("hk", "doc_id")
     survivors = h.withColumn("_lrk", F.row_number().over(local_w)).filter(F.col("_lrk") <= k)
     global_w = Window.partitionBy("source").orderBy("hk", "doc_id")

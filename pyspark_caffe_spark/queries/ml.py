@@ -31,7 +31,7 @@ from pyspark_caffe_spark.model import (
     train_parameter_averaging,
 )
 from pyspark_caffe_spark.registry import query
-from pyspark_caffe_spark.tables import load_embeddings, load_table
+from pyspark_caffe_spark.tables import load_embeddings, load_table, md5_long
 from pyspark_caffe_spark.vecops import _dot, knn_batch
 
 DIM = 64
@@ -795,8 +795,8 @@ def ml_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism (no RNG): the weight comes from inverting the exact
     Poisson(1) CDF (shortest-round-trip literals) at u =
     hash60(event_id, replicate)/2^60 — content-derived, identical
-    across engines, reruns, and partitionings (the _md5_rank_key
-    idiom).  Replicate sums are exact longs (weight ≤ 5 × cents);
+    across engines, reruns, and partitionings (``tables.md5_long``).
+    Replicate sums are exact longs (weight ≤ 5 × cents);
     boot_mean is one integer-over-integer division — deterministic
     doubles, hash-exact."""
     ev = load_table(spark, sf_dir, "events")
@@ -808,19 +808,7 @@ def ml_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_REPS - 1))).alias("rep"),
     )
-    hk = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("event_id").cast("string"), F.lit(":"), F.col("rep").cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hk = md5_long(F.concat(F.col("event_id").cast("string"), F.lit(":"), F.col("rep").cast("string")), 15)
     u = hk.cast("double") / F.lit(float(1 << 60))
     w = F.lit(5)
     for k, t in reversed(list(enumerate(_POIS1_CDF))):
@@ -1040,22 +1028,10 @@ def ml_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         F.explode(F.sequence(F.lit(0), F.lit(_PERM_REPS - 1))).alias("rep"),
     )
-    hk = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("perm:"),
-                    F.col("event_id").cast("string"),
-                    F.lit(":"),
-                    F.col("rep").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hk = md5_long(
+        F.concat(F.lit("perm:"), F.col("event_id").cast("string"), F.lit(":"), F.col("rep").cast("string")),
+        15,
+    )
     u = hk.cast("double") / F.lit(float(1 << 60))
     flip = rep.select(
         "rep",

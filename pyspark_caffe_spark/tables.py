@@ -11,7 +11,8 @@ here so that every query sees identical, oracle-compatible types:
     with the vectors cast to ``array<double>`` (Spark's ``aggregate``
     with a double accumulator rejects float element types).
   * Hash-gated samples gate on :func:`lcg_hash`, which reduces an id
-    before its multiply so that ids past 8.4e9 cannot overflow int64.
+    before its multiply so that ids past 8.4e9 cannot overflow int64;
+    content-hash ranks and buckets read :func:`md5_long`.
 
 Cost note: ``spark.read.parquet`` without a schema launches a one-task
 Spark job (named ``parquet``) that reads the file footer to infer the
@@ -299,6 +300,15 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: The LCG hash gate as DuckDB SQL, ``{col}`` reduced first like
 #: :func:`lcg_hash`.
 LCG_SQL = "((({col} % 2147483647) * 1103515245 + 12345) % 2147483647)"
+
+
+def md5_long(s: Column, n: int) -> Column:
+    """The first ``n`` hex digits of ``md5(s)`` as a long,
+    ``conv(substring(md5(s), 1, n), 16, 10)``: a uniform content hash
+    that is the same number in Spark and in the DuckDB oracles (which
+    spell it ``CAST('0x' || SUBSTR(MD5(s), 1, n) AS BIGINT)``) and does
+    not depend on partitioning.  ``n`` ≤ 15 keeps it below 2^60."""
+    return F.conv(F.substring(F.md5(s), 1, n), 16, 10).cast("long")
 
 
 def lcg_hash(col: Column, inc: int = 12345) -> Column:

@@ -223,12 +223,12 @@ def test_domain_cap_two_phase_equals_single_phase(spark, sf_dir):
     every source must be capped at exactly k."""
     from pyspark.sql import Window
 
-    from pyspark_caffe_spark.queries.llm import _md5_rank_key, corpus_domain_cap
-    from pyspark_caffe_spark.tables import load_table
+    from pyspark_caffe_spark.queries.llm import corpus_domain_cap
+    from pyspark_caffe_spark.tables import load_table, md5_long
 
     two = corpus_domain_cap(spark, sf_dir, k=7, salts=4)
     h = load_table(spark, sf_dir, "documents").select(
-        "source", "lang", "doc_id", _md5_rank_key("doc_id").alias("hk")
+        "source", "lang", "doc_id", md5_long(F.col("doc_id").cast("string"), 15).alias("hk")
     )
     w = Window.partitionBy("source").orderBy("hk", "doc_id")
     one = (

@@ -36,6 +36,13 @@ RED_HASH = {"rows_match": True, "schema_match": True, "hash_match": False, "err"
 ROWS_ONLY = {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"}
 
 
+def test_sweep_order_lists_name_registered_keys():
+    """Every _CODE_CHANGED and _EXPENSIVE_LAST entry is a QUERIES key:
+    a misspelt entry would silently never reorder anything."""
+    assert set(entry._CODE_CHANGED) <= set(QUERIES), set(entry._CODE_CHANGED) - set(QUERIES)
+    assert set(entry._EXPENSIVE_LAST) <= set(QUERIES), set(entry._EXPENSIVE_LAST) - set(QUERIES)
+
+
 def test_sweep_order_red_then_unswept_then_green(monkeypatch):
     """Red keys first, never-swept second, green last."""
     keys = list(QUERIES)

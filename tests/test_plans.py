@@ -54,7 +54,7 @@ CASES = [
     ("events_transition", r"Window", r"SinglePartition", "per-user LEAD window, never a single global partition"),
     ("fn_variant", r"ReadSchema: [^\n]*props", r"BatchEvalPython|ArrowEvalPython", "VARIANT path extraction is JVM-side"),
     ("scan_count_meta", r"ReadSchema: struct<>", None, "count(*) reads zero data columns"),
-    ("join_asof_nearest", r"Window(.|\n)*Window", r"hashpartitioning(.|\n)*hashpartitioning", "both asof passes share one user_id shuffle"),
+    ("join_asof_nearest", r"Window", r"hashpartitioning(.|\n)*hashpartitioning", "both asof passes share one user_id shuffle"),
     ("text_chunk", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "chunking is a pure map stage: no shuffle, no Python"),
     ("join_scd2", r"BroadcastHashJoin", r"BroadcastNestedLoopJoin|CartesianProduct", "SCD2 validity window rides the equi-key hash join"),
     ("ml_embedding_norm_stats", None, r"BatchEvalPython|ArrowEvalPython", "vector norm stats stay JVM-side"),
@@ -83,8 +83,8 @@ CASES = [
     ("corpus_importance_sample", None, r"Exchange|BatchEvalPython|ArrowEvalPython", "hash-gated importance sampling is a scan-side filter"),
     ("events_path_topk", r"TakeOrderedAndProject", r"SinglePartition", "per-user window, never global; top-20 is TakeOrdered"),
     ("events_user_similarity", r"TakeOrderedAndProject", r"CartesianProduct|BroadcastNestedLoopJoin", "candidates from the trigram inverted-index equi-join, never all-pairs"),
-    ("join_asof_tolerance", r"Window(.|\n)*Window", r"hashpartitioning(.|\n)*hashpartitioning", "backward+forward tolerance passes share one user_id shuffle"),
-    ("corpus_split_leakproof", r"HashAggregate(.|\n)*HashAggregate", r"BatchEvalPython|ArrowEvalPython", "fingerprint split gate is JVM md5/ascii arithmetic, partial-agged"),
+    ("join_asof_tolerance", r"Window", r"hashpartitioning(.|\n)*hashpartitioning", "backward+forward tolerance passes share one user_id shuffle"),
+    ("corpus_split_leakproof", r"HashAggregate(.|\n)*HashAggregate", r"BatchEvalPython|ArrowEvalPython", "fingerprint split gate is JVM md5/conv arithmetic, partial-agged"),
     ("text_containment", r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin", r"CartesianProduct|BroadcastNestedLoopJoin", "candidates from the shingle inverted-index equi-join, never all-pairs"),
     ("text_heavy_hitters", r"BroadcastHashJoin", r"CartesianProduct|BatchEvalPython|ArrowEvalPython", "4096-cell sketch broadcasts onto the vocab; all-JVM md5 arithmetic"),
     ("corpus_domain_cap", r"WindowGroupLimit(.|\n)*WindowGroupLimit", None, "rank-limit pushdown bounds BOTH cap phases map-side"),
@@ -209,16 +209,6 @@ def test_dedup_exact_single_shuffle(spark, sf_dir):
     normalize (lower/trim) is scan-side, the dropDuplicates is one
     hash aggregate, and nothing downstream re-partitions."""
     plan = plan_of(QUERIES["dedup_exact"](spark, sf_dir))
-    n = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert n == 1, f"expected exactly one Exchange, plan has {n}"
-
-
-def test_join_asof_single_shuffle(spark, sf_dir):
-    """The as-of join's backward search rides ONE user-key shuffle:
-    union both sides, one window over (key, ts), filter — a second
-    Exchange would mean the window re-partitions what the union
-    already clustered."""
-    plan = plan_of(QUERIES["join_asof"](spark, sf_dir))
     n = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
@@ -864,14 +854,24 @@ def test_rewrite_declines_when_jvm_internal_moves(spark, sf_dir, monkeypatch):
     assert all(r.cos >= 0.4 for r in rows)
 
 
-def test_resample_single_window_node(spark, sf_dir):
-    """Both bracket frames (backward last + forward first) of
-    events_resample_interpolate share one (partition, order) spec, so
-    the plan must hold exactly ONE Window node — a per-frame window
-    would double the sort."""
-    plan = plan_of(QUERIES["events_resample_interpolate"](spark, sf_dir))
-    n = len(re.findall(r"\(\d+\) Window", plan))
-    assert n == 1, f"expected exactly one Window node, plan has {n}"
+@pytest.mark.parametrize(
+    "key,n_exchange",
+    [("join_asof", 1), ("join_asof_tolerance", 1), ("join_asof_nearest", 1), ("events_resample_interpolate", 2)],
+)
+def test_asof_bracket_one_window(spark, sf_dir, key, n_exchange):
+    """Every as-of key runs joins.asof_bracket: both frames (``prev``
+    and ``next``) share one (partition, order) spec, so the plan holds
+    exactly ONE Window node — a per-frame window would double the
+    sort.  The union is never shuffled twice: the three joins have one
+    Exchange, on user_id under the window.  events_resample_interpolate
+    repartitions its observations by user_id for the bounds aggregate
+    and for the bracket (Catalyst prunes ``v`` from the first, so the
+    two are separate Exchanges), and the grid rows, generated on that
+    partitioning, cross no Exchange at all."""
+    plan = plan_of(QUERIES[key](spark, sf_dir))
+    n_window = len(re.findall(r"\(\d+\) Window", plan))
+    n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
+    assert (n_window, n_ex) == (1, n_exchange), f"plan has {n_window} Window and {n_ex} Exchange nodes"
 
 
 def test_interval_coalesce_single_shuffle(spark, sf_dir):

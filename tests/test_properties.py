@@ -105,38 +105,34 @@ def test_sessionize_order_independent(spark, ts, seed):
 
 
 @given(
-    ts=st.lists(st.tuples(st.integers(0, 1000), st.booleans()), min_size=1, max_size=40),
+    ts=st.lists(st.tuples(st.integers(0, 20), st.booleans()), min_size=1, max_size=40),
 )
 @settings(**SETTINGS)
 def test_asof_union_window_matches_bruteforce(spark, ts):
-    """The union+window as-of rewrite must equal the brute-force
-    'latest click at-or-before each purchase' definition."""
-    rows = [(i, t, "purchase" if is_p else "click") for i, (t, is_p) in enumerate(ts)]
-    df = spark.createDataFrame(rows, "event_id long, t long, kind string")
+    """joins.asof_bracket's two frames equal their brute-force
+    definitions: ``prev`` is the latest ref at-or-before each probe,
+    ``next`` the earliest ref strictly after it.  The narrow timestamp
+    range puts probes and refs on equal timestamps in most examples,
+    which is where the tie rule acts."""
+    from pyspark_caffe_spark.queries.joins import asof_bracket
 
-    p = df.filter(F.col("kind") == "purchase").select(
-        "event_id", "t", F.lit(None).cast("long").alias("click_t"), F.lit(1).alias("is_p")
-    )
-    c = df.filter(F.col("kind") == "click").select(
-        F.lit(None).cast("long").alias("event_id"), "t", F.col("t").alias("click_t"), F.lit(0).alias("is_p")
-    )
-    w = (
-        Window.orderBy(F.col("t").asc(), F.col("is_p").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    got = {
-        r["event_id"]: r["ct"]
-        for r in p.unionByName(c)
-        .withColumn("ct", F.last("click_t", ignorenulls=True).over(w))
-        .filter(F.col("is_p") == 1)
-        .collect()
-    }
-    clicks = sorted(t for t, is_p in ts if not is_p)
+    rows = [(i, i % 2, t, not is_ref) for i, (t, is_ref) in enumerate(ts)]
+    df = spark.createDataFrame(rows, "id long, k long, t long, is_probe boolean")
+    probe = df.filter("is_probe").select("id", "k", "t")
+    ref = df.filter(~F.col("is_probe")).select("k", "t", F.col("id").alias("ref_id"))
+    out = asof_bracket(probe, ref, "k", "t", F.struct("t", "ref_id")).collect()
+    # each frame's fields come from one ref row
+    carried = [f for r in out for f in (r["prev"], r["next"]) if f is not None]
+    assert all(rows[f["ref_id"]][2] == f["t"] for f in carried)
+    got = {r["id"]: (r["prev"] and r["prev"]["t"], r["next"] and r["next"]["t"]) for r in out}
     want = {}
-    for i, (t, is_p) in enumerate(ts):
-        if is_p:
-            prior = [ct for ct in clicks if ct <= t]
-            want[i] = max(prior) if prior else None
+    for i, k, t, is_probe in rows:
+        if is_probe:
+            refs = [rt for _, rk, rt, rp in rows if not rp and rk == k]
+            want[i] = (
+                max((rt for rt in refs if rt <= t), default=None),
+                min((rt for rt in refs if rt > t), default=None),
+            )
     assert got == want
 
 
