@@ -19,14 +19,33 @@ Spark job (named ``parquet``) that reads the file footer to infer the
 schema — on every call.  :func:`parquet_schema` infers each file's
 schema once and caches the ``StructType``, so every later load reads
 with an explicit schema and builds its plan with no Spark job;
-:func:`row_count` reads a table's row count from the same footers
-with ``pyarrow`` and caches it the same way; :func:`nation_lookup`
+:func:`footers` reads a table's rows, row groups and bytes from the
+same footers with ``pyarrow`` and caches them the same way, for
+:func:`row_count` and for the one-split rule below; :func:`nation_lookup`
 reads the two fixed-size TPC-H dimensions, ``nation`` and ``region``,
 the same way and hands them to a query as literals, so no query scans
 or broadcasts them.  The DataFrame is never cached: each load returns
 a fresh relation with fresh attribute ids, so two loads of one table
 can be self-joined.  Column pruning and predicate pushdown still
 happen per-query via Catalyst.
+
+One-split rule: :func:`load_table` returns ``df.coalesce(1)`` when the
+table's footers hold exactly one row group in total and its bytes on
+disk are at most the session's ``spark.sql.files.maxPartitionBytes``
+(read from the session, never set).  The row group is parquet's unit
+of scan parallelism, so such a table is read by one task however
+Spark splits its bytes (a second byte-range split of it reads
+nothing).  The scan reports no partitioning, so without the hint
+every aggregate, window, dedup or global sort over it plans an
+exchange whose map side is that one task; ``coalesce(1)`` is narrow
+and ships nothing, and its ``SinglePartition`` output satisfies
+every clustered, ordered and all-tuples distribution, so Catalyst
+plans none of those exchanges.  The size guard keeps a table that
+one task should not read alone on its parallel plan; a table of several
+row groups (every fact table at scale, and each replica written by
+``tools/make_superscale.py``) keeps its parallel scan and its
+exchanges, and so does a path ``os.stat`` cannot see.  Explicit
+``repartition`` calls and broadcasts are unchanged.
 """
 
 from __future__ import annotations
@@ -117,8 +136,8 @@ def _per_file_version(cache: dict, path: str, compute, uncached):
 # only on the file, since inference runs after ensure_session_confs has
 # forced nanosAsLong: no session key.
 _SCHEMAS: dict[tuple[str, int, int], StructType] = {}
-# File version → its row count.
-_ROW_COUNTS: dict[tuple[str, int, int], int] = {}
+# File version → its footer summary.
+_FOOTERS: dict[tuple[str, int, int], "Footers"] = {}
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
@@ -137,21 +156,38 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     return _per_file_version(_SCHEMAS, path, infer, infer)
 
 
+class Footers(NamedTuple):
+    """What the parquet footers of a table say, plus its bytes on disk."""
+
+    rows: int
+    row_groups: int
+    bytes: int
+
+
+def footers(path: str) -> Footers | None:
+    """The :class:`Footers` of the parquet file or directory at
+    ``path``, read with ``pyarrow`` on the driver once per file
+    version, so it runs no Spark job; ``None`` for a path ``os.stat``
+    cannot see."""
+
+    def read() -> Footers:
+        frags = pq.ParquetDataset(path).fragments
+        return Footers(
+            sum(f.metadata.num_rows for f in frags),
+            sum(f.metadata.num_row_groups for f in frags),
+            sum(os.path.getsize(f.path) for f in frags),
+        )
+
+    return _per_file_version(_FOOTERS, path, read, lambda: None)
+
+
 def row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """The row count of one fixture table, once per file version.
-
-    Sums ``num_rows`` over the parquet footers with ``pyarrow`` on the
-    driver, so it runs no Spark job.  A path ``os.stat`` cannot see is
-    counted with Spark on every call.
+    """The row count of one fixture table, summed from its
+    :func:`footers`, so it runs no Spark job.  A path ``os.stat``
+    cannot see is counted with Spark on every call.
     """
-    path = f"{sf_dir}/{name}.parquet"
-
-    def from_footers() -> int:
-        return sum(f.metadata.num_rows for f in pq.ParquetDataset(path).fragments)
-
-    return _per_file_version(
-        _ROW_COUNTS, path, from_footers, lambda: load_table(spark, sf_dir, name).count()
-    )
+    summary = footers(f"{sf_dir}/{name}.parquet")
+    return summary.rows if summary else load_table(spark, sf_dir, name).count()
 
 
 #: Most rows :func:`nation_lookup` reads from ``nation`` or ``region``.
@@ -259,11 +295,26 @@ def normalize_events_ts(df: DataFrame, schema: StructType) -> DataFrame:
     return df
 
 
+def _one_split(spark: SparkSession, path: str) -> bool:
+    """Whether the parquet at ``path`` is one unit of scan parallelism:
+    one row group in all its footers, and no more bytes on disk than
+    the session's ``spark.sql.files.maxPartitionBytes``."""
+    summary = footers(path)
+    return (
+        summary is not None
+        and summary.row_groups == 1
+        # Spark's own parse of the conf, whatever its unit suffix
+        and summary.bytes <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with oracle-compatible column types.
 
     Reads with the cached schema (:func:`parquet_schema`): after the
-    first load of a file, a load runs no Spark job.
+    first load of a file, a load runs no Spark job.  A table that is
+    one scan split (:func:`_one_split`) is read as one partition,
+    ``coalesce(1)``; see the cost note in the module docstring.
     """
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
@@ -271,7 +322,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = normalize_events_ts(df, schema)
-    return df
+    return df.coalesce(1) if _one_split(spark, path) else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = False) -> dict[str, DataFrame]:

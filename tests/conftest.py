@@ -39,3 +39,19 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def multi_rg_sf_dir(tmp_path_factory) -> str:
+    """The rows of every fixture table at ``SF_DIR``, rewritten as two
+    or more parquet row groups per table: the layout of a table with
+    parallel scan splits, whose plans keep their exchanges
+    (``tables.load_table``'s one-split rule leaves it as it is)."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("multi_rg")
+    for name in TABLE_NAMES:
+        t = pq.read_table(f"{SF_DIR}/{name}.parquet")
+        pq.write_table(t, d / f"{name}.parquet", row_group_size=max(1, (t.num_rows + 1) // 2))
+        assert pq.ParquetFile(d / f"{name}.parquet").metadata.num_row_groups >= 2, name
+    return str(d)

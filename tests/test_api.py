@@ -921,6 +921,57 @@ def test_auto_geometry_joint_sizing_and_exact_fallback(spark, sf_dir):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "key,want",
+    [
+        ("join_asof", "2024-01-01 01:00:00"),
+        ("join_asof_tolerance", None),  # both clicks are 4 h away, past the 2 h bound
+        ("join_asof_nearest", "2024-01-01 01:00:00"),  # a 4 h / 4 h tie goes to prev
+    ],
+)
+def test_asof_null_ts_brackets_nothing(spark, sf_dir, tmp_path, key, want):
+    """A purchase whose ``ts`` is null matches no click.  One user:
+    clicks at 01:00 and 09:00, purchases at NULL and 05:00."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark_caffe_spark.queries import QUERIES
+
+    def at(hour):
+        return None if hour is None else datetime(2024, 1, 1, hour)
+
+    events = [
+        (1, at(1), "click"), (2, at(9), "click"), (3, None, "purchase"), (4, at(5), "purchase"),
+    ]
+    schema = pq.read_schema(f"{sf_dir}/events.parquet")
+    rows = [
+        {"event_id": i, "ts": ts, "user_id": 7, "event_type": kind, "value": 1.0, "props": "{}"}
+        for i, ts, kind in events
+    ]
+    pq.write_table(pa.Table.from_pylist(rows, schema), tmp_path / "events.parquet")
+    df = QUERIES[key](spark, str(tmp_path))
+    got = [
+        tuple(r)
+        for r in df.select("event_id", *(F.col(c).cast("string") for c in df.columns[2:])).orderBy("event_id").collect()
+    ]
+    assert got == [(3, None, None), (4, "2024-01-01 05:00:00", want)]
+
+
+def test_asof_bracket_skips_null_ts_refs(spark):
+    """A ref row whose ``ts`` is null is neither ``prev`` nor ``next``
+    of any probe, though its ``carry`` is not null; a probe whose
+    ``ts`` is null gets neither."""
+    from pyspark_caffe_spark.queries.joins import asof_bracket
+
+    probe = spark.createDataFrame([(1, 0, 5), (2, 0, None)], "id long, k long, t long")
+    ref = spark.createDataFrame([(0, None, 10), (0, 7, 11), (0, None, 12)], "k long, t long, ref_id long")
+    out = asof_bracket(probe, ref, "k", "t", F.struct("t", "ref_id")).orderBy("id").collect()
+    got = [(r["id"], r["prev"] and r["prev"]["ref_id"], r["next"] and r["next"]["ref_id"]) for r in out]
+    assert got == [(1, None, 11), (2, None, None)]
+
+
 def test_ewma_matches_pandas_recompute(spark, sf_dir):
     """Second-engine check for win_ewma beyond the DuckDB oracle: an
     independent float recomputation (numpy, per-user trailing 20-term

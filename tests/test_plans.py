@@ -21,6 +21,15 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+# Tests of a key's exchanges run on ``multi_rg_sf_dir``, the fixture's
+# rows as several row groups per table: ``tables.load_table`` reads a
+# one-row-group table as one partition, whose aggregates, windows and
+# dedups plan no exchange at all.  A parametrised test names its keys
+# that need that layout and picks the directory with this.
+def _sf_for(request, key: str, multi_rg_keys: set[str]) -> str:
+    return request.getfixturevalue("multi_rg_sf_dir" if key in multi_rg_keys else "sf_dir")
+
+
 CASES = [
     # (key, must-match regex, must-NOT-match regex, reason)
     ("filter_conj", r"PushedFilters: \[[^\]]*LessThan\(l_quantity", None, "predicate pushdown to parquet"),
@@ -186,12 +195,12 @@ CASES = [
 ]
 
 
-def test_pattern_detect_single_shuffle(spark, sf_dir):
+def test_pattern_detect_single_shuffle(spark, multi_rg_sf_dir):
     """events_pattern_detect's whole pipeline — sessionize, three
     chained running flags, per-session reduce, per-user rollup — must
     ride ONE user_id Exchange: every later stage's clustering is
     satisfied by hashpartitioning(user_id)."""
-    plan = plan_of(QUERIES["events_pattern_detect"](spark, sf_dir))
+    plan = plan_of(QUERIES["events_pattern_detect"](spark, multi_rg_sf_dir))
     n = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
@@ -204,21 +213,21 @@ def test_path_topk_single_window(spark, sf_dir):
     assert n == 1, f"expected exactly one Window node, plan has {n}"
 
 
-def test_dedup_exact_single_shuffle(spark, sf_dir):
+def test_dedup_exact_single_shuffle(spark, multi_rg_sf_dir):
     """Exact dedup at 100 TB is ONE normalized-key shuffle — the
     normalize (lower/trim) is scan-side, the dropDuplicates is one
     hash aggregate, and nothing downstream re-partitions."""
-    plan = plan_of(QUERIES["dedup_exact"](spark, sf_dir))
+    plan = plan_of(QUERIES["dedup_exact"](spark, multi_rg_sf_dir))
     n = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
 
-def test_dedup_latest_windows_share_one_shuffle(spark, sf_dir):
+def test_dedup_latest_windows_share_one_shuffle(spark, multi_rg_sf_dir):
     """dedup_latest / dedup_source_priority stack three window
     functions over the same key ordering: all of them must ride ONE
     Exchange (same-spec windows collapse onto one sort/partition)."""
     for key in ("dedup_latest", "dedup_source_priority"):
-        plan = plan_of(QUERIES[key](spark, sf_dir))
+        plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
         n = len(re.findall(r"\(\d+\) Exchange", plan))
         assert n == 1, f"{key}: expected exactly one Exchange, plan has {n}"
 
@@ -288,25 +297,26 @@ def _text_keys(plan: str) -> list[str]:
         "dedup_decontaminate",
     ],
 )
-def test_exact_dedup_keys_on_fingerprint(key, spark, sf_dir):
+def test_exact_dedup_keys_on_fingerprint(key, spark, request):
     """Every exact-dedup site groups, partitions or broadcast-joins on
     the 128-bit textops.fingerprint: neither the text column nor its
     normalized text is a shuffle key or a broadcast column."""
-    plan = plan_of(QUERIES[key](spark, sf_dir))
+    sf = _sf_for(request, key, {"dedup_exact", "pipeline_training_snapshot", "dedup_source_priority"})
+    plan = plan_of(QUERIES[key](spark, sf))
     assert "hashpartitioning" in plan or "BroadcastExchange" in plan, key
     bad = _text_keys(plan)
     assert not bad, f"{key}: text crosses an exchange as {bad}"
 
 
 @pytest.mark.parametrize("key", ["multimodal_dedup", "dedup_source_priority"])
-def test_md5_dedup_ships_16_byte_key(key, spark, sf_dir):
+def test_md5_dedup_ships_16_byte_key(key, spark, multi_rg_sf_dir):
     """The md5-keyed dedups ship the 16-byte ``unhex(md5(...))`` binary
     through their one exchange — multimodal_dedup as its
     hash-partitioning key, dedup_source_priority as the column its
     window carries to the output ``norm_key`` — and hex it only after
     the aggregate or the ``rk = 1`` filter, never the 32-char hex
     string."""
-    plan = plan_of(QUERIES[key](spark, sf_dir))
+    plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
     resolve = _resolver(plan)
     shipped = _hash_keys(plan) + [
         c
@@ -328,19 +338,19 @@ def test_q21_single_lineitem_scan(spark, sf_dir):
 
 
 @pytest.mark.parametrize("key,want,ban,reason", CASES, ids=[f"{c[0]}:{c[3][:25]}" for c in CASES])
-def test_plan_shape(key, want, ban, reason, spark, sf_dir):
-    plan = plan_of(QUERIES[key](spark, sf_dir))
+def test_plan_shape(key, want, ban, reason, spark, request):
+    plan = plan_of(QUERIES[key](spark, _sf_for(request, key, {"events_sessionize"})))
     if want:
         assert re.search(want, plan), f"{key}: expected /{want}/ ({reason})"
     if ban:
         assert not re.search(ban, plan), f"{key}: must not contain /{ban}/ ({reason})"
 
 
-def test_ewma_single_window_single_shuffle(spark, sf_dir):
+def test_ewma_single_window_single_shuffle(spark, multi_rg_sf_dir):
     """All 19 lag terms of win_ewma share ONE window spec: the plan
     must hold exactly one Window node over exactly one Exchange — a
     per-lag window would shuffle 19 times."""
-    plan = plan_of(QUERIES["win_ewma"](spark, sf_dir))
+    plan = plan_of(QUERIES["win_ewma"](spark, multi_rg_sf_dir))
     n_win = len(re.findall(r"\(\d+\) Window", plan))
     n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_win == 1, f"expected exactly one Window node, plan has {n_win}"
@@ -402,7 +412,7 @@ _BLOOM_CONFS = {
 }
 
 
-def test_runtime_bloom_filter_join(spark, sf_dir):
+def test_runtime_bloom_filter_join(spark, multi_rg_sf_dir):
     """Runtime bloom-filter join pushdown — the 100 TB fact⋈fact shape:
     with broadcast disabled (forcing SMJ, as at real fact sizes), the
     selective filter on the creation side injects a bloom_filter_agg
@@ -418,8 +428,8 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
     try:
         for k, v in _BLOOM_CONFS.items():
             spark.conf.set(k, v)
-        li = load_table(spark, sf_dir, "lineitem")
-        od = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
+        li = load_table(spark, multi_rg_sf_dir, "lineitem")
+        od = load_table(spark, multi_rg_sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
         j = li.join(od, li.l_orderkey == od.o_orderkey).select(
             "l_orderkey", "l_extendedprice", "o_totalprice"
         )
@@ -858,7 +868,7 @@ def test_rewrite_declines_when_jvm_internal_moves(spark, sf_dir, monkeypatch):
     "key,n_exchange",
     [("join_asof", 1), ("join_asof_tolerance", 1), ("join_asof_nearest", 1), ("events_resample_interpolate", 2)],
 )
-def test_asof_bracket_one_window(spark, sf_dir, key, n_exchange):
+def test_asof_bracket_one_window(spark, request, key, n_exchange):
     """Every as-of key runs joins.asof_bracket: both frames (``prev``
     and ``next``) share one (partition, order) spec, so the plan holds
     exactly ONE Window node — a per-frame window would double the
@@ -868,18 +878,19 @@ def test_asof_bracket_one_window(spark, sf_dir, key, n_exchange):
     and for the bracket (Catalyst prunes ``v`` from the first, so the
     two are separate Exchanges), and the grid rows, generated on that
     partitioning, cross no Exchange at all."""
-    plan = plan_of(QUERIES[key](spark, sf_dir))
+    sf = _sf_for(request, key, {"join_asof", "join_asof_tolerance", "join_asof_nearest"})
+    plan = plan_of(QUERIES[key](spark, sf))
     n_window = len(re.findall(r"\(\d+\) Window", plan))
     n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
     assert (n_window, n_ex) == (1, n_exchange), f"plan has {n_window} Window and {n_ex} Exchange nodes"
 
 
-def test_interval_coalesce_single_shuffle(spark, sf_dir):
+def test_interval_coalesce_single_shuffle(spark, multi_rg_sf_dir):
     """join_interval_coalesce's two windows AND the island aggregate
     all cluster on user_id (island is a refinement within user), so
     the plan must hold exactly ONE Exchange — partitioning by user_id
     already satisfies the (user_id, island) groupBy's distribution."""
-    plan = plan_of(QUERIES["join_interval_coalesce"](spark, sf_dir))
+    plan = plan_of(QUERIES["join_interval_coalesce"](spark, multi_rg_sf_dir))
     n = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
@@ -980,3 +991,60 @@ def test_ann_fence_serializes_threaded_writers(tmp_path):
     )
     # deltas survived intact too — the derived stamp is exact
     assert sum(s[1] for s in segs) == sum(range(1, n_threads + 1))
+
+
+# The one-split rule of tables.load_table: a table of one parquet row
+# group, no larger than spark.sql.files.maxPartitionBytes, is read as
+# one partition (``Coalesce 1``), and its aggregates, windows and
+# dedups plan no Exchange.
+_ONE_SPLIT_KEYS = ["agg_hash_groupby", "win_rank_topk", "fn_map_json", "pipeline_training_snapshot"]
+_N_EXCHANGE = r"\(\d+\) Exchange"
+_COALESCE_1 = r"\(\d+\) Coalesce\nInput \[\d+\]: \[.*\]\nArguments: 1\n"
+
+
+@pytest.mark.parametrize("key", _ONE_SPLIT_KEYS)
+def test_one_row_group_table_plans_no_exchange(spark, sf_dir, key):
+    plan = plan_of(QUERIES[key](spark, sf_dir))
+    assert re.search(_COALESCE_1, plan), f"{key}: no Coalesce 1 over the one-row-group scan"
+    assert not re.search(_N_EXCHANGE, plan), f"{key}: a one-partition input still plans an Exchange"
+
+
+@pytest.mark.parametrize("key", _ONE_SPLIT_KEYS)
+def test_multi_row_group_table_keeps_exchange(spark, multi_rg_sf_dir, key):
+    plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
+    assert "Coalesce" not in plan, f"{key}: a table of several row groups was coalesced"
+    assert re.search(_N_EXCHANGE, plan), f"{key}: lost its Exchange on a parallel scan"
+
+
+def test_one_row_group_over_max_partition_bytes_keeps_exchange(spark, sf_dir):
+    """The size guard: a one-row-group table larger than the session's
+    spark.sql.files.maxPartitionBytes keeps its parallel plan."""
+    from pyspark_caffe_spark.tables import footers
+
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64k")
+        assert footers(f"{sf_dir}/lineitem.parquet").bytes > 64 << 10
+        plan = plan_of(QUERIES["agg_hash_groupby"](spark, sf_dir))
+    finally:
+        spark.conf.set(key, saved)
+    assert "Coalesce" not in plan
+    assert re.search(_N_EXCHANGE, plan)
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "agg_hash_groupby", "join_multiway", "win_rank_topk", "agg_q6_selective", "fn_map_json",
+        "topk_global", "text_tfidf", "pipeline_training_snapshot", "sim_optimizer_rewrite",
+        "ml_model_apply",
+    ],
+)
+def test_one_split_rule_keeps_rows(spark, sf_dir, multi_rg_sf_dir, key):
+    """The benchmark keys return the same sorted rows whether their
+    tables are read as one partition or as several."""
+    from tests.parity import normalize_result, spark_result
+
+    one, many = (normalize_result(*spark_result(QUERIES[key](spark, d))) for d in (sf_dir, multi_rg_sf_dir))
+    assert one == many

@@ -20,7 +20,8 @@ the scale factor is inferred (``tables.parquet_schema``, one footer
 job a file) before the first key, outside any job group.
 ``shuffle=B`` next to it is the shuffle bytes written by every stage
 submitted while the key ran, summed from the driver's status store,
-so "per-key shuffle bytes down, rows unchanged" is one run too.
+so "per-key shuffle bytes down, rows unchanged" is one run too;
+``tasks=T`` is the tasks those stages completed.
 
 An integer N checks the first N keys of ``queries()`` (the
 sweep-ordered registry — code-changed keys first, then stalest
@@ -49,21 +50,23 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _shuffle_bytes(sc, stage0: int, stage1: int) -> int:
-    """Shuffle bytes written by the stages with ids in [stage0, stage1)."""
+def _stage_totals(sc, stage0: int, stage1: int) -> tuple[int, int]:
+    """Completed tasks and shuffle bytes written by the stages with ids
+    in [stage0, stage1)."""
     from py4j.protocol import Py4JJavaError
 
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()  # status store sees every finished task
-    store, total = jsc.statusStore(), 0
+    store, tasks, shuffle = jsc.statusStore(), 0, 0
     for sid in range(stage0, stage1):
         try:
             sd = store.lastStageAttempt(sid)
         except Py4JJavaError:  # never submitted (AQE re-planned it away)
             continue
         if sd.status().toString() != "SKIPPED":
-            total += sd.shuffleWriteBytes()
-    return total
+            tasks += sd.numCompleteTasks()
+            shuffle += sd.shuffleWriteBytes()
+    return tasks, shuffle
 
 
 def main() -> int:
@@ -117,9 +120,9 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
             status = f"FAIL {type(ex).__name__}: {str(ex)[:200]}"
         jobs = len(sc.statusTracker().getJobIdsForGroup(key))
-        shuffle = _shuffle_bytes(sc, stage0, dag.nextStageId())
+        tasks, shuffle = _stage_totals(sc, stage0, dag.nextStageId())
         print(
-            f"[{i}] {key} {status} ({time.time() - tk:.1f}s) jobs={jobs} shuffle={shuffle}",
+            f"[{i}] {key} {status} ({time.time() - tk:.1f}s) jobs={jobs} shuffle={shuffle} tasks={tasks}",
             flush=True,
         )
     print(f"DRYRUN: {green}/{len(keys)} green in {time.time() - t0:.0f}s")
