@@ -21,15 +21,11 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-# Tests of a key's exchanges run on ``multi_rg_sf_dir``, the fixture's
-# rows as several row groups per table: ``tables.load_table`` reads a
-# one-row-group table as one partition, whose aggregates, windows and
-# dedups plan no exchange at all.  A parametrised test names its keys
-# that need that layout and picks the directory with this.
-def _sf_for(request, key: str, multi_rg_keys: set[str]) -> str:
-    return request.getfixturevalue("multi_rg_sf_dir" if key in multi_rg_keys else "sf_dir")
-
-
+# These tests pin the distributed plan, so they read ``multi_rg_sf_dir``,
+# the fixture's rows as several row groups per table: ``tables.load_table``
+# reads a one-row-group table as one partition, over which an aggregate,
+# window or dedup plans no exchange at all.  Only the one-split tests at
+# the end read the shipped one-row-group files (``sf_dir``).
 CASES = [
     # (key, must-match regex, must-NOT-match regex, reason)
     ("filter_conj", r"PushedFilters: \[[^\]]*LessThan\(l_quantity", None, "predicate pushdown to parquet"),
@@ -205,10 +201,10 @@ def test_pattern_detect_single_shuffle(spark, multi_rg_sf_dir):
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
 
-def test_path_topk_single_window(spark, sf_dir):
+def test_path_topk_single_window(spark, multi_rg_sf_dir):
     """All four LEADs of events_path_topk share ONE window spec, so the
     plan must contain exactly one Window node (one user_id shuffle)."""
-    plan = plan_of(QUERIES["events_path_topk"](spark, sf_dir))
+    plan = plan_of(QUERIES["events_path_topk"](spark, multi_rg_sf_dir))
     n = len(re.findall(r"\(\d+\) Window", plan))
     assert n == 1, f"expected exactly one Window node, plan has {n}"
 
@@ -297,12 +293,11 @@ def _text_keys(plan: str) -> list[str]:
         "dedup_decontaminate",
     ],
 )
-def test_exact_dedup_keys_on_fingerprint(key, spark, request):
+def test_exact_dedup_keys_on_fingerprint(key, spark, multi_rg_sf_dir):
     """Every exact-dedup site groups, partitions or broadcast-joins on
     the 128-bit textops.fingerprint: neither the text column nor its
     normalized text is a shuffle key or a broadcast column."""
-    sf = _sf_for(request, key, {"dedup_exact", "pipeline_training_snapshot", "dedup_source_priority"})
-    plan = plan_of(QUERIES[key](spark, sf))
+    plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
     assert "hashpartitioning" in plan or "BroadcastExchange" in plan, key
     bad = _text_keys(plan)
     assert not bad, f"{key}: text crosses an exchange as {bad}"
@@ -328,18 +323,18 @@ def test_md5_dedup_ships_16_byte_key(key, spark, multi_rg_sf_dir):
     assert all(e.startswith("unhex(md5(") for e in md5s), f"{key}: {md5s}"
 
 
-def test_q21_single_lineitem_scan(spark, sf_dir):
+def test_q21_single_lineitem_scan(spark, multi_rg_sf_dir):
     """The Q21 decorrelation's whole point: the textbook EXISTS +
     NOT-EXISTS formulation scans lineitem three times; the one-pass
     per-order aggregate must scan it exactly once."""
-    plan = plan_of(QUERIES["join_q21_waiting"](spark, sf_dir))
+    plan = plan_of(QUERIES["join_q21_waiting"](spark, multi_rg_sf_dir))
     n_scans = len(re.findall(r"Location: \w+ ?\[[^\]]*lineitem", plan))
     assert n_scans == 1, f"expected exactly one lineitem scan, plan has {n_scans}"
 
 
 @pytest.mark.parametrize("key,want,ban,reason", CASES, ids=[f"{c[0]}:{c[3][:25]}" for c in CASES])
-def test_plan_shape(key, want, ban, reason, spark, request):
-    plan = plan_of(QUERIES[key](spark, _sf_for(request, key, {"events_sessionize"})))
+def test_plan_shape(key, want, ban, reason, spark, multi_rg_sf_dir):
+    plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
     if want:
         assert re.search(want, plan), f"{key}: expected /{want}/ ({reason})"
     if ban:
@@ -357,7 +352,7 @@ def test_ewma_single_window_single_shuffle(spark, multi_rg_sf_dir):
     assert n_ex == 1, f"expected exactly one Exchange, plan has {n_ex}"
 
 
-def test_bloom_filter_written_to_parquet_footer(spark, sf_dir):
+def test_bloom_filter_written_to_parquet_footer(spark, multi_rg_sf_dir):
     """sink_bloom_filter's write must actually persist bloom filters:
     every o_custkey column chunk carries a bloom offset in the footer
     (parquet-mr's ColumnChunkMetaData reports -1 when absent), and the
@@ -367,8 +362,8 @@ def test_bloom_filter_written_to_parquet_footer(spark, sf_dir):
     import glob
     import os
 
-    QUERIES["sink_bloom_filter"](spark, sf_dir)  # ensure the sink ran
-    tag = os.path.basename(sf_dir.rstrip("/"))
+    QUERIES["sink_bloom_filter"](spark, multi_rg_sf_dir)  # ensure the sink ran
+    tag = os.path.basename(multi_rg_sf_dir.rstrip("/"))
     from pyspark_caffe_spark.queries.relational import _scratch
 
     files = glob.glob(os.path.join(_scratch("sink_bloom_" + tag), "*.parquet"))
@@ -453,7 +448,7 @@ _SKEW_CONFS = {
 }
 
 
-def test_aqe_skew_join_split(spark, sf_dir):
+def test_aqe_skew_join_split(spark, multi_rg_sf_dir):
     """AQE skew-join split — runtime evidence (the round-1 experiment
     measured AQE *declining* below thresholds; this drives the split).
 
@@ -472,14 +467,14 @@ def test_aqe_skew_join_split(spark, sf_dir):
     try:
         for k, v in _SKEW_CONFS.items():
             spark.conf.set(k, v)
-        li = load_table(spark, sf_dir, "lineitem").repartition(16).select(
+        li = load_table(spark, multi_rg_sf_dir, "lineitem").repartition(16).select(
             F.when(F.col("l_orderkey") % 2 == 0, F.lit(1))
             .otherwise(F.col("l_orderkey"))
             .alias("k"),
             "l_extendedprice",
         )
         keys = (
-            load_table(spark, sf_dir, "orders")
+            load_table(spark, multi_rg_sf_dir, "orders")
             .select(F.col("o_orderkey").alias("k"), "o_totalprice")
             .distinct()
         )
@@ -609,14 +604,14 @@ def _naive_cosine_join(spark, sf_dir, *, rounded=True, self_join=True,
     return a.crossJoin(b).filter(cond).select(*out)
 
 
-def test_similarity_rewrite_fires_and_naive_is_quadratic(spark, sf_dir):
+def test_similarity_rewrite_fires_and_naive_is_quadratic(spark, multi_rg_sf_dir):
     """The rule's value proposition, both directions: the UNREWRITTEN
     naive spelling really does execute as a nested-loop/cartesian join
     (what a user would silently suffer), and the rewritten plan does
     not."""
     from pyspark_caffe_spark import optimizer
 
-    naive = _naive_cosine_join(spark, sf_dir)
+    naive = _naive_cosine_join(spark, multi_rg_sf_dir)
     naive_plan = plan_of(naive)
     assert re.search(r"BroadcastNestedLoopJoin|CartesianProduct", naive_plan), naive_plan
     routed = optimizer.try_rewrite_similarity_join(naive)
@@ -625,7 +620,7 @@ def test_similarity_rewrite_fires_and_naive_is_quadratic(spark, sf_dir):
     assert not re.search(r"BroadcastNestedLoopJoin|CartesianProduct", routed_plan), routed_plan
 
 
-def test_similarity_rewrite_declines_near_misses(spark, sf_dir):
+def test_similarity_rewrite_declines_near_misses(spark, multi_rg_sf_dir):
     """The rule must be conservative: every deviation from the proven
     pattern returns None (the naive plan runs), never a miscompile."""
     from pyspark.sql import functions as F
@@ -634,40 +629,40 @@ def test_similarity_rewrite_declines_near_misses(spark, sf_dir):
 
     # (a) not a self-join: right side scans a DIFFERENT frame
     assert optimizer.try_rewrite_similarity_join(
-        _naive_cosine_join(spark, sf_dir, self_join=False)
+        _naive_cosine_join(spark, multi_rg_sf_dir, self_join=False)
     ) is None
     # (b) unrounded dot compare: router rounds — semantics differ
     assert optimizer.try_rewrite_similarity_join(
-        _naive_cosine_join(spark, sf_dir, rounded=False)
+        _naive_cosine_join(spark, multi_rg_sf_dir, rounded=False)
     ) is None
     # (c) extra filter conjunct the routed plan would drop
     assert optimizer.try_rewrite_similarity_join(
-        _naive_cosine_join(spark, sf_dir, extra_conjunct=True)
+        _naive_cosine_join(spark, multi_rg_sf_dir, extra_conjunct=True)
     ) is None
     # (d) projection keeps an embedding column the router does not emit
     assert optimizer.try_rewrite_similarity_join(
-        _naive_cosine_join(spark, sf_dir, project_extra=True)
+        _naive_cosine_join(spark, multi_rg_sf_dir, project_extra=True)
     ) is None
     # (e) a completely unrelated plan
     from pyspark_caffe_spark.tables import load_table
 
-    plain = load_table(spark, sf_dir, "orders").select("o_orderkey")
+    plain = load_table(spark, multi_rg_sf_dir, "orders").select("o_orderkey")
     assert optimizer.try_rewrite_similarity_join(plain) is None
 
 
-def test_similarity_rewrite_values_match_naive(spark, sf_dir):
+def test_similarity_rewrite_values_match_naive(spark, multi_rg_sf_dir):
     """Semantic preservation: rewritten result == naive result, row for
     row (the rounded cosine makes this exact)."""
     from pyspark_caffe_spark import optimizer
 
-    naive = _naive_cosine_join(spark, sf_dir)
+    naive = _naive_cosine_join(spark, multi_rg_sf_dir)
     routed = optimizer.try_rewrite_similarity_join(naive)
     n = sorted(tuple(r) for r in naive.collect())
     r = sorted(tuple(r) for r in routed.collect())
     assert n == r
 
 
-def test_similarity_rewrite_exact_over_broadcast_cap(spark, sf_dir):
+def test_similarity_rewrite_exact_over_broadcast_cap(spark, multi_rg_sf_dir):
     """A rewrite rule must be semantics-preserving at EVERY scale: force
     the over-cap path (broadcast_max_rows=8 → exact distributed
     block-pair tier) and assert the rewritten result still equals the
@@ -675,7 +670,7 @@ def test_similarity_rewrite_exact_over_broadcast_cap(spark, sf_dir):
     never the approximate-recall LSH tier."""
     from pyspark_caffe_spark import optimizer
 
-    naive = _naive_cosine_join(spark, sf_dir)
+    naive = _naive_cosine_join(spark, multi_rg_sf_dir)
     routed = optimizer.try_rewrite_similarity_join(
         naive, broadcast_max_rows=8, block_rows=16
     )
@@ -685,7 +680,7 @@ def test_similarity_rewrite_exact_over_broadcast_cap(spark, sf_dir):
     assert n == r
 
 
-def test_catalyst_already_covers_global_topk(spark, sf_dir):
+def test_catalyst_already_covers_global_topk(spark, multi_rg_sf_dir):
     """Documents WHY the optimizer module carries no global-window-topk
     rule: Spark 4's own LimitPushDownThroughWindow / WindowGroupLimit
     rules already rewrite ``row_number().over(Window.orderBy(...))`` +
@@ -701,7 +696,7 @@ def test_catalyst_already_covers_global_topk(spark, sf_dir):
 
     from pyspark_caffe_spark.tables import load_table
 
-    orders = load_table(spark, sf_dir, "orders").select(
+    orders = load_table(spark, multi_rg_sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     w = Window.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -748,7 +743,7 @@ def _naive_bipartite_join(spark, sf_dir, *, with_order=False, project_extra=Fals
     return q.crossJoin(c).filter(cond).select(*out)
 
 
-def test_bipartite_rewrite_fires_and_values_match(spark, sf_dir):
+def test_bipartite_rewrite_fires_and_values_match(spark, multi_rg_sf_dir):
     """Round-7 verdict #3: the two-corpus serving shape (query set ×
     corpus) must also escape the BroadcastNestedLoopJoin.  The rule
     matches the single-threshold-conjunct bipartite pattern, the
@@ -756,7 +751,7 @@ def test_bipartite_rewrite_fires_and_values_match(spark, sf_dir):
     naive plan row for row."""
     from pyspark_caffe_spark import optimizer
 
-    naive = _naive_bipartite_join(spark, sf_dir)
+    naive = _naive_bipartite_join(spark, multi_rg_sf_dir)
     assert re.search(r"BroadcastNestedLoopJoin|CartesianProduct", plan_of(naive))
     routed = optimizer.try_rewrite_similarity_join(naive)
     assert routed is not None, "rule failed to match the bipartite serving shape"
@@ -768,13 +763,13 @@ def test_bipartite_rewrite_fires_and_values_match(spark, sf_dir):
     assert n == r
 
 
-def test_bipartite_rewrite_exact_over_broadcast_cap(spark, sf_dir):
+def test_bipartite_rewrite_exact_over_broadcast_cap(spark, multi_rg_sf_dir):
     """Force the over-cap grid tier (broadcast_max_rows=8) and assert
     the rewritten bipartite result still equals the naive result —
     the rule routes to the exact grid tier, never an approximate one."""
     from pyspark_caffe_spark import optimizer
 
-    naive = _naive_bipartite_join(spark, sf_dir)
+    naive = _naive_bipartite_join(spark, multi_rg_sf_dir)
     routed = optimizer.try_rewrite_similarity_join(
         naive, broadcast_max_rows=8, block_rows=16
     )
@@ -784,7 +779,7 @@ def test_bipartite_rewrite_exact_over_broadcast_cap(spark, sf_dir):
     assert n == r
 
 
-def test_bipartite_rewrite_declines_near_misses(spark, sf_dir):
+def test_bipartite_rewrite_declines_near_misses(spark, multi_rg_sf_dir):
     """Conservative in the bipartite form too: an i<j ordering conjunct
     across two DISTINCT corpora is a different query (decline, don't
     guess), and a projected raw vector column is not the serving
@@ -792,14 +787,14 @@ def test_bipartite_rewrite_declines_near_misses(spark, sf_dir):
     from pyspark_caffe_spark import optimizer
 
     assert optimizer.try_rewrite_similarity_join(
-        _naive_bipartite_join(spark, sf_dir, with_order=True)
+        _naive_bipartite_join(spark, multi_rg_sf_dir, with_order=True)
     ) is None
     assert optimizer.try_rewrite_similarity_join(
-        _naive_bipartite_join(spark, sf_dir, project_extra=True)
+        _naive_bipartite_join(spark, multi_rg_sf_dir, project_extra=True)
     ) is None
 
 
-def test_rewrite_declines_non_integral_ids(spark, sf_dir):
+def test_rewrite_declines_non_integral_ids(spark, multi_rg_sf_dir):
     """Round-9 advice: the routed tiers normalize pair ids to LONG
     ('id_a long' Arrow schemas / .cast('long')), so a matching plan
     projecting a string id must DECLINE — not fail at runtime with an
@@ -811,7 +806,7 @@ def test_rewrite_declines_non_integral_ids(spark, sf_dir):
     from pyspark_caffe_spark.tables import load_table
 
     def naive_with_id_type(cast_to, *, self_join):
-        emb = load_table(spark, sf_dir, "embeddings").select(
+        emb = load_table(spark, multi_rg_sf_dir, "embeddings").select(
             F.col("vec_id").cast(cast_to).alias("vid"),
             F.col("embedding").cast("array<double>").alias("emb"),
         )
@@ -843,7 +838,7 @@ def test_rewrite_declines_non_integral_ids(spark, sf_dir):
     ) is not None
 
 
-def test_rewrite_declines_when_jvm_internal_moves(spark, sf_dir, monkeypatch):
+def test_rewrite_declines_when_jvm_internal_moves(spark, multi_rg_sf_dir, monkeypatch):
     """Version guard (round-7 verdict #5): the rule reaches JVM
     internals PySpark does not pledge stable; when one moves (simulated
     by breaking optimizer._of_rows the way a relocated
@@ -856,7 +851,7 @@ def test_rewrite_declines_when_jvm_internal_moves(spark, sf_dir, monkeypatch):
         raise AttributeError("org.apache.spark.sql.classic.Dataset moved")
 
     monkeypatch.setattr(optimizer, "_of_rows", broken)
-    naive = _naive_cosine_join(spark, sf_dir)
+    naive = _naive_cosine_join(spark, multi_rg_sf_dir)
     assert optimizer.try_rewrite_similarity_join(naive) is None
     out = optimizer.rewrite_similarity_join(naive)
     assert out is naive
@@ -868,7 +863,7 @@ def test_rewrite_declines_when_jvm_internal_moves(spark, sf_dir, monkeypatch):
     "key,n_exchange",
     [("join_asof", 1), ("join_asof_tolerance", 1), ("join_asof_nearest", 1), ("events_resample_interpolate", 2)],
 )
-def test_asof_bracket_one_window(spark, request, key, n_exchange):
+def test_asof_bracket_one_window(spark, multi_rg_sf_dir, key, n_exchange):
     """Every as-of key runs joins.asof_bracket: both frames (``prev``
     and ``next``) share one (partition, order) spec, so the plan holds
     exactly ONE Window node — a per-frame window would double the
@@ -878,8 +873,7 @@ def test_asof_bracket_one_window(spark, request, key, n_exchange):
     and for the bracket (Catalyst prunes ``v`` from the first, so the
     two are separate Exchanges), and the grid rows, generated on that
     partitioning, cross no Exchange at all."""
-    sf = _sf_for(request, key, {"join_asof", "join_asof_tolerance", "join_asof_nearest"})
-    plan = plan_of(QUERIES[key](spark, sf))
+    plan = plan_of(QUERIES[key](spark, multi_rg_sf_dir))
     n_window = len(re.findall(r"\(\d+\) Window", plan))
     n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
     assert (n_window, n_ex) == (1, n_exchange), f"plan has {n_window} Window and {n_ex} Exchange nodes"
@@ -895,7 +889,7 @@ def test_interval_coalesce_single_shuffle(spark, multi_rg_sf_dir):
     assert n == 1, f"expected exactly one Exchange, plan has {n}"
 
 
-def test_tfidf_final_plan_broadcasts_vocab_join(spark, sf_dir):
+def test_tfidf_final_plan_broadcasts_vocab_join(spark, multi_rg_sf_dir):
     """Round-15 skew-audit pin: the text_tfidf docstring claims AQE
     broadcasts the vocabulary-sized df table under Zipf vocabularies —
     verified at 100x (PERF.md round 15 cont. 2), pinned here at
@@ -907,7 +901,7 @@ def test_tfidf_final_plan_broadcasts_vocab_join(spark, sf_dir):
     dump contains BOTH sections, so the check (a) executes the
     DataFrame's own QueryExecution via collect and (b) scopes the
     match to the final-plan section above the `Initial Plan` marker."""
-    df = QUERIES["text_tfidf"](spark, sf_dir)
+    df = QUERIES["text_tfidf"](spark, multi_rg_sf_dir)
     assert len(df.collect()) > 0  # finalizes THIS QueryExecution
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
